@@ -13,7 +13,8 @@ boxes overlay PNG (S9) and HTML report (S10) on request.
 
 `batch` is the distributed path the reference lacks: a
 `spark.read.format("binaryFile")` scan (SURVEY §2.1 S1 mapping) over a
-directory of PNGs -> the same Arrow-batched OCR kernel -> parquet of
+directory of PNGs -> the extraction default's Arrow-batched OCR kernel
+(trained recognizer, legacy line finder) -> parquet of
 (path, text, conf, n_lines).
 """
 
@@ -112,7 +113,8 @@ def _write_extract_sinks(args, gray, results) -> int:
 def run_batch(args: argparse.Namespace) -> int:
     from pyspark.sql import functions as F
 
-    from .pipeline import _ocr_batches
+    from .pipeline import OCR_SCHEMA, _ocr_batches_trained
+    from .queries import trained_model_path
     from .session import get_spark
 
     spark = get_spark(app_name="kiri-batch")
@@ -129,12 +131,10 @@ def run_batch(args: argparse.Namespace) -> int:
             F.lit("media").alias("kind"),
         )
     )
+    # the extraction default's media kernel (extract_span_rows with
+    # recognizer="trained", detector="legacy")
     ocr = scan.mapInPandas(
-        _ocr_batches(None),
-        schema=(
-            "doc_id long, offset int, kind string, text string, "
-            "media_ref string, conf double, n_lines int, kernel_us long"
-        ),
+        _ocr_batches_trained(trained_model_path()), schema=OCR_SCHEMA
     ).select("media_ref", "text", "conf", "n_lines")
     ocr.write.mode("overwrite").parquet(args.out)
     n = spark.read.parquet(args.out).count()

@@ -5,7 +5,8 @@ Plays the role of the reference's synthetic benchmark renderer
 /root/reference/benchmark/generate_bench_data.py:81-139): render text you
 *know*, extract it back, compare — the construction-time oracle. No font
 files, no network: each glyph is a unique bitmap derived from
-sha256(codepoint), so fixtures are bit-identical across machines and runs.
+sha256(codepoint), so fixtures are bit-identical across machines and runs
+(tier: bitwise by construction — integer raster, no floating point).
 
 Layout contract (what the detector/recognizer rely on):
 - every glyph covers every row and every column of its GLYPH_W x GLYPH_H

@@ -81,7 +81,7 @@ class OCR:
         # DBNet's box_score_slow / PaddleOCR's det_db_score_mode): the
         # default fast quad-mean drops a fused two-stacked-lines
         # component whose minAreaRect spans the inter-line gap; the slow
-        # score keeps it and process_document's row-normalize step
+        # score keeps it and detect_line_boxes' row-normalize step
         # (merge + blank-row band split) separates the lines. The bare
         # TextDetector facade keeps the reference's fast default.
         det_kwargs = {"det_db_score_mode": "slow"} if det_method == "db" else {}
@@ -172,33 +172,6 @@ class OCR:
             return self.model.beam_decode(mem)
         return self.model.greedy_decode(mem)
 
-    def _detect_line_boxes(self, gray: np.ndarray, ink: np.ndarray):
-        """Lines-mode detection shared by process_document AND
-        extract_text_stream_chars (both must see identical regions —
-        the stream contract is 'same text, token at a time').
-
-        The in-sandbox-calibrated neural detectors emit word/
-        region-grade boxes; normalize to recognition-grade text
-        lines: W3 row clustering over the boxes, then a blank-
-        row band split inside each row hull (DB's unclipped
-        regions can span two tight lines). A production-trained
-        DBNet/CRAFT emits line-grade regions and both steps
-        reduce to no-ops. Text-match verified per line against
-        the construction oracle (media_text_db/_craft queries)."""
-        boxes = self.detector.detect_boxes(gray)
-        if self.detector.method in ("db", "craft"):
-            from .operators.detect import (
-                merge_boxes_into_rows,
-                split_box_at_blank_rows,
-            )
-
-            boxes = [
-                (int(b[0]), int(b[1]), int(b[2]), int(b[3]), float(row[4]))
-                for row in merge_boxes_into_rows(boxes)
-                for b in split_box_at_blank_rows(ink, row)
-            ]
-        return boxes
-
     # -- reference public surface ------------------------------------------
 
     def process_document(self, image, mode: str = "lines") -> list[dict]:
@@ -208,7 +181,9 @@ class OCR:
         gray = self._load_gray(image)
         ink = binarize(gray)
         if mode == "lines":
-            boxes = self._detect_line_boxes(gray, ink)
+            # the stream generator below detects through the same call:
+            # both must see identical regions ('same text, token at a time')
+            boxes = self.detector.detect_line_boxes(gray, ink)
         elif mode == "words":
             boxes = [(bx, by, bw, bh, 1.0) for bx, by, bw, bh in
                      self.detector.detect_words(gray)]
@@ -227,51 +202,6 @@ class OCR:
                 }
             )
         return results
-
-    def process_documents(
-        self, images: list, mode: str = "lines"
-    ) -> list[list[dict]]:
-        """Batch variant of ``process_document`` for table-scope kernels:
-        neural detection runs batched across same-shape pages
-        (TextDetector.detect_boxes_batch — bitwise the per-page path),
-        everything else is the per-page flow. Results per page equal
-        ``process_document``'s."""
-        if mode != "lines":
-            return [self.process_document(im, mode) for im in images]
-        grays = [self._load_gray(im) for im in images]
-        inks = [binarize(g) for g in grays]
-        raw_list = self.detector.detect_boxes_batch(grays)
-        out: list[list[dict]] = []
-        for gray, ink, raw in zip(grays, inks, raw_list):
-            if self.detector.method in ("db", "craft"):
-                from .operators.detect import (
-                    merge_boxes_into_rows,
-                    split_box_at_blank_rows,
-                )
-
-                boxes = [
-                    (int(b[0]), int(b[1]), int(b[2]), int(b[3]), float(row[4]))
-                    for row in merge_boxes_into_rows(raw)
-                    for b in split_box_at_blank_rows(ink, row)
-                ]
-            else:
-                boxes = raw
-            results = []
-            for i, box in enumerate(boxes, start=1):
-                text, conf = self._recognize_region(gray, ink, box)
-                results.append(
-                    {
-                        "box": [int(v) for v in box[:4]],
-                        "text": text,
-                        "confidence": float(conf),
-                        "det_confidence": (
-                            float(box[4]) if len(box) > 4 else 1.0
-                        ),
-                        "line_number": i,
-                    }
-                )
-            out.append(results)
-        return out
 
     def extract_text(self, image, mode: str = "lines") -> tuple[str, list[dict]]:
         """core.py:1104-1160: recognize then group results into text lines
@@ -304,7 +234,7 @@ class OCR:
         gray = self._load_gray(image)
         ink = binarize(gray)
         boxes = (
-            self._detect_line_boxes(gray, ink)
+            self.detector.detect_line_boxes(gray, ink)
             if mode == "lines"
             else [(bx, by, bw, bh, 1.0) for bx, by, bw, bh in
                   self.detector.detect_words(gray)]

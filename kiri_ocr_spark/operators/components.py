@@ -163,7 +163,8 @@ def nms(boxes: np.ndarray, iou_threshold: float = 0.5) -> np.ndarray:
     # incremental kept-coordinate buffers: the former per-candidate
     # np.array(kept) + five fancy gathers were O(n^2) allocation churn;
     # buf[:m] holds the SAME values in the SAME insertion order, so the
-    # per-element IoU arithmetic and suppress decisions are bit-equal.
+    # per-element IoU arithmetic and suppress decisions are unchanged
+    # (tier: bitwise by construction, no BLAS).
     # (A python-scalar early-exit variant was A/B'd and LOST on real
     # MSER decks — kept sets grow into the hundreds, where the batched
     # check wins; measurement recorded in OPTIMIZATION_r07.md.)

@@ -21,12 +21,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .db_forward import (
-    _conv2d,
-    _conv2d_b,
-    _upsample_bilinear,
-    _upsample_bilinear_b,
-)
+from .db_forward import _conv2d, _upsample_bilinear
 
 _TEXT_GAIN, _TEXT_THRESH = 14.0, 0.22
 _LINK_GAIN, _LINK_THRESH = 10.0, 0.16
@@ -131,29 +126,3 @@ def craft_maps(
     link = 1.0 / (1.0 + np.exp(-_LINK_GAIN * (_upsample_bilinear(lk, h, w) - _LINK_THRESH)))
     return text, link
 
-
-def craft_maps_batch(
-    grays: list[np.ndarray],
-) -> list[tuple[np.ndarray, np.ndarray]]:
-    """Batched ``craft_maps`` over same-shape pages: one conv stack per
-    group instead of one per page. Per-page maps match the per-page
-    forward bitwise (row-stable GEMM + elementwise tail; law-tested)."""
-    from .blas import pin_blas_threads
-
-    pin_blas_threads(1)
-    h, w = grays[0].shape
-    W = _w32()
-    x = (np.stack(grays).astype(np.float32) / 255.0)[..., None]
-    e = np.maximum(_conv2d_b(x, W["w1"], W["b1"], stride=2), 0.0)
-    t = np.maximum(_conv2d_b(e, W["wt"], W["bt"], stride=1), 0.0)
-    t = _conv2d_b(t, W["wh"], W["bh"], stride=1)[..., 0].astype(np.float64)
-    lk = np.maximum(_conv2d_b(e, W["wl"], W["bl"], stride=1), 0.0)
-    lk = np.maximum(_conv2d_b(lk, W["wl"], W["bl"], stride=1), 0.0)
-    lk = _conv2d_b(lk, W["wh"], W["bh"], stride=1)[..., 0].astype(np.float64)
-    text = 1.0 / (
-        1.0 + np.exp(-_TEXT_GAIN * (_upsample_bilinear_b(t, h, w) - _TEXT_THRESH))
-    )
-    link = 1.0 / (
-        1.0 + np.exp(-_LINK_GAIN * (_upsample_bilinear_b(lk, h, w) - _LINK_THRESH))
-    )
-    return [(text[i], link[i]) for i in range(len(grays))]

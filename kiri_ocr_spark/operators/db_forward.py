@@ -39,7 +39,8 @@ _HEAD_THRESH = 0.18
 def _conv2d(x: np.ndarray, w: np.ndarray, b: np.ndarray, stride: int) -> np.ndarray:
     """Same-pad 3x3 conv via im2col; x [H, W, Cin], w [3, 3, Cin, Cout]."""
     H, W, C = x.shape
-    # zeros+assign == np.pad(constant 0) bitwise; np.pad's python-side
+    # zeros+assign == np.pad(constant 0), a plain copy (bitwise by
+    # construction); np.pad's python-side
     # setup was ~90 us/call at this call rate
     xp = np.zeros((H + 2, W + 2, C), dtype=x.dtype)
     xp[1:-1, 1:-1] = x
@@ -57,27 +58,6 @@ def _conv2d(x: np.ndarray, w: np.ndarray, b: np.ndarray, stride: int) -> np.ndar
     # one big GEMM beats numpy's per-row batching of (ow, 9C) tiles
     out = cols.reshape(-1, 9 * C) @ w.reshape(9 * C, -1) + b
     return out.reshape(oh, ow, -1)
-
-
-def _conv2d_b(x: np.ndarray, w: np.ndarray, b: np.ndarray, stride: int) -> np.ndarray:
-    """Batched _conv2d over [B, H, W, Cin] — same im2col, same GEMM
-    contraction per row (this BLAS's GEMM is row-stable across m, so a
-    page's outputs are bitwise the per-page _conv2d's — verified by the
-    batch-equality law test in test_heatmap_post)."""
-    B, H, W, C = x.shape
-    xp = np.zeros((B, H + 2, W + 2, C), dtype=x.dtype)
-    xp[:, 1:-1, 1:-1] = x
-    oh, ow = (H + stride - 1) // stride, (W + stride - 1) // stride
-    cols = np.empty((B, oh, ow, 9 * C), dtype=x.dtype)
-    for dy in range(3):
-        ye = dy + (oh - 1) * stride + 1
-        for dx in range(3):
-            xe = dx + (ow - 1) * stride + 1
-            cols[..., (dy * 3 + dx) * C : (dy * 3 + dx + 1) * C] = (
-                xp[:, dy:ye:stride, dx:xe:stride]
-            )
-    out = cols.reshape(-1, 9 * C) @ w.reshape(9 * C, -1) + b
-    return out.reshape(B, oh, ow, -1)
 
 
 def _upsample_bilinear(x: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
@@ -221,24 +201,6 @@ def forward(input_tensor: np.ndarray, fp32: bool = True) -> np.ndarray:
     return 1.0 / (1.0 + np.exp(-_HEAD_GAIN * (up - _HEAD_THRESH)))
 
 
-def _upsample_bilinear_b(x: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Batched _upsample_bilinear over [B, h, w] — identical per-element
-    arithmetic (same gather indices, same weight products)."""
-    in_h, in_w = x.shape[1:]
-    ys = (np.arange(out_h) + 0.5) * in_h / out_h - 0.5
-    xs = (np.arange(out_w) + 0.5) * in_w / out_w - 0.5
-    y0 = np.clip(np.floor(ys).astype(int), 0, in_h - 1)
-    y1 = np.clip(y0 + 1, 0, in_h - 1)
-    x0 = np.clip(np.floor(xs).astype(int), 0, in_w - 1)
-    x1 = np.clip(x0 + 1, 0, in_w - 1)
-    wy = np.clip(ys - y0, 0.0, 1.0)[None, :, None]
-    wx = np.clip(xs - x0, 0.0, 1.0)[None, None, :]
-    xy0, xy1 = x[:, y0], x[:, y1]
-    top = xy0[:, :, x0] * (1 - wx) + xy0[:, :, x1] * wx
-    bot = xy1[:, :, x0] * (1 - wx) + xy1[:, :, x1] * wx
-    return top * (1 - wy) + bot * wy
-
-
 def db_prob_map(resized_gray: np.ndarray) -> np.ndarray:
     """facade ``heatmap_fn`` entry: resized gray page -> prob map."""
     from .blas import pin_blas_threads
@@ -246,27 +208,3 @@ def db_prob_map(resized_gray: np.ndarray) -> np.ndarray:
     pin_blas_threads(1)  # 32 workers x 32 default BLAS threads thrashes
     return forward(preprocess(resized_gray))
 
-
-def db_prob_map_batch(resized_grays: list[np.ndarray]) -> list[np.ndarray]:
-    """Batched ``db_prob_map`` over same-shape resized pages: one conv
-    stack for the whole group instead of one per page (the per-page
-    forwards were pure call/im2col overhead at fixture page sizes).
-    Per-page outputs match the per-page forward bitwise (row-stable
-    GEMM + elementwise tail; law-tested)."""
-    from .blas import pin_blas_threads
-
-    pin_blas_threads(1)
-    W = _w32()
-    # preprocess: same f64 arithmetic as `preprocess`, cast to f32 after
-    g = np.stack(resized_grays).astype(np.float64) / 255.0
-    rgb = np.repeat(g[..., None], 3, axis=3)
-    x = ((rgb - _IMAGENET_MEAN) / _IMAGENET_STD).astype(np.float32)
-    h, w = x.shape[1:3]
-    x = np.maximum(_conv2d_b(x, W["w1"], W["b1"], stride=2), 0.0)
-    x = np.maximum(_conv2d_b(x, W["w2"], W["b2"], stride=2), 0.0)
-    x = np.maximum(_conv2d_b(x, W["w3"], W["b3"], stride=1), 0.0)
-    x = np.maximum(_conv2d_b(x, W["w3"], W["b3"], stride=1), 0.0)
-    x = _conv2d_b(x, W["wh"], W["bh"], stride=1)[..., 0].astype(np.float64)
-    up = _upsample_bilinear_b(x, h, w)
-    pm = 1.0 / (1.0 + np.exp(-_HEAD_GAIN * (up - _HEAD_THRESH)))
-    return [pm[i] for i in range(len(resized_grays))]

@@ -39,8 +39,9 @@ _BIN_IDX = np.arange(256, dtype=np.float64)
 def _otsu_from_hist(hist: np.ndarray) -> float:
     """Otsu's threshold from a 256-bin float histogram. masked np.divide
     instead of an errstate context (the context manager alone cost ~10 µs
-    per call — material at ~100 µs/image kernel budget); values are
-    bit-identical to the previous where/errstate form."""
+    per call — material at ~100 µs/image kernel budget); values equal
+    the previous where/errstate form (tier: bitwise, no BLAS — the same
+    divisions on the same elements)."""
     total = hist.sum()
     if total == 0:
         return 127.0
@@ -72,8 +73,9 @@ def orient_and_binarize(gray: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     reduce the same pixel distribution, so the mean comes from the
     histogram and inversion flips the histogram instead of re-scanning
     the image (bincount(255 - g) == bincount(g)[::-1] exactly).
-    Bit-identical to the unfused pair — asserted against it in
-    tests/test_kernels.py over fixture pages of both polarities.
+    Tier: bitwise, no BLAS, vs the unfused pair —
+    tests/test_kernels.py::test_orient_and_binarize_bit_identical_to_unfused
+    over fixture pages of both polarities.
 
     BILEVEL fast path (round 6, binarize was 33% of the kernel profile):
     a page whose pixels take exactly two values {lo, hi} — every plain
@@ -87,7 +89,7 @@ def orient_and_binarize(gray: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     histogram dot product produces (all other terms are zero). Cost:
     min/max + two equality counts (~13 us) instead of bincount + Otsu
     (~70 us); non-bilevel pages fall through to the histogram path
-    unchanged. Equality on ALL paths is law-tested (test_kernels)."""
+    unchanged. Equality on ALL paths is pinned by that same test."""
     if gray.size:
         lo = int(gray.min())
         hi = int(gray.max())

@@ -36,8 +36,10 @@ from .detect import (
     group_into_lines,
     invert_if_dark,
     line_boxes_from_groups,
+    merge_boxes_into_rows,
     reading_order,
     reading_order_db,
+    split_box_at_blank_rows,
 )
 from .finders import estimate_text_metrics, multi_method_candidates
 
@@ -103,11 +105,6 @@ class TextDetector:
             boxes = self._db_boxes(gray)
         else:
             boxes = self._craft_boxes(gray)
-        return self._finalize_boxes(gray, boxes)
-
-    def _finalize_boxes(self, gray: np.ndarray, boxes: np.ndarray) -> np.ndarray:
-        """Shared tail of detect_boxes: empty-result legacy fallback +
-        the method's reading order."""
         if len(boxes) == 0 and self.method != "legacy":
             # reference behavior: neural path found nothing -> legacy pass
             boxes = self._legacy_boxes(gray)
@@ -116,82 +113,29 @@ class TextDetector:
         order_fn = reading_order_db if self.method == "db" else reading_order
         return boxes[order_fn(boxes)]
 
-    def detect_boxes_batch(self, grays: list[np.ndarray]) -> list[np.ndarray]:
-        """detect_boxes over many pages, with the neural forward batched
-        across same-shape groups (the per-page conv stacks were pure
-        call/im2col overhead at small page sizes). Engages only when
-        ``heatmap_fn`` is the in-repo default forward — a user-supplied
-        heatmap_fn keeps the per-page contract. Per-page results are the
-        per-page path's bitwise (row-stable GEMM, identical postprocess;
-        law-tested)."""
-        batch_fn = None
-        if self.method in ("db", "craft") and (
-            self.heatmap_fn is default_heatmap_fn(self.method)
-        ):
-            if self.method == "db":
-                from .db_forward import db_prob_map_batch
+    def detect_line_boxes(self, gray: np.ndarray, ink: np.ndarray) -> np.ndarray:
+        """(n, 5) recognition-grade text-line boxes, top-down — the one
+        lines-mode detection every page kernel shares (the OCR class, the
+        trained extraction kernel, the media_text_* queries).
 
-                batch_fn = db_prob_map_batch
-            else:
-                from .craft_forward import craft_maps_batch
-
-                batch_fn = craft_maps_batch
-        if batch_fn is None:
-            return [self.detect_boxes(g) for g in grays]
-        from .heatmap_post import (
-            craft_boxes,
-            db_postprocess,
-            resize_to_multiple_of_32,
-        )
-
-        pages = [invert_if_dark(np.asarray(g, dtype=np.uint8)) for g in grays]
-        out: list = [None] * len(pages)
-        groups: dict[tuple, list[int]] = {}
-        for i, g in enumerate(pages):
-            groups.setdefault(g.shape, []).append(i)
-        for _, idxs in groups.items():
-            if self.method == "db":
-                resized_meta = [
-                    resize_to_multiple_of_32(
-                        pages[i], self.kwargs.get("max_side_len", 960)
-                    )
-                    for i in idxs
-                ]
-                maps = batch_fn([r for r, _, _ in resized_meta])
-                for i, pm, (_, (h, w), _) in zip(
-                    idxs, maps, resized_meta
-                ):
-                    quads, scores = db_postprocess(
-                        pm,
-                        dest_width=w,
-                        dest_height=h,
-                        thresh=self.kwargs.get("det_db_thresh", 0.3),
-                        box_thresh=self.kwargs.get("det_db_box_thresh", 0.5),
-                        unclip_ratio=self.kwargs.get(
-                            "det_db_unclip_ratio", 1.6
-                        ),
-                        min_size=self.kwargs.get("min_size", 3),
-                        score_mode=self.kwargs.get(
-                            "det_db_score_mode", "fast"
-                        ),
-                    )
-                    out[i] = self._finalize_boxes(
-                        pages[i], _quads_to_boxes(quads, scores)
-                    )
-            else:
-                maps = batch_fn([pages[i] for i in idxs])
-                for i, (textmap, linkmap) in zip(idxs, maps):
-                    quads = craft_boxes(
-                        textmap,
-                        linkmap,
-                        text_threshold=self.kwargs.get("text_threshold", 0.7),
-                        link_threshold=self.kwargs.get("link_threshold", 0.4),
-                        low_text=self.kwargs.get("low_text", 0.4),
-                    )
-                    out[i] = self._finalize_boxes(
-                        pages[i], _quads_to_boxes(quads, [1.0] * len(quads))
-                    )
-        return out
+        The in-sandbox-calibrated neural detectors emit word/region-grade
+        boxes; normalize them to text lines: W3 row clustering over the
+        boxes, then a blank-row band split inside each row hull (DB's
+        unclipped regions can span two tight lines); each band is tight
+        to its ink and keeps its row's score. A production-trained
+        DBNet/CRAFT emits line-grade regions and both steps reduce to
+        no-ops. Legacy boxes are already line-grade and pass through.
+        ``ink`` is the caller's binarization of ``gray`` (the band split
+        reads it)."""
+        boxes = self.detect_boxes(gray)
+        if self.method == "legacy":
+            return boxes
+        lines = [
+            (*b[:4], row[4])
+            for row in merge_boxes_into_rows(boxes)
+            for b in split_box_at_blank_rows(ink, row)
+        ]
+        return np.array(lines, dtype=float).reshape(-1, 5)
 
     def detect_lines(self, gray: np.ndarray) -> list[tuple[int, int, int, int]]:
         """Reference `detect_lines` shape: bboxes only."""

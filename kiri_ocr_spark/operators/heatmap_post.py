@@ -125,7 +125,9 @@ def min_area_rect(points: np.ndarray) -> tuple[tuple[float, float], tuple[float,
     # loop of tiny matmuls: rots[k] == hull @ [[c,-s],[s,c]] elementwise
     # (each entry is the same two-term a*c+b*s product), and argmin
     # picks the FIRST minimal area over the same sorted theta order the
-    # loop walked — bit-identical selection
+    # loop walked — the same selection (tier: bitwise on this BLAS, as
+    # the batched matmul must round each two-term product like the loop
+    # did; test_min_area_rect_* pin the rectangle to tolerance)
     cs, sn = np.cos(thetas), np.sin(thetas)
     R = np.empty((len(thetas), 2, 2))
     R[:, 0, 0] = cs
@@ -401,7 +403,8 @@ def craft_boxes(
         # all of this component's pixels — and its dilated segmap — live
         # inside the [sy:ey, sx:ex] window; run the per-component mask
         # ops there instead of over the whole map (same pixels, same
-        # row-major order, bit-identical boxes)
+        # row-major order: bitwise the same boxes by construction, no
+        # BLAS)
         niter = int(np.sqrt(size * min(w, h) / (w * h)) * 2)
         sx, ex = max(int(x) - niter, 0), min(int(x + w) + niter + 1, img_w)
         sy, ey = max(int(y) - niter, 0), min(int(y + h) + niter + 1, img_h)

@@ -199,7 +199,8 @@ def pos_enc_2d(h: int, w: int, d: int) -> np.ndarray:
 
 # deterministic pure function of (h, w, d) -> cache the dtype-cast result
 # instead of recomputing ~60k sin/cos/exp per encode call (guide §1.2
-# "per-task work"); values are bitwise the ones pos_enc_2d returns
+# "per-task work"); values are pos_enc_2d's own output (tier: bitwise by
+# construction — a cache, no arithmetic of its own)
 _POS_ENC_2D_CACHE: dict[tuple, np.ndarray] = {}
 
 
@@ -339,13 +340,13 @@ class NumpyKiriModel:
 
     def _conv(self, x: np.ndarray, layer: dict) -> np.ndarray:
         """3x3 same-pad strided conv via im2col; x: [B, H, W, Cin].
-        dtype-driven: float64 input (training, default inference) runs
-        bit-identically to before; float32 input stays float32."""
+        dtype-driven: float64 input (training, default inference) stays
+        float64; float32 input stays float32."""
         dt = x.dtype.type
         sy, sx = layer["stride"]
         B, H, W, C = x.shape
-        # zeros+assign == np.pad(constant 0) bitwise, without np.pad's
-        # python-side setup cost
+        # zeros+assign == np.pad(constant 0) (a plain copy: bitwise by
+        # construction), without np.pad's python-side setup cost
         xp = np.zeros((B, H + 2, W + 2, C), dtype=x.dtype)
         xp[:, 1:-1, 1:-1] = x
         oh, ow = (H + sy - 1) // sy, (W + sx - 1) // sx
@@ -379,10 +380,13 @@ class NumpyKiriModel:
     def _pad_stem(self, h: int, W: int, dt) -> np.ndarray:
         """Stem output of an all-pad(128) canvas [1, IMG_H, W] — computed
         once per (width, dtype) and cached. Every column of this output
-        that the splice below copies is bitwise what the full per-crop
-        forward would have produced there (row-stable GEMM: a pure-pad
-        im2col row's bits do not depend on its row index or the GEMM's
-        m — verified empirically for this BLAS in both dtypes)."""
+        that the splice below copies equals what the full per-crop
+        forward would have produced there. Tier: bitwise on this BLAS —
+        it needs a row-stable GEMM (a pure-pad im2col row's bits must not
+        depend on its row index or the GEMM's m), which the pytest
+        header's probe reports and
+        tests/test_model.py::test_pad_splice_stem_equals_full_stem_on_real_crops
+        pins in fp32 and fp64."""
         if not hasattr(self, "_pad_stem_cache"):
             self._pad_stem_cache = {}
         key = (h, W, np.dtype(dt).str)
@@ -399,17 +403,18 @@ class NumpyKiriModel:
         return hit
 
     def _stem_forward(self, x: np.ndarray, images: np.ndarray) -> np.ndarray:
-        """Conv stem with the bit-exact pad-splice fast path: recognizer
+        """Conv stem with the pad-splice fast path: recognizer
         inputs are left-aligned content right-padded with 128
         (resize_keep_ratio_pad), and the stem is local (3x3 convs), so
         every output column whose receptive field sits wholly inside the
         pad region is a constant column. Compute the stem only over the
         content slice (+margin) and splice the precomputed all-pad
-        canvas columns for the rest — bitwise identical to the full
-        forward (slice-width/batch row-stability verified for this BLAS,
-        fp32 + fp64), ~2.7x less stem work at the fixture's median
-        content width. Guide §1.2: per-task work, exploiting problem
-        knowledge (trailing pad) the kernel can prove from the input."""
+        canvas columns for the rest — ~2.7x less stem work at the
+        fixture's median content width. Guide §1.2: per-task work,
+        exploiting problem knowledge (trailing pad) the kernel can prove
+        from the input. Tier: bitwise on this BLAS (see _pad_stem),
+        pinned against a forced full stem by
+        tests/test_model.py::test_pad_splice_stem_equals_full_stem_on_real_crops."""
         std_stem = len(self.convs) == 3 and [
             tuple(c["stride"]) for c in self.convs
         ] == [(2, 2), (2, 2), (2, 1)]
@@ -509,8 +514,9 @@ class NumpyKiriModel:
 
     def _pos_row(self, p: int) -> np.ndarray:
         """Row ``p`` of the sinusoidal 1D positional encoding — identical
-        elementwise formula to pos_enc_1d(L)[p] for any L (bit-equal; the
-        encoding of a position never depends on the sequence length)."""
+        elementwise formula to pos_enc_1d(L)[p] for any L (tier: bitwise
+        by construction, no BLAS; the encoding of a position never
+        depends on the sequence length)."""
         D = self.cfg.D_MODEL
         div = np.exp(np.arange(0, D, 2) * (-np.log(10000.0) / D))
         row = np.zeros(D)
@@ -523,8 +529,9 @@ class NumpyKiriModel:
         memory — constant across decode steps, so computed ONCE per line
         instead of re-projected (x3 beam copies) inside every
         _decode_step: the profiled majority of beam wall. Consumed via
-        broadcasting matmul, which is bit-equal to the materialized
-        repeat (law-tested in test_model)."""
+        broadcasting matmul instead of a materialized repeat; tier:
+        text-exact with confidence within 1e-12 of the full re-forward
+        (tests/test_model.py::test_beam_kv_cache_matches_full_forward)."""
         H = self.cfg.N_HEADS
         _, T, D = mem.shape
         dh = D // H
@@ -558,8 +565,9 @@ class NumpyKiriModel:
         Equality contract is TEXT-level, not bit-level: the full
         re-forward's own bits already depend on the alive-beam count
         (BLAS m-blocking is not row-stable — measured), so bit-parity
-        was never defined even for the old path. The law test pins
-        text + ~1e-9 confidence agreement against the full forward over
+        was never defined even for the old path. Tier: text-exact —
+        tests/test_model.py::test_beam_kv_cache_matches_full_forward pins
+        text + 1e-12 confidence agreement against the full forward over
         seeded decks, and the extraction oracles pin end-to-end."""
         cfg = self.cfg
         H, D = cfg.N_HEADS, cfg.D_MODEL
@@ -598,7 +606,7 @@ class NumpyKiriModel:
             a = a.transpose(0, 2, 1, 3).reshape(B, 1, D) @ ly["so"]
             x = layer_norm(x + a, ly["g1"], ly["b1"])
             # cross-attention over the per-decode constant K/V (broadcast
-            # matmul == materialized repeat, bit-equal)
+            # matmul in place of a materialized repeat; text-exact tier)
             ckh, cvh = kv["cross"][li]
             q2 = (x @ ly["cq"]).reshape(B, 1, H, dh).transpose(0, 2, 1, 3)
             att2 = q2 @ ckh.transpose(0, 1, 3, 2) / scale
@@ -632,8 +640,9 @@ class NumpyKiriModel:
         gathers parent rows with a single fancy index instead of
         per-row np.stack (was ~40% of the step cost). Same math, same
         structure; the equality contract vs the per-line path is
-        TEXT-level + ~1e-9 confidence, exactly like
-        _advance_logits_kv's own contract vs the full teacher-forced
+        TEXT-level + 1e-9 confidence
+        (tests/test_model.py::test_beam_decode_batch_matches_per_line),
+        like _advance_logits_kv's own contract vs the full teacher-forced
         re-forward (BLAS m-blocking is not row-stable, so bit parity
         across batch shapes was never defined). Records each alive
         beam's K/V row index in its line's ``new_rows`` map. Returns
@@ -736,7 +745,9 @@ class NumpyKiriModel:
     def _beam_setup(self, mem_row: np.ndarray, beam: int | None):
         """Shared beam-search preamble: memory, step cap, CTC fusion state.
         Fusion state is a per-decode CtcPrefixScorer (None when fusion is
-        off) — incremental/memoized, bit-equal to ctc_forward_score."""
+        off) — incremental/memoized; tier: bitwise, no BLAS, vs
+        ctc_forward_score
+        (tests/test_finders.py::test_ctc_prefix_scorer_bitexact_vs_full_dp)."""
         cfg = self.cfg
         beam = beam or cfg.BEAM
         mem = mem_row[None]
@@ -982,13 +993,16 @@ class NumpyKiriModel:
         attention run as ONE batched call over all alive beams of all
         active lines (_advance_logits_kv_group) and (b) every line's
         CTC-fusion prefix extensions merge into ONE frame sweep
-        (ctc_scores_batch_multi — bit-identical to per-line sweeps).
+        (ctc_scores_batch_multi — elementwise in the per-line sweeps'
+        order, so bitwise without BLAS).
         The expansion rule, penalties, sort and final rescoring are the
         exact per-line code (_advance_expand/_advance_finish/_final_best
         are shared), applied per line; lines leave the wave at their own
         early-exit/length-cap step. Returns [(text, conf)] in input
-        order; text-equality vs per-line beam_decode is the law-tested
-        contract (same tier as the KV cache vs the full forward)."""
+        order. Tier: text-exact vs per-line beam_decode, confidence
+        within 1e-9
+        (tests/test_model.py::test_beam_decode_batch_matches_per_line;
+        same tier as the KV cache vs the full forward)."""
         cfg = self.cfg
         beam = beam or cfg.BEAM
         N = len(mems)
@@ -1128,9 +1142,10 @@ class NumpyKiriModel:
         best hypothesis — which may shrink or change mid-prefix when beams
         reorder ("may change in later steps due to beam search!"). Yields
         dicts {step, text, token, retracted, confidence, finished}; the
-        final yield's text/confidence equal beam_decode's return exactly
-        (law-tested). ``token`` is the appended suffix when the text grew
-        monotonically, '' with retracted=True when the new best is not an
+        final yield's text equals beam_decode's and its confidence agrees
+        within 1e-12 (tier: text-exact;
+        tests/test_model.py::test_beam_steps_final_equals_batch_under_ctc_fusion).
+        ``token`` is the appended suffix when the text grew monotonically, '' with retracted=True when the new best is not an
         extension of the previous one — the event a downstream sink must
         REPLACE on, not append."""
         beam, mem, max_len, scorer, ctc_text = self._beam_setup(mem_row, beam)
@@ -1262,11 +1277,13 @@ def _infer_config_from_state_dict(sd: dict, cfg: CFG) -> None:
 
 
 def load_model(model_path: str) -> NumpyKiriModel:
-    """Reload a saved model bit-for-bit: npz state dict + _meta.json
+    """Reload a saved model array-for-array: npz state dict + _meta.json
     config (shape inference when the sidecar is missing) + the vocab
     discovery chain; a missing vocab raises FileNotFoundError exactly like
-    the reference (core.py:248-251). The loaded model's decodes are
-    bit-identical to the saved one's (law-tested)."""
+    the reference (core.py:248-251). The loaded model's encodes and
+    decodes equal the saved one's (tier: bitwise by construction — same
+    arrays through the same code;
+    tests/test_model.py::test_save_load_bit_identical_decode)."""
     import json
     import os
 
@@ -1400,6 +1417,12 @@ def decode_crops_memo(
     a worker-lifetime memo would make low-parallelism runs cheaper per
     partition and quietly distort the two-level scaling gate. Bounded:
     cleared at 65536 entries (same policy as recognize._LINE_MEMO).
+
+    Tier: text-exact vs the plain ENCODE_CHUNK-stacked decode, confidence
+    within 1e-9
+    (tests/test_model.py::test_decode_crops_memo_equals_plain_chunked_decode):
+    the width sort below regroups misses into different chunks, and a
+    crop's encode bits are only as chunk-invariant as the BLAS.
     """
     out: list = [None] * len(crops)
     # method is part of the key: a memo dict populated under method='ctc'

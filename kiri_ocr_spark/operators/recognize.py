@@ -109,7 +109,9 @@ class CtcPrefixScorer:
     O(T) sweep; states memoize by target tuple, so the beam's shared
     prefixes are computed once.
 
-    Bit-exactness contract (law-tested in test_finders.py): every
+    Exactness tier: bitwise, no BLAS
+    (tests/test_finders.py::test_ctc_prefix_scorer_bitexact_vs_full_dp
+    and ::test_ctc_prefix_scorer_batch_matches_scalar): every
     logaddexp is applied in the SAME association order as
     ctc_forward_score's cell update (prev[s], then prev[s-1], then the
     skip prev[s-2]), columns accumulate frame-sequentially like the
@@ -200,8 +202,10 @@ def ctc_scores_batch_multi(
     Every op stays elementwise in the same per-element order as the
     single-scorer sweep (the blank column lpb widens from (T,) to
     (T, B) — same additions per element), so memoized states and scores
-    are BIT-IDENTICAL to per-scorer scores_batch, which remains
-    law-tested against the full ctc_forward_score DP."""
+    equal per-scorer scores_batch (tier: bitwise by construction, no
+    BLAS; pinned end to end by the text-exact
+    tests/test_model.py::test_beam_decode_batch_matches_per_line), which
+    test_finders pins bitwise against the full ctc_forward_score DP."""
     cols: list[tuple["CtcPrefixScorer", tuple]] = []
     seen: set[tuple[int, tuple]] = set()
     for scorer, targets in jobs:

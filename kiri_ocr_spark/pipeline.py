@@ -26,7 +26,9 @@ Design notes for 100 TB / 1000 executors:
 
 from __future__ import annotations
 
+import struct
 import time
+import zlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -44,6 +46,13 @@ SPAN_SCHEMA = (
     "doc_id long, offset int, kind string, text string, media_ref string, "
     "conf double, n_lines int"
 )
+
+# the per-row quarantine policy of every page kernel — each failure mode
+# of a missing or corrupt-but-magic-valid payload: bad magic / missing
+# IHDR / NULL payload (ValueError), truncated chunk header
+# (struct.error), corrupt/truncated IDAT (zlib.error), malformed
+# scanline geometry (IndexError/KeyError on reshape/filter type)
+_QUARANTINE = (ValueError, KeyError, IndexError, struct.error, zlib.error)
 
 # executor-side singleton: resolved once per Python worker process
 _TEMPLATES = {"index": None}
@@ -65,19 +74,10 @@ def _ocr_batches(broadcast):
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # warm the executor singleton before the first batch
-        import struct
-        import zlib
-
         import numpy as np  # noqa: F401
 
         from .imaging.png import decode_gray
         from .operators.recognize import extract_page_text
-
-        # every failure mode of a corrupt-but-magic-valid payload:
-        # bad magic / missing IHDR (ValueError), truncated chunk header
-        # (struct.error), corrupt/truncated IDAT (zlib.error), malformed
-        # scanline geometry (IndexError/KeyError on reshape/filter type)
-        _QUARANTINE = (ValueError, KeyError, IndexError, struct.error, zlib.error)
 
         _get_template_index(broadcast)
         for pdf in batches:
@@ -135,39 +135,31 @@ def _ocr_batches_trained(
     model loads once per Python worker (M8 get_model cache).
 
     ``det_method``: 'legacy' = the CC line finder (detect_lines);
-    'db' | 'craft' = the calibrated conv-forward detectors through the
-    TextDetector facade + the same row normalization process_document
-    applies (W3 row clustering + blank-row band split), followed by an
-    ink-bounds tighten per box (neural boxes carry unclip padding; the
-    training contract wants tight crops re-padded with
+    'db' | 'craft' = the calibrated conv-forward detectors, run per page
+    through TextDetector.detect_line_boxes (the OCR class's row
+    normalization: W3 row clustering + blank-row band split, which
+    leaves each box tight to its ink — neural boxes carry unclip
+    padding, and the training contract wants tight crops re-padded with
     pad_training_margins) — the table-scope equivalent of the
     reference's process_document(method='db'|'craft'),
-    detector/__init__.py:161-192 -> core.py:770-792."""
+    detector/__init__.py:161-192 -> core.py:770-792. Every detector's
+    work is timed inside its own row's ``kernel_us``."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-        import zlib
-
         import numpy as np
 
         from .imaging.png import decode_gray
         from .operators.detect import (
-            binarize,
             detect_lines,
-            merge_boxes_into_rows,
             orient_and_binarize,
             pad_training_margins,
             resize_keep_ratio_pad,
-            split_box_at_blank_rows,
         )
-        from .operators.model import get_model
+        from .operators.model import decode_crops_memo, get_model
 
-        _QUARANTINE = (ValueError, KeyError, IndexError, struct.error, zlib.error)
         model = get_model(path=model_path)
-        if det_method == "legacy":
-            detector = None
-            normalize_boxes = None
-        else:
+        detector = None
+        if det_method != "legacy":
             from .operators.facade import TextDetector
 
             det_kwargs = (
@@ -175,33 +167,6 @@ def _ocr_batches_trained(
             )
             detector = TextDetector(method=det_method, **det_kwargs)
 
-            def normalize_boxes(
-                raw: np.ndarray, ink: np.ndarray
-            ) -> list[np.ndarray]:
-                """Detector boxes -> recognition-grade line crop boxes:
-                W3 row clustering + blank-row band split + ink-bounds
-                tighten (mirroring OCR._recognize_region)."""
-                out = []
-                for row in merge_boxes_into_rows(raw):
-                    for b in split_box_at_blank_rows(ink, row):
-                        # tighten to the ink bounds inside the (unclip-
-                        # padded) region
-                        x, y, w, h = (int(v) for v in b[:4])
-                        sub = ink[y : y + h, x : x + w]
-                        ys, xs = np.nonzero(sub)
-                        if len(ys) == 0:
-                            continue  # blank band: no line to decode
-                        out.append(
-                            np.array(
-                                [
-                                    x + int(xs.min()),
-                                    y + int(ys.min()),
-                                    int(xs.max()) - int(xs.min()) + 1,
-                                    int(ys.max()) - int(ys.min()) + 1,
-                                ]
-                            )
-                        )
-                return out
         memo: dict = {}  # per-partition content-addressed decode memo
         for pdf in batches:
             n = len(pdf)
@@ -212,7 +177,6 @@ def _ocr_batches_trained(
             crops: list[np.ndarray] = []
             owners: list[int] = []  # crop -> row index
             t_prev = time.monotonic()
-            pages: dict[int, tuple] = {}  # ri -> (gray, ink), neural path
             for ri, blob in enumerate(pdf["png_bytes"]):
                 # snapshot so a mid-page quarantine rolls back any crops
                 # already appended for this row — otherwise the decode
@@ -226,25 +190,20 @@ def _ocr_batches_trained(
                     # unfused invert_if_dark + detect_lines(gray) pair
                     # paid a second full Otsu here
                     gray, ink = orient_and_binarize(decode_gray(bytes(blob)))
-                    if detector is not None:
-                        # neural detection runs BATCHED below (the
-                        # per-page conv forwards were call-overhead);
-                        # this row only decodes and binarizes here
-                        pages[ri] = (gray, ink)
-                    else:
+                    if detector is None:
                         boxes = detect_lines(gray, ink=ink)
-                        for b in boxes:
-                            x, y, w, h = (int(v) for v in b[:4])
-                            crops.append(
-                                resize_keep_ratio_pad(
-                                    pad_training_margins(
-                                        gray[y : y + h, x : x + w]
-                                    )
-                                )
+                    else:
+                        boxes = detector.detect_line_boxes(gray, ink)
+                    for b in boxes:
+                        x, y, w, h = (int(v) for v in b[:4])
+                        crops.append(
+                            resize_keep_ratio_pad(
+                                pad_training_margins(gray[y : y + h, x : x + w])
                             )
-                            owners.append(ri)
-                        nlines[ri] = len(boxes)
-                        texts[ri] = ""  # no-line page -> empty text
+                        )
+                        owners.append(ri)
+                    nlines[ri] = len(boxes)
+                    texts[ri] = ""  # no-line page -> empty text
                 except _QUARANTINE:
                     del crops[n_crops_at_row_start:]
                     del owners[n_crops_at_row_start:]
@@ -252,59 +211,10 @@ def _ocr_batches_trained(
                 t_now = time.monotonic()
                 row_us[ri] = int((t_now - t_prev) * 1_000_000)
                 t_prev = t_now
-            if pages:
-                # batched neural detect over the batch's decodable pages
-                # (grouped by shape inside detect_boxes_batch, bitwise
-                # the per-page path); detect wall spreads over the owning
-                # rows' kernel time like the encode phase below
-                t0d = time.monotonic()
-                ris = list(pages)
-                try:
-                    raw_list = detector.detect_boxes_batch(
-                        [pages[ri][0] for ri in ris]
-                    )
-                except _QUARANTINE:
-                    # a pathological page must quarantine ITSELF, not the
-                    # batch: fall back to per-page detection
-                    raw_list = []
-                    for ri in ris:
-                        try:
-                            raw_list.append(
-                                detector.detect_boxes(pages[ri][0])
-                            )
-                        except _QUARANTINE:
-                            raw_list.append(None)
-                for ri, raw in zip(ris, raw_list):
-                    if raw is None:
-                        continue  # per-page fallback quarantined it
-                    gray, ink = pages[ri]
-                    n_crops_at_row_start = len(crops)
-                    try:
-                        boxes = normalize_boxes(raw, ink)
-                        for b in boxes:
-                            x, y, w, h = (int(v) for v in b[:4])
-                            crops.append(
-                                resize_keep_ratio_pad(
-                                    pad_training_margins(
-                                        gray[y : y + h, x : x + w]
-                                    )
-                                )
-                            )
-                            owners.append(ri)
-                        nlines[ri] = len(boxes)
-                        texts[ri] = ""
-                    except _QUARANTINE:
-                        del crops[n_crops_at_row_start:]
-                        del owners[n_crops_at_row_start:]
-                per = int((time.monotonic() - t0d) * 1_000_000 / len(ris))
-                for ri in ris:
-                    row_us[ri] += per
             # one stacked forward per chunk, sized by ENCODE_CHUNK (the
             # cache-bound optimum — see its definition in operators/model).
             # fp32: the reference's inference dtype (torch/ONNX float32),
             # ~2x on the GEMM-bound stem; oracle stays per-line text-exact
-            from .operators.model import decode_crops_memo
-
             t0 = time.monotonic()
             decoded = decode_crops_memo(model, crops, memo, method=decode_method)
             if crops:  # spread encode cost over owning rows' kernel time

@@ -318,10 +318,12 @@ def decode_step_events(df: DataFrame, model_path: str | None = None) -> DataFram
 
     ``model_path`` routes the stream through TRAINED weights (the same
     artifact and fp32 inference dtype as every batch trained-decode
-    path), so streaming and batch decodes of one region stay bit-equal
-    whichever weights are loaded — the reference streams whatever model
-    core.py loaded, never a separate one. Default stays the seed build
-    in float64, matching the batch q_model_decode contract."""
+    path), so streaming and batch decodes of one region agree whichever
+    weights are loaded — the reference streams whatever model core.py
+    loaded, never a separate one. Tier: text-exact, confidence within
+    1e-9 (tests/test_streaming.py::test_step_events_with_trained_weights_match_batch).
+    Default stays the seed build in float64, matching the batch
+    q_model_decode contract."""
     import pandas as pd  # noqa: F811
 
     def kernel(batches):
@@ -336,7 +338,7 @@ def decode_step_events(df: DataFrame, model_path: str | None = None) -> DataFram
             for _, r in pdf.iterrows():
                 # same P3 preprocessing as the batch decoder kernel
                 # (q_model_decode) and OCR._recognize_region — streaming
-                # and batch decodes of one region must agree bit-for-bit
+                # and batch decodes of one region must agree (text-exact)
                 gray = resize_keep_ratio_pad(
                     invert_if_dark(decode_gray(bytes(r["png"])))
                 )

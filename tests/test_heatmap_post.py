@@ -555,7 +555,7 @@ def test_row_extreme_reduction_preserves_hull():
 def test_stream_chars_matches_process_document_on_neural_paths():
     """Advisor r5 (medium): extract_text_stream_chars must see the SAME
     normalized line regions as process_document — the stream contract is
-    'same text, token at a time'. Before the shared _detect_line_boxes
+    'same text, token at a time'. Before the shared detect_line_boxes
     helper, the stream skipped the db/craft row-normalization and a
     db slow-score fused two-stacked-line component streamed wrong text."""
     from kiri_ocr_spark.imaging.glyphs import SCALE, render_page
@@ -572,41 +572,3 @@ def test_stream_chars_matches_process_document_on_neural_paths():
         finished = [c for c in chunks if c["document_finished"]]
         assert finished and finished[-1]["cumulative_text"] == text
 
-
-def test_detect_boxes_batch_matches_per_page():
-    """Law (round 7): the facade's batched neural detection
-    (detect_boxes_batch — one conv forward per same-shape page group)
-    returns bitwise the per-page detect_boxes results, for db (both
-    score modes) and craft, including mixed page shapes; and the
-    batched forwards equal the per-page forwards map-for-map."""
-    import numpy as np
-
-    from kiri_ocr_spark.imaging.glyphs import render_page
-    from kiri_ocr_spark.operators import craft_forward, db_forward
-    from kiri_ocr_spark.operators.facade import TextDetector
-    from kiri_ocr_spark.operators.heatmap_post import resize_to_multiple_of_32
-
-    pages = [
-        render_page(["first line of text", "second line here"]),
-        render_page(["one more page"]),
-        render_page(["first line of text", "second line here"]),  # same shape as #0
-        render_page(["a", "b", "c"]),
-    ]
-    for method, kwargs in (
-        ("db", {"det_db_score_mode": "slow"}),
-        ("db", {}),
-        ("craft", {}),
-    ):
-        det = TextDetector(method=method, **kwargs)
-        per = [det.detect_boxes(g) for g in pages]
-        bat = det.detect_boxes_batch(pages)
-        for a, b in zip(per, bat):
-            assert a.shape == b.shape and np.array_equal(a, b)
-    # forward-level parity on a same-shape group
-    same = [pages[0], pages[2]]
-    rs = [resize_to_multiple_of_32(g)[0] for g in same]
-    for r, m in zip(rs, db_forward.db_prob_map_batch(rs)):
-        assert np.array_equal(db_forward.db_prob_map(r), m)
-    for g, (tm, lm) in zip(same, craft_forward.craft_maps_batch(same)):
-        t0, l0 = craft_forward.craft_maps(g)
-        assert np.array_equal(t0, tm) and np.array_equal(l0, lm)

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -437,12 +438,14 @@ def test_color_bank_recovers_luma_invisible_text():
     assert int(np.argmax(all_scores)) >= 14
 
 
-def test_trained_ocr_kernel_decodes_and_quarantines():
-    """_ocr_batches_trained (extract_spans_trained's media kernel): exact
-    decode of plain and tinted pages through the trained weights, empty
-    text on a blank page, and the same quarantine contract as the
-    template kernel (None payload / corrupt PNG -> text NULL, conf 0,
-    n_lines -1) — one corrupt payload must never fail the task."""
+@pytest.mark.parametrize("det_method", ["legacy", "db", "craft"])
+def test_trained_ocr_kernel_decodes_and_quarantines(det_method):
+    """_ocr_batches_trained (extract_spans_trained's media kernel, and
+    extract_spans_db/_craft's with a neural detector): exact decode of
+    plain and tinted pages through the trained weights, and the same
+    quarantine contract as the template kernel (None payload / corrupt
+    PNG -> text NULL, conf 0, n_lines -1) — one corrupt payload must
+    never fail the task, whichever detector runs."""
     import pandas as pd
 
     from kiri_ocr_spark.fixtures import _tint_page
@@ -462,7 +465,8 @@ def test_trained_ocr_kernel_decodes_and_quarantines():
             "png_bytes": [plain, tinted, None, b"\x89PNG\r\n\x1a\ngarbage"],
         }
     )
-    (out,) = list(_ocr_batches_trained(trained_model_path())([pdf]))
+    kernel = _ocr_batches_trained(trained_model_path(), det_method=det_method)
+    (out,) = list(kernel([pdf]))
     rows = {r.media_ref: r for r in out.itertuples()}
     assert rows["a"].text == "the fast key" and rows["a"].n_lines == 1
     assert rows["b"].text == "order sort\ntable" and rows["b"].n_lines == 2

@@ -546,3 +546,61 @@ def test_beam_decode_batch_matches_per_line():
     for (ta, ca), (tb, cb) in zip(pl, bt):
         assert ta == tb
         assert abs(ca - cb) < 1e-9
+
+
+@pytest.mark.parametrize("dt", [np.float32, np.float64])
+def test_pad_splice_stem_equals_full_stem_on_real_crops(dt):
+    """Law for encode's pad-splice stem (model._stem_forward): on
+    realistic right-padded recognizer inputs — rendered fixture lines,
+    detected, cropped and preprocessed exactly like the trained
+    extraction kernel (pad_training_margins -> resize_keep_ratio_pad) —
+    the spliced stem is bitwise the forced full stem (a plain loop over
+    model.convs), per crop and stacked, in both dtypes. Tier: bitwise on
+    this BLAS (the splice reuses an all-pad canvas's columns, so it
+    relies on GEMM row stability; the pytest header prints the probe)."""
+    from kiri_ocr_spark.imaging.glyphs import SCALE, render_page
+    from kiri_ocr_spark.operators.detect import (
+        detect_lines,
+        orient_and_binarize,
+        pad_training_margins,
+    )
+    from kiri_ocr_spark.queries import trained_model_path
+
+    model = get_model(path=trained_model_path())
+    gray, ink = orient_and_binarize(
+        render_page(["zzz", "the fast key", "order sort table scan"], scale=SCALE)
+    )
+    crops = [
+        resize_keep_ratio_pad(
+            pad_training_margins(gray[y : y + h, x : x + w])
+        )
+        for x, y, w, h in (
+            (int(v) for v in b[:4]) for b in detect_lines(gray, ink=ink)
+        )
+    ]
+    assert len(crops) == 3
+
+    spliced = {"n": 0}
+    real_pad_stem = model._pad_stem
+
+    def counting_pad_stem(*args):
+        spliced["n"] += 1
+        return real_pad_stem(*args)
+
+    model._pad_stem = counting_pad_stem  # instance attribute: this test only
+    try:
+        batches = [c[None] for c in crops] + [np.stack(crops)]
+        for images in batches:
+            nz = np.flatnonzero((images != 128).any(axis=(0, 1)))
+            # right-padded: content ends before the canvas edge
+            assert nz[-1] + 1 < images.shape[2]
+            x = ((images.astype(dt) / 255.0 - 0.5) / 0.5)[..., None]
+            full = x
+            for layer in model.convs:
+                full = model._conv(full, layer)
+            got = model._stem_forward(x, images)
+            assert got.dtype == full.dtype == dt
+            assert np.array_equal(got, full)
+        assert spliced["n"] == len(batches)  # every input took the splice
+    finally:
+        del model._pad_stem
