@@ -27,41 +27,29 @@ import sys
 
 
 def run_extract(args: argparse.Namespace) -> int:
-    import numpy as np
-
-    from .imaging.overlay import draw_overlay, html_report
-    from .imaging.png import decode_gray, encode_gray
+    from .imaging.png import decode_gray
     from .operators.detect import binarize, detect_lines, invert_if_dark
     from .operators.recognize import recognize_line
 
     with open(args.image, "rb") as f:
         gray = decode_gray(f.read())
     gray = invert_if_dark(gray)
-    ink = binarize(gray)
-    if getattr(args, "model", None):
-        # trained weights: route through the OCR class's neural decode
-        # paths (same result-dict contract as the inline path below)
+    if args.model or args.method != "projection":
+        # the OCR class: --model routes recognition through its neural
+        # decode paths (--decode picks the mode); --method picks the
+        # reference facade's detector (detector/__init__.py:34); craft/db
+        # run the in-repo numpy forwards, and their boxes become text rows
+        # through TextDetector.detect_line_boxes (merge + blank-row band
+        # split, db slow score)
         from .ocr import OCR
 
         ocr = OCR(
             model_path=args.model,
             det_method="legacy" if args.method == "projection" else args.method,
-            decode_method=args.decode,
+            decode_method=args.decode if args.model else "fast",
         )
-        results = ocr.process_document(gray)
-        return _write_extract_sinks(args, gray, results)
-    if args.method != "projection":
-        # the reference facade's method switch (detector/__init__.py:34)
-        # through the OCR class: craft/db resolve the in-repo numpy
-        # forwards, and process_document normalizes their word/region-
-        # grade boxes to text rows (merge + blank-row band split, db
-        # slow score) — the per-line-text-verified path
-        # (media_text_db/_craft oracles), identical to the model route
-        # above but with the template decode
-        from .ocr import OCR
-
-        results = OCR(det_method=args.method).process_document(gray)
-        return _write_extract_sinks(args, gray, results)
+        return _write_extract_sinks(args, gray, ocr.process_document(gray))
+    ink = binarize(gray)
     boxes = detect_lines(gray, ink=ink)
     results = []
     for i, box in enumerate(boxes, start=1):
@@ -113,7 +101,7 @@ def _write_extract_sinks(args, gray, results) -> int:
 def run_batch(args: argparse.Namespace) -> int:
     from pyspark.sql import functions as F
 
-    from .pipeline import OCR_SCHEMA, _ocr_batches_trained
+    from .pipeline import OCR_SCHEMA, _ocr_batches
     from .queries import trained_model_path
     from .session import get_spark
 
@@ -134,7 +122,7 @@ def run_batch(args: argparse.Namespace) -> int:
     # the extraction default's media kernel (extract_span_rows with
     # recognizer="trained", detector="legacy")
     ocr = scan.mapInPandas(
-        _ocr_batches_trained(trained_model_path()), schema=OCR_SCHEMA
+        _ocr_batches(trained_model_path()), schema=OCR_SCHEMA
     ).select("media_ref", "text", "conf", "n_lines")
     ocr.write.mode("overwrite").parquet(args.out)
     n = spark.read.parquet(args.out).count()

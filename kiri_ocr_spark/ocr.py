@@ -115,6 +115,21 @@ class OCR:
                 gray = decode_gray(f.read())
         return invert_if_dark(np.asarray(gray, dtype=np.uint8))
 
+    def _regions(self, image, mode: str):
+        """(gray, ink, boxes) for ``mode`` 'lines' | 'words' — the one
+        region selection process_document and the stream generator share,
+        so both see identical regions ('same text, token at a time')."""
+        gray = self._load_gray(image)
+        ink = binarize(gray)
+        if mode == "lines":
+            boxes = self.detector.detect_line_boxes(gray, ink)
+        elif mode == "words":
+            boxes = [(bx, by, bw, bh, 1.0) for bx, by, bw, bh in
+                     self.detector.detect_words(gray)]
+        else:
+            raise ValueError(f"unknown mode {mode!r}")
+        return gray, ink, boxes
+
     # -- recognition per region --------------------------------------------
 
     def _recognize_region(self, gray: np.ndarray, ink: np.ndarray, box) -> tuple[str, float]:
@@ -123,22 +138,20 @@ class OCR:
         x0, y0 = max(x - p, 0), max(y - p, 0)
         x1 = min(x + w + p, gray.shape[1])
         y1 = min(y + h + p, gray.shape[0])
+        # tighten to the ink bounds inside the (possibly padded) box:
+        # detector paddings vary by method, the template recognizer's
+        # unit-scale subsampling needs the crop aligned to the glyph grid,
+        # and the neural paths re-pad a tight crop below
+        ys, xs = np.nonzero(ink[y0:y1, x0:x1])
+        if len(ys) == 0:
+            return "", 0.0
+        ty0, ty1 = y0 + int(ys.min()), y0 + int(ys.max()) + 1
+        tx0, tx1 = x0 + int(xs.min()), x0 + int(xs.max()) + 1
         if self.decode_method == "ctc" and self._model_path is None:
             # no weights shipped: the template path is this engine's CTC
-            # exactness construction. Tighten to the ink bounds inside the
-            # (possibly padded) box: the template recognizer's unit-scale
-            # subsampling needs the crop aligned to the glyph grid, and
-            # detector paddings vary
-            sub = ink[y0:y1, x0:x1]
-            ys, xs = np.nonzero(sub)
-            if len(ys) == 0:
-                return "", 0.0
-            tx0, ty0 = x0 + int(xs.min()), y0 + int(ys.min())
-            tw = int(xs.max()) - int(xs.min()) + 1
-            th = int(ys.max()) - int(ys.min()) + 1
-            return recognize_line(ink, np.array([tx0, ty0, tw, th]))
-        # neural paths: tighten to the ink bounds (detector paddings vary
-        # by method) then restore the training geometry — the renderer's
+            # exactness construction
+            return recognize_line(ink, np.array([tx0, ty0, tx1 - tx0, ty1 - ty0]))
+        # neural paths: restore the training geometry — the renderer's
         # PAD_Y/PAD_X background margins around the line, padded with the
         # crop's OWN background luma (255 plain pages, 239 tinted codec
         # pages) — before resize. This is the in-sandbox-trained
@@ -146,12 +159,6 @@ class OCR:
         # normalize constants play for its weights.
         from .operators.detect import pad_training_margins
 
-        sub = ink[y0:y1, x0:x1]
-        ys, xs = np.nonzero(sub)
-        if len(ys) == 0:
-            return "", 0.0
-        ty0, ty1 = y0 + int(ys.min()), y0 + int(ys.max()) + 1
-        tx0, tx1 = x0 + int(xs.min()), x0 + int(xs.max()) + 1
         crop = pad_training_margins(gray[ty0:ty1, tx0:tx1])
         # fp32 inference for TRAINED weights — the reference's deployment
         # dtype (its torch / ONNX checkpoints are float32); decode margins
@@ -178,17 +185,7 @@ class OCR:
         """core.py:719-793: detect regions (lines or words), recognize
         each; result dicts carry box/text/confidence/det_confidence/
         line_number."""
-        gray = self._load_gray(image)
-        ink = binarize(gray)
-        if mode == "lines":
-            # the stream generator below detects through the same call:
-            # both must see identical regions ('same text, token at a time')
-            boxes = self.detector.detect_line_boxes(gray, ink)
-        elif mode == "words":
-            boxes = [(bx, by, bw, bh, 1.0) for bx, by, bw, bh in
-                     self.detector.detect_words(gray)]
-        else:
-            raise ValueError(f"unknown mode {mode!r}")
+        gray, ink, boxes = self._regions(image, mode)
         results = []
         for i, box in enumerate(boxes, start=1):
             text, conf = self._recognize_region(gray, ink, box)
@@ -231,14 +228,7 @@ class OCR:
         streaming/extract.stream_token_decode (CTC, monotone) and
         stream_beam_retraction (decoder mode); this is the reference's
         driver-side generator shape."""
-        gray = self._load_gray(image)
-        ink = binarize(gray)
-        boxes = (
-            self.detector.detect_line_boxes(gray, ink)
-            if mode == "lines"
-            else [(bx, by, bw, bh, 1.0) for bx, by, bw, bh in
-                  self.detector.detect_words(gray)]
-        )
+        gray, ink, boxes = self._regions(image, mode)
         total = len(boxes)
         all_texts: list[str] = []
         for region_num, box in enumerate(boxes, start=1):

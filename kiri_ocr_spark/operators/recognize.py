@@ -9,7 +9,7 @@ deterministic kernel over the same glyph set the fixtures render with:
 
 1. per detected line, recover the unit-scale bitmap and segment glyph cells
    by blank-column projection;
-2. match each cell against the broadcast glyph templates (exact hash hit,
+2. match each cell against the glyph templates (exact hash hit,
    else nearest-by-Hamming with reduced confidence) to produce a per-frame
    log-probability lattice (frames = glyph/gap slots, vocab = blank + space
    + charset, blank id 0 per the reference's CTC convention
@@ -26,7 +26,6 @@ from __future__ import annotations
 import numpy as np
 
 from ..imaging.glyphs import CHARSET, GLYPH_H, GLYPH_W, template_index
-from .detect import binarize, detect_lines, invert_if_dark, orient_and_binarize
 
 BLANK_ID = 0
 SPACE_ID = 1
@@ -392,17 +391,3 @@ def recognize_line(ink: np.ndarray, box: np.ndarray) -> tuple[str, float]:
     _LINE_MEMO[key] = out
     return out
 
-
-def extract_page_text(gray: np.ndarray) -> tuple[str, float, int]:
-    """Full media-span kernel: detect lines, recognize each, join by \\n
-    (reference assembly core.py:1160). Returns (text, mean_conf, n_lines)."""
-    gray, ink = orient_and_binarize(gray)  # fused P2+F10, one hist pass
-    boxes = detect_lines(gray, ink=ink)
-    texts: list[str] = []
-    confs: list[float] = []
-    for box in boxes:
-        text, conf = recognize_line(ink, box)
-        texts.append(text)
-        confs.append(conf)
-    mean_conf = float(np.mean(confs)) if confs else 0.0
-    return "\n".join(texts), mean_conf, len(texts)

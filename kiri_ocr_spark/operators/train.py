@@ -560,8 +560,8 @@ def pipeline_line_crops(sf_dir: str, max_docs: int | None = None):
     """(line_text, crop) pairs with the DEPLOYMENT crop geometry: render
     each media PAGE per the fixture spec (plain/inverted/tinted), PNG
     round-trip, fused orient+binarize, `detect_lines`, then
-    pad_training_margins + resize — exactly `pipeline._ocr_batches_trained`'s
-    legacy-kernel crop code. This differs from `render_crop`'s
+    pad_training_margins + resize — exactly `pipeline.page_kernel`'s
+    trained-recognizer, legacy-detector crop code. This differs from `render_crop`'s
     training-style margins: the stage-5f candidate regressed two sf0.1
     lines through THESE crops while sweeping zero-miss on every
     training-style deck, so the artifact gate must sweep BOTH geometries.

@@ -6,7 +6,7 @@
         +-- text:  native trim/collapse + NFC pandas_udf (F1/F2)
         +-- media: salt (skew: media-heavy docs) -> repartition
                    -> join media payload (broadcast small / SMJ + AQE skew)
-                   -> mapInPandas OCR kernel (detect F13 + recognize M2/F7)
+                   -> mapInPandas page_kernel (detect F13 + recognize M2/F7)
                    -> bytes projected away immediately (§4.3 large-binary hygiene)
         \\-> unionByName (U5)
         -> groupBy(doc_id) ordered-span assembly (A8/W9) -- the only
@@ -17,9 +17,8 @@ Design notes for 100 TB / 1000 executors:
   expensive work, and the salt column spreads one hot doc's spans across
   the cluster (north_rule "explicit salting of skewed media-heavy
   partitions"); AQE skew-join covers the payload join side;
-- glyph templates (the recognizer "weights") ride a broadcast variable and
-  are materialized once per Python worker via an executor-side singleton
-  (north_star "weights broadcast once per executor");
+- recognizer weights (trained model, glyph templates) are loaded once per
+  Python worker by executor-side caches, never shipped per task;
 - everything outside the OCR kernel is native Catalyst -> whole-stage
   codegen; the kernel is Arrow-batched, never per-row Python.
 """
@@ -54,146 +53,83 @@ SPAN_SCHEMA = (
 # scanline geometry (IndexError/KeyError on reshape/filter type)
 _QUARANTINE = (ValueError, KeyError, IndexError, struct.error, zlib.error)
 
-# executor-side singleton: resolved once per Python worker process
-_TEMPLATES = {"index": None}
 
-
-def _get_template_index(broadcast=None):
-    if _TEMPLATES["index"] is None:
-        if broadcast is not None:
-            _TEMPLATES["index"] = broadcast.value
-        else:  # deterministic rebuild — same bits everywhere
-            from .imaging.glyphs import template_index
-
-            _TEMPLATES["index"] = template_index()
-    return _TEMPLATES["index"]
-
-
-def _ocr_batches(broadcast):
-    """mapInPandas kernel: decode PNG -> detect lines -> CTC recognize."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # warm the executor singleton before the first batch
-        import numpy as np  # noqa: F401
-
-        from .imaging.png import decode_gray
-        from .operators.recognize import extract_page_text
-
-        _get_template_index(broadcast)
-        for pdf in batches:
-            texts, confs, nlines, row_us = [], [], [], []
-            t_prev = time.monotonic()
-            for blob in pdf["png_bytes"]:
-                # quarantine, don't crash: one corrupt payload among 10^12
-                # docs must not fail the task (and with it the wave).
-                # Marker: text NULL, conf 0, n_lines -1 — downstream can
-                # route `n_lines = -1` rows to a dead-letter table.
-                try:
-                    if blob is None:  # payload missing from the store
-                        raise ValueError("missing media payload")
-                    gray = decode_gray(bytes(blob))
-                    text, conf, n = extract_page_text(gray)
-                except _QUARANTINE:
-                    text, conf, n = None, 0.0, -1
-                texts.append(text)
-                confs.append(conf)
-                nlines.append(n)
-                # true per-row kernel time (µs), stamped inside the row
-                # loop: summing the column over any row grouping (e.g.
-                # checkpoint part_id) yields that group's actual kernel
-                # wall — heavy rows (16-image skew-tail docs, corrupt
-                # payloads) carry their own cost, not a batch average
-                t_now = time.monotonic()
-                row_us.append(int((t_now - t_prev) * 1_000_000))
-                t_prev = t_now
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "offset": pdf["offset"],
-                    "kind": pdf["kind"],
-                    "text": texts,
-                    "media_ref": pdf["media_ref"],
-                    "conf": confs,
-                    "n_lines": nlines,
-                    "kernel_us": row_us,
-                }
-            )
-
-    return fn
-
-
-def _ocr_batches_trained(
-    model_path: str, det_method: str = "legacy", decode_method: str = "ctc"
+def page_kernel(
+    model_path: str | None, det_method: str = "legacy", decode_method: str = "ctc"
 ):
-    """mapInPandas kernel, trained-recognizer variant (the reference's
-    actual architecture — core.py:719-793 always decodes through the
-    model): decode PNG -> detect lines -> batched numpy-transformer CTC
-    decode with the in-sandbox-trained weights. Crop preprocessing is
-    the trained artifact's contract (pad_training_margins + resize),
-    identical to q_model_decode_trained. Encodes are batched ACROSS
-    pages (one stacked forward per chunk of crops), not per line; the
-    model loads once per Python worker (M8 get_model cache).
+    """The one page kernel every line-recognizing query runs: decode PNG
+    -> fused orient + binarize -> detect lines -> recognize each line.
+
+    Returns ``ocr(blobs, memo) -> (lines, row_us)``: ``lines[i]`` is page
+    i's ``[(text, conf), ...]`` in reading order, or None when the page is
+    quarantined (every ``_QUARANTINE`` failure of a missing or corrupt
+    payload); ``row_us[i]`` is page i's own kernel time in µs. Build it
+    executor-side (inside the mapInPandas function): it loads the model.
 
     ``det_method``: 'legacy' = the CC line finder (detect_lines);
-    'db' | 'craft' = the calibrated conv-forward detectors, run per page
-    through TextDetector.detect_line_boxes (the OCR class's row
-    normalization: W3 row clustering + blank-row band split, which
-    leaves each box tight to its ink — neural boxes carry unclip
-    padding, and the training contract wants tight crops re-padded with
-    pad_training_margins) — the table-scope equivalent of the
-    reference's process_document(method='db'|'craft'),
-    detector/__init__.py:161-192 -> core.py:770-792. Every detector's
-    work is timed inside its own row's ``kernel_us``."""
+    'db' | 'craft' = the calibrated conv-forward detectors through
+    TextDetector.detect_line_boxes (W3 row clustering + blank-row band
+    split, which leaves each box tight to its ink; db with the slow
+    component-pixel score) — the reference's
+    process_document(method='db'|'craft'), detector/__init__.py:161-192
+    -> core.py:770-792.
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    ``model_path`` None: the glyph-template recognizer (recognize_line on
+    the ink mask; ``memo`` is unused, the template path memoizes per
+    worker). Otherwise the trained transformer (core.py:719-793 always
+    decodes through the model): crops follow the trained artifact's
+    contract (pad_training_margins + resize) and are stacked ACROSS the
+    batch's pages into one decode_crops_memo call (``decode_method``
+    'ctc' or 'beam'); ``memo`` is its caller-owned, per-partition memo.
+    The model loads once per Python worker (M8 get_model cache)."""
+    import numpy as np
 
-        from .imaging.png import decode_gray
-        from .operators.detect import (
-            detect_lines,
-            orient_and_binarize,
-            pad_training_margins,
-            resize_keep_ratio_pad,
-        )
+    from .imaging.png import decode_gray
+    from .operators.detect import (
+        detect_lines,
+        orient_and_binarize,
+        pad_training_margins,
+        resize_keep_ratio_pad,
+    )
+
+    model = detector = None
+    if model_path is None:
+        from .operators.recognize import recognize_line
+    else:
         from .operators.model import decode_crops_memo, get_model
 
         model = get_model(path=model_path)
-        detector = None
-        if det_method != "legacy":
-            from .operators.facade import TextDetector
+    if det_method != "legacy":
+        from .operators.facade import TextDetector
 
-            det_kwargs = (
-                {"det_db_score_mode": "slow"} if det_method == "db" else {}
-            )
-            detector = TextDetector(method=det_method, **det_kwargs)
+        det_kwargs = {"det_db_score_mode": "slow"} if det_method == "db" else {}
+        detector = TextDetector(method=det_method, **det_kwargs)
 
-        memo: dict = {}  # per-partition content-addressed decode memo
-        for pdf in batches:
-            n = len(pdf)
-            texts: list = [None] * n
-            confs = [0.0] * n
-            nlines = [-1] * n
-            row_us = [0] * n
-            crops: list[np.ndarray] = []
-            owners: list[int] = []  # crop -> row index
-            t_prev = time.monotonic()
-            for ri, blob in enumerate(pdf["png_bytes"]):
-                # snapshot so a mid-page quarantine rolls back any crops
-                # already appended for this row — otherwise the decode
-                # loop later overwrites the row's text=NULL dead-letter
-                # marker with partial text while n_lines stays -1
-                n_crops_at_row_start = len(crops)
-                try:
-                    if blob is None:
-                        raise ValueError("missing media payload")
-                    # fused P2+F10 (one pass, bilevel fast path) — the
-                    # unfused invert_if_dark + detect_lines(gray) pair
-                    # paid a second full Otsu here
-                    gray, ink = orient_and_binarize(decode_gray(bytes(blob)))
-                    if detector is None:
-                        boxes = detect_lines(gray, ink=ink)
-                    else:
-                        boxes = detector.detect_line_boxes(gray, ink)
+    def ocr(blobs, memo: dict) -> tuple[list, list[int]]:
+        n = len(blobs)
+        lines: list = [None] * n
+        row_us = [0] * n
+        crops: list[np.ndarray] = []
+        owners: list[int] = []  # crop -> page index
+        t_prev = time.monotonic()
+        for ri, blob in enumerate(blobs):
+            # snapshot so a mid-page quarantine rolls back any crops
+            # already appended for this page — otherwise the stacked
+            # decode below hands partial text to a quarantined page
+            n_crops_at_row_start = len(crops)
+            # quarantine, don't crash: one corrupt payload among 10^12
+            # docs must not fail the task (and with it the wave)
+            try:
+                if blob is None:  # payload missing from the store
+                    raise ValueError("missing media payload")
+                gray, ink = orient_and_binarize(decode_gray(bytes(blob)))
+                if detector is None:
+                    boxes = detect_lines(gray, ink=ink)
+                else:
+                    boxes = detector.detect_line_boxes(gray, ink)
+                if model is None:
+                    lines[ri] = [recognize_line(ink, b) for b in boxes]
+                else:
                     for b in boxes:
                         x, y, w, h = (int(v) for v in b[:4])
                         crops.append(
@@ -202,42 +138,88 @@ def _ocr_batches_trained(
                             )
                         )
                         owners.append(ri)
-                    nlines[ri] = len(boxes)
-                    texts[ri] = ""  # no-line page -> empty text
-                except _QUARANTINE:
-                    del crops[n_crops_at_row_start:]
-                    del owners[n_crops_at_row_start:]
-                    # quarantine markers already in place
-                t_now = time.monotonic()
-                row_us[ri] = int((t_now - t_prev) * 1_000_000)
-                t_prev = t_now
-            # one stacked forward per chunk, sized by ENCODE_CHUNK (the
-            # cache-bound optimum — see its definition in operators/model).
-            # fp32: the reference's inference dtype (torch/ONNX float32),
-            # ~2x on the GEMM-bound stem; oracle stays per-line text-exact
-            t0 = time.monotonic()
+                    lines[ri] = []
+            except _QUARANTINE:
+                del crops[n_crops_at_row_start:]
+                del owners[n_crops_at_row_start:]
+            # true per-row kernel time, stamped inside the row loop:
+            # summing it over any row grouping (e.g. checkpoint part_id)
+            # yields that group's actual kernel wall — heavy rows carry
+            # their own cost, not a batch average
+            t_now = time.monotonic()
+            row_us[ri] = int((t_now - t_prev) * 1_000_000)
+            t_prev = t_now
+        if crops:
+            # one stacked decode for the whole batch (ENCODE_CHUNK-sized
+            # fp32 encodes); its cost is spread over the owning rows
             decoded = decode_crops_memo(model, crops, memo, method=decode_method)
-            if crops:  # spread encode cost over owning rows' kernel time
-                per = int((time.monotonic() - t0) * 1_000_000 / len(crops))
-                by_row: dict[int, list[tuple[str, float]]] = {}
-                for ri, d in zip(owners, decoded):
-                    by_row.setdefault(ri, []).append(d)
-                    row_us[ri] += per
-                for ri, items in by_row.items():
-                    texts[ri] = "\n".join(t for t, _ in items)
-                    confs[ri] = float(np.mean([c for _, c in items]))
+            per = int((time.monotonic() - t_prev) * 1_000_000 / len(crops))
+            for ri, d in zip(owners, decoded):
+                lines[ri].append(d)
+                row_us[ri] += per
+        return lines, row_us
+
+    return ocr
+
+
+def _ocr_batches(
+    model_path: str | None, det_method: str = "legacy", decode_method: str = "ctc"
+):
+    """mapInPandas kernel over (doc_id, offset, kind, media_ref,
+    png_bytes) -> OCR_SCHEMA rows: page text = its lines joined by \\n
+    (reference assembly core.py:1160), conf = mean line conf (0 for a
+    page without lines), n_lines; a quarantined page carries the
+    dead-letter marker text NULL, conf 0, n_lines -1."""
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import numpy as np
+
+        ocr = page_kernel(model_path, det_method, decode_method)
+        memo: dict = {}  # per-partition content-addressed decode memo
+        for pdf in batches:
+            lines, row_us = ocr(pdf["png_bytes"], memo)
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
                     "offset": pdf["offset"],
                     "kind": pdf["kind"],
-                    "text": texts,
+                    "text": [
+                        None if ls is None else "\n".join(t for t, _ in ls)
+                        for ls in lines
+                    ],
                     "media_ref": pdf["media_ref"],
-                    "conf": confs,
-                    "n_lines": nlines,
+                    "conf": [
+                        float(np.mean([c for _, c in ls])) if ls else 0.0
+                        for ls in lines
+                    ],
+                    "n_lines": [-1 if ls is None else len(ls) for ls in lines],
                     "kernel_us": row_us,
                 }
             )
+
+    return fn
+
+
+LINE_SCHEMA = "media_ref string, line_no int, text string"
+
+
+def ocr_line_rows(model_path: str | None, det_method: str = "legacy"):
+    """mapInPandas kernel over (media_ref, png_bytes) -> one LINE_SCHEMA
+    row per recognized line, line_no 0..n-1 in reading order; a
+    quarantined page yields no rows."""
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ocr = page_kernel(model_path, det_method)
+        memo: dict = {}  # per-partition decode memo (corpus lines repeat)
+        for pdf in batches:
+            lines, _ = ocr(pdf["png_bytes"], memo)
+            rows = [
+                (ref, i, t)
+                for ref, ls in zip(pdf["media_ref"], lines)
+                for i, (t, _) in enumerate(ls or ())
+            ]
+            if rows:
+                yield pd.DataFrame(rows, columns=["media_ref", "line_no", "text"])
 
     return fn
 
@@ -341,27 +323,20 @@ def extract_span_rows(
             f"unknown recognizer {recognizer!r}; "
             "expected 'trained', 'beam' or 'template'"
         )
-    if recognizer in ("trained", "beam"):
+    if recognizer == "template":
+        model_path = None
+    else:
         from .queries import trained_model_path
 
-        kernel = _ocr_batches_trained(
-            trained_model_path(),
-            det_method=detector,
-            # "beam" = the reference's flagship ACCURACY mode (BEAM=3 +
-            # CTC fusion + anchor injection/rescoring, model.py:390-600)
-            # driven through full extraction; "trained" = its fast path
-            decode_method="beam" if recognizer == "beam" else "ctc",
-        )
-    else:
-        if detector != "legacy":
-            raise ValueError(
-                "neural detectors require the trained recognizer "
-                f"(got recognizer={recognizer!r}, detector={detector!r})"
-            )
-        from .imaging.glyphs import template_index
-
-        bc = spark.sparkContext.broadcast(template_index())
-        kernel = _ocr_batches(bc)
+        model_path = trained_model_path()
+    kernel = _ocr_batches(
+        model_path,
+        det_method=detector,
+        # "beam" = the reference's flagship ACCURACY mode (BEAM=3 + CTC
+        # fusion + anchor injection/rescoring, model.py:390-600) driven
+        # through full extraction; "trained" = its fast path
+        decode_method="beam" if recognizer == "beam" else "ctc",
+    )
     ocr = joined.mapInPandas(kernel, schema=OCR_SCHEMA)
     if keep_kernel_us:
         text_rows = text_rows.withColumn("kernel_us", F.lit(0).cast("long"))

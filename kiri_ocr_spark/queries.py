@@ -2892,48 +2892,11 @@ def q_model_decode_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1 — missed the one recorded line-level miss; full coverage makes
     the registry gate line-exact at any sf)."""
     from .fixtures import build_fixture as _bf
+    from .pipeline import LINE_SCHEMA, ocr_line_rows
 
     _, media = _bf(spark, sf_dir)
-    sample = media.select("media_ref", "png_bytes")
-    path = trained_model_path()
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from .imaging.png import decode_gray
-        from .operators.detect import (
-            detect_lines,
-            invert_if_dark,
-            pad_training_margins,
-            resize_keep_ratio_pad,
-        )
-        from .operators.model import get_model
-
-        model = get_model(path=path)
-        memo: dict = {}  # per-partition decode memo (corpus lines repeat)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            refs, line_nos, crops = [], [], []
-            for ref, blob in zip(pdf["media_ref"], pdf["png_bytes"]):
-                gray = invert_if_dark(decode_gray(bytes(blob)))
-                for i, b in enumerate(detect_lines(gray)):
-                    x, y, w, h = (int(v) for v in b[:4])
-                    crop = pad_training_margins(gray[y : y + h, x : x + w])
-                    refs.append(ref)
-                    line_nos.append(i)
-                    crops.append(resize_keep_ratio_pad(crop))
-            if not crops:
-                continue
-            from .operators.model import decode_crops_memo
-
-            texts = [t for t, _ in decode_crops_memo(model, crops, memo)]
-            yield pd.DataFrame(
-                {"media_ref": refs, "line_no": line_nos, "text": texts}
-            )
-
-    return sample.mapInPandas(
-        fn, schema="media_ref string, line_no int, text string"
+    return media.select("media_ref", "png_bytes").mapInPandas(
+        ocr_line_rows(trained_model_path()), schema=LINE_SCHEMA
     )
 
 
@@ -2972,48 +2935,51 @@ FROM m WHERE m % 2 = 1
 _MODEL_DECODE_TRAINED_SQL = _per_line_text_sql()
 
 
-# --------------------------------------------------------------------------
-# 23c1b. Neural-detector EXTRACTION (judge r4 item 4): the reference's
-#        process_document with method='db'|'craft'
-#        (detector/__init__.py:161-192 feeding core.py:770-792) — detect
-#        through the CALIBRATED conv forwards, normalize the boxes to
-#        text rows (W3 box clustering + blank-row band split), recognize
-#        each line, and text-match EVERY line against the construction
-#        oracle. This closes the gap between "the neural detectors find
-#        regions" (media_line_detect_db/_craft's invariants) and "a user
-#        running --method craft gets the right TEXT out".
-# --------------------------------------------------------------------------
+_KH_DIGITS = "កខគឃងចឆជឈញ"
+_CHARSET_SYMS = "!?%&*+=@"
 
 
-def _ocr_document_lines(det_method: str):
-    """mapInPandas kernel: full OCR.process_document per page (the
-    reference's single-image API driven at table scope), emitting one row
-    per recognized line."""
+def _charset_line(d: int) -> str:
+    """doc d's charset line: Khmer consonants (digit-mapped), uppercase,
+    digits and punctuation (_MODEL_DECODE_CHARSET_SQL builds the same)."""
+    return (
+        "Id:" + "".join(_KH_DIGITS[int(c)] for c in str(d))
+        + f" #{d % 100} " + chr(65 + d % 26) + _CHARSET_SYMS[d % 8]
+    )
+
+
+def _charset_decode_batches(path: str, method: str):
+    """mapInPandas kernel over (doc_id) -> (doc_id, text): render each
+    doc's charset line, preprocess it like the training crops
+    (train.render_crop) and decode it through the trained weights with
+    ``method`` ('ctc' or 'beam')."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .imaging.png import decode_gray
-        from .ocr import OCR
+        from .imaging.glyphs import render_page
+        from .operators.detect import resize_keep_ratio_pad
+        from .operators.model import decode_crops_memo, get_model
 
-        ocr = OCR(det_method=det_method)
+        model = get_model(path=path)
         for pdf in batches:
             if not len(pdf):
                 continue
-            refs, line_nos, texts = [], [], []
-            for ref, blob in zip(pdf["media_ref"], pdf["png_bytes"]):
-                results = ocr.process_document(decode_gray(bytes(blob)))
-                for i, r in enumerate(results):
-                    refs.append(ref)
-                    line_nos.append(i)
-                    texts.append(r["text"])
-            yield pd.DataFrame(
-                {"media_ref": refs, "line_no": line_nos, "text": texts}
-            )
+            ids = [int(d) for d in pdf["doc_id"]]
+            crops = [
+                resize_keep_ratio_pad(render_page([_charset_line(d)])) for d in ids
+            ]
+            decoded = decode_crops_memo(model, crops, {}, method=method)
+            yield pd.DataFrame({"doc_id": ids, "text": [t for t, _ in decoded]})
 
     return fn
 
 
-_KH_DIGITS = "កខគឃងចឆជឈញ"
-_CHARSET_SYMS = "!?%&*+=@"
+def _charset_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The held-out charset-oracle ids (doc_id % 17 == 0). Single-row-
+    group parquet arrives as ONE task and render+decode is ~10 ms/row of
+    CPU: row-count repartition before the neural stage (no-op once scans
+    arrive with real parallelism)."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return _spread(docs.filter((F.col("doc_id") % 17) == 0).select("doc_id"))
 
 
 def q_model_decode_charset(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3026,47 +2992,10 @@ def q_model_decode_charset(spark: SparkSession, sf_dir: str) -> DataFrame:
     (/root/reference/kiri_ocr/model.py charset), not just corpus
     lowercase. Same render+preprocess contract as the training crops
     (train.render_crop)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # single-row-group parquet arrives as ONE task and the render+decode
-    # below is ~10 ms/row of CPU — row-count repartition before the
-    # neural stage (no-op once scans arrive with real parallelism)
-    sample = _spread(docs.filter((F.col("doc_id") % 17) == 0).select("doc_id"))
-    path = trained_model_path()
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from .imaging.glyphs import render_page
-        from .operators.detect import resize_keep_ratio_pad
-        from .operators.model import get_model
-
-        model = get_model(path=path)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids, crops = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                line = (
-                    "Id:" + "".join(_KH_DIGITS[int(c)] for c in str(d))
-                    + f" #{d % 100} " + chr(65 + d % 26)
-                    + _CHARSET_SYMS[d % 8]
-                )
-                ids.append(d)
-                crops.append(resize_keep_ratio_pad(render_page([line])))
-            from .operators.model import ENCODE_CHUNK
-
-            texts = []
-            for i in range(0, len(crops), ENCODE_CHUNK):
-                chunk = np.stack(crops[i : i + ENCODE_CHUNK]).astype(
-                    np.float32
-                )
-                texts.extend(
-                    t for t, _ in model.ctc_greedy(model.encode(chunk, fp32=True))
-                )
-            yield pd.DataFrame({"doc_id": ids, "text": texts})
-
-    return sample.mapInPandas(fn, schema="doc_id long, text string")
+    return _charset_sample(spark, sf_dir).mapInPandas(
+        _charset_decode_batches(trained_model_path(), "ctc"),
+        schema="doc_id long, text string",
+    )
 
 
 def q_model_decode_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3082,47 +3011,10 @@ def q_model_decode_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs chunked like the CTC query; the decoder runs lockstep across
     the batch's lines (beam_decode_batch) so per-step expansion GEMMs
     and CTC-fusion sweeps amortize over lines."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    sample = _spread(docs.filter((F.col("doc_id") % 17) == 0).select("doc_id"))
-    path = trained_model_path()
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from .imaging.glyphs import render_page
-        from .operators.detect import resize_keep_ratio_pad
-        from .operators.model import ENCODE_CHUNK, get_model
-
-        model = get_model(path=path)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids, crops = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                line = (
-                    "Id:" + "".join(_KH_DIGITS[int(c)] for c in str(d))
-                    + f" #{d % 100} " + chr(65 + d % 26)
-                    + _CHARSET_SYMS[d % 8]
-                )
-                ids.append(d)
-                crops.append(resize_keep_ratio_pad(render_page([line])))
-            mems = np.concatenate(
-                [
-                    model.encode(
-                        np.stack(crops[i : i + ENCODE_CHUNK]).astype(
-                            np.float32
-                        ),
-                        fp32=True,
-                    )
-                    for i in range(0, len(crops), ENCODE_CHUNK)
-                ],
-                axis=0,
-            )
-            texts = [t for t, _ in model.beam_decode_batch(mems)]
-            yield pd.DataFrame({"doc_id": ids, "text": texts})
-
-    return sample.mapInPandas(fn, schema="doc_id long, text string")
+    return _charset_sample(spark, sf_dir).mapInPandas(
+        _charset_decode_batches(trained_model_path(), "beam"),
+        schema="doc_id long, text string",
+    )
 
 
 _MODEL_DECODE_CHARSET_SQL = """
@@ -3258,25 +3150,38 @@ FROM lines,
 """
 
 
+# --------------------------------------------------------------------------
+# 23c1b. Neural-detector EXTRACTION (judge r4 item 4): the reference's
+#        process_document with method='db'|'craft'
+#        (detector/__init__.py:161-192 feeding core.py:770-792) — detect
+#        through the CALIBRATED conv forwards, normalize the boxes to
+#        text rows (W3 box clustering + blank-row band split), recognize
+#        each line, and text-match EVERY line against the construction
+#        oracle. This closes the gap between "the neural detectors find
+#        regions" (media_line_detect_db/_craft's invariants) and "a user
+#        running --method craft gets the right TEXT out".
+# --------------------------------------------------------------------------
+
+
 def q_media_text_craft(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CRAFT detect -> recognize -> per-line text equality, all pages."""
     from .fixtures import build_fixture as _bf
+    from .pipeline import LINE_SCHEMA, ocr_line_rows
 
     _, media = _bf(spark, sf_dir)
     return media.select("media_ref", "png_bytes").mapInPandas(
-        _ocr_document_lines("craft"),
-        schema="media_ref string, line_no int, text string",
+        ocr_line_rows(None, "craft"), schema=LINE_SCHEMA
     )
 
 
 def q_media_text_db(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DB detect -> recognize -> per-line text equality, all pages."""
     from .fixtures import build_fixture as _bf
+    from .pipeline import LINE_SCHEMA, ocr_line_rows
 
     _, media = _bf(spark, sf_dir)
     return media.select("media_ref", "png_bytes").mapInPandas(
-        _ocr_document_lines("db"),
-        schema="media_ref string, line_no int, text string",
+        ocr_line_rows(None, "db"), schema=LINE_SCHEMA
     )
 
 

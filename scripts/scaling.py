@@ -51,8 +51,7 @@ def _kernel_burn(_: int) -> int:
 
     from kiri_ocr_spark.imaging.glyphs import render_page
     from kiri_ocr_spark.imaging.png import encode_gray
-    from kiri_ocr_spark.operators.recognize import extract_page_text
-    from kiri_ocr_spark.imaging.png import decode_gray
+    from kiri_ocr_spark.pipeline import page_kernel
 
     # varied pages INCLUDING the PNG decode: the real stage decodes a
     # different compressed page per span, which is memory-heavier than a
@@ -65,10 +64,11 @@ def _kernel_burn(_: int) -> int:
         ["the quick brown fox", "jumps over the lazy dog"],
     ]
     blobs = [encode_gray(render_page(t)) for t in texts]
+    ocr = page_kernel(None)  # the template extraction kernel
     t0 = _t.monotonic()
     n = 0
     while _t.monotonic() - t0 < 3.0:
-        extract_page_text(decode_gray(blobs[n % len(blobs)]))
+        ocr([blobs[n % len(blobs)]], {})
         n += 1
     return n
 

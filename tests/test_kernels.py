@@ -32,7 +32,6 @@ from kiri_ocr_spark.operators.recognize import (
     BLANK_ID,
     ctc_collapse,
     ctc_greedy_decode,
-    extract_page_text,
 )
 
 
@@ -296,16 +295,6 @@ def test_ctc_greedy_decode_confidence():
 # --- full kernel ----------------------------------------------------------
 
 
-def test_extract_page_text_exact_and_inverted():
-    lines = ["the quick brown fox", "jumps over 13 lazy dogs!"]
-    for invert in (False, True):
-        page = render_page(lines, scale=SCALE, invert=invert)
-        text, conf, n = extract_page_text(page)
-        assert text == "\n".join(lines)
-        assert n == 2
-        assert conf == 1.0
-
-
 def test_reading_order_db_variant_sorts_by_left_edge():
     from kiri_ocr_spark.operators.detect import reading_order, reading_order_db
 
@@ -439,43 +428,95 @@ def test_color_bank_recovers_luma_invisible_text():
 
 
 @pytest.mark.parametrize("det_method", ["legacy", "db", "craft"])
-def test_trained_ocr_kernel_decodes_and_quarantines(det_method):
-    """_ocr_batches_trained (extract_spans_trained's media kernel, and
-    extract_spans_db/_craft's with a neural detector): exact decode of
-    plain and tinted pages through the trained weights, and the same
-    quarantine contract as the template kernel (None payload / corrupt
-    PNG -> text NULL, conf 0, n_lines -1) — one corrupt payload must
-    never fail the task, whichever detector runs."""
+@pytest.mark.parametrize("recognizer", ["template", "trained", "beam"])
+def test_ocr_kernel_decodes_and_quarantines(recognizer, det_method):
+    """pipeline._ocr_batches, the media kernel of every extract_spans*
+    query: exact decode of plain, tinted and inverted pages whichever
+    recognizer and detector run, and one quarantine contract (None
+    payload / corrupt PNG -> text NULL, conf 0, n_lines -1) — one corrupt
+    payload must never fail the task."""
     import pandas as pd
 
     from kiri_ocr_spark.fixtures import _tint_page
-    from kiri_ocr_spark.imaging.glyphs import SCALE, render_page
     from kiri_ocr_spark.imaging.png import encode_gray, encode_rgb
-    from kiri_ocr_spark.pipeline import _ocr_batches_trained
+    from kiri_ocr_spark.pipeline import _ocr_batches
     from kiri_ocr_spark.queries import trained_model_path
 
     plain = encode_gray(render_page(["the fast key"], scale=SCALE))
     tinted = encode_rgb(_tint_page(render_page(["order sort", "table"], scale=SCALE)))
+    inverted = encode_gray(render_page(["the fast key"], scale=SCALE, invert=True))
     pdf = pd.DataFrame(
         {
-            "doc_id": [1, 1, 2, 2],
-            "offset": [0, 1, 0, 1],
-            "kind": ["media"] * 4,
-            "media_ref": ["a", "b", "c", "d"],
-            "png_bytes": [plain, tinted, None, b"\x89PNG\r\n\x1a\ngarbage"],
+            "doc_id": [1, 1, 2, 2, 3],
+            "offset": [0, 1, 0, 1, 0],
+            "kind": ["media"] * 5,
+            "media_ref": ["a", "b", "c", "d", "e"],
+            "png_bytes": [plain, tinted, None, b"\x89PNG\r\n\x1a\ngarbage", inverted],
         }
     )
-    kernel = _ocr_batches_trained(trained_model_path(), det_method=det_method)
+    model_path = None if recognizer == "template" else trained_model_path()
+    decode_method = "beam" if recognizer == "beam" else "ctc"
+    kernel = _ocr_batches(model_path, det_method, decode_method)
     (out,) = list(kernel([pdf]))
     rows = {r.media_ref: r for r in out.itertuples()}
-    assert rows["a"].text == "the fast key" and rows["a"].n_lines == 1
+    for ref in ("a", "e"):
+        assert rows[ref].text == "the fast key" and rows[ref].n_lines == 1
     assert rows["b"].text == "order sort\ntable" and rows["b"].n_lines == 2
     assert rows["b"].conf > 0.5
+    if recognizer == "template":
+        assert rows["a"].conf == rows["e"].conf == 1.0
     for ref in ("c", "d"):
         assert rows[ref].text is None
         assert rows[ref].conf == 0.0
         assert rows[ref].n_lines == -1
     assert (out["kernel_us"] >= 0).all()
+
+
+@pytest.mark.parametrize(
+    "recognizer,det_method", [("template", "db"), ("trained", "legacy")]
+)
+def test_ocr_line_rows_one_row_per_line(recognizer, det_method):
+    """pipeline.ocr_line_rows, the kernel of model_decode_trained
+    (trained, legacy) and media_text_db/_craft (template, neural): one
+    row per recognized line with line_no 0..n-1 in reading order; a
+    garbage payload yields no rows and no exception."""
+    import pandas as pd
+
+    from kiri_ocr_spark.imaging.png import encode_gray
+    from kiri_ocr_spark.pipeline import ocr_line_rows
+    from kiri_ocr_spark.queries import trained_model_path
+
+    pdf = pd.DataFrame(
+        {
+            "media_ref": ["two", "one", "bad"],
+            "png_bytes": [
+                encode_gray(render_page(["order sort", "table"], scale=SCALE)),
+                encode_gray(render_page(["the fast key"], scale=SCALE)),
+                b"\x89PNG\r\n\x1a\ngarbage",
+            ],
+        }
+    )
+    model_path = None if recognizer == "template" else trained_model_path()
+    out = pd.concat(list(ocr_line_rows(model_path, det_method)([pdf])))
+    assert list(out.columns) == ["media_ref", "line_no", "text"]
+    assert sorted(zip(out.media_ref, out.line_no, out.text)) == [
+        ("one", 0, "the fast key"),
+        ("two", 0, "order sort"),
+        ("two", 1, "table"),
+    ]
+
+
+def test_ocr_stream_rejects_unknown_mode():
+    """OCR.extract_text_stream_chars selects regions like process_document
+    does: an unknown mode raises instead of streaming word regions."""
+    from kiri_ocr_spark.ocr import OCR
+
+    page = render_page(["the fast key"], scale=SCALE)
+    ocr = OCR()
+    with pytest.raises(ValueError):
+        ocr.process_document(page, mode="bogus")
+    with pytest.raises(ValueError):
+        list(ocr.extract_text_stream_chars(page, mode="bogus"))
 
 
 def test_trained_kernel_mid_page_quarantine_rolls_back_crops(monkeypatch):
@@ -489,7 +530,7 @@ def test_trained_kernel_mid_page_quarantine_rolls_back_crops(monkeypatch):
     from kiri_ocr_spark.imaging.glyphs import SCALE, render_page
     from kiri_ocr_spark.imaging.png import encode_gray
     from kiri_ocr_spark.operators import detect as detect_mod
-    from kiri_ocr_spark.pipeline import _ocr_batches_trained
+    from kiri_ocr_spark.pipeline import _ocr_batches
     from kiri_ocr_spark.queries import trained_model_path
 
     two_line = encode_gray(render_page(["order sort", "table"], scale=SCALE))
@@ -514,7 +555,7 @@ def test_trained_kernel_mid_page_quarantine_rolls_back_crops(monkeypatch):
             "png_bytes": [two_line, one_line],
         }
     )
-    (out,) = list(_ocr_batches_trained(trained_model_path())([pdf]))
+    (out,) = list(_ocr_batches(trained_model_path())([pdf]))
     rows = {r.media_ref: r for r in out.itertuples()}
     # quarantined page: full dead-letter contract, no partial text
     assert rows["a"].text is None
