@@ -130,10 +130,17 @@ def decode_image(data: bytes) -> np.ndarray:
     if width is None:
         raise ValueError("missing IHDR")
     bpp = 3 if ctype == 2 else 1
-    raw = np.frombuffer(zlib.decompress(bytes(idat)), dtype=np.uint8)
-    if raw.size != height * (width * bpp + 1):
+    expected = height * (width * bpp + 1)
+    # inflate at most one byte past the declared size, so a zlib bomb is
+    # rejected without inflating it
+    d = zlib.decompressobj()
+    raw = d.decompress(idat, expected + 1)
+    if not d.eof and len(raw) <= expected:
+        # all input consumed short of the end: what zlib.decompress raises
+        raise zlib.error("incomplete or truncated stream")
+    if len(raw) != expected:
         raise ValueError("bad IDAT payload size")
-    rows = raw.reshape(height, width * bpp + 1)
+    rows = np.frombuffer(raw, dtype=np.uint8).reshape(height, width * bpp + 1)
     out = _unfilter(rows, width, height, bpp)
     if ctype == 2:
         return out.reshape(height, width, 3)

@@ -4,6 +4,18 @@ Tuned per SURVEY.md §4.2/§4.3: AQE on (coalesce + skew-join), Arrow on for
 all pandas-UDF stages, bounded Arrow batch sizes so image rows make
 cache-friendly kernel batches, and shuffle partitions sized to the local
 core count (on a real cluster: ~2-3x total executor cores).
+
+Python workers fork from `kiri_ocr_spark.daemon` instead of the stock
+`pyspark.daemon`. Every Python task calls `importlib.invalidate_caches()`,
+and on CPython 3.11 each of a worker's 16 zipimporters (over pyspark.zip,
+py4j and the 15 MB spark-core jar) then re-reads its archive's whole central
+directory: 155 ms per task on a quiet 4-core host, 170-506 ms under load.
+The daemon's guard skips the re-read while the archive's stat stamp is
+unchanged. Only these sessions set it: they run in local mode with the repo
+root on the workers' PYTHONPATH (below), so the daemon can import the
+package. A spark-submit run (`scripts/extract_job.py`) builds its own
+session and keeps the stock daemon, because `--py-files` reach a cluster
+worker only per task, after the daemon has started.
 """
 
 from __future__ import annotations
@@ -50,6 +62,8 @@ def get_spark(
         .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.sql.session.timeZone", "UTC")
+        # no per-task zip directory re-reads (module docstring)
+        .config("spark.python.daemon.module", "kiri_ocr_spark.daemon")
         # UI off by default (tests spawn many sessions); bench.py turns it
         # on to pull per-stage task-time distributions over the REST API
         .config("spark.ui.enabled", "true" if ui else "false")

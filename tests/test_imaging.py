@@ -137,3 +137,36 @@ def test_png_rgb_filters_unfilter_with_bpp_stride():
         + _chunk(b"IEND", b"")
     )
     assert (decode_image(data) == img).all()
+
+
+def test_png_zlib_bomb_rejected_fast_with_bounded_memory():
+    """A 100x100 page whose IDAT inflates to 400 MB is rejected after
+    inflating one byte past the declared size, not after inflating all."""
+    import struct
+    import time
+    import tracemalloc
+    import zlib
+
+    from kiri_ocr_spark.imaging.png import _SIGNATURE, _chunk
+
+    comp = zlib.compressobj(9)
+    zeros = bytes(1 << 20)
+    idat = b"".join(comp.compress(zeros) for _ in range(400)) + comp.flush()
+    ihdr = struct.pack(">IIBBBBB", 100, 100, 8, 0, 0, 0, 0)
+    data = (
+        _SIGNATURE
+        + _chunk(b"IHDR", ihdr)
+        + _chunk(b"IDAT", idat)
+        + _chunk(b"IEND", b"")
+    )
+    tracemalloc.start()
+    t0 = time.perf_counter()
+    try:
+        with pytest.raises(ValueError, match="bad IDAT payload size"):
+            decode_gray(data)
+        elapsed = time.perf_counter() - t0
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert elapsed < 0.05
+    assert peak < 1 << 20
