@@ -27,13 +27,12 @@ import sys
 
 
 def run_extract(args: argparse.Namespace) -> int:
-    from .imaging.png import decode_gray
-    from .operators.detect import binarize, detect_lines, invert_if_dark
+    from .operators.detect import detect_lines
+    from .operators.page import read_page, tight_box
     from .operators.recognize import recognize_line
 
     with open(args.image, "rb") as f:
-        gray = decode_gray(f.read())
-    gray = invert_if_dark(gray)
+        gray, ink = read_page(f.read())
     if args.model or args.method != "projection":
         # the OCR class: --model routes recognition through its neural
         # decode paths (--decode picks the mode); --method picks the
@@ -49,11 +48,10 @@ def run_extract(args: argparse.Namespace) -> int:
             decode_method=args.decode if args.model else "fast",
         )
         return _write_extract_sinks(args, gray, ocr.process_document(gray))
-    ink = binarize(gray)
-    boxes = detect_lines(gray, ink=ink)
     results = []
-    for i, box in enumerate(boxes, start=1):
-        text, conf = recognize_line(ink, box)
+    for i, box in enumerate(detect_lines(gray, ink=ink), start=1):
+        tight = tight_box(ink, box)
+        text, conf = ("", 0.0) if tight is None else recognize_line(ink, tight)
         results.append(
             {
                 "box": [int(v) for v in box[:4]],

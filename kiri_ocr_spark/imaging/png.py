@@ -22,6 +22,10 @@ import numpy as np
 
 _SIGNATURE = b"\x89PNG\r\n\x1a\n"
 
+# pixel cap checked against IHDR before inflating: Pillow's
+# decompression-bomb error threshold (2 x Image.MAX_IMAGE_PIXELS)
+_MAX_PIXELS = 178_956_970
+
 
 def _chunk(tag: bytes, payload: bytes) -> bytes:
     return (
@@ -129,6 +133,8 @@ def decode_image(data: bytes) -> np.ndarray:
             break
     if width is None:
         raise ValueError("missing IHDR")
+    if not 0 < width * height <= _MAX_PIXELS:
+        raise ValueError(f"IHDR size {width}x{height} outside 1..{_MAX_PIXELS} pixels")
     bpp = 3 if ctype == 2 else 1
     expected = height * (width * bpp + 1)
     # inflate at most one byte past the declared size, so a zlib bomb is

@@ -41,10 +41,11 @@ from typing import Iterator, Union
 
 import numpy as np
 
-from .imaging.png import decode_gray
-from .operators.detect import invert_if_dark, resize_keep_ratio_pad, binarize
+from .imaging.png import rgb_to_gray
+from .operators.detect import orient_and_binarize
 from .operators.facade import TextDetector
 from .operators.model import get_model
+from .operators.page import line_crop, read_page, tight_box
 from .operators.recognize import recognize_line
 
 _DECODE_ALIASES = {
@@ -103,24 +104,21 @@ class OCR:
     # -- input handling ----------------------------------------------------
 
     @staticmethod
-    def _load_gray(image: Union[str, os.PathLike, np.ndarray]) -> np.ndarray:
+    def _load_page(
+        image: Union[str, os.PathLike, np.ndarray],
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """(oriented gray, ink) of a page array or PNG file."""
         if isinstance(image, np.ndarray):
-            gray = image if image.ndim == 2 else None
-            if gray is None:
-                from .imaging.png import rgb_to_gray
-
-                gray = rgb_to_gray(image)
-        else:
-            with open(image, "rb") as f:
-                gray = decode_gray(f.read())
-        return invert_if_dark(np.asarray(gray, dtype=np.uint8))
+            gray = image if image.ndim == 2 else rgb_to_gray(image)
+            return orient_and_binarize(np.asarray(gray, dtype=np.uint8))
+        with open(image, "rb") as f:
+            return read_page(f.read())
 
     def _regions(self, image, mode: str):
         """(gray, ink, boxes) for ``mode`` 'lines' | 'words' — the one
         region selection process_document and the stream generator share,
         so both see identical regions ('same text, token at a time')."""
-        gray = self._load_gray(image)
-        ink = binarize(gray)
+        gray, ink = self._load_page(image)
         if mode == "lines":
             boxes = self.detector.detect_line_boxes(gray, ink)
         elif mode == "words":
@@ -133,33 +131,18 @@ class OCR:
     # -- recognition per region --------------------------------------------
 
     def _recognize_region(self, gray: np.ndarray, ink: np.ndarray, box) -> tuple[str, float]:
-        x, y, w, h = (int(v) for v in box[:4])
-        p = self.padding
-        x0, y0 = max(x - p, 0), max(y - p, 0)
-        x1 = min(x + w + p, gray.shape[1])
-        y1 = min(y + h + p, gray.shape[0])
-        # tighten to the ink bounds inside the (possibly padded) box:
-        # detector paddings vary by method, the template recognizer's
-        # unit-scale subsampling needs the crop aligned to the glyph grid,
-        # and the neural paths re-pad a tight crop below
-        ys, xs = np.nonzero(ink[y0:y1, x0:x1])
-        if len(ys) == 0:
+        box = tight_box(ink, box, self.padding)
+        if box is None:
             return "", 0.0
-        ty0, ty1 = y0 + int(ys.min()), y0 + int(ys.max()) + 1
-        tx0, tx1 = x0 + int(xs.min()), x0 + int(xs.max()) + 1
         if self.decode_method == "ctc" and self._model_path is None:
             # no weights shipped: the template path is this engine's CTC
             # exactness construction
-            return recognize_line(ink, np.array([tx0, ty0, tx1 - tx0, ty1 - ty0]))
-        # neural paths: restore the training geometry — the renderer's
-        # PAD_Y/PAD_X background margins around the line, padded with the
-        # crop's OWN background luma (255 plain pages, 239 tinted codec
-        # pages) — before resize. This is the in-sandbox-trained
+            return recognize_line(ink, box)
+        # neural paths: line_crop restores the training geometry (the
+        # renderer's background margins, padded with the crop's OWN
+        # background luma) before resize — the in-sandbox-trained
         # artifact's preprocessing contract, the role the reference's
         # normalize constants play for its weights.
-        from .operators.detect import pad_training_margins
-
-        crop = pad_training_margins(gray[ty0:ty1, tx0:tx1])
         # fp32 inference for TRAINED weights — the reference's deployment
         # dtype (its torch / ONNX checkpoints are float32); decode margins
         # dwarf the ~4e-6 forward divergence, re-verified by the
@@ -168,7 +151,7 @@ class OCR:
         # streaming/extract.decode_step_events keeps seed decode f64 —
         # gating here keeps OCR and stream seed decodes in agreement.
         mem = self.model.encode(
-            resize_keep_ratio_pad(crop)[None].astype(np.float32),
+            line_crop(gray, box)[None].astype(np.float32),
             fp32=self._model_path is not None,
         )[0]
         if self.decode_method == "ctc":

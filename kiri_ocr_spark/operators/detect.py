@@ -17,6 +17,8 @@ Semantics re-expressed from the reference's legacy detector
 - ``reading_order``    W1: group by cy (running mean, 0.7*median_h), sort
   within line by center x (detector/__init__.py:245-291)
 - ``segment_words``    W5: gap stats within a line (legacy:848-904)
+- ``split_words``      the glyph-raster word rule: unit-scale blank-column
+  runs >= 3 (renderer SPACE_GAP contract)
 """
 
 from __future__ import annotations
@@ -661,6 +663,27 @@ def pad_training_margins(region: np.ndarray) -> np.ndarray:
         # from both background lumas (255 plain, 239 tinted codec).
         bg = 255
     return np.pad(region, ((PAD_Y, PAD_Y), (PAD_X, PAD_X)), constant_values=bg)
+
+
+def split_words(ink: np.ndarray, box) -> list[tuple[int, int, int, int]]:
+    """Word boxes ``(x, y, w, h)`` of one detected line: subsample the
+    line's ink to unit scale (one pixel per glyph-grid cell) and split at
+    blank-column runs >= 3 unit columns — the renderer's space contract
+    (CHAR_GAP=1, SPACE_GAP=4), the exact word rule for this engine's
+    glyph raster. Each word keeps the line's y and height."""
+    from ..imaging.glyphs import GLYPH_H
+
+    x, y, w, h = (int(v) for v in box[:4])
+    scale = max(1, h // GLYPH_H)
+    cols = ink[y : y + h, x : x + w][0::scale, 0::scale].any(axis=0)
+    d = np.diff(np.concatenate([[0], cols.astype(np.int8), [0]]))
+    spans: list[list[int]] = []
+    for s, e in zip(np.flatnonzero(d == 1), np.flatnonzero(d == -1)):
+        if spans and s - spans[-1][1] < 3:
+            spans[-1][1] = int(e)
+        else:
+            spans.append([int(s), int(e)])
+    return [(x + s * scale, y, (e - s) * scale, h) for s, e in spans]
 
 
 def segment_words(line_stats: np.ndarray) -> list[np.ndarray]:

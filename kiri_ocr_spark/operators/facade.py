@@ -32,14 +32,17 @@ from .components import filter_components, relative_size_filter
 from .detect import (
     bbox_hull,
     binarize,
+    detect_lines,
     group_blocks,
     group_into_lines,
     invert_if_dark,
     line_boxes_from_groups,
     merge_boxes_into_rows,
+    orient_and_binarize,
     reading_order,
     reading_order_db,
     split_box_at_blank_rows,
+    split_words,
 )
 from .finders import estimate_text_metrics, multi_method_candidates
 
@@ -148,40 +151,13 @@ class TextDetector:
         """Word-level boxes. EVERY method falls back to the legacy
         component path here — exactly the reference facade, whose neural
         backends detect lines only (detector/__init__.py:293-297). Per
-        detected line, words split at blank-column runs >= 3 unit columns
-        — the renderer's space contract and the same rule the oracled
-        word_segmentation query applies (the reference's statistical
+        detected line, detect.split_words splits at blank-column runs >= 3
+        unit columns — the renderer's space contract and the same rule the
+        oracled word_segmentation query applies (the reference's statistical
         component-gap variant lives in detect.segment_words / W5; the
         fixed-unit rule is the exact one for this engine's glyph raster)."""
-        from .detect import detect_lines
-        from ..imaging.glyphs import GLYPH_H
-
-        gray = invert_if_dark(np.asarray(gray, dtype=np.uint8))
-        ink = binarize(gray)
-        out: list[tuple[int, int, int, int]] = []
-        for box in detect_lines(gray, ink=ink):
-            x, y, w, h = (int(v) for v in box[:4])
-            crop = ink[y : y + h, x : x + w]
-            scale = max(1, h // GLYPH_H)
-            cols = crop[0::scale, 0::scale].any(axis=0)
-            padded = np.concatenate([[0], cols.astype(np.int8), [0]])
-            d = np.diff(padded)
-            starts = np.flatnonzero(d == 1)
-            ends = np.flatnonzero(d == -1)
-            if len(starts) == 0:
-                continue
-            cur = [int(starts[0]), int(ends[0])]
-            spans: list[list[int]] = []
-            for s, e in zip(starts[1:], ends[1:]):
-                if int(s) - cur[1] >= 3:  # word boundary (SPACE_GAP contract)
-                    spans.append(cur)
-                    cur = [int(s), int(e)]
-                else:
-                    cur[1] = int(e)
-            spans.append(cur)
-            for s, e in spans:
-                out.append((x + s * scale, y, (e - s) * scale, h))
-        return out
+        gray, ink = orient_and_binarize(np.asarray(gray, dtype=np.uint8))
+        return [w for box in detect_lines(gray, ink=ink) for w in split_words(ink, box)]
 
     def detect_blocks(self, gray: np.ndarray) -> list[tuple[int, int, int, int]]:
         """Block-level boxes: the METHOD's own lines grouped by the legacy

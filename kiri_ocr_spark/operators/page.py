@@ -1,0 +1,168 @@
+"""The page front every PNG kernel shares: read a payload into an
+oriented gray page and its ink mask, run a per-page function under the
+one quarantine policy, and cut recognizer-ready line crops.
+
+    read_page   payload -> decode_gray -> orient_and_binarize -> (gray, ink)
+    map_pages   the quarantine loop: fn(gray, ink) per page, None when the
+                payload is missing or corrupt
+    tight_box   a detector box shrunk to the ink inside it
+    line_crop   the trained recognizer's crop contract
+                (pad_training_margins + resize_keep_ratio_pad)
+    page_kernel decode -> orient/binarize -> detect -> crop -> recognize,
+                the kernel of every line-recognizing query
+
+Spark-free: the OCR class and the CLI import it without pyspark.
+"""
+
+from __future__ import annotations
+
+import struct
+import time
+import zlib
+from collections.abc import Callable, Iterable, Iterator
+
+import numpy as np
+
+from ..imaging.png import decode_gray
+from . import detect
+
+# the per-row quarantine policy of every page kernel — each failure mode
+# of a missing or corrupt-but-magic-valid payload: bad magic / missing
+# IHDR / oversize or empty IHDR / NULL payload (ValueError), truncated
+# chunk header (struct.error), corrupt/truncated IDAT (zlib.error),
+# malformed scanline geometry (IndexError/KeyError on reshape/filter type)
+_QUARANTINE = (ValueError, KeyError, IndexError, struct.error, zlib.error)
+
+
+def read_page(blob) -> tuple[np.ndarray, np.ndarray]:
+    """PNG payload -> ``(gray, ink)``: the decoded page oriented
+    dark-ink-on-light and its Otsu ink mask. A None payload (missing from
+    the store) raises ValueError like any other unreadable page."""
+    if blob is None:
+        raise ValueError("missing media payload")
+    return detect.orient_and_binarize(decode_gray(bytes(blob)))
+
+
+def map_pages(blobs: Iterable, fn: Callable) -> Iterator:
+    """Yield ``fn(gray, ink)`` per payload, or None for a page whose read
+    or ``fn`` raises a ``_QUARANTINE`` error: one corrupt payload among
+    10^12 docs must cost only its own row, never the task."""
+    for blob in blobs:
+        try:
+            out = fn(*read_page(blob))
+        except _QUARANTINE:
+            out = None
+        yield out
+
+
+def tight_box(ink: np.ndarray, box, pad: int = 0) -> tuple[int, int, int, int] | None:
+    """``(x, y, w, h)`` of the ink inside ``box`` grown by ``pad`` pixels
+    (clipped to the page), or None when that region holds no ink (its
+    line reads as ``("", 0.0)``). Detector paddings vary by method; the
+    template recognizer's unit-scale subsampling needs the crop on the
+    glyph grid, and line_crop re-pads a tight crop."""
+    x, y, w, h = (int(v) for v in box[:4])
+    x0, y0 = max(x - pad, 0), max(y - pad, 0)
+    sub = ink[y0 : y + h + pad, x0 : x + w + pad]
+    rows = np.flatnonzero(sub.any(axis=1))
+    if rows.size == 0:
+        return None
+    cols = np.flatnonzero(sub.any(axis=0))
+    return (
+        x0 + int(cols[0]),
+        y0 + int(rows[0]),
+        int(cols[-1] - cols[0]) + 1,
+        int(rows[-1] - rows[0]) + 1,
+    )
+
+
+def line_crop(gray: np.ndarray, box) -> np.ndarray:
+    """The trained artifact's crop contract for one line box: restore the
+    renderer's background margins, then resize to the 48x640 input."""
+    x, y, w, h = (int(v) for v in box[:4])
+    # attribute lookups at call time: tests swap detect's functions
+    return detect.resize_keep_ratio_pad(
+        detect.pad_training_margins(gray[y : y + h, x : x + w])
+    )
+
+
+def page_kernel(
+    model_path: str | None, det_method: str = "legacy", decode_method: str = "ctc"
+):
+    """The one page kernel every line-recognizing query runs: read ->
+    detect lines -> tight boxes -> recognize each line.
+
+    Returns ``ocr(blobs, memo) -> (lines, row_us)``: ``lines[i]`` is page
+    i's ``[(text, conf), ...]`` in reading order, or None when the page is
+    quarantined; ``row_us[i]`` is page i's own kernel time in µs. Build it
+    executor-side (inside the mapInPandas function): it loads the model.
+
+    ``det_method``: 'legacy' = the CC line finder (detect_lines);
+    'db' | 'craft' = the calibrated conv-forward detectors through
+    TextDetector.detect_line_boxes (W3 row clustering + blank-row band
+    split, which leaves each box tight to its ink; db with the slow
+    component-pixel score) — the reference's
+    process_document(method='db'|'craft'), detector/__init__.py:161-192
+    -> core.py:770-792.
+
+    ``model_path`` None: the glyph-template recognizer (recognize_line on
+    the ink mask; ``memo`` is unused, the template path memoizes per
+    worker). Otherwise the trained transformer (core.py:719-793 always
+    decodes through the model): line_crop crops are stacked ACROSS the
+    batch's pages into one decode_crops_memo call (``decode_method``
+    'ctc' or 'beam'); ``memo`` is its caller-owned, per-partition memo.
+    The model loads once per Python worker (M8 get_model cache)."""
+    model = detector = None
+    if model_path is None:
+        from .recognize import recognize_line
+    else:
+        from .model import decode_crops_memo, get_model
+
+        model = get_model(path=model_path)
+    if det_method != "legacy":
+        from .facade import TextDetector
+
+        det_kwargs = {"det_db_score_mode": "slow"} if det_method == "db" else {}
+        detector = TextDetector(method=det_method, **det_kwargs)
+
+    def page(gray: np.ndarray, ink: np.ndarray) -> list:
+        if detector is None:
+            boxes = detect.detect_lines(gray, ink=ink)
+        else:
+            boxes = detector.detect_line_boxes(gray, ink)
+        tight = [tight_box(ink, b) for b in boxes]
+        if model is None:
+            return [("", 0.0) if b is None else recognize_line(ink, b) for b in tight]
+        # a page's crops (None for an inkless box) wait for the batch decode
+        return [None if b is None else line_crop(gray, b) for b in tight]
+
+    def ocr(blobs, memo: dict) -> tuple[list, list[int]]:
+        pages: list = []
+        row_us: list[int] = []
+        # true per-row kernel time, stamped per page: summing it over any
+        # row grouping (e.g. checkpoint part_id) yields that group's
+        # actual kernel wall — heavy rows carry their own cost
+        t_prev = time.monotonic()
+        for out in map_pages(blobs, page):
+            pages.append(out)
+            t_now = time.monotonic()
+            row_us.append(int((t_now - t_prev) * 1_000_000))
+            t_prev = t_now
+        if model is None:
+            return pages, row_us
+        crops = [c for p in pages if p for c in p if c is not None]
+        # one stacked decode for the whole batch (ENCODE_CHUNK-sized fp32
+        # encodes); its cost is spread over the owning rows
+        decoded = iter(
+            decode_crops_memo(model, crops, memo, method=decode_method) if crops else ()
+        )
+        per = int((time.monotonic() - t_prev) * 1_000_000 / max(len(crops), 1))
+        lines = []
+        for i, p in enumerate(pages):
+            if p is not None:
+                row_us[i] += per * sum(c is not None for c in p)
+                p = [("", 0.0) if c is None else next(decoded) for c in p]
+            lines.append(p)
+        return lines, row_us
+
+    return ocr

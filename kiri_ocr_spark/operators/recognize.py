@@ -30,7 +30,6 @@ from ..imaging.glyphs import CHARSET, GLYPH_H, GLYPH_W, template_index
 BLANK_ID = 0
 SPACE_ID = 1
 VOCAB = ["<blank>", " "] + CHARSET  # id -> char
-_LOW = -20.0  # log-prob floor for non-selected vocab entries
 
 
 def ctc_collapse(ids: np.ndarray, blank_id: int = BLANK_ID) -> np.ndarray:
@@ -258,13 +257,9 @@ def ctc_scores_batch_multi(
                        int(labels[i])), float(ends[i]))
 
 
-_CHAR_ID = {c: i for i, c in enumerate(CHARSET)}
-
-
 def _nearest_template(bitmap: np.ndarray, index: dict) -> tuple[str, float]:
-    """Unknown-glyph fallback: nearest template by Hamming distance with
-    degraded confidence (shared by the lattice builder and the fused
-    recognize_line hot path)."""
+    """recognize_line's unknown-glyph fallback: nearest template by
+    Hamming distance with degraded confidence."""
     best_ch, best_d = "?", GLYPH_H * GLYPH_W + 1
     flat = bitmap.ravel()
     for key, cand in index.items():
@@ -275,57 +270,6 @@ def _nearest_template(bitmap: np.ndarray, index: dict) -> tuple[str, float]:
         if d < best_d:
             best_ch, best_d = cand, d
     return best_ch, max(0.05, 1.0 - best_d / (GLYPH_H * GLYPH_W))
-
-
-def _cell_frames(cells: list[tuple[np.ndarray, bool]]) -> tuple[np.ndarray, np.ndarray]:
-    """Build the frame lattice: each glyph cell emits 2 identical frames,
-    each gap a blank frame, each space gap blank+space+blank frames.
-
-    cells: list of (unit bitmap, space_before) pairs.
-    Returns (labels, probs) — the lattice is one-hot by construction, so
-    per-frame argmax over a dense (T, V) log-prob matrix reduces to the
-    label array itself and greedy-CTC confidence to mean(probs); the
-    dense matrix was 60% of recognize_line's kernel time for nothing.
-    """
-    index = template_index()
-    labels: list[int] = []
-    probs: list[float] = []
-    for i, (bitmap, space_before) in enumerate(cells):
-        if i > 0:
-            labels.append(BLANK_ID)
-            probs.append(1.0)
-            if space_before:
-                labels.append(SPACE_ID)
-                probs.append(1.0)
-                labels.append(BLANK_ID)
-                probs.append(1.0)
-        ch = index.get(np.packbits(bitmap).tobytes())
-        if ch is not None:
-            lab, p = 2 + _CHAR_ID[ch], 1.0
-        else:
-            best_ch, p = _nearest_template(bitmap, index)
-            lab = 2 + _CHAR_ID[best_ch]
-        labels.extend((lab, lab))
-        probs.extend((p, p))
-    return np.array(labels, dtype=np.int64), np.array(probs, dtype=np.float64)
-
-
-def _segment_cells(strip_units: np.ndarray) -> list[tuple[np.ndarray, bool]]:
-    """Blank-column projection segmentation of a unit-scale line strip into
-    glyph cells; gap >= 3 unit columns = word boundary (renderer contract:
-    CHAR_GAP=1, SPACE_GAP=4)."""
-    cols = strip_units.any(axis=0).astype(np.int8)
-    padded = np.concatenate([[0], cols, [0]])
-    diff = np.diff(padded)
-    starts = np.flatnonzero(diff == 1)
-    ends = np.flatnonzero(diff == -1)
-    cells: list[tuple[np.ndarray, bool]] = []
-    prev_end = None
-    for s, e in zip(starts, ends):
-        space_before = prev_end is not None and (s - prev_end) >= 3
-        cells.append((strip_units[:, s:e].astype(bool), space_before))
-        prev_end = e
-    return cells
 
 
 _LINE_MEMO: dict = {}
@@ -339,9 +283,9 @@ def recognize_line(ink: np.ndarray, box: np.ndarray) -> tuple[str, float]:
     space at word gaps, and mean-max-prob confidence is the analytic
     mean over 2 glyph frames/cell + the all-1.0 blank/space frames — so
     neither the lattice arrays nor the collapse nor the per-cell bool
-    copies are built at all. Semantics identical to
-    _segment_cells + _cell_frames + ctc_collapse (A/B-tested over the
-    corpus; the lattice builder remains for the law tests)."""
+    copies are built at all. Cells are the unit-scale blank-column runs;
+    a run gap >= 3 unit columns is a word boundary (renderer contract
+    CHAR_GAP=1, SPACE_GAP=4, the rule detect.split_words applies)."""
     x, y, w, h = (int(box[0]), int(box[1]), int(box[2]), int(box[3]))
     crop = ink[y : y + h, x : x + w]
     scale = max(1, h // GLYPH_H)

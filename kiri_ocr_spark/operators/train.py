@@ -559,9 +559,9 @@ def fixture_line_crops(sf_dir: str, max_docs: int | None = None,
 def pipeline_line_crops(sf_dir: str, max_docs: int | None = None):
     """(line_text, crop) pairs with the DEPLOYMENT crop geometry: render
     each media PAGE per the fixture spec (plain/inverted/tinted), PNG
-    round-trip, fused orient+binarize, `detect_lines`, then
-    pad_training_margins + resize — exactly `pipeline.page_kernel`'s
-    trained-recognizer, legacy-detector crop code. This differs from `render_crop`'s
+    round-trip, `page.read_page`, `detect_lines`, then `page.tight_box` +
+    `page.line_crop` — exactly `page.page_kernel`'s trained-recognizer,
+    legacy-detector crop code. This differs from `render_crop`'s
     training-style margins: the stage-5f candidate regressed two sf0.1
     lines through THESE crops while sweeping zero-miss on every
     training-style deck, so the artifact gate must sweep BOTH geometries.
@@ -573,13 +573,9 @@ def pipeline_line_crops(sf_dir: str, max_docs: int | None = None):
     import pyarrow.parquet as pq
 
     from ..imaging.glyphs import SCALE, render_page
-    from ..imaging.png import decode_gray, encode_gray, encode_rgb
-    from .detect import (
-        detect_lines,
-        orient_and_binarize,
-        pad_training_margins,
-        resize_keep_ratio_pad,
-    )
+    from ..imaging.png import encode_gray, encode_rgb
+    from .detect import detect_lines
+    from .page import line_crop, read_page, tight_box
 
     tbl = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
     docs = sorted(zip(tbl["doc_id"].to_pylist(), tbl["text"].to_pylist()))
@@ -600,20 +596,14 @@ def pipeline_line_crops(sf_dir: str, max_docs: int | None = None):
                 blob = encode_rgb(_tint_page(page))
             else:
                 blob = encode_gray(page)
-            gray, ink = orient_and_binarize(decode_gray(blob))
+            gray, ink = read_page(blob)
             boxes = detect_lines(gray, ink=ink)
             if len(boxes) != len(lines):
                 layout_misses.append((doc_id, m, len(lines), len(boxes)))
                 continue
+            # detect_lines boxes always hold ink: tight_box is never None
             for line, b in zip(lines, boxes):
-                x, y, bw, bh = (int(v) for v in b[:4])
-                samples.append((
-                    line,
-                    resize_keep_ratio_pad(
-                        pad_training_margins(gray[y : y + bh, x : x + bw])
-                    ),
-                    doc_id,
-                ))
+                samples.append((line, line_crop(gray, tight_box(ink, b)), doc_id))
     return samples, layout_misses
 
 

@@ -6,7 +6,11 @@
         +-- text:  native trim/collapse + NFC pandas_udf (F1/F2)
         +-- media: salt (skew: media-heavy docs) -> repartition
                    -> join media payload (broadcast small / SMJ + AQE skew)
-                   -> mapInPandas page_kernel (detect F13 + recognize M2/F7)
+                   -> mapInPandas page_kernel (operators/page.py):
+                      read_page (decode -> orient + binarize)
+                      -> detect lines (F13) -> tight_box -> line_crop
+                      -> recognize (M2/F7), each page under map_pages,
+                      the one quarantine loop
                    -> bytes projected away immediately (§4.3 large-binary hygiene)
         \\-> unionByName (U5)
         -> groupBy(doc_id) ordered-span assembly (A8/W9) -- the only
@@ -25,16 +29,14 @@ Design notes for 100 TB / 1000 executors:
 
 from __future__ import annotations
 
-import struct
-import time
-import zlib
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .functions.text import normalize_text
+from .operators.page import page_kernel
 
 OCR_SCHEMA = (
     "doc_id long, offset int, kind string, text string, media_ref string, "
@@ -45,121 +47,6 @@ SPAN_SCHEMA = (
     "doc_id long, offset int, kind string, text string, media_ref string, "
     "conf double, n_lines int"
 )
-
-# the per-row quarantine policy of every page kernel — each failure mode
-# of a missing or corrupt-but-magic-valid payload: bad magic / missing
-# IHDR / NULL payload (ValueError), truncated chunk header
-# (struct.error), corrupt/truncated IDAT (zlib.error), malformed
-# scanline geometry (IndexError/KeyError on reshape/filter type)
-_QUARANTINE = (ValueError, KeyError, IndexError, struct.error, zlib.error)
-
-
-def page_kernel(
-    model_path: str | None, det_method: str = "legacy", decode_method: str = "ctc"
-):
-    """The one page kernel every line-recognizing query runs: decode PNG
-    -> fused orient + binarize -> detect lines -> recognize each line.
-
-    Returns ``ocr(blobs, memo) -> (lines, row_us)``: ``lines[i]`` is page
-    i's ``[(text, conf), ...]`` in reading order, or None when the page is
-    quarantined (every ``_QUARANTINE`` failure of a missing or corrupt
-    payload); ``row_us[i]`` is page i's own kernel time in µs. Build it
-    executor-side (inside the mapInPandas function): it loads the model.
-
-    ``det_method``: 'legacy' = the CC line finder (detect_lines);
-    'db' | 'craft' = the calibrated conv-forward detectors through
-    TextDetector.detect_line_boxes (W3 row clustering + blank-row band
-    split, which leaves each box tight to its ink; db with the slow
-    component-pixel score) — the reference's
-    process_document(method='db'|'craft'), detector/__init__.py:161-192
-    -> core.py:770-792.
-
-    ``model_path`` None: the glyph-template recognizer (recognize_line on
-    the ink mask; ``memo`` is unused, the template path memoizes per
-    worker). Otherwise the trained transformer (core.py:719-793 always
-    decodes through the model): crops follow the trained artifact's
-    contract (pad_training_margins + resize) and are stacked ACROSS the
-    batch's pages into one decode_crops_memo call (``decode_method``
-    'ctc' or 'beam'); ``memo`` is its caller-owned, per-partition memo.
-    The model loads once per Python worker (M8 get_model cache)."""
-    import numpy as np
-
-    from .imaging.png import decode_gray
-    from .operators.detect import (
-        detect_lines,
-        orient_and_binarize,
-        pad_training_margins,
-        resize_keep_ratio_pad,
-    )
-
-    model = detector = None
-    if model_path is None:
-        from .operators.recognize import recognize_line
-    else:
-        from .operators.model import decode_crops_memo, get_model
-
-        model = get_model(path=model_path)
-    if det_method != "legacy":
-        from .operators.facade import TextDetector
-
-        det_kwargs = {"det_db_score_mode": "slow"} if det_method == "db" else {}
-        detector = TextDetector(method=det_method, **det_kwargs)
-
-    def ocr(blobs, memo: dict) -> tuple[list, list[int]]:
-        n = len(blobs)
-        lines: list = [None] * n
-        row_us = [0] * n
-        crops: list[np.ndarray] = []
-        owners: list[int] = []  # crop -> page index
-        t_prev = time.monotonic()
-        for ri, blob in enumerate(blobs):
-            # snapshot so a mid-page quarantine rolls back any crops
-            # already appended for this page — otherwise the stacked
-            # decode below hands partial text to a quarantined page
-            n_crops_at_row_start = len(crops)
-            # quarantine, don't crash: one corrupt payload among 10^12
-            # docs must not fail the task (and with it the wave)
-            try:
-                if blob is None:  # payload missing from the store
-                    raise ValueError("missing media payload")
-                gray, ink = orient_and_binarize(decode_gray(bytes(blob)))
-                if detector is None:
-                    boxes = detect_lines(gray, ink=ink)
-                else:
-                    boxes = detector.detect_line_boxes(gray, ink)
-                if model is None:
-                    lines[ri] = [recognize_line(ink, b) for b in boxes]
-                else:
-                    for b in boxes:
-                        x, y, w, h = (int(v) for v in b[:4])
-                        crops.append(
-                            resize_keep_ratio_pad(
-                                pad_training_margins(gray[y : y + h, x : x + w])
-                            )
-                        )
-                        owners.append(ri)
-                    lines[ri] = []
-            except _QUARANTINE:
-                del crops[n_crops_at_row_start:]
-                del owners[n_crops_at_row_start:]
-            # true per-row kernel time, stamped inside the row loop:
-            # summing it over any row grouping (e.g. checkpoint part_id)
-            # yields that group's actual kernel wall — heavy rows carry
-            # their own cost, not a batch average
-            t_now = time.monotonic()
-            row_us[ri] = int((t_now - t_prev) * 1_000_000)
-            t_prev = t_now
-        if crops:
-            # one stacked decode for the whole batch (ENCODE_CHUNK-sized
-            # fp32 encodes); its cost is spread over the owning rows
-            decoded = decode_crops_memo(model, crops, memo, method=decode_method)
-            per = int((time.monotonic() - t_prev) * 1_000_000 / len(crops))
-            for ri, d in zip(owners, decoded):
-                lines[ri].append(d)
-                row_us[ri] += per
-        return lines, row_us
-
-    return ocr
 
 
 def _ocr_batches(
@@ -379,13 +266,3 @@ def extract_flat(
         "s.text",
         "s.media_ref",
     )
-
-
-def extract_from_sf_dir(spark: SparkSession, sf_dir: str, **kwargs) -> DataFrame:
-    """Convenience: synthesize the fixture from a testdata dir and extract.
-    Fixture media stores are small -> broadcast by default."""
-    from .fixtures import build_fixture
-
-    kwargs.setdefault("broadcast_media", True)
-    docs, media = build_fixture(spark, sf_dir)
-    return extract_flat(docs, media, **kwargs)

@@ -143,17 +143,26 @@ def q_extract_spans_template(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _detect_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from .imaging.png import decode_gray
+    """(media_ref, png_bytes) -> detected line count and page height; a
+    quarantined page keeps its row with n_lines -1, height NULL."""
     from .operators.detect import detect_lines
+    from .operators.page import map_pages
 
     for pdf in batches:
-        n_lines, heights = [], []
-        for blob in pdf["png_bytes"]:
-            gray = decode_gray(bytes(blob))
-            n_lines.append(len(detect_lines(gray)))
-            heights.append(gray.shape[0])
+        pages = list(
+            map_pages(
+                pdf["png_bytes"],
+                lambda gray, ink: (len(detect_lines(gray, ink=ink)), gray.shape[0]),
+            )
+        )
         yield pd.DataFrame(
-            {"media_ref": pdf["media_ref"], "n_lines": n_lines, "height": heights}
+            {
+                "media_ref": pdf["media_ref"],
+                "n_lines": [-1 if p is None else p[0] for p in pages],
+                "height": pd.array(
+                    [None if p is None else p[1] for p in pages], dtype="Int32"
+                ),
+            }
         )
 
 
@@ -196,39 +205,38 @@ WHERE n_media > 0
 
 
 def _facade_detect_batches(method: str):
+    """(media_ref, png_bytes) -> the facade invariants per page; a
+    quarantined page keeps its row with every measure NULL."""
+
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .imaging.png import decode_gray
-        from .operators.detect import binarize, invert_if_dark
         from .operators.facade import TextDetector
+        from .operators.page import map_pages
 
         det = TextDetector(method=method)
         resolved = det.method == method  # default numpy forward resolved
+
+        def page(gray, ink):
+            boxes = det.detect_boxes(gray)
+            found = resolved and len(boxes) > 0
+            on_ink = found and all(
+                ink[
+                    max(int(y), 0) : int(y + h) + 1, max(int(x), 0) : int(x + w) + 1
+                ].any()
+                for x, y, w, h, _ in boxes
+            )
+            conf_ok = found and not any(conf < 0.5 for *_, conf in boxes)
+            return gray.shape[0], found, on_ink, conf_ok
+
         for pdf in batches:
-            refs, heights, found, on_ink, conf_ok = [], [], [], [], []
-            for ref, blob in zip(pdf["media_ref"], pdf["png_bytes"]):
-                gray = decode_gray(bytes(blob))
-                boxes = det.detect_boxes(gray)
-                ink = binarize(invert_if_dark(gray)) > 0
-                all_on = resolved and len(boxes) > 0
-                c_ok = resolved and len(boxes) > 0
-                for x, y, w, h, conf in boxes:
-                    x0, y0 = max(int(x), 0), max(int(y), 0)
-                    if not ink[y0 : int(y + h) + 1, x0 : int(x + w) + 1].any():
-                        all_on = False
-                    if conf < 0.5:
-                        c_ok = False
-                refs.append(ref)
-                heights.append(gray.shape[0])
-                found.append(resolved and len(boxes) >= 1)
-                on_ink.append(all_on)
-                conf_ok.append(c_ok)
+            pages = list(map_pages(pdf["png_bytes"], page))
+            cols = [[None if p is None else p[k] for p in pages] for k in range(4)]
             yield pd.DataFrame(
                 {
-                    "media_ref": refs,
-                    "height": heights,
-                    "found": found,
-                    "on_ink": on_ink,
-                    "conf_ok": conf_ok,
+                    "media_ref": pdf["media_ref"],
+                    "height": pd.array(cols[0], dtype="Int32"),
+                    "found": pd.array(cols[1], dtype="boolean"),
+                    "on_ink": pd.array(cols[2], dtype="boolean"),
+                    "conf_ok": pd.array(cols[3], dtype="boolean"),
                 }
             )
 
@@ -2634,29 +2642,24 @@ FROM d
 
 
 def _word_seg_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from .imaging.glyphs import GLYPH_H
-    from .imaging.png import decode_gray
-    from .operators.detect import binarize, detect_lines, invert_if_dark
-    from .operators.recognize import _segment_cells
+    """(media_ref, png_bytes) -> one row per detected line with its word
+    count (detect.split_words); a quarantined page yields no rows."""
+    from .operators.detect import detect_lines, split_words
+    from .operators.page import map_pages
 
     for pdf in batches:
-        refs, line_idx, n_words = [], [], []
-        for ref, blob in zip(pdf["media_ref"], pdf["png_bytes"]):
-            gray = invert_if_dark(decode_gray(bytes(blob)))
-            ink = binarize(gray)
-            for i, box in enumerate(detect_lines(gray, ink=ink)):
-                x, y, w, h = (int(box[0]), int(box[1]), int(box[2]), int(box[3]))
-                crop = ink[y : y + h, x : x + w]
-                scale = max(1, h // GLYPH_H)
-                cells = _segment_cells(crop[0::scale, 0::scale])
-                refs.append(ref)
-                line_idx.append(i)
-                n_words.append(
-                    1 + sum(sp for _, sp in cells) if cells else 0
-                )
-        yield pd.DataFrame(
-            {"media_ref": refs, "line_idx": line_idx, "n_words": n_words}
+        pages = map_pages(
+            pdf["png_bytes"],
+            lambda gray, ink: [
+                len(split_words(ink, box)) for box in detect_lines(gray, ink=ink)
+            ],
         )
+        rows = [
+            (ref, i, n)
+            for ref, counts in zip(pdf["media_ref"], pages)
+            for i, n in enumerate(counts or ())
+        ]
+        yield pd.DataFrame(rows, columns=["media_ref", "line_idx", "n_words"])
 
 
 def q_word_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2704,49 +2707,33 @@ FROM m, unnest(CASE WHEN odd = 1 THEN [0, 1] ELSE [0] END) AS l(line_idx)
 # --------------------------------------------------------------------------
 
 
-def q_finder_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .fixtures import build_fixture as _bf
+def _finder_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """(media_ref, png_bytes) -> the legacy facade's line count per page
+    (TextDetector('legacy').detect_boxes: CC ∪ MSER ∪ gradient
+    candidates, filters, line grouping, padded hulls + overlap merge); a
+    quarantined page keeps its row with n_lines -1."""
+    from .operators.facade import TextDetector
+    from .operators.page import map_pages
 
-    _, media = _bf(spark, sf_dir)
+    det = TextDetector(method="legacy")
+    for pdf in batches:
+        counts = map_pages(
+            pdf["png_bytes"], lambda gray, ink: len(det.detect_boxes(gray))
+        )
+        yield pd.DataFrame(
+            {
+                "media_ref": pdf["media_ref"],
+                "n_lines": [-1 if n is None else n for n in counts],
+            }
+        )
+
+
+def q_finder_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    _, media = build_fixture(spark, sf_dir)
     sample = media.filter(
         F.expr("cast(split(media_ref, '_')[1] as bigint) % 11 = 0")
     ).select("media_ref", "png_bytes")
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .imaging.png import decode_gray
-        from .operators.components import (
-            filter_components,
-            relative_size_filter,
-        )
-        from .operators.detect import (
-            binarize,
-            group_into_lines,
-            invert_if_dark,
-            line_boxes_from_groups,
-        )
-        from .operators.finders import (
-            estimate_text_metrics,
-            multi_method_candidates,
-        )
-
-        for pdf in batches:
-            rows = []
-            for ref, blob in zip(pdf["media_ref"], pdf["png_bytes"]):
-                gray = invert_if_dark(decode_gray(bytes(blob)))
-                ink = binarize(gray)
-                kept = multi_method_candidates(gray, ink)
-                if len(kept):
-                    kept = filter_components(kept, gray.shape[1], gray.shape[0])
-                    kept = relative_size_filter(kept)
-                groups = group_into_lines(kept)
-                _, _, pad = estimate_text_metrics(kept)
-                lboxes = line_boxes_from_groups(
-                    groups, gray.shape[1], gray.shape[0], padding=pad
-                )
-                rows.append({"media_ref": ref, "n_lines": len(lboxes)})
-            yield pd.DataFrame(rows)
-
-    return sample.mapInPandas(fn, schema="media_ref string, n_lines int")
+    return sample.mapInPandas(_finder_batches, schema="media_ref string, n_lines int")
 
 
 _FINDER_SQL = """
@@ -2768,6 +2755,48 @@ _MODEL_DECODE_SCHEMA = (
 )
 
 
+def _model_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """(media_ref, png_bytes) -> the three decode-law flags per page, one
+    batched encode per Arrow batch over its readable pages; a quarantined
+    page keeps its row with the flags NULL."""
+    import numpy as np
+
+    from .operators.detect import resize_keep_ratio_pad
+    from .operators.model import get_model
+    from .operators.page import map_pages
+
+    model = get_model()  # singleton per python worker (M8)
+    cfg = model.cfg
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        imgs = list(
+            map_pages(pdf["png_bytes"], lambda gray, ink: resize_keep_ratio_pad(gray))
+        )
+        good = [i for i, img in enumerate(imgs) if img is not None]
+        flags = [[None] * len(imgs) for _ in range(3)]
+        if good:
+            mem = model.encode(np.stack([imgs[i] for i in good]))
+            for i, m, (ctc_text, ctc_conf) in zip(good, mem, model.ctc_greedy(mem)):
+                beam_text, beam_conf = model.beam_decode(m)
+                cap = min(
+                    cfg.MAX_DEC_LEN,
+                    int(cfg.CTC_LEN_CAP_MULT * len(ctc_text)) + cfg.CTC_LEN_CAP_ADD,
+                )
+                flags[0][i] = int(0.0 <= ctc_conf <= 1.0 and 0.0 <= beam_conf <= 1.0)
+                flags[1][i] = int(len(beam_text) <= cap)
+                flags[2][i] = int(len(ctc_text) > 0)
+        yield pd.DataFrame(
+            {
+                "media_ref": pdf["media_ref"],
+                **{
+                    name: pd.array(col, dtype="Int32")
+                    for name, col in zip(("conf_ok", "len_ok", "nonempty_ctc"), flags)
+                },
+            }
+        )
+
+
 def q_model_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decode-law aggregates over the distributed inference path (judge r1
     item 5): weights are seeded-random so text CONTENT is not meaningful,
@@ -2778,55 +2807,11 @@ def q_model_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     - the CTC head emits a non-empty hypothesis on a non-blank page.
     One row per sampled image, all three flags 1 — the DuckDB oracle knows
     exactly which media refs exist by construction."""
-    from .fixtures import build_fixture as _bf
-
-    _, media = _bf(spark, sf_dir)
+    _, media = build_fixture(spark, sf_dir)
     sample = media.filter(
         F.expr("cast(split(media_ref, '_')[1] as bigint) % 37 = 0")
     ).select("media_ref", "png_bytes")
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from .imaging.png import decode_gray
-        from .operators.detect import invert_if_dark, resize_keep_ratio_pad
-        from .operators.model import get_model
-
-        model = get_model()  # singleton per python worker (M8)
-        cfg = model.cfg
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            imgs = np.stack(
-                [
-                    resize_keep_ratio_pad(invert_if_dark(decode_gray(bytes(b))))
-                    for b in pdf["png_bytes"]
-                ]
-            )
-            mem = model.encode(imgs)  # one batched forward per Arrow batch
-            rows = []
-            for ref, m, (ctc_text, ctc_conf) in zip(
-                pdf["media_ref"], mem, model.ctc_greedy(mem)
-            ):
-                beam_text, beam_conf = model.beam_decode(m)
-                cap = min(
-                    cfg.MAX_DEC_LEN,
-                    int(cfg.CTC_LEN_CAP_MULT * len(ctc_text))
-                    + cfg.CTC_LEN_CAP_ADD,
-                )
-                rows.append(
-                    {
-                        "media_ref": ref,
-                        "conf_ok": int(
-                            0.0 <= ctc_conf <= 1.0 and 0.0 <= beam_conf <= 1.0
-                        ),
-                        "len_ok": int(len(beam_text) <= cap),
-                        "nonempty_ctc": int(len(ctc_text) > 0),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return sample.mapInPandas(fn, schema=_MODEL_DECODE_SCHEMA)
+    return sample.mapInPandas(_model_decode_batches, schema=_MODEL_DECODE_SCHEMA)
 
 
 _MODEL_DECODE_SQL = """
@@ -3061,17 +3046,11 @@ def q_text_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = trained_model_path()
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         from .imaging.glyphs import SCALE, render_page
-        from .operators.detect import (
-            binarize,
-            invert_if_dark,
-            pad_training_margins,
-            resize_keep_ratio_pad,
-        )
+        from .operators.detect import orient_and_binarize
         from .operators.facade import TextDetector
-        from .operators.model import get_model
+        from .operators.model import decode_crops_memo, get_model
+        from .operators.page import line_crop, tight_box
 
         model = get_model(path=path)
         det = TextDetector(method="legacy")
@@ -3087,31 +3066,19 @@ def q_text_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
                     if bi:
                         flat.append("")  # blank band: the block separator
                     flat.extend(" ".join(ws) for ws in lines)
-                page = render_page(flat, scale=SCALE)
-                gray = invert_if_dark(page)
-                ink = binarize(gray)
-                for bi, blk in enumerate(det.detect_all(page)):
+                gray, ink = orient_and_binarize(render_page(flat, scale=SCALE))
+                for bi, blk in enumerate(det.detect_all(gray)):
                     for li, ln in enumerate(blk["lines"]):
                         words = sorted(ln["words"], key=lambda w: w["bbox"][0])
                         for wi, wd in enumerate(words):
-                            x, y, w, h = wd["bbox"]
-                            sub = ink[y : y + h, x : x + w]
-                            ys, xs = np.nonzero(sub)
-                            if len(ys) == 0:
+                            box = tight_box(ink, wd["bbox"])
+                            if box is None:
                                 continue
-                            crop = gray[
-                                y + ys.min() : y + ys.max() + 1,
-                                x + xs.min() : x + xs.max() + 1,
-                            ]
                             ids.append(d)
                             bids.append(bi)
                             lids.append(li)
                             wids.append(wi)
-                            crops.append(
-                                resize_keep_ratio_pad(pad_training_margins(crop))
-                            )
-            from .operators.model import decode_crops_memo
-
+                            crops.append(line_crop(gray, box))
             texts = [t for t, _ in decode_crops_memo(model, crops, memo)]
             yield pd.DataFrame(
                 {

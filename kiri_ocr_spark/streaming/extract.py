@@ -324,36 +324,40 @@ def decode_step_events(df: DataFrame, model_path: str | None = None) -> DataFram
     1e-9 (tests/test_streaming.py::test_step_events_with_trained_weights_match_batch).
     Default stays the seed build in float64, matching the batch
     q_model_decode contract."""
+    return df.mapInPandas(_step_event_batches(model_path), schema=STEP_EVENT_SCHEMA)
+
+
+def _step_event_batches(model_path: str | None):
+    """mapInPandas kernel over (doc_id, region, png) line images ->
+    STEP_EVENT_SCHEMA rows; a quarantined region yields no rows."""
     import pandas as pd  # noqa: F811
 
-    def kernel(batches):
-        from ..imaging.png import decode_gray
-        from ..operators.detect import invert_if_dark, resize_keep_ratio_pad
+    def fn(batches):
+        from ..operators.detect import resize_keep_ratio_pad
         from ..operators.model import get_model
+        from ..operators.page import map_pages
 
         model = get_model(path=model_path)
         fp32 = model_path is not None
+
+        def steps(gray, ink):
+            # same P3 preprocessing as the batch decoder kernel
+            # (q_model_decode) — streaming and batch decodes of one
+            # region must agree (text-exact)
+            img = resize_keep_ratio_pad(gray)[None].astype("float32")
+            return [
+                (ev["step"], ev["text"], ev["confidence"], ev["finished"])
+                for ev in model.beam_decode_steps(model.encode(img, fp32=fp32)[0])
+            ]
+
         for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                # same P3 preprocessing as the batch decoder kernel
-                # (q_model_decode) and OCR._recognize_region — streaming
-                # and batch decodes of one region must agree (text-exact)
-                gray = resize_keep_ratio_pad(
-                    invert_if_dark(decode_gray(bytes(r["png"])))
+            rows = [
+                (int(d), int(region), *ev)
+                for d, region, events in zip(
+                    pdf["doc_id"], pdf["region"], map_pages(pdf["png"], steps)
                 )
-                mem = model.encode(gray[None].astype("float32"), fp32=fp32)[0]
-                for ev in model.beam_decode_steps(mem):
-                    rows.append(
-                        (
-                            int(r["doc_id"]),
-                            int(r["region"]),
-                            ev["step"],
-                            ev["text"],
-                            ev["confidence"],
-                            ev["finished"],
-                        )
-                    )
+                for ev in events or ()
+            ]
             yield pd.DataFrame(
                 rows,
                 columns=[
@@ -361,7 +365,7 @@ def decode_step_events(df: DataFrame, model_path: str | None = None) -> DataFram
                 ],
             )
 
-    return df.mapInPandas(kernel, schema=STEP_EVENT_SCHEMA)
+    return fn
 
 
 def stream_beam_retraction(

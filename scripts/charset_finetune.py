@@ -53,12 +53,15 @@ flank) at a gentler lr:
 The chain continues past hand-designed families with HARD-EXAMPLE
 MINING (scripts/stage5e_mine.py + scripts/stage5e_finetune.py): 5d
 (thinpair family, lr 2e-5) was gate-REJECTED for wobbling corpus
-exactness (models/trained_full_s5d_gate_result.json); 5e trained on
+exactness; 5e trained on
 the 49 misses mined from 30k seeded lines (coverage 4/200 -> 0/200,
 every deck 0.0); 5f repeats the loop on the shipped artifact's 124
 misses from a 121k-line sweep. Every candidate passes
 scripts/stage5_gate.py's zero-miss sweep before replacing the shipped
 artifact.
+The intermediate candidates (models/trained_full_s5*) are not kept in
+the repo: each command above writes its prefix again, and the shipped
+models/trained_full_meta.json carries the lineage.
 Deterministic: fixed artifact input, seeded coverage lines, seeded
 shuffle, no dropout.
 """

@@ -22,7 +22,7 @@ and writes models/trained_full_charset_report.json (stage-5 block
 appended). On FAIL: writes the report with failures, leaves the shipped
 artifact untouched.
 
-Usage: python scripts/stage5_gate.py [candidate_prefix] [apply]
+Usage: python scripts/stage5_gate.py candidate_prefix [apply]
        (apply='dry' validates without swapping)
 """
 
@@ -72,7 +72,10 @@ def charset_oracle_lines(sf_dir: str) -> list[str]:
 
 
 def main() -> int:
-    cand = sys.argv[1] if len(sys.argv) > 1 else "models/trained_full_s5"
+    if len(sys.argv) < 2:
+        print(__doc__.split("Usage: ")[1], file=sys.stderr)
+        return 2
+    cand = sys.argv[1]
     apply = (sys.argv[2] if len(sys.argv) > 2 else "apply") != "dry"
 
     from kiri_ocr_spark.operators import train as T

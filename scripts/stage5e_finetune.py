@@ -9,8 +9,8 @@ full charset deck, so the model sees the failure mode across many
 phases/contexts instead of one literal string. Keep-alive slices of the
 corpus and every prior family prevent forgetting; lr is gentle (1e-5)
 because stage-5d showed 2e-5 over a large family mix wobbles corpus
-exactness (1 sf0.1 regression, gate-rejected, recorded in
-/tmp/stage5_result.json and models/trained_full_s5d_charset_report.json).
+exactness (1 sf0.1 regression, gate-rejected; the stage-5 candidate
+artifacts and their reports are not kept in the repo).
 
 Reports pre/post CER on every standard held-out family PLUS a fresh
 mined-style probe (generator style (b), independent seed) so the
@@ -77,7 +77,7 @@ def mined_probe_lines(n: int, seed: int) -> list[str]:
 def main() -> int:
     out_prefix = sys.argv[1] if len(sys.argv) > 1 else "models/trained_full_s5e"
     mined_json = sys.argv[2] if len(sys.argv) > 2 else "models/stage5e_mined.json"
-    in_prefix = sys.argv[3] if len(sys.argv) > 3 else "models/trained_full_s5c"
+    in_prefix = sys.argv[3] if len(sys.argv) > 3 else "models/trained_full"
     epochs = int(sys.argv[4]) if len(sys.argv) > 4 else 2
     lr = float(sys.argv[5]) if len(sys.argv) > 5 else 1e-5
     oversample = int(sys.argv[6]) if len(sys.argv) > 6 else 30

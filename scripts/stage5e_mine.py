@@ -139,7 +139,7 @@ def _decode_shard(args):
 
 
 def main() -> int:
-    MODEL_PREFIX = sys.argv[1] if len(sys.argv) > 1 else "models/trained_full_s5c"
+    MODEL_PREFIX = sys.argv[1] if len(sys.argv) > 1 else "models/trained_full"
     N_LINES = int(sys.argv[2]) if len(sys.argv) > 2 else 9000
     OUT = sys.argv[3] if len(sys.argv) > 3 else "models/stage5e_mined.json"
     t0 = time.monotonic()

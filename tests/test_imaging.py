@@ -170,3 +170,56 @@ def test_png_zlib_bomb_rejected_fast_with_bounded_memory():
         tracemalloc.stop()
     assert elapsed < 0.05
     assert peak < 1 << 20
+
+
+def test_png_rejects_zero_pixel_ihdr():
+    """An IHDR with a zero dimension is invalid PNG; decoding it to an
+    empty page would divide by zero in the recognizer's resize."""
+    import struct
+    import zlib
+
+    from kiri_ocr_spark.imaging.png import _SIGNATURE, _chunk
+
+    ihdr = struct.pack(">IIBBBBB", 5, 0, 8, 0, 0, 0, 0)
+    data = (
+        _SIGNATURE
+        + _chunk(b"IHDR", ihdr)
+        + _chunk(b"IDAT", zlib.compress(b""))
+        + _chunk(b"IEND", b"")
+    )
+    with pytest.raises(ValueError, match="IHDR size"):
+        decode_gray(data)
+
+
+def test_png_oversize_ihdr_rejected_before_inflating():
+    """A page declaring 60000x60000 (3.6 G pixels, over the pixel cap)
+    over a 120 MiB zero stream is rejected from its IHDR alone: nothing
+    is inflated."""
+    import struct
+    import time
+    import tracemalloc
+    import zlib
+
+    from kiri_ocr_spark.imaging.png import _SIGNATURE, _chunk
+
+    comp = zlib.compressobj(9)
+    zeros = bytes(1 << 20)
+    idat = b"".join(comp.compress(zeros) for _ in range(120)) + comp.flush()
+    ihdr = struct.pack(">IIBBBBB", 60000, 60000, 8, 0, 0, 0, 0)
+    data = (
+        _SIGNATURE
+        + _chunk(b"IHDR", ihdr)
+        + _chunk(b"IDAT", idat)
+        + _chunk(b"IEND", b"")
+    )
+    tracemalloc.start()
+    t0 = time.perf_counter()
+    try:
+        with pytest.raises(ValueError, match="IHDR size"):
+            decode_gray(data)
+        elapsed = time.perf_counter() - t0
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert elapsed < 0.05
+    assert peak < 1 << 20

@@ -427,6 +427,31 @@ def test_color_bank_recovers_luma_invisible_text():
     assert int(np.argmax(all_scores)) >= 14
 
 
+def _truncated_idat(png: bytes) -> bytes:
+    """``png`` cut in the middle of its IDAT payload."""
+    import struct
+
+    pos = png.index(b"IDAT") + 4
+    (length,) = struct.unpack(">I", png[pos - 8 : pos - 4])
+    return png[: pos + max(1, length // 2)]
+
+
+def _oversize_ihdr() -> bytes:
+    """A PNG whose IHDR declares 60000x60000 pixels, over the pixel cap."""
+    import struct
+    import zlib
+
+    from kiri_ocr_spark.imaging.png import _SIGNATURE, _chunk
+
+    ihdr = struct.pack(">IIBBBBB", 60000, 60000, 8, 0, 0, 0, 0)
+    return (
+        _SIGNATURE
+        + _chunk(b"IHDR", ihdr)
+        + _chunk(b"IDAT", zlib.compress(bytes(1 << 16)))
+        + _chunk(b"IEND", b"")
+    )
+
+
 @pytest.mark.parametrize("det_method", ["legacy", "db", "craft"])
 @pytest.mark.parametrize("recognizer", ["template", "trained", "beam"])
 def test_ocr_kernel_decodes_and_quarantines(recognizer, det_method):
@@ -447,11 +472,19 @@ def test_ocr_kernel_decodes_and_quarantines(recognizer, det_method):
     inverted = encode_gray(render_page(["the fast key"], scale=SCALE, invert=True))
     pdf = pd.DataFrame(
         {
-            "doc_id": [1, 1, 2, 2, 3],
-            "offset": [0, 1, 0, 1, 0],
-            "kind": ["media"] * 5,
-            "media_ref": ["a", "b", "c", "d", "e"],
-            "png_bytes": [plain, tinted, None, b"\x89PNG\r\n\x1a\ngarbage", inverted],
+            "doc_id": [1, 1, 2, 2, 3, 4, 4],
+            "offset": [0, 1, 0, 1, 0, 0, 1],
+            "kind": ["media"] * 7,
+            "media_ref": ["a", "b", "c", "d", "e", "f", "g"],
+            "png_bytes": [
+                plain,
+                tinted,
+                None,
+                b"\x89PNG\r\n\x1a\ngarbage",
+                inverted,
+                _truncated_idat(plain),
+                _oversize_ihdr(),
+            ],
         }
     )
     model_path = None if recognizer == "template" else trained_model_path()
@@ -465,7 +498,7 @@ def test_ocr_kernel_decodes_and_quarantines(recognizer, det_method):
     assert rows["b"].conf > 0.5
     if recognizer == "template":
         assert rows["a"].conf == rows["e"].conf == 1.0
-    for ref in ("c", "d"):
+    for ref in ("c", "d", "f", "g"):
         assert rows[ref].text is None
         assert rows[ref].conf == 0.0
         assert rows[ref].n_lines == -1
@@ -504,6 +537,82 @@ def test_ocr_line_rows_one_row_per_line(recognizer, det_method):
         ("two", 0, "order sort"),
         ("two", 1, "table"),
     ]
+
+
+def _routed_kernel(name: str):
+    """(mapInPandas kernel, per_page) for each PNG kernel outside the
+    page kernel: per_page kernels keep a quarantined page's row, per-line
+    kernels drop it."""
+    from kiri_ocr_spark import queries
+    from kiri_ocr_spark.streaming.extract import _step_event_batches
+
+    return {
+        "detect": (queries._detect_batches, True),
+        "facade_db": (queries._facade_detect_batches("db"), True),
+        "facade_craft": (queries._facade_detect_batches("craft"), True),
+        "word_seg": (queries._word_seg_batches, False),
+        "finder": (queries._finder_batches, True),
+        "model_decode": (queries._model_decode_batches, True),
+        "step_events": (_step_event_batches(None), False),
+    }[name]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "detect",
+        "facade_db",
+        "facade_craft",
+        "word_seg",
+        "finder",
+        "model_decode",
+        "step_events",
+    ],
+)
+def test_routed_kernels_quarantine_bad_pages(name):
+    """Every PNG kernel reads pages through page.map_pages: a NULL,
+    garbage or truncated-IDAT payload quarantines its own page without
+    an exception, and the good page's rows do not change. A per-page
+    output keeps the bad page's row (n_lines -1, every other measure
+    NULL); a per-line output emits no rows for it."""
+    import pandas as pd
+
+    from kiri_ocr_spark.imaging.png import encode_gray
+
+    kernel, per_page = _routed_kernel(name)
+    good = encode_gray(render_page(["order sort", "table"], scale=SCALE))
+    blobs = [good, None, b"\x89PNG\r\n\x1a\ngarbage", _truncated_idat(good)]
+    refs = ["good", "null", "garbage", "truncated"]
+
+    def run(n: int) -> pd.DataFrame:
+        pdf = pd.DataFrame(
+            {
+                "media_ref": refs[:n],
+                "png_bytes": blobs[:n],
+                "doc_id": range(n),
+                "region": [0] * n,
+                "png": blobs[:n],
+            }
+        )
+        return pd.concat(list(kernel([pdf])), ignore_index=True)
+
+    alone, out = run(1), run(4)
+    assert len(alone) > 0
+    key = "media_ref" if "media_ref" in out.columns else "doc_id"
+    good_key = alone[key].iloc[0]
+    pd.testing.assert_frame_equal(
+        out[out[key] == good_key].reset_index(drop=True), alone
+    )
+    bad = out[out[key] != good_key]
+    if not per_page:
+        assert bad.empty
+        return
+    assert sorted(bad[key]) == sorted(refs[1:])
+    for col in bad.columns:
+        if col == "n_lines":
+            assert (bad[col] == -1).all()
+        elif col != key:
+            assert bad[col].isna().all(), col
 
 
 def test_ocr_stream_rejects_unknown_mode():
