@@ -524,24 +524,6 @@ class NumpyKiriModel:
         row[1::2] = np.cos(p * div)
         return row
 
-    def _cross_kv(self, mem: np.ndarray) -> list[tuple[np.ndarray, np.ndarray]]:
-        """Per-layer cross-attention K/V heads of the (1, T, D) encoder
-        memory — constant across decode steps, so computed ONCE per line
-        instead of re-projected (x3 beam copies) inside every
-        _decode_step: the profiled majority of beam wall. Consumed via
-        broadcasting matmul instead of a materialized repeat; tier:
-        text-exact with confidence within 1e-12 of the full re-forward
-        (tests/test_model.py::test_beam_kv_cache_matches_full_forward)."""
-        H = self.cfg.N_HEADS
-        _, T, D = mem.shape
-        dh = D // H
-        out = []
-        for ly in self.dec_layers:
-            kh = (mem @ ly["ck"]).reshape(1, T, H, dh).transpose(0, 2, 1, 3)
-            vh = (mem @ ly["cv"]).reshape(1, T, H, dh).transpose(0, 2, 1, 3)
-            out.append((kh, vh))
-        return out
-
     def _qkv_cat(self) -> list[np.ndarray]:
         """Per-layer [sq|sk|sv] column-concatenated self-attention
         projection — one GEMM per layer per step instead of three.
@@ -553,74 +535,6 @@ class NumpyKiriModel:
             for ly in self.dec_layers
         ]
 
-    def _advance_logits_kv(self, alive: list, kv: dict) -> np.ndarray:
-        """Last-position decoder log-probs for the alive beams via
-        incremental K/V caches — the autoregressive identity: with causal
-        masking, position i's activations depend only on positions <= i,
-        so each step only needs the NEW position's row through the
-        network (self-attention over cached K/V rows + the per-decode
-        cross K/V). Replaces the full teacher-forced re-forward
-        (O(L^2 + L*T_enc) per step) with O(L + 1) work.
-
-        Equality contract is TEXT-level, not bit-level: the full
-        re-forward's own bits already depend on the alive-beam count
-        (BLAS m-blocking is not row-stable — measured), so bit-parity
-        was never defined even for the old path. Tier: text-exact —
-        tests/test_model.py::test_beam_kv_cache_matches_full_forward pins
-        text + 1e-12 confidence agreement against the full forward over
-        seeded decks, and the extraction oracles pin end-to-end."""
-        cfg = self.cfg
-        H, D = cfg.N_HEADS, cfg.D_MODEL
-        dh = D // H
-        B = len(alive)
-        S = len(alive[0][0])  # lockstep invariant: alive seqs share length
-        store = kv["store"]
-        last = np.array([b[0][-1] for b in alive], dtype=np.int64)
-        x = self.dec_emb[last][:, None, :] + self._pos_row(S - 1)[None, None]
-        parents = [store.get(tuple(b[0][:-1])) for b in alive]
-        new_store: dict = {}
-        new_rows: list[list] = [[] for _ in range(B)]
-        scale = np.sqrt(dh)
-        for li, ly in enumerate(self.dec_layers):
-            # self-attention: project ONLY the new row, attend over the
-            # cached rows + itself (the causal mask's -1e9 zeroes future
-            # lanes exactly in the full forward, so "attend everything
-            # cached" is the same computation); fused [q|k|v] GEMM
-            qkv = (x @ kv["qkv"][li]).reshape(B, 1, 3, H, dh)
-            qh = qkv[:, :, 0].transpose(0, 2, 1, 3)
-            kh = qkv[:, :, 1].transpose(0, 2, 1, 3)
-            vh = qkv[:, :, 2].transpose(0, 2, 1, 3)
-            if parents[0] is None:  # S == 1: no cached rows yet
-                K, V = kh, vh
-            else:
-                K = np.concatenate(
-                    [np.stack([p[li][0] for p in parents]), kh], axis=2
-                )
-                V = np.concatenate(
-                    [np.stack([p[li][1] for p in parents]), vh], axis=2
-                )
-            for b in range(B):
-                new_rows[b].append((K[b], V[b]))
-            att = qh @ K.transpose(0, 1, 3, 2) / scale
-            a = softmax(att) @ V
-            a = a.transpose(0, 2, 1, 3).reshape(B, 1, D) @ ly["so"]
-            x = layer_norm(x + a, ly["g1"], ly["b1"])
-            # cross-attention over the per-decode constant K/V (broadcast
-            # matmul in place of a materialized repeat; text-exact tier)
-            ckh, cvh = kv["cross"][li]
-            q2 = (x @ ly["cq"]).reshape(B, 1, H, dh).transpose(0, 2, 1, 3)
-            att2 = q2 @ ckh.transpose(0, 1, 3, 2) / scale
-            c = softmax(att2) @ cvh
-            c = c.transpose(0, 2, 1, 3).reshape(B, 1, D) @ ly["co"]
-            x = layer_norm(x + c, ly["g2"], ly["b2"])
-            ff = np.maximum(x @ ly["w1"] + ly["bf1"], 0.0) @ ly["w2"] + ly["bf2"]
-            x = layer_norm(x + ff, ly["g3"], ly["b3"])
-        for b, (seq, *_rest) in enumerate(alive):
-            new_store[tuple(seq)] = new_rows[b]
-        kv["store"] = new_store  # children look up parents next step
-        logits = x @ self.lm_head[0] + self.lm_head[1]
-        return log_softmax(logits[:, 0])
-
     def _advance_logits_kv_wave(
         self,
         lines: list[int],
@@ -628,26 +542,33 @@ class NumpyKiriModel:
         states: list[dict],
         wave: dict,
     ) -> np.ndarray:
-        """_advance_logits_kv generalized across ALL lockstep lines of a
-        wave: the per-step self-attention projections, cross-attention
-        and FF run as single batched calls over every active line's
-        alive beams instead of one tiny-GEMM pass per line (profiled at
-        32% of beam decode as per-line calls). Lines with fewer alive
-        beams than the wave max are padded by repeating their first
-        alive beam (a duplicate computation, discarded on store) so the
-        row grid stays uniform for the broadcast cross-attention.
-        Cached K/V live in ONE array per layer per step; each step
-        gathers parent rows with a single fancy index instead of
-        per-row np.stack (was ~40% of the step cost). Same math, same
-        structure; the equality contract vs the per-line path is
-        TEXT-level + 1e-9 confidence
-        (tests/test_model.py::test_beam_decode_batch_matches_per_line),
-        like _advance_logits_kv's own contract vs the full teacher-forced
-        re-forward (BLAS m-blocking is not row-stable, so bit parity
-        across batch shapes was never defined). Records each alive
-        beam's K/V row index in its line's ``new_rows`` map. Returns
-        [L, A_max, V] last-position log-probs (padded rows included —
-        callers slice the real ones)."""
+        """The one incremental-K/V decode step: last-position decoder
+        log-probs for the alive beams of every active line of a lockstep
+        wave. The autoregressive identity makes it exact in law: with
+        causal masking, position i's activations depend only on
+        positions <= i, so each step runs only the NEW position's row
+        through the network (self-attention over cached K/V rows + the
+        wave's constant cross K/V) instead of the full teacher-forced
+        re-forward's O(L^2 + L*T_enc) work.
+
+        The self-attention projections ([q|k|v] fused into one GEMM),
+        cross-attention and FF run as single batched calls over every
+        active line's alive beams. Lines with fewer alive beams than the
+        wave max are padded by repeating their first alive beam (a
+        duplicate computation, discarded on store) so the row grid stays
+        uniform for the broadcast cross-attention. Cached K/V live in ONE
+        array per layer per step; each step gathers parent rows with a
+        single fancy index. Records each alive beam's K/V row index in
+        its line's ``rows`` map.
+
+        Tier: text-exact with confidence within 1e-12 of the full
+        re-forward (tests/test_model.py::
+        test_beam_kv_cache_matches_full_forward and
+        ::test_beam_steps_match_full_forward_events), and within 1e-9
+        across wave shapes (::test_beam_decode_batch_matches_per_line).
+        Bit parity across batch shapes is not defined: BLAS m-blocking
+        is not row-stable. Returns [L, A_max, V] last-position log-probs
+        (padded rows included — callers slice the real ones)."""
         cfg = self.cfg
         H, D = cfg.N_HEADS, cfg.D_MODEL
         dh = D // H
@@ -656,22 +577,16 @@ class NumpyKiriModel:
         B = L * A
         S = len(alive_lists[0][0][0])
         padded: list = []
-        for al in alive_lists:
-            padded.extend(al)
-            padded.extend(al[:1] * (A - len(al)))
+        parents: list[int] = []
+        for i, al in zip(lines, alive_lists):
+            row = al + al[:1] * (A - len(al))
+            padded.extend(row)
+            if S > 1:
+                rows = states[i]["rows"]
+                parents.extend(rows[tuple(b[0][:-1])] for b in row)
         last = np.array([b[0][-1] for b in padded], dtype=np.int64)
         x = self.dec_emb[last][:, None, :] + self._pos_row(S - 1)[None, None]
-        if S > 1:
-            parent_idx = np.array(
-                [
-                    states[i]["rows"][tuple(b[0][:-1])]
-                    for i, al in zip(lines, alive_lists)
-                    for b in (
-                        list(al) + al[:1] * (A - len(al))
-                    )
-                ],
-                dtype=np.int64,
-            )
+        parent_idx = np.array(parents, dtype=np.int64)
         # active-line cross K/V slices, re-gathered only when the active
         # set changes (lines leave the wave far less often than it steps)
         sel = wave.get("cross_sel")
@@ -708,9 +623,9 @@ class NumpyKiriModel:
             a = softmax(att) @ V
             a = a.transpose(0, 2, 1, 3).reshape(B, 1, D) @ ly["so"]
             x = layer_norm(x + a, ly["g1"], ly["b1"])
-            # cross-attention: [L, A, H, 1, dh] @ [L, 1, H, dh, T] — the
-            # broadcast batched matmul == the per-line materialized
-            # repeat (the same law the per-line path relies on)
+            # cross-attention: [L, A, H, 1, dh] @ [L, 1, H, dh, T] —
+            # each line's constant K/V broadcast over its beams in place
+            # of a materialized repeat (text-exact tier)
             ckh, cvh = cross_sel[li]
             q2 = (x @ ly["cq"]).reshape(L, A, 1, H, dh).transpose(0, 1, 3, 2, 4)
             att2 = q2 @ ckh[:, None].transpose(0, 1, 2, 4, 3) / scale
@@ -743,10 +658,10 @@ class NumpyKiriModel:
         return item[1] / ((5 + L) ** p / 6**p)
 
     def _beam_setup(self, mem_row: np.ndarray, beam: int | None):
-        """Shared beam-search preamble: memory, step cap, CTC fusion state.
-        Fusion state is a per-decode CtcPrefixScorer (None when fusion is
-        off) — incremental/memoized; tier: bitwise, no BLAS, vs
-        ctc_forward_score
+        """Per-line beam-search preamble of the reference search
+        (_beam_advance): memory, step cap, CTC fusion state. Fusion state
+        is a per-decode CtcPrefixScorer (None when fusion is off) —
+        incremental/memoized; tier: bitwise, no BLAS, vs ctc_forward_score
         (tests/test_finders.py::test_ctc_prefix_scorer_bitexact_vs_full_dp)."""
         cfg = self.cfg
         beam = beam or cfg.BEAM
@@ -845,24 +760,20 @@ class NumpyKiriModel:
         mem: np.ndarray,
         scorer: "CtcPrefixScorer | None",
         beam: int,
-        kv: dict | None = None,
     ) -> list[tuple[list[int], float, float, bool]]:
-        """One beam expansion + re-sort (the loop body of model.py:440-600).
-        Beam tuples are (seq, fused_score, decoder_only_logp, done) —
-        confidence must come from decoder log-probs alone (A10), never
-        fusion bonuses. CTC-fusion increments come from the per-decode
-        CtcPrefixScorer (dec ids -> ctc ids: dec d>=3 maps to raw d-3
-        maps to ctc d-1), batched across the step's candidates — same
-        scores as per-candidate full DP, one frame sweep. ``kv``: the
-        incremental K/V decode context from _beam_setup (None = full
-        teacher-forced re-forward, kept as the law-test reference)."""
+        """One beam expansion + re-sort (the loop body of model.py:440-600)
+        through the full teacher-forced re-forward: the reference step the
+        law tests drive the lockstep wave against. Beam tuples are (seq,
+        fused_score, decoder_only_logp, done) — confidence must come from
+        decoder log-probs alone (A10), never fusion bonuses. CTC-fusion
+        increments come from the per-decode CtcPrefixScorer (dec ids ->
+        ctc ids: dec d>=3 maps to raw d-3 maps to ctc d-1), batched across
+        the step's candidates — same scores as per-candidate full DP, one
+        frame sweep."""
         alive = [b for b in beams if not b[3]]
-        if kv is not None:
-            logp = self._advance_logits_kv(alive, kv)
-        else:
-            ids = np.array([b[0] for b in alive], dtype=np.int64)
-            logits = self._decode_step(ids, np.repeat(mem, len(alive), axis=0))
-            logp = log_softmax(logits[:, -1])
+        ids = np.array([b[0] for b in alive], dtype=np.int64)
+        logits = self._decode_step(ids, np.repeat(mem, len(alive), axis=0))
+        logp = log_softmax(logits[:, -1])
         cand, pending = self._advance_expand(beams, alive, logp, scorer, beam)
         if pending:
             # one vectorized sweep for all of the step's new prefixes
@@ -902,9 +813,9 @@ class NumpyKiriModel:
         tops: np.ndarray | None = None,
     ) -> tuple[list, list]:
         """The bookkeeping half of _beam_advance (penalties, top-k,
-        candidate building) — shared verbatim by the per-line and the
-        lockstep multi-line drivers so the expansion rule has exactly
-        one implementation. The lockstep driver passes precomputed
+        candidate building) — shared verbatim by the full-forward
+        reference search and the lockstep wave so the expansion rule has
+        exactly one implementation. The lockstep wave passes precomputed
         ``penalized`` rows and stable-argsort ``tops`` (batched across
         the whole wave step — one argsort call instead of one per
         beam; per-row results are identical). Returns (candidates,
@@ -961,60 +872,45 @@ class NumpyKiriModel:
     def beam_decode(self, mem_row: np.ndarray, beam: int | None = None) -> tuple[str, float]:
         """Beam search with length-normalized scoring
         score / ((5+L)^p / 6^p), n-gram repeat penalties, UNK penalty,
-        early exit when all beams emit EOS (model.py:390-600). beam=1
-        degenerates to greedy decode (M3)."""
-        beam, mem, max_len, scorer, ctc_text = self._beam_setup(mem_row, beam)
-        kv = {"cross": self._cross_kv(mem), "qkv": self._qkv_cat(), "store": {}}
-        bos = self.tok.DEC_BOS
-        beams: list[tuple[list[int], float, float, bool]] = [
-            ([bos], 0.0, 0.0, False)
-        ]
-        for _ in range(max_len):
-            if all(done for *_, done in beams):
-                break  # early exit (model.py:444-445)
-            beams = self._beam_advance(beams, mem, scorer, beam, kv=kv)
-
-        best = self._final_best(beams, mem, scorer, ctc_text)
-        seq = np.array(best[0][1:], dtype=np.int64)
-        conf = float(np.clip(np.exp(best[2] / max(len(seq), 1)), 0.0, 1.0))
-        return self.tok.decode_dec(seq), conf
+        early exit when all beams emit EOS (model.py:390-600) — a
+        one-line lockstep wave. beam=1 degenerates to greedy decode (M3)."""
+        return self.beam_decode_batch(mem_row[None], beam)[0]
 
     # lines per lockstep wave: enough to amortize per-step numpy/GEMM
     # call overhead across lines (the win saturates by ~32), small
     # enough to bound the resident K/V state of a wave
     LOCKSTEP_LINES = 64
 
-    def beam_decode_batch(
-        self, mems: np.ndarray, beam: int | None = None
-    ) -> list[tuple[str, float]]:
-        """Lockstep multi-line beam search: decode N encoder memories
-        together, advancing every still-active line one step per
+    def _text_conf(self, item: tuple[list[int], float, float, bool]) -> tuple[str, float]:
+        """(text, confidence) of a hypothesis: confidence is the
+        per-token geometric mean of its decoder-only probability."""
+        seq = np.array(item[0][1:], dtype=np.int64)
+        conf = float(np.clip(np.exp(item[2] / max(len(seq), 1)), 0.0, 1.0))
+        return self.tok.decode_dec(seq), conf
+
+    def _beam_wave(self, mems: np.ndarray, beam: int):
+        """The one beam search: decode up to LOCKSTEP_LINES encoder
+        memories together, advancing every still-active line one step per
         iteration so that (a) the decoder's per-step projections and
         attention run as ONE batched call over all alive beams of all
-        active lines (_advance_logits_kv_group) and (b) every line's
+        active lines (_advance_logits_kv_wave) and (b) every line's
         CTC-fusion prefix extensions merge into ONE frame sweep
         (ctc_scores_batch_multi — elementwise in the per-line sweeps'
-        order, so bitwise without BLAS).
-        The expansion rule, penalties, sort and final rescoring are the
-        exact per-line code (_advance_expand/_advance_finish/_final_best
-        are shared), applied per line; lines leave the wave at their own
-        early-exit/length-cap step. Returns [(text, conf)] in input
-        order. Tier: text-exact vs per-line beam_decode, confidence
-        within 1e-9
-        (tests/test_model.py::test_beam_decode_batch_matches_per_line;
-        same tier as the KV cache vs the full forward)."""
+        order, so bitwise without BLAS). The expansion rule, penalties,
+        sort and final rescoring are the reference search's
+        (_advance_expand/_advance_finish/_final_best are shared), applied
+        per line; lines leave the wave at their own early-exit/length-cap
+        step.
+
+        Generator over the per-line states (dicts; ``beams``, ``steps``,
+        and ``best``: None while the line searches, its _final_best
+        hypothesis once it has stopped). It yields them once before the
+        first step — a line whose length cap is 0 is already final then —
+        and again after every step."""
+        from .recognize import ctc_scores_batch_multi
+
         cfg = self.cfg
-        beam = beam or cfg.BEAM
         N = len(mems)
-        if N == 0:
-            return []
-        if N > self.LOCKSTEP_LINES:
-            out: list[tuple[str, float]] = []
-            for j in range(0, N, self.LOCKSTEP_LINES):
-                out.extend(
-                    self.beam_decode_batch(mems[j : j + self.LOCKSTEP_LINES], beam)
-                )
-            return out
         ctc = self.ctc_greedy(mems)
         lattices = (
             log_softmax(self.ctc_logits(mems))
@@ -1054,18 +950,15 @@ class NumpyKiriModel:
                     "max_len": self._len_cap(len(ctc_text)),
                     "rows": {},
                     "steps": 0,
-                    "result": None,
+                    "best": None,
                 }
             )
 
         def finalize(i: int) -> None:
             st = states[i]
-            best = self._final_best(
+            st["best"] = self._final_best(
                 st["beams"], mems[i][None], st["scorer"], st["ctc_text"]
             )
-            seq = np.array(best[0][1:], dtype=np.int64)
-            conf = float(np.clip(np.exp(best[2] / max(len(seq), 1)), 0.0, 1.0))
-            st["result"] = (self.tok.decode_dec(seq), conf)
 
         active = []
         for i in range(N):
@@ -1073,8 +966,7 @@ class NumpyKiriModel:
                 finalize(i)
             else:
                 active.append(i)
-        from .recognize import ctc_scores_batch_multi
-
+        yield states
         while active:
             alive_lists = [
                 [b for b in states[i]["beams"] if not b[3]] for i in active
@@ -1134,50 +1026,53 @@ class NumpyKiriModel:
                 else:
                     still.append(i)
             active = still
-        return [st["result"] for st in states]
+            yield states
+
+    def beam_decode_batch(
+        self, mems: np.ndarray, beam: int | None = None
+    ) -> list[tuple[str, float]]:
+        """Lockstep multi-line beam search over N encoder memories
+        (_beam_wave, in waves of LOCKSTEP_LINES lines). Returns
+        [(text, conf)] in input order. Tier: text-exact across wave
+        shapes, confidence within 1e-9
+        (tests/test_model.py::test_beam_decode_batch_matches_per_line)."""
+        beam = beam or self.cfg.BEAM
+        out: list[tuple[str, float]] = []
+        for j in range(0, len(mems), self.LOCKSTEP_LINES):
+            for states in self._beam_wave(mems[j : j + self.LOCKSTEP_LINES], beam):
+                pass
+            out.extend(self._text_conf(st["best"]) for st in states)
+        return out
 
     def beam_decode_steps(self, mem_row: np.ndarray, beam: int | None = None):
         """Streaming beam decode (reference model.py:949-1153
-        beam_decode_streaming): after every expansion, yield the CURRENT
-        best hypothesis — which may shrink or change mid-prefix when beams
-        reorder ("may change in later steps due to beam search!"). Yields
-        dicts {step, text, token, retracted, confidence, finished}; the
-        final yield's text equals beam_decode's and its confidence agrees
-        within 1e-12 (tier: text-exact;
-        tests/test_model.py::test_beam_steps_final_equals_batch_under_ctc_fusion).
-        ``token`` is the appended suffix when the text grew monotonically, '' with retracted=True when the new best is not an
-        extension of the previous one — the event a downstream sink must
-        REPLACE on, not append."""
-        beam, mem, max_len, scorer, ctc_text = self._beam_setup(mem_row, beam)
-        kv = {"cross": self._cross_kv(mem), "qkv": self._qkv_cat(), "store": {}}
-        bos = self.tok.DEC_BOS
-        beams: list[tuple[list[int], float, float, bool]] = [
-            ([bos], 0.0, 0.0, False)
-        ]
+        beam_decode_streaming): a one-line lockstep wave that, after every
+        expansion, yields the CURRENT best hypothesis — which may shrink
+        or change mid-prefix when beams reorder ("may change in later
+        steps due to beam search!"). Yields dicts {step, text, token,
+        retracted, confidence, finished}; the final yield is beam_decode's
+        (tier: text-exact with confidence within 1e-12 of the full
+        re-forward at every step;
+        tests/test_model.py::test_beam_steps_match_full_forward_events).
+        ``token`` is the appended suffix when the text grew monotonically,
+        '' with retracted=True when the new best is not an extension of
+        the previous one — the event a downstream sink must REPLACE on,
+        not append."""
+        waves = self._beam_wave(mem_row[None], beam or self.cfg.BEAM)
+        next(waves)  # the state before the first step
         prev_text = ""
-        step = 0
-        while step < max_len and not all(done for *_, done in beams):
-            beams = self._beam_advance(beams, mem, scorer, beam, kv=kv)
-            step += 1
-            loop_done = all(done for *_, done in beams) or step >= max_len
-            best = (
-                self._final_best(beams, mem, scorer, ctc_text)
-                if loop_done
-                else max(beams, key=self._norm_score)
-            )
-            seq, _, dlp, _ = best
-            text = self.tok.decode_dec(np.array(seq[1:], dtype=np.int64))
+        for (st,) in waves:
+            finished = st["best"] is not None
+            best = st["best"] if finished else max(st["beams"], key=self._norm_score)
+            text, conf = self._text_conf(best)
             grew = text.startswith(prev_text) and len(text) >= len(prev_text)
-            conf = float(
-                np.clip(np.exp(dlp / max(len(seq) - 1, 1)), 0.0, 1.0)
-            )
             yield {
-                "step": step,
+                "step": st["steps"],
                 "text": text,
                 "token": text[len(prev_text):] if grew else "",
                 "retracted": not grew,
                 "confidence": conf,
-                "finished": loop_done,
+                "finished": finished,
             }
             prev_text = text
 

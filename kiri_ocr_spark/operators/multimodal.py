@@ -99,24 +99,56 @@ def dhash_gray(gray: np.ndarray, grid: int = 12) -> str:
     return np.packbits(np.concatenate([hbits, vbits])).tobytes().hex()
 
 
+def _dhash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """(media_ref, png_bytes) -> (media_ref, dhash) of the page as stored;
+    a quarantined page keeps its row with dhash NULL."""
+    from .page import map_pages
+
+    for pdf in batches:
+        hashes = list(map_pages(pdf["png_bytes"], dhash_gray, oriented=False))
+        yield pd.DataFrame({"media_ref": pdf["media_ref"], "dhash": hashes})
+
+
 def with_image_dhash(
     df: DataFrame, bytes_col: str = "png_bytes", ref_col: str = "media_ref"
 ) -> DataFrame:
     """(media_ref, dhash) via mapInPandas; input bytes are projected away."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..imaging.png import decode_gray
-
-        for pdf in batches:
-            hashes = [
-                dhash_gray(decode_gray(bytes(b))) for b in pdf[bytes_col]
-            ]
-            yield pd.DataFrame({"media_ref": pdf[ref_col], "dhash": hashes})
-
-    return df.select(ref_col, bytes_col).mapInPandas(fn, schema=DHASH_SCHEMA)
+    return df.select(
+        F.col(ref_col).alias("media_ref"), F.col(bytes_col).alias("png_bytes")
+    ).mapInPandas(_dhash_batches, schema=DHASH_SCHEMA)
 
 
 RESIZE_SCHEMA = "media_ref string, png_bytes binary, width int, height int"
+
+
+def _resize_batches(out_h: int, out_w: int):
+    """(media_ref, png_bytes) -> the page as stored, nearest-neighbor
+    resized to out_h x out_w and re-encoded; a quarantined page keeps its
+    row with png_bytes, width and height NULL."""
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from ..imaging.png import encode_gray
+        from .page import map_pages
+
+        def resize(img: np.ndarray) -> bytes:
+            h, w = img.shape
+            yi = (np.arange(out_h) * h) // out_h
+            xi = (np.arange(out_w) * w) // out_w
+            return encode_gray(img[yi][:, xi])
+
+        for pdf in batches:
+            blobs = list(map_pages(pdf["png_bytes"], resize, oriented=False))
+            ok = [b is not None for b in blobs]
+            yield pd.DataFrame(
+                {
+                    "media_ref": pdf["media_ref"],
+                    "png_bytes": blobs,
+                    "width": pd.array([out_w if k else None for k in ok], dtype="Int32"),
+                    "height": pd.array([out_h if k else None for k in ok], dtype="Int32"),
+                }
+            )
+
+    return fn
 
 
 def resize_images(
@@ -125,29 +157,9 @@ def resize_images(
 ) -> DataFrame:
     """Nearest-neighbor resize to a fixed cell (the recognizer-input-contract
     analogue of the reference's resize-keep-ratio-pad, model.py:311-331)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..imaging.png import decode_gray, encode_gray
-
-        for pdf in batches:
-            refs, blobs = [], []
-            for ref, b in zip(pdf[ref_col], pdf[bytes_col]):
-                img = decode_gray(bytes(b))
-                h, w = img.shape
-                yi = (np.arange(out_h) * h) // out_h
-                xi = (np.arange(out_w) * w) // out_w
-                blobs.append(encode_gray(img[yi][:, xi]))
-                refs.append(ref)
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "png_bytes": blobs,
-                    "width": out_w,
-                    "height": out_h,
-                }
-            )
-
-    return df.select(ref_col, bytes_col).mapInPandas(fn, schema=RESIZE_SCHEMA)
+    return df.select(
+        F.col(ref_col).alias("media_ref"), F.col(bytes_col).alias("png_bytes")
+    ).mapInPandas(_resize_batches(out_h, out_w), schema=RESIZE_SCHEMA)
 
 
 # --- audio / video: typed plumbing with a stubbed decode seam ---------------

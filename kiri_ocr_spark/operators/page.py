@@ -2,9 +2,11 @@
 oriented gray page and its ink mask, run a per-page function under the
 one quarantine policy, and cut recognizer-ready line crops.
 
-    read_page   payload -> decode_gray -> orient_and_binarize -> (gray, ink)
-    map_pages   the quarantine loop: fn(gray, ink) per page, None when the
-                payload is missing or corrupt
+    read_gray   payload -> decode_gray, the page as stored
+    read_page   read_gray -> orient_and_binarize -> (gray, ink)
+    map_pages   the quarantine loop: fn(gray, ink) (or fn(gray) on the page
+                as stored) per page, None when the payload is missing or
+                corrupt
     tight_box   a detector box shrunk to the ink inside it
     line_crop   the trained recognizer's crop contract
                 (pad_training_margins + resize_keep_ratio_pad)
@@ -34,22 +36,29 @@ from . import detect
 _QUARANTINE = (ValueError, KeyError, IndexError, struct.error, zlib.error)
 
 
-def read_page(blob) -> tuple[np.ndarray, np.ndarray]:
-    """PNG payload -> ``(gray, ink)``: the decoded page oriented
-    dark-ink-on-light and its Otsu ink mask. A None payload (missing from
-    the store) raises ValueError like any other unreadable page."""
+def read_gray(blob) -> np.ndarray:
+    """PNG payload -> the decoded gray page as stored, neither oriented
+    nor binarized. A None payload (missing from the store) raises
+    ValueError like any other unreadable page."""
     if blob is None:
         raise ValueError("missing media payload")
-    return detect.orient_and_binarize(decode_gray(bytes(blob)))
+    return decode_gray(bytes(blob))
 
 
-def map_pages(blobs: Iterable, fn: Callable) -> Iterator:
-    """Yield ``fn(gray, ink)`` per payload, or None for a page whose read
-    or ``fn`` raises a ``_QUARANTINE`` error: one corrupt payload among
+def read_page(blob) -> tuple[np.ndarray, np.ndarray]:
+    """PNG payload -> ``(gray, ink)``: the decoded page oriented
+    dark-ink-on-light and its Otsu ink mask."""
+    return detect.orient_and_binarize(read_gray(blob))
+
+
+def map_pages(blobs: Iterable, fn: Callable, oriented: bool = True) -> Iterator:
+    """Yield ``fn(gray, ink)`` per payload (``fn(gray)`` on the page as
+    stored when not ``oriented``), or None for a page whose read or
+    ``fn`` raises a ``_QUARANTINE`` error: one corrupt payload among
     10^12 docs must cost only its own row, never the task."""
     for blob in blobs:
         try:
-            out = fn(*read_page(blob))
+            out = fn(*read_page(blob)) if oriented else fn(read_gray(blob))
         except _QUARANTINE:
             out = None
         yield out

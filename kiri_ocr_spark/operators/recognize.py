@@ -202,8 +202,10 @@ def ctc_scores_batch_multi(
     (T, B) — same additions per element), so memoized states and scores
     equal per-scorer scores_batch (tier: bitwise by construction, no
     BLAS; pinned end to end by the text-exact
-    tests/test_model.py::test_beam_decode_batch_matches_per_line), which
-    test_finders pins bitwise against the full ctc_forward_score DP."""
+    tests/test_model.py::test_beam_decode_batch_matches_per_line, which
+    decodes the same lines as one multi-line wave and as one-line
+    waves), which test_finders pins bitwise against the full
+    ctc_forward_score DP."""
     cols: list[tuple["CtcPrefixScorer", tuple]] = []
     seen: set[tuple[int, tuple]] = set()
     for scorer, targets in jobs:

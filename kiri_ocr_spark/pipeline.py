@@ -116,7 +116,6 @@ def extract_span_rows(
     media: DataFrame,
     *,
     salt_buckets: int = 64,
-    media_partitions: int | None = None,
     broadcast_media: bool = False,
     keep_kernel_us: bool = False,
     recognizer: str = "trained",
@@ -181,9 +180,7 @@ def extract_span_rows(
     # 2x the shuffle partitioning for the OCR stage: tasks are CPU-heavy
     # (~2ms/image python kernel), so finer granularity smooths the last
     # wave's stragglers; measured best at both 8 and 32 cores.
-    nparts = media_partitions or 2 * int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    nparts = 2 * int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     # LEFT join: a media_ref missing from the payload store must surface
     # as a quarantined row (n_lines -1, like a corrupt payload), never
     # silently drop the span from the document's sequence.

@@ -2757,8 +2757,8 @@ _MODEL_DECODE_SCHEMA = (
 
 def _model_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """(media_ref, png_bytes) -> the three decode-law flags per page, one
-    batched encode per Arrow batch over its readable pages; a quarantined
-    page keeps its row with the flags NULL."""
+    batched encode and one lockstep beam decode per Arrow batch over its
+    readable pages; a quarantined page keeps its row with the flags NULL."""
     import numpy as np
 
     from .operators.detect import resize_keep_ratio_pad
@@ -2777,8 +2777,9 @@ def _model_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFr
         flags = [[None] * len(imgs) for _ in range(3)]
         if good:
             mem = model.encode(np.stack([imgs[i] for i in good]))
-            for i, m, (ctc_text, ctc_conf) in zip(good, mem, model.ctc_greedy(mem)):
-                beam_text, beam_conf = model.beam_decode(m)
+            for i, (ctc_text, ctc_conf), (beam_text, beam_conf) in zip(
+                good, model.ctc_greedy(mem), model.beam_decode_batch(mem)
+            ):
                 cap = min(
                     cfg.MAX_DEC_LEN,
                     int(cfg.CTC_LEN_CAP_MULT * len(ctc_text)) + cfg.CTC_LEN_CAP_ADD,

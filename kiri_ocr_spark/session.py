@@ -1,9 +1,11 @@
 """SparkSession factory with the scale-oriented defaults this engine needs.
 
-Tuned per SURVEY.md §4.2/§4.3: AQE on (coalesce + skew-join), Arrow on for
-all pandas-UDF stages, bounded Arrow batch sizes so image rows make
-cache-friendly kernel batches, and shuffle partitions sized to the local
-core count (on a real cluster: ~2-3x total executor cores).
+Tuned per SURVEY.md §4.2/§4.3: Arrow on for all pandas-UDF stages, bounded
+Arrow batch sizes so image rows make cache-friendly kernel batches, and
+shuffle partitions sized to the local core count (on a real cluster: ~2-3x
+total executor cores). AQE with partition coalescing and skew-join
+splitting, and 128 MiB file splits, are Spark's own defaults and are not
+restated here.
 
 Python workers fork from `kiri_ocr_spark.daemon` instead of the stock
 `pyspark.daemon`. Every Python task calls `importlib.invalidate_caches()`,
@@ -46,14 +48,10 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # image rows are fat; keep Arrow batches moderate so the OCR kernel
         # gets steady work without buffering huge byte columns
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
-        .config("spark.sql.files.maxPartitionBytes", "128m")
         # scan-parallelism floor (guide §6): single-file parquet sources
         # otherwise scan as 1-2 tasks and starve CPU-heavy per-row work
         # (the ANN dot-product scans ran 2 tasks on 32 cores at the

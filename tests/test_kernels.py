@@ -544,6 +544,7 @@ def _routed_kernel(name: str):
     page kernel: per_page kernels keep a quarantined page's row, per-line
     kernels drop it."""
     from kiri_ocr_spark import queries
+    from kiri_ocr_spark.operators import multimodal
     from kiri_ocr_spark.streaming.extract import _step_event_batches
 
     return {
@@ -554,6 +555,8 @@ def _routed_kernel(name: str):
         "finder": (queries._finder_batches, True),
         "model_decode": (queries._model_decode_batches, True),
         "step_events": (_step_event_batches(None), False),
+        "dhash": (multimodal._dhash_batches, True),
+        "resize": (multimodal._resize_batches(48, 160), True),
     }[name]
 
 
@@ -567,6 +570,8 @@ def _routed_kernel(name: str):
         "finder",
         "model_decode",
         "step_events",
+        "dhash",
+        "resize",
     ],
 )
 def test_routed_kernels_quarantine_bad_pages(name):

@@ -25,6 +25,39 @@ def model() -> NumpyKiriModel:
     return get_model(CFG())
 
 
+def beam_decode_full(model: NumpyKiriModel, mem_row: np.ndarray, steps: bool = False):
+    """Reference beam search: one line, every step through the full
+    teacher-forced re-forward (model._beam_advance) instead of the
+    lockstep wave's incremental K/V. Returns beam_decode's (text, conf);
+    with ``steps``, beam_decode_steps' events as tuples (step, text,
+    token, retracted, finished, confidence): the best beam by
+    _norm_score after every step, _final_best on the last."""
+    beam, mem, max_len, scorer, ctc_text = model._beam_setup(mem_row, None)
+    beams = [([model.tok.DEC_BOS], 0.0, 0.0, False)]
+    events: list[tuple] = []
+    prev = ""
+    for step in range(1, max_len + 1):
+        if all(done for *_, done in beams):
+            break
+        beams = model._beam_advance(beams, mem, scorer, beam)
+        if steps:
+            finished = all(done for *_, done in beams) or step == max_len
+            best = (
+                model._final_best(beams, mem, scorer, ctc_text)
+                if finished
+                else max(beams, key=model._norm_score)
+            )
+            text, conf = model._text_conf(best)
+            grew = text.startswith(prev)
+            events.append(
+                (step, text, text[len(prev):] if grew else "", not grew, finished, conf)
+            )
+            prev = text
+    if steps:
+        return events
+    return model._text_conf(model._final_best(beams, mem, scorer, ctc_text))
+
+
 def test_tokenizer_id_spaces():
     tok = CharTokenizer(["a", "b", "c"])
     raw = tok.encode("abca")
@@ -414,26 +447,55 @@ def test_beam_kv_cache_matches_full_forward():
     if not os.path.exists(path):
         pytest.skip("trained artifact not built")
     model = load_model(path)
-
-    def beam_decode_full(mem_row):
-        beam, mem, max_len, scorer, ctc_text = model._beam_setup(mem_row, None)
-        beams = [([model.tok.DEC_BOS], 0.0, 0.0, False)]
-        for _ in range(max_len):
-            if all(done for *_, done in beams):
-                break
-            beams = model._beam_advance(beams, mem, scorer, beam, kv=None)
-        best = model._final_best(beams, mem, scorer, ctc_text)
-        seq = np.array(best[0][1:], dtype=np.int64)
-        conf = float(np.clip(np.exp(best[2] / max(len(seq), 1)), 0.0, 1.0))
-        return model.tok.decode_dec(seq), conf
-
     for line in charset_coverage_lines(10, seed=20260819) + ["hello world"]:
         _, crop, _ = render_crop(line, model.tok)
         mem = model.encode(crop[None].astype(np.float32), fp32=True)[0]
         kv_text, kv_conf = model.beam_decode(mem)
-        f_text, f_conf = beam_decode_full(mem)
+        f_text, f_conf = beam_decode_full(model, mem)
         assert kv_text == f_text
         assert abs(kv_conf - f_conf) < 1e-12
+
+
+@pytest.mark.parametrize("weights", ["trained_fused", "seed"])
+def test_beam_steps_match_full_forward_events(weights):
+    """Law: the streaming beam's WHOLE event sequence — not just its final
+    yield — equals the full teacher-forced re-forward's best beam after
+    every step: the same (step, text, token, retracted, finished) per
+    event, confidence within 1e-12 (the K/V tier). Runs on the shipped
+    artifact (CTC fusion and rescoring on) and on seed weights in fp64
+    (fusion off)."""
+    import os
+
+    from kiri_ocr_spark.operators.model import load_model
+    from kiri_ocr_spark.operators.train import charset_coverage_lines, render_crop
+
+    if weights == "seed":
+        model = NumpyKiriModel(CFG())
+        deck = ["abc", "hello", "x"]
+        dtype, fp32 = np.float64, False
+    else:
+        path = os.path.join(
+            os.path.dirname(__file__), "..", "models", "trained_full.npz"
+        )
+        if not os.path.exists(path):
+            pytest.skip("trained artifact not built")
+        model = load_model(path)
+        assert model.cfg.CTC_FUSION_ALPHA > 0.0  # shipped meta
+        deck = charset_coverage_lines(6, seed=20260822) + ["hello world", "x"]
+        dtype, fp32 = np.float32, True
+    for line in deck:
+        _, crop, _ = render_crop(line, model.tok)
+        mem = model.encode(crop[None].astype(dtype), fp32=fp32)[0]
+        got = list(model.beam_decode_steps(mem))
+        ref = beam_decode_full(model, mem, steps=True)
+        assert len(got) > 0
+        assert got[-1]["finished"]
+        assert [
+            (e["step"], e["text"], e["token"], e["retracted"], e["finished"])
+            for e in got
+        ] == [r[:5] for r in ref]
+        for e, r in zip(got, ref):
+            assert abs(e["confidence"] - r[5]) < 1e-12
 
 
 def test_decode_crops_memo_equals_plain_chunked_decode():

@@ -116,3 +116,13 @@ def test_get_spark_workers_run_the_guard(spark):
     assert len(rows) == 8
     assert {r.module for r in rows} == {"kiri_ocr_spark.daemon"}
     assert [r.rereads for r in rows] == [0] * 8
+
+
+def test_get_spark_keeps_spark_defaults_it_relies_on(spark):
+    """AQE with partition coalescing and skew-join splitting, and 128 MiB
+    file splits, come from Spark's own defaults in a get_spark session."""
+    conf = spark.conf
+    assert conf.get("spark.sql.adaptive.enabled") == "true"
+    assert conf.get("spark.sql.adaptive.coalescePartitions.enabled") == "true"
+    assert conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
+    assert conf.get("spark.sql.files.maxPartitionBytes") in ("134217728b", "128m")
