@@ -50,6 +50,8 @@ CHECKPOINT_SCHEMA = (
 
 
 def with_part_id(docs: DataFrame, n_parts: int) -> DataFrame:
+    """``docs`` plus its ``part_id`` column: the one partition rule every
+    stage of the checkpointed job uses (input waves, output, lineage)."""
     return docs.withColumn(
         "part_id", F.pmod(F.xxhash64("doc_id"), F.lit(n_parts)).cast("int")
     )
@@ -94,10 +96,11 @@ def run_extraction(
     killed mid-run loses at most one wave of work instead of everything —
     the commit cadence knob for the north_star's "resumes from the last
     committed snapshot". At 10^12 docs each wave is one Iceberg snapshot."""
+    docs = with_part_id(docs, n_parts)
     total = 0
     for w in range(waves):
         wave_docs = docs if waves == 1 else docs.filter(
-            F.pmod(F.xxhash64("doc_id"), F.lit(n_parts)) % waves == w
+            F.col("part_id") % waves == w
         )
         total += _run_pending(
             spark, wave_docs, media, out_dir, ckpt_dir, run_id, n_parts,
@@ -116,26 +119,24 @@ def _run_pending(
     n_parts: int,
     **extract_kwargs,
 ) -> int:
-    docs = with_part_id(docs, n_parts)
+    """One committed sub-job over ``docs`` (already carrying part_id)."""
     done = committed_parts(spark, ckpt_dir, run_id)
     todo = docs.join(F.broadcast(done), "part_id", "left_anti")
 
     t0 = time.monotonic()
-    rows = extract_span_rows(
-        todo.drop("part_id"), media, keep_kernel_us=True, **extract_kwargs
-    )
-    rows = rows.withColumn(
-        "part_id", F.pmod(F.xxhash64("doc_id"), F.lit(n_parts)).cast("int")
+    rows = with_part_id(
+        extract_span_rows(
+            todo.drop("part_id"), media, keep_kernel_us=True, **extract_kwargs
+        ),
+        n_parts,
     )
     # both the output write and the metrics agg consume `rows`: persist so
     # the OCR kernel runs ONCE per wave, not twice (and the committed
     # lineage metrics describe exactly the rows that were written)
     rows = rows.persist()
-    assembled = (
-        assemble_documents(rows.drop("part_id", "conf", "n_lines", "kernel_us"))
-        .withColumn(
-            "part_id", F.pmod(F.xxhash64("doc_id"), F.lit(n_parts)).cast("int")
-        )
+    assembled = with_part_id(
+        assemble_documents(rows.drop("part_id", "conf", "n_lines", "kernel_us")),
+        n_parts,
     )
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     assembled.write.mode("overwrite").partitionBy("part_id").parquet(out_dir)

@@ -5,10 +5,10 @@ Semantics re-expressed from the reference's legacy detector
 (/root/reference/kiri_ocr/detector/__init__.py):
 
 - ``invert_if_dark``   P2: mean<127 -> invert (core.py:523-525,678-681)
-- ``otsu_threshold``   F10: Otsu global binarization (legacy:403-440)
-- ``binarize_candidates`` + ``score_binarization`` A1/A2: multi-candidate
-  binarization with CC-statistics scoring and top-k selection
-  (legacy:263-281,442-569)
+- ``otsu_threshold``   F10: Otsu global binarization (legacy:403-440) —
+  the one binarization every detector runs (``binarize`` /
+  ``orient_and_binarize``); the reference's multi-candidate bank and its
+  CC-statistics top-k selection (F9/F11/F12, A1/A2) are not implemented
 - ``detect_lines``     F13 + projection profile: connected components +
   row-projection line bands — the north_star's
   "connected-component + projection-profile line segmentation"
@@ -16,16 +16,14 @@ Semantics re-expressed from the reference's legacy detector
   (legacy:750-792)
 - ``reading_order``    W1: group by cy (running mean, 0.7*median_h), sort
   within line by center x (detector/__init__.py:245-291)
-- ``segment_words``    W5: gap stats within a line (legacy:848-904)
 - ``split_words``      the glyph-raster word rule: unit-scale blank-column
-  runs >= 3 (renderer SPACE_GAP contract)
+  runs >= 3 (renderer SPACE_GAP contract); the reference's gap-statistics
+  word split (W5, legacy:848-904) is not implemented
 """
 
 from __future__ import annotations
 
 import numpy as np
-
-from .components import component_stats, connected_components
 
 
 def invert_if_dark(gray: np.ndarray) -> np.ndarray:
@@ -111,243 +109,6 @@ def orient_and_binarize(gray: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         gray = (255 - gray).astype(np.uint8)
         hist = hist[::-1]
     return gray, gray <= _otsu_from_hist(hist)
-
-
-def clahe(gray: np.ndarray, clip_limit: float = 2.0, tiles: int = 8) -> np.ndarray:
-    """F9: contrast-limited adaptive histogram equalization, numpy
-    re-expression of cv2.createCLAHE(clipLimit=2.0, tileGridSize=(8,8))
-    (legacy:400-401): per-tile clipped histogram -> CDF mapping, bilinear
-    interpolation between the four surrounding tile mappings."""
-    h, w = gray.shape
-    ty = max(1, min(tiles, h))
-    tx = max(1, min(tiles, w))
-    # tile edges (cv2 pads; simple equal split is fine for scoring use)
-    y_edges = np.linspace(0, h, ty + 1).astype(int)
-    x_edges = np.linspace(0, w, tx + 1).astype(int)
-    maps = np.zeros((ty, tx, 256), dtype=np.float64)
-    for i in range(ty):
-        for j in range(tx):
-            tile = gray[y_edges[i] : y_edges[i + 1], x_edges[j] : x_edges[j + 1]]
-            n = tile.size
-            if n == 0:
-                maps[i, j] = np.arange(256)
-                continue
-            hist = np.bincount(tile.ravel(), minlength=256).astype(np.float64)
-            clip = max(clip_limit * n / 256.0, 1.0)
-            excess = np.maximum(hist - clip, 0.0).sum()
-            hist = np.minimum(hist, clip) + excess / 256.0
-            cdf = hist.cumsum()
-            maps[i, j] = (cdf - cdf[0]) / max(cdf[-1] - cdf[0], 1.0) * 255.0
-    # bilinear interpolation of the per-tile mappings at every pixel
-    cy = (y_edges[:-1] + y_edges[1:]) / 2.0
-    cx = (x_edges[:-1] + x_edges[1:]) / 2.0
-    yi = np.clip(np.searchsorted(cy, np.arange(h)) - 1, 0, ty - 2) if ty > 1 else np.zeros(h, int)
-    xi = np.clip(np.searchsorted(cx, np.arange(w)) - 1, 0, tx - 2) if tx > 1 else np.zeros(w, int)
-    if ty > 1:
-        fy = np.clip((np.arange(h) - cy[yi]) / np.maximum(cy[yi + 1] - cy[yi], 1e-9), 0, 1)
-    else:
-        fy = np.zeros(h)
-    if tx > 1:
-        fx = np.clip((np.arange(w) - cx[xi]) / np.maximum(cx[xi + 1] - cx[xi], 1e-9), 0, 1)
-    else:
-        fx = np.zeros(w)
-    g = gray.astype(int)
-    yi2 = np.minimum(yi + 1, ty - 1)
-    xi2 = np.minimum(xi + 1, tx - 1)
-    v00 = maps[yi[:, None], xi[None, :], g]
-    v01 = maps[yi[:, None], xi2[None, :], g]
-    v10 = maps[yi2[:, None], xi[None, :], g]
-    v11 = maps[yi2[:, None], xi2[None, :], g]
-    fy2 = fy[:, None]
-    fx2 = fx[None, :]
-    out = (
-        v00 * (1 - fy2) * (1 - fx2)
-        + v01 * (1 - fy2) * fx2
-        + v10 * fy2 * (1 - fx2)
-        + v11 * fy2 * fx2
-    )
-    return np.clip(out, 0, 255).astype(np.uint8)
-
-
-def _box_mean(gray: np.ndarray, block: int) -> np.ndarray:
-    """Local mean over a block x block window via integral image."""
-    k = block // 2
-    h, w = gray.shape
-    ii = np.pad(gray.astype(np.float64), ((1, 0), (1, 0))).cumsum(0).cumsum(1)
-    ys = np.arange(h)
-    xs = np.arange(w)
-    y0 = np.clip(ys - k, 0, h)[:, None]
-    y1 = np.clip(ys + k + 1, 0, h)[:, None]
-    x0 = np.clip(xs - k, 0, w)[None, :]
-    x1 = np.clip(xs + k + 1, 0, w)[None, :]
-    area = (y1 - y0) * (x1 - x0)
-    return (ii[y1, x1] - ii[y0, x1] - ii[y1, x0] + ii[y0, x0]) / area
-
-
-def _gauss_mean(gray: np.ndarray, block: int) -> np.ndarray:
-    """Separable gaussian-weighted local mean; sigma per cv2's
-    adaptiveThreshold rule sigma = 0.3*((block-1)*0.5 - 1) + 0.8."""
-    sigma = 0.3 * ((block - 1) * 0.5 - 1) + 0.8
-    r = block // 2
-    t = np.arange(-r, r + 1, dtype=np.float64)
-    kern = np.exp(-(t * t) / (2 * sigma * sigma))
-    kern /= kern.sum()
-    g = gray.astype(np.float64)
-    pad_y = np.pad(g, ((r, r), (0, 0)), mode="edge")
-    tmp = np.einsum("k,kij->ij", kern,
-                    np.stack([pad_y[i : i + g.shape[0]] for i in range(block)]))
-    pad_x = np.pad(tmp, ((0, 0), (r, r)), mode="edge")
-    return np.einsum("k,ikj->ij", kern,
-                     np.stack([pad_x[:, i : i + g.shape[1]] for i in range(block)], axis=1))
-
-
-def _morph_gradient(gray: np.ndarray) -> np.ndarray:
-    """3x3-cross morphological gradient (dilate - erode), the numpy
-    analogue of cv2.morphologyEx(MORPH_GRADIENT, 3x3 ellipse)."""
-    g = gray.astype(np.int16)
-    p = np.pad(g, 1, mode="edge")
-    stack = np.stack(
-        [p[1:-1, 1:-1], p[:-2, 1:-1], p[2:, 1:-1], p[1:-1, :-2], p[1:-1, 2:]]
-    )
-    return (stack.max(axis=0) - stack.min(axis=0)).astype(np.uint8)
-
-
-def _rgb_to_hsv_sv(img: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """S and V channels with cv2's 8-bit HSV conventions
-    (V = max(R,G,B); S = 255*(V-min)/V, 0 where V = 0)."""
-    f = img.astype(np.float64)
-    v = f.max(axis=2)
-    mn = f.min(axis=2)
-    s = np.where(v > 0, 255.0 * (v - mn) / np.maximum(v, 1e-9), 0.0)
-    return (
-        np.clip(np.round(s), 0, 255).astype(np.uint8),
-        np.clip(np.round(v), 0, 255).astype(np.uint8),
-    )
-
-
-def _rgb_to_lab(img: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """CIE Lab (D65) with cv2's 8-bit scaling: L*255/100, a+128, b+128 —
-    the numpy analogue of cv2.cvtColor(BGR2LAB) on uint8 input."""
-    rgb = img.astype(np.float64) / 255.0
-    # sRGB -> linear
-    lin = np.where(rgb <= 0.04045, rgb / 12.92, ((rgb + 0.055) / 1.055) ** 2.4)
-    r, g, b = lin[:, :, 0], lin[:, :, 1], lin[:, :, 2]
-    x = 0.412453 * r + 0.357580 * g + 0.180423 * b
-    y = 0.212671 * r + 0.715160 * g + 0.072169 * b
-    z = 0.019334 * r + 0.119193 * g + 0.950227 * b
-    # normalize by D65 white
-    x, z = x / 0.950456, z / 1.088754
-    def f(t):
-        return np.where(t > 0.008856, np.cbrt(t), 7.787 * t + 16.0 / 116.0)
-    fx, fy, fz = f(x), f(y), f(z)
-    L = np.where(y > 0.008856, 116.0 * np.cbrt(y) - 16.0, 903.3 * y)
-    a = 500.0 * (fx - fy)
-    bb = 200.0 * (fy - fz)
-    to8 = lambda v: np.clip(np.round(v), 0, 255).astype(np.uint8)  # noqa: E731
-    return to8(L * 255.0 / 100.0), to8(a + 128.0), to8(bb + 128.0)
-
-
-def color_channel_candidates(img: np.ndarray) -> list[np.ndarray]:
-    """F11 (legacy:444-488 use_color_channels section): the 15 channel
-    candidates the reference adds for 3-channel pages — per-RGB-channel
-    CLAHE+Otsu pairs, HSV V CLAHE+Otsu pair, HSV S fixed threshold, LAB L
-    CLAHE+Otsu pair, LAB a/b high/low extremes. Masks follow the bank's
-    boolean-ink convention; both polarities ship where the reference
-    ships both, A1/A2 scoring picks the text-like ones."""
-    cands: list[np.ndarray] = []
-    for i in range(3):  # legacy:446-453 per-channel otsu +- pairs
-        ch = clahe(img[:, :, i])
-        m = ch <= otsu_threshold(ch)
-        cands.append(m)
-        cands.append(~m)
-    s, v = _rgb_to_hsv_sv(img)
-    ve = clahe(v)  # legacy:458-462 value channel
-    m = ve <= otsu_threshold(ve)
-    cands.append(m)
-    cands.append(~m)
-    cands.append(s > 50)  # legacy:465-467 saturation (colored ink)
-    L, a, b = _rgb_to_lab(img)
-    Le = clahe(L)  # legacy:470-475 lightness
-    m = Le <= otsu_threshold(Le)
-    cands.append(m)
-    cands.append(~m)
-    for ch in (a, b):  # legacy:477-484 a/b extremes (colored text)
-        cands.append(ch > 160)
-        cands.append(ch <= 96)
-    return cands
-
-
-def binarize_candidates(img: np.ndarray) -> list[np.ndarray]:
-    """F9/F10/F11/F12: the full candidate bank of legacy:395-494, numpy
-    re-expressions of the cv2 calls. All adaptive candidates run on the
-    CLAHE-enhanced image like the reference; both polarities ship and
-    A1/A2 scoring picks the text-like ones. A 3-channel input adds the 15
-    RGB/HSV/LAB channel candidates (F11, legacy:444-488) on top of the
-    14-candidate grayscale bank run over the luma projection — 29 total,
-    >= the reference's 26."""
-    color = img.ndim == 3
-    if color:
-        from ..imaging.png import rgb_to_gray
-
-        gray = rgb_to_gray(img)
-    else:
-        gray = img
-    enhanced = clahe(gray)
-    cands = []
-    # otsu pair on the enhanced image (legacy:406-409)
-    otsu_mask = enhanced <= otsu_threshold(enhanced)
-    cands.append(otsu_mask)
-    cands.append(~otsu_mask)
-    # adaptive gaussian 21,10 / mean 15,8 / sauvola-like gaussian 51,20 /
-    # niblack-like mean 11,5 (legacy:411-441); THRESH_BINARY keeps
-    # pixel > localmean - C as foreground, inverse is the other polarity
-    for mean_fn, block, c in (
-        (_gauss_mean, 21, 10),
-        (_box_mean, 15, 8),
-        (_gauss_mean, 51, 20),
-        (_box_mean, 11, 5),
-    ):
-        local = mean_fn(enhanced, block)
-        mask = enhanced.astype(np.float64) > (local - c)
-        cands.append(mask)
-        cands.append(~mask)
-    # morphological-gradient + otsu (legacy:490-494): edges as ink
-    grad = _morph_gradient(enhanced)
-    cands.append(grad > otsu_threshold(grad))
-    # raw-gray extras kept from the round-1 bank (otsu on the unenhanced
-    # image, fixed mid, global mean-offset)
-    cands.append(binarize(gray))
-    cands.append(gray < 127)
-    cands.append(gray < max(1.0, gray.mean() - 10.0))
-    if color:
-        cands.extend(color_channel_candidates(img))
-    return cands
-
-
-def score_binarization(mask: np.ndarray) -> float:
-    """CC-statistics score of a binarization candidate (A1 analogue of
-    legacy:496-569): rewards many medium, consistent-height components."""
-    stats = component_stats(connected_components(mask))
-    if len(stats) == 0:
-        return 0.0
-    h = stats[:, 3].astype(np.float64)
-    med = float(np.median(h))
-    if med <= 0:
-        return 0.0
-    valid = int(((h > 0.3 * med) & (h < 3 * med)).sum())
-    std = float(h.std())
-    consistency = 1.0 / (1.0 + std / med)
-    coverage = float(mask.mean())
-    coverage_score = 1.0 - abs(coverage - 0.08) / 0.92  # text pages ~5-10% ink
-    return valid * consistency * max(0.0, coverage_score)
-
-
-def select_top_binarizations(gray: np.ndarray, k: int = 3) -> list[np.ndarray]:
-    """A2: score all candidates, keep top-k by score desc (stable)."""
-    cands = binarize_candidates(gray)
-    scores = np.array([score_binarization(c) for c in cands])
-    order = np.argsort(-scores, kind="stable")[:k]
-    return [cands[i] for i in order]
 
 
 def line_bands(ink: np.ndarray, min_gap: int = 1) -> list[tuple[int, int]]:
@@ -685,22 +446,3 @@ def split_words(ink: np.ndarray, box) -> list[tuple[int, int, int, int]]:
             spans.append([int(s), int(e)])
     return [(x + s * scale, y, (e - s) * scale, h) for s, e in spans]
 
-
-def segment_words(line_stats: np.ndarray) -> list[np.ndarray]:
-    """W5: split a line's x-sorted component stats into words at large gaps.
-    Threshold = clamp(median(gaps)+std(gaps), 0.3*med_w, 2*med_w)
-    (legacy:848-904)."""
-    if len(line_stats) <= 1:
-        return [line_stats] if len(line_stats) else []
-    xs = line_stats[:, 0].astype(np.float64)
-    rights = xs + line_stats[:, 2]
-    gaps = xs[1:] - rights[:-1]
-    med_w = float(np.median(line_stats[:, 2]))
-    thr = float(np.clip(np.median(gaps) + gaps.std(), 0.3 * med_w, 2.0 * med_w))
-    words: list[list[int]] = [[0]]
-    for i, g in enumerate(gaps, start=1):
-        if g > thr:
-            words.append([i])
-        else:
-            words[-1].append(i)
-    return [line_stats[np.array(w)] for w in words]

@@ -153,9 +153,9 @@ class TextDetector:
         backends detect lines only (detector/__init__.py:293-297). Per
         detected line, detect.split_words splits at blank-column runs >= 3
         unit columns — the renderer's space contract and the same rule the
-        oracled word_segmentation query applies (the reference's statistical
-        component-gap variant lives in detect.segment_words / W5; the
-        fixed-unit rule is the exact one for this engine's glyph raster)."""
+        oracled word_segmentation query applies. The fixed-unit rule is the
+        exact one for this engine's glyph raster; the reference's
+        statistical component-gap variant (W5) is not implemented."""
         gray, ink = orient_and_binarize(np.asarray(gray, dtype=np.uint8))
         return [w for box in detect_lines(gray, ink=ink) for w in split_words(ink, box)]
 

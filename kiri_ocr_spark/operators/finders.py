@@ -3,7 +3,7 @@
 The reference's legacy detector unions three candidate sources before
 dedup + line grouping (/root/reference/kiri_ocr/detector/legacy/detector.py:181-202):
 
-- connected components over the selected binarizations (F13)
+- connected components over the Otsu binarization (F13)
 - MSER regions (F14, :283-332) with a solidity predicate (P7, :313-320)
 - gradient/edge components (F15, :334-387) with a stroke-consistency
   predicate (P8, :361-382)
@@ -15,6 +15,11 @@ binary dilation; solidity uses the filled-bbox ratio as the hull proxy
 (documented deviation: convex-hull solidity needs a hull routine; bbox
 solidity bounds it from below). Everything runs per-image inside the
 mapInPandas kernels — at table scope these are embarrassingly parallel.
+
+``estimate_text_metrics`` (A3) is the one padding rule the legacy path
+runs; the reference's neighbor-clamped smart padding (J5/F25) and its
+box-containment helpers (J2/J3) are not implemented here — containment
+is ``TextDetector.detect_all``'s center-in-box test.
 """
 
 from __future__ import annotations
@@ -207,59 +212,6 @@ def multi_method_candidates(gray: np.ndarray, ink: np.ndarray) -> np.ndarray:
     return nms(np.concatenate(parts), iou_threshold=0.5)
 
 
-def smart_padding(
-    boxes: np.ndarray,
-    img_w: int,
-    img_h: int,
-    pad_pct: float = 0.01,
-    pad_px: float = 5.0,
-    pad_y_pct: float = 0.05,
-    pad_y_px: float = 5.0,
-) -> np.ndarray:
-    """J5 + F25: neighbor-distance-clamped padding, re-expressed from the
-    reference DB detector (db/model.py:335-415 `_apply_smart_padding`,
-    defaults :55-58). Each box wants target padding
-    (w*pad_pct + h*0.5 + pad_px, h*pad_y_pct + pad_y_px) but its total
-    expansion is clamped by the gap to the nearest neighbor sharing a
-    vertical band (limits horizontal growth) or horizontal band (limits
-    vertical growth), so padded boxes never overlap a neighbor. The
-    reference rotates via minAreaRect; boxes here are axis-aligned (the
-    ONNX DB backend is cut), so expansion is centered on the AABB.
-    Vectorized pairwise bands: O(n^2) per IMAGE (n = boxes on one page,
-    tens), embarrassingly parallel across pages at table scope.
-    Returns (n, >=4) with x y w h updated, clipped to the image."""
-    if len(boxes) == 0:
-        return boxes
-    out = boxes.astype(np.float64).copy()
-    x, y, w, h = out[:, 0], out[:, 1], out[:, 2], out[:, 3]
-    x2, y2 = x + w, y + h
-    n = len(out)
-    # pairwise band overlaps
-    y_ov = (np.minimum(y2[:, None], y2[None, :]) - np.maximum(y[:, None], y[None, :])) > 0
-    x_ov = (np.minimum(x2[:, None], x2[None, :]) - np.maximum(x[:, None], x[None, :])) > 0
-    np.fill_diagonal(y_ov, False)
-    np.fill_diagonal(x_ov, False)
-    # horizontal gap between i and j (0 if they overlap in x)
-    gap_x = np.maximum(
-        np.maximum(x[:, None] - x2[None, :], x[None, :] - x2[:, None]), 0.0
-    )
-    gap_y = np.maximum(
-        np.maximum(y[:, None] - y2[None, :], y[None, :] - y2[:, None]), 0.0
-    )
-    inf = np.full((n, n), np.inf)
-    max_pad_w = np.where(y_ov, gap_x, inf).min(axis=1)
-    max_pad_h = np.where(x_ov, gap_y, inf).min(axis=1)
-    target_w = w * pad_pct + h * 0.5 + pad_px
-    target_h = h * pad_y_pct + pad_y_px
-    pad_w = np.minimum(target_w, np.maximum(max_pad_w, 0.0))
-    pad_h = np.minimum(target_h, np.maximum(max_pad_h, 0.0))
-    out[:, 0] = np.clip(x - pad_w / 2.0, 0, img_w)
-    out[:, 1] = np.clip(y - pad_h / 2.0, 0, img_h)
-    out[:, 2] = np.minimum(w + pad_w, img_w - out[:, 0])
-    out[:, 3] = np.minimum(h + pad_h, img_h - out[:, 1])
-    return out
-
-
 def estimate_text_metrics(stats: np.ndarray) -> tuple[float, float, float]:
     """A3: median char height/width -> auto padding max(2, 0.15*median_h)
     (legacy:731-746)."""
@@ -269,33 +221,3 @@ def estimate_text_metrics(stats: np.ndarray) -> tuple[float, float, float]:
     med_w = float(np.median(stats[:, 2]))
     return med_h, med_w, max(2.0, 0.15 * med_h)
 
-
-def box_contains(outer: np.ndarray, inner: np.ndarray) -> bool:
-    """J2: bbox containment (legacy:236-245,1087-1092)."""
-    return bool(
-        outer[0] <= inner[0]
-        and outer[1] <= inner[1]
-        and outer[0] + outer[2] >= inner[0] + inner[2]
-        and outer[1] + outer[3] >= inner[1] + inner[3]
-    )
-
-
-def point_in_box(cx: float, cy: float, box: np.ndarray) -> bool:
-    """J3: component center ∈ box (legacy:1094-1098)."""
-    return bool(
-        box[0] <= cx <= box[0] + box[2] and box[1] <= cy <= box[1] + box[3]
-    )
-
-
-def assign_to_containers(items: np.ndarray, containers: np.ndarray) -> np.ndarray:
-    """J2/J3 at array scope: for each item box, the first container whose
-    bbox contains its center (-1 if none). At table scope this would be a
-    range/theta join; per-image it's a tiny nested scan."""
-    out = np.full(len(items), -1, dtype=np.int64)
-    for i, it in enumerate(items):
-        cx, cy = it[0] + it[2] / 2.0, it[1] + it[3] / 2.0
-        for j, cont in enumerate(containers):
-            if point_in_box(cx, cy, cont):
-                out[i] = j
-                break
-    return out

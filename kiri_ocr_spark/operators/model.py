@@ -1293,7 +1293,6 @@ def decode_crops_memo(
     model: NumpyKiriModel,
     crops: list[np.ndarray],
     memo: dict,
-    fp32: bool = True,
     method: str = "ctc",
 ) -> list[tuple[str, float]]:
     """CTC-greedy (or beam, ``method="beam"``) decode of line crops
@@ -1348,7 +1347,7 @@ def decode_crops_memo(
             chunk = np.stack([crops[i] for i in idxs]).astype(np.float32)
             if len(memo) >= 65536:
                 memo.clear()
-            mem = model.encode(chunk, fp32=fp32)
+            mem = model.encode(chunk, fp32=True)
             for i, d in zip(idxs, model.ctc_greedy(mem)):
                 memo[keys[i]] = d
     elif miss:
@@ -1362,7 +1361,7 @@ def decode_crops_memo(
                     np.stack(
                         [crops[i] for i in miss[j : j + ENCODE_CHUNK]]
                     ).astype(np.float32),
-                    fp32=fp32,
+                    fp32=True,
                 )
                 for j in range(0, len(miss), ENCODE_CHUNK)
             ],

@@ -43,12 +43,6 @@ OCR_SCHEMA = (
     "conf double, n_lines int, kernel_us long"
 )
 
-SPAN_SCHEMA = (
-    "doc_id long, offset int, kind string, text string, media_ref string, "
-    "conf double, n_lines int"
-)
-
-
 def _ocr_batches(
     model_path: str | None, det_method: str = "legacy", decode_method: str = "ctc"
 ):

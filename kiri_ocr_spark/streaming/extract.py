@@ -28,6 +28,8 @@ everything downstream is identical (the dataflow is source-agnostic).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -55,6 +57,48 @@ def _write_batch_idempotent(batch_df: DataFrame, batch_id: int, out_dir: str) ->
     )
 
 
+def _file_stream(
+    spark: SparkSession, schema: str, path: str, max_files_per_trigger: int
+) -> DataFrame:
+    """Parquet-directory stream source admitting at most
+    ``max_files_per_trigger`` new files per micro-batch."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(path)
+    )
+
+
+def _start_batch_sink(
+    stream: DataFrame,
+    out_dir: str,
+    checkpoint_dir: str,
+    available_now: bool,
+    *,
+    output_mode: str = "append",
+    transform: Callable[[DataFrame], DataFrame] | None = None,
+) -> StreamingQuery:
+    """Start ``stream`` into the replay-idempotent ``foreachBatch`` sink:
+    every non-empty micro-batch, passed through ``transform`` if given,
+    lands in its own ``batch_id=N`` partition of ``out_dir``."""
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        if transform is not None:
+            batch_df = transform(batch_df)
+        _write_batch_idempotent(batch_df, batch_id, out_dir)
+
+    writer = (
+        stream.writeStream.outputMode(output_mode)
+        .foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def stream_extract(
     spark: SparkSession,
     docs_path: str,
@@ -69,25 +113,13 @@ def stream_extract(
     """Stream documents from a parquet directory through the full
     detect+recognize pipeline; append flat span rows to ``out_dir``."""
     extract_kwargs.setdefault("broadcast_media", True)
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_path)
+    return _start_batch_sink(
+        _file_stream(spark, DOCS_SCHEMA, docs_path, max_files_per_trigger),
+        out_dir,
+        checkpoint_dir,
+        available_now,
+        transform=lambda batch_df: extract_flat(batch_df, media, **extract_kwargs),
     )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        flat = extract_flat(batch_df, media, **extract_kwargs)
-        _write_batch_idempotent(flat, batch_id, out_dir)
-
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 CUMULATIVE_OUTPUT_SCHEMA = (
@@ -120,11 +152,7 @@ def stream_cumulative_text(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     schema = "doc_id long, offset int, text string, n_total int"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(span_rows_path)
-    )
+    stream = _file_stream(spark, schema, span_rows_path, max_files_per_trigger)
 
     def fold(key, pdfs, state: GroupState):
         offsets: list[int] = []
@@ -165,19 +193,9 @@ def stream_cumulative_text(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _write_batch_idempotent(batch_df, batch_id, out_dir)
-
-    writer = (
-        folded.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_batch_sink(
+        folded, out_dir, checkpoint_dir, available_now, output_mode="update"
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 TOKEN_OUTPUT_SCHEMA = (
@@ -216,11 +234,7 @@ def stream_token_decode(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     schema = "doc_id long, offset int, text string, n_total int"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(span_rows_path)
-    )
+    stream = _file_stream(spark, schema, span_rows_path, max_files_per_trigger)
 
     def emit(key, pdfs, state: GroupState):
         n_done, total = (state.get if state.exists else (0, 0))
@@ -281,19 +295,7 @@ def stream_token_decode(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _write_batch_idempotent(batch_df, batch_id, out_dir)
-
-    writer = (
-        tokens.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batch_sink(tokens, out_dir, checkpoint_dir, available_now)
 
 
 STEP_EVENT_SCHEMA = (
@@ -403,11 +405,7 @@ def stream_beam_retraction(
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    stream = (
-        spark.readStream.schema(STEP_EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(steps_path)
-    )
+    stream = _file_stream(spark, STEP_EVENT_SCHEMA, steps_path, max_files_per_trigger)
 
     def fold(key, pdfs, state: GroupState):
         prev, last_step = ("", 0)
@@ -464,19 +462,7 @@ def stream_beam_retraction(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _write_batch_idempotent(batch_df, batch_id, out_dir)
-
-    writer = (
-        changelog.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batch_sink(changelog, out_dir, checkpoint_dir, available_now)
 
 
 def stream_dedup_docs(
@@ -499,9 +485,7 @@ def stream_dedup_docs(
     accumulate every key forever)."""
     schema = "doc_id long, ts timestamp, text string"
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_path)
+        _file_stream(spark, schema, docs_path, max_files_per_trigger)
         .withColumn(
             "fingerprint",
             F.xxhash64(F.expr("trim(regexp_replace(text, '\\\\s+', ' '))")),
@@ -510,19 +494,7 @@ def stream_dedup_docs(
         .dropDuplicatesWithinWatermark(["fingerprint"])
     )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _write_batch_idempotent(batch_df, batch_id, out_dir)
-
-    writer = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_batch_sink(stream, out_dir, checkpoint_dir, available_now)
 
 
 def stream_event_windows(

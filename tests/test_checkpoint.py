@@ -158,3 +158,19 @@ def test_part_id_stability(spark, fixture_tables):
     b = with_part_id(docs, N_PARTS).select("doc_id", "part_id").toPandas()
     assert a.sort_values("doc_id").equals(b.sort_values("doc_id"))
     assert a["part_id"].between(0, N_PARTS - 1).all()
+
+
+def test_waves_commit_every_part_once(spark, fixture_tables, tmp_path):
+    """waves > 1 splits the job into sub-jobs by part_id % waves: each
+    part commits exactly once, and the output equals a one-wave run's."""
+    docs, media = fixture_tables
+    out_1, ckpt_1 = str(tmp_path / "out_1"), str(tmp_path / "ckpt_1")
+    out_3, ckpt_3 = str(tmp_path / "out_3"), str(tmp_path / "ckpt_3")
+    run_extraction(spark, docs, media, out_1, ckpt_1, "w1", n_parts=N_PARTS)
+    n = run_extraction(
+        spark, docs, media, out_3, ckpt_3, "w3", n_parts=N_PARTS, waves=3
+    )
+    assert n == N_PARTS
+    ckpt_rows = spark.read.parquet(ckpt_3).toPandas()
+    assert sorted(ckpt_rows["part_id"].tolist()) == list(range(N_PARTS))
+    assert _read_sorted(spark, out_3).equals(_read_sorted(spark, out_1))

@@ -1,5 +1,5 @@
-"""Multi-method finders (F14/F15/U1/P7/P8), metrics (A3), containment
-(J2/J3), CTC forward (F22), overlay/report sinks (S9/S10)."""
+"""Multi-method finders (F14/F15/U1/P7/P8), metrics (A3), CTC forward
+(F22), overlay/report sinks (S9/S10)."""
 
 from __future__ import annotations
 
@@ -12,13 +12,10 @@ from kiri_ocr_spark.imaging.glyphs import render_page
 from kiri_ocr_spark.imaging.overlay import conf_tier, draw_overlay, html_report
 from kiri_ocr_spark.operators.detect import binarize, invert_if_dark
 from kiri_ocr_spark.operators.finders import (
-    assign_to_containers,
-    box_contains,
     estimate_text_metrics,
     gradient_components,
     mser_regions,
     multi_method_candidates,
-    point_in_box,
 )
 from kiri_ocr_spark.operators.recognize import CtcPrefixScorer, ctc_forward_score
 
@@ -67,21 +64,6 @@ def test_estimate_text_metrics():
     assert med_h == 22 and med_w == 11
     assert pad == pytest.approx(max(2.0, 0.15 * 22))
     assert estimate_text_metrics(np.zeros((0, 5)))[2] == 2.0
-
-
-def test_containment_predicates():
-    outer = np.array([0.0, 0.0, 100.0, 50.0])
-    inner = np.array([10.0, 10.0, 20.0, 20.0])
-    assert box_contains(outer, inner) and not box_contains(inner, outer)
-    assert point_in_box(20.0, 20.0, outer) and not point_in_box(200.0, 20.0, outer)
-
-
-def test_assign_to_containers():
-    blocks = np.array([[0, 0, 100, 40, 1.0], [0, 100, 100, 40, 1.0]])
-    lines = np.array(
-        [[10, 5, 50, 10, 1.0], [10, 110, 50, 10, 1.0], [10, 60, 50, 10, 1.0]]
-    )
-    assert assign_to_containers(lines, blocks).tolist() == [0, 1, -1]
 
 
 # --- F22 CTC forward --------------------------------------------------------
@@ -253,35 +235,3 @@ def test_finder_path_line_counts_on_known_pages():
             groups, gray.shape[1], gray.shape[0], padding=pad
         )
         assert len(lboxes) == expected, (texts, len(lboxes))
-
-
-def test_smart_padding_clamps_to_neighbor_gaps():
-    """J5/F25 (db/model.py:335-415): target padding is applied in open
-    space but clamped to the inter-box gap when a neighbor shares a band;
-    padded boxes never overlap."""
-    from kiri_ocr_spark.operators.finders import smart_padding
-
-    # two boxes on one text line, 4px apart; one isolated box below
-    boxes = np.array(
-        [
-            [10.0, 10.0, 20.0, 10.0, 0.9],
-            [34.0, 10.0, 20.0, 10.0, 0.9],
-            [10.0, 60.0, 20.0, 10.0, 0.9],
-        ]
-    )
-    out = smart_padding(boxes, img_w=200, img_h=100)
-    # horizontal growth of the two line boxes is clamped by the 4px gap:
-    # total expansion <= 4 each, so they must not overlap
-    a, b = out[0], out[1]
-    assert a[0] + a[2] <= b[0] + 1e-9
-    assert a[2] <= 20.0 + 4.0 + 1e-9 and b[2] <= 20.0 + 4.0 + 1e-9
-    # the isolated box gets its full target padding
-    #   w: 20*0.01 + 10*0.5 + 5 = 10.2 ; h: 10*0.05 + 5 = 5.5
-    c = out[2]
-    assert abs(c[2] - (20.0 + 10.2)) < 1e-6
-    assert abs(c[3] - (10.0 + 5.5)) < 1e-6
-    # vertical growth of box a shares an x-band with the far box at y=60
-    # but the 40px gap is way above the 5.5px target -> full target pad
-    assert abs(a[3] - (10.0 + 5.5)) < 1e-6
-    # empty input passes through
-    assert smart_padding(np.zeros((0, 5)), 10, 10).shape == (0, 5)

@@ -25,8 +25,6 @@ from kiri_ocr_spark.operators.detect import (
     line_bands,
     otsu_threshold,
     reading_order,
-    segment_words,
-    select_top_binarizations,
 )
 from kiri_ocr_spark.operators.recognize import (
     BLANK_ID,
@@ -209,16 +207,6 @@ def test_reading_order_row_major():
     assert order.tolist() == [1, 0, 2]
 
 
-def test_segment_words_by_gap():
-    # components: tight cluster, big gap, tight cluster
-    stats = np.array(
-        [[0, 0, 5, 10, 1], [6, 0, 5, 10, 1], [40, 0, 5, 10, 1], [46, 0, 5, 10, 1]],
-        dtype=np.int64,
-    )
-    words = segment_words(stats)
-    assert [len(w) for w in words] == [2, 2]
-
-
 def test_orient_and_binarize_bit_identical_to_unfused():
     """The fused hot-path (one histogram pass for P2 invert + F10 Otsu)
     must equal binarize(invert_if_dark(...)) exactly, on both polarities,
@@ -250,15 +238,6 @@ def test_orient_and_binarize_bit_identical_to_unfused():
         m0 = binarize(g0)
         g1, m1 = orient_and_binarize(p)
         assert (g0 == g1).all() and (m0 == m1).all()
-
-
-def test_select_top_binarizations_prefers_text_like():
-    page = render_page(["some words here to score"], scale=SCALE)
-    top = select_top_binarizations(page, k=3)
-    assert len(top) == 3
-    ink = binarize(page)
-    # the best candidate should essentially match plain Otsu ink
-    assert (top[0] == ink).mean() > 0.99
 
 
 # --- CTC ------------------------------------------------------------------
@@ -346,85 +325,6 @@ def test_group_blocks_vertical_gap_and_overlap():
     lines2[1, 0] = 200.0
     blocks2 = group_blocks(lines2[:2])
     assert len(blocks2) == 2
-
-
-def test_binarization_bank_covers_reference_candidates():
-    """F9/F11/F12: the bank must carry the reference's full grayscale
-    candidate set (otsu pair, adaptive gaussian/mean pairs, sauvola- and
-    niblack-like pairs, morph-gradient; legacy:395-494) — >= 12 candidates,
-    every one a boolean mask, and A1/A2 scoring still picks a text-like
-    winner on a clean page AND on a low-contrast page (the CLAHE case)."""
-    from kiri_ocr_spark.operators.detect import binarize_candidates, clahe
-
-    page = render_page(["bank coverage test", "two lines"], scale=SCALE)
-    bank = binarize_candidates(page)
-    assert len(bank) >= 12
-    assert all(c.dtype == bool and c.shape == page.shape for c in bank)
-    # low-contrast page: squeeze the dynamic range; the selected top mask
-    # must still recover the same ink pixels plain Otsu finds on the
-    # original (CLAHE + adaptive candidates are what make this work)
-    low = (page.astype(np.float64) * 0.25 + 96).astype(np.uint8)
-    top_low = select_top_binarizations(low, k=1)[0]
-    assert (top_low == binarize(page)).mean() > 0.95
-    # clahe plumbing: uint8 out, shape preserved, deterministic
-    e = clahe(low)
-    assert e.dtype == np.uint8 and e.shape == low.shape
-    assert (clahe(low) == e).all()
-
-
-def test_color_channel_bank_and_counts():
-    """F11: a 3-channel page runs the 15 RGB/HSV/LAB channel candidates on
-    top of the 14-candidate grayscale bank (29 total >= the reference's
-    26); a grayscale page keeps the 14-candidate bank."""
-    from kiri_ocr_spark.imaging.glyphs import render_page
-    from kiri_ocr_spark.operators.detect import binarize_candidates
-
-    page = render_page(["color bank page"])
-    assert len(binarize_candidates(page)) == 14
-    # tint: dark blue ink on warm paper
-    rgb = np.empty(page.shape + (3,), dtype=np.uint8)
-    ink = page < 128
-    for c, (i_v, p_v) in enumerate([(20, 245), (20, 240), (80, 220)]):
-        ch = np.where(ink, i_v, p_v).astype(np.uint8)
-        rgb[:, :, c] = ch
-    cands = binarize_candidates(rgb)
-    assert len(cands) == 29
-    assert all(c.shape == page.shape and c.dtype == bool for c in cands)
-
-
-def test_color_bank_recovers_luma_invisible_text():
-    """The reason F11 exists (legacy:444 'for colored backgrounds'): red
-    text on an equal-luma gray background vanishes in the luma projection
-    — the grayscale bank scores ~nothing while a channel candidate
-    recovers the glyph mask."""
-    from kiri_ocr_spark.imaging.glyphs import render_page
-    from kiri_ocr_spark.operators.detect import (
-        binarize_candidates,
-        color_channel_candidates,
-        score_binarization,
-    )
-    from kiri_ocr_spark.imaging.png import rgb_to_gray
-
-    page = render_page(["hidden in luma", "second line here"])
-    ink = page < 128
-    # red ink (200,60,62) has luma exactly 102; paint the paper gray 102
-    rgb = np.empty(page.shape + (3,), dtype=np.uint8)
-    rgb[:, :, 0] = np.where(ink, 200, 102)
-    rgb[:, :, 1] = np.where(ink, 60, 102)
-    rgb[:, :, 2] = np.where(ink, 62, 102)
-    gray = rgb_to_gray(rgb)
-    assert int(np.ptp(gray)) == 0  # text is truly invisible in luma
-    color_scores = [score_binarization(c) for c in color_channel_candidates(rgb)]
-    best = int(np.argmax(color_scores))
-    best_mask = color_channel_candidates(rgb)[best]
-    # the winning channel candidate recovers the ink mask (or its inverse
-    # polarity twin — scoring may pick either; check overlap with ink)
-    overlap = (best_mask & ink).sum() / ink.sum()
-    assert overlap > 0.95
-    assert max(color_scores) > 0
-    # and the full bank's argmax lands on a COLOR candidate, not a gray one
-    all_scores = [score_binarization(c) for c in binarize_candidates(rgb)]
-    assert int(np.argmax(all_scores)) >= 14
 
 
 def _truncated_idat(png: bytes) -> bytes:
@@ -556,7 +456,6 @@ def _routed_kernel(name: str):
         "model_decode": (queries._model_decode_batches, True),
         "step_events": (_step_event_batches(None), False),
         "dhash": (multimodal._dhash_batches, True),
-        "resize": (multimodal._resize_batches(48, 160), True),
     }[name]
 
 
@@ -571,7 +470,6 @@ def _routed_kernel(name: str):
         "model_decode",
         "step_events",
         "dhash",
-        "resize",
     ],
 )
 def test_routed_kernels_quarantine_bad_pages(name):

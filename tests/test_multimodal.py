@@ -7,12 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from kiri_ocr_spark.fixtures import build_fixture
-from kiri_ocr_spark.imaging.png import decode_gray, encode_gray
 from kiri_ocr_spark.operators.multimodal import (
-    audio_features,
     dhash_gray,
-    resize_images,
-    video_frame_sample,
     with_image_dhash,
     with_png_meta,
 )
@@ -85,45 +81,3 @@ def test_image_dhash_groups_match_construction(spark, media):
         F.countDistinct("dhash").alias("n")
     )
     assert by_bytes.filter(F.col("n") != 1).count() == 0
-
-
-def test_resize_images_shape_contract(spark, media):
-    out = resize_images(media.limit(8), out_h=48, out_w=160)
-    rows = out.collect()
-    assert len(rows) == 8
-    for r in rows:
-        img = decode_gray(bytes(r.png_bytes))
-        assert img.shape == (48, 160)
-        assert (r.height, r.width) == (48, 160)
-
-
-def test_audio_features_plumbing(spark, media):
-    feats = audio_features(media.limit(10))
-    rows = feats.collect()
-    assert len(rows) == 10
-    for r in rows:
-        assert r.sample_rate == 16000 and r.n_samples == 4096
-        assert 0.0 < r.rms < 1.0 and r.rms <= r.peak <= 1.0
-    # deterministic across runs
-    again = {r.media_ref: r.rms for r in audio_features(media.limit(10)).collect()}
-    assert all(again[r.media_ref] == r.rms for r in rows)
-
-
-def test_audio_real_decode_is_marked_seam(spark, media):
-    import pyspark.errors
-
-    with pytest.raises(pyspark.errors.PySparkException):
-        audio_features(media.limit(1), fake=False).collect()
-
-
-def test_video_frame_sample_one_to_n(spark, media):
-    frames = video_frame_sample(media.limit(5), n_frames=3)
-    rows = frames.collect()
-    assert len(rows) == 15
-    for r in rows:
-        assert r.frame_ms == r.frame_idx * 1000
-        img = decode_gray(bytes(r.frame_png))
-        assert img.shape == (16, 16)
-    # frames differ across idx but are stable for a given (ref, idx)
-    k = {(r.media_ref, r.frame_idx): bytes(r.frame_png) for r in rows}
-    assert len(set(k.values())) == len(k)
