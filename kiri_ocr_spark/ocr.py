@@ -25,7 +25,9 @@ Python loop). Method/decode switches mirror the reference:
   engine's no-weights exactness path); 'accurate'/'decoder' -> the
   transformer's greedy decode; 'beam' -> its beam search. Weights load
   via the S3 loader when ``model_path`` is given (save_model/
-  load_model), else the deterministic seed build.
+  load_model), else the deterministic seed build. Every neural mode
+  decodes its region through ``model.decode_crops_memo``, the engine's
+  one line decoder, in fp32 for trained and seed weights alike.
 
 INTENTIONAL default divergence: the reference defaults
 ``decode_method='accurate'`` (its trained transformer beats its CTC
@@ -44,7 +46,7 @@ import numpy as np
 from .imaging.png import rgb_to_gray
 from .operators.detect import orient_and_binarize
 from .operators.facade import TextDetector
-from .operators.model import get_model
+from .operators.model import decode_crops_memo, get_model
 from .operators.page import line_crop, read_page, tight_box
 from .operators.recognize import recognize_line
 
@@ -96,7 +98,7 @@ class OCR:
     @property
     def model(self):
         """Lazy transformer load (M8 cache underneath): only the
-        'decoder'/'beam' paths need it."""
+        neural paths need it."""
         if self._model is None:
             self._model = get_model(path=self._model_path)
         return self._model
@@ -143,24 +145,9 @@ class OCR:
         # background luma) before resize — the in-sandbox-trained
         # artifact's preprocessing contract, the role the reference's
         # normalize constants play for its weights.
-        # fp32 inference for TRAINED weights — the reference's deployment
-        # dtype (its torch / ONNX checkpoints are float32); decode margins
-        # dwarf the ~4e-6 forward divergence, re-verified by the
-        # text-equality oracles. Seed weights (model_path=None) stay f64:
-        # seed logits are tie-fragile in fp32 (model.encode docstring) and
-        # streaming/extract.decode_step_events keeps seed decode f64 —
-        # gating here keeps OCR and stream seed decodes in agreement.
-        mem = self.model.encode(
-            line_crop(gray, box)[None].astype(np.float32),
-            fp32=self._model_path is not None,
+        return decode_crops_memo(
+            self.model, [line_crop(gray, box)], {}, method=self.decode_method
         )[0]
-        if self.decode_method == "ctc":
-            # model_path given: 'fast' IS the loaded model's CTC head,
-            # exactly the reference's fast path (core.py:141-158)
-            return self.model.ctc_greedy(mem[None])[0]
-        if self.decode_method == "beam":
-            return self.model.beam_decode(mem)
-        return self.model.greedy_decode(mem)
 
     # -- reference public surface ------------------------------------------
 

@@ -322,10 +322,10 @@ class NumpyKiriModel:
     def _w(self, a: np.ndarray, dt) -> np.ndarray:
         """Inference-dtype view of a weight array. float64 (the training/
         storage dtype) passes through; float32 views are cast once and
-        cached by the owning array's id (weights are stable for the model's
-        lifetime). Training code paths never pass float32, so the stored
+        cached by the owning array's id (training updates weights in
+        place, so train.apply_params drops this cache). The stored
         float64 arrays — the ones save_model/trainable_params see — are
-        untouched."""
+        never touched."""
         if dt is np.float64:
             return a
         if not hasattr(self, "_cast32"):  # load_model builds via __new__
@@ -450,9 +450,12 @@ class NumpyKiriModel:
         float32 checkpoints) — ~2.1x faster (SGEMM + half the memory
         traffic; measured 93 -> 44 ms for the batch-8 stem) with ~4e-6
         max divergence, far inside the trained model's decode margins.
-        Default stays float64: the structural-law query over SEED weights
-        (q_model_decode) sits on near-uniform logits where ties are
-        fragile, and training gradients need float64."""
+        Every line decode of the engine runs fp32: decode_crops_memo (the
+        page kernel, the OCR class, evaluate_cer) and the step-event
+        stream. Default stays float64: training gradients need it, law
+        tests use it as their reference, and the structural-law query over
+        SEED weights (queries._model_decode_batches) sits on near-uniform
+        logits where fp32 ties are fragile."""
         dt = np.float32 if fp32 else np.float64
         x = images.astype(dt) / 255.0
         x = (x - 0.5) / 0.5  # model.py:334-339 normalize (F18)
@@ -1295,30 +1298,40 @@ def decode_crops_memo(
     memo: dict,
     method: str = "ctc",
 ) -> list[tuple[str, float]]:
-    """CTC-greedy (or beam, ``method="beam"``) decode of line crops
-    through a content-addressed memo.
+    """The one line decoder: line crops -> [(text, conf)] through a
+    content-addressed memo. Every crop encodes in fp32 (the reference's
+    deployment dtype) in ENCODE_CHUNK-stacked chunks, then decodes by
+    ``method``: "ctc" (CTC greedy per chunk, the reference's fast mode),
+    "decoder" (greedy transformer decode, beam 1, its accurate mode) or
+    "beam" (beam search of cfg.BEAM); anything else raises ValueError.
+    decoder and beam lines decode together in lockstep waves
+    (beam_decode_batch), so per-step decoder GEMMs and CTC-fusion sweeps
+    amortize across lines.
 
     Real corpora repeat lines (the same pattern the template path's
     recognize._LINE_MEMO exploits; reference core.py:220-231 caches at
     model granularity, this caches at line granularity): identical crop
     bytes decode identically, so only first occurrences pay the
-    transformer forward — misses are packed into ENCODE_CHUNK stacked
-    fp32 encodes exactly like the unmemoized loops this replaces.
+    transformer forward.
 
     ``memo`` is caller-owned and should be scoped to ONE mapInPandas
     partition (created inside the kernel closure): per-partition scope
     keeps the work per partition independent of how many executors run —
     a worker-lifetime memo would make low-parallelism runs cheaper per
     partition and quietly distort the two-level scaling gate. Bounded:
-    cleared at 65536 entries (same policy as recognize._LINE_MEMO).
+    cleared when it would pass 65536 entries (same policy as
+    recognize._LINE_MEMO).
 
     Tier: text-exact vs the plain ENCODE_CHUNK-stacked decode, confidence
     within 1e-9
     (tests/test_model.py::test_decode_crops_memo_equals_plain_chunked_decode):
     the width sort below regroups misses into different chunks, and a
-    crop's encode bits are only as chunk-invariant as the BLAS.
+    crop's encode bits are only as chunk-invariant as the BLAS. A single
+    crop is one chunk of one, so its result is bitwise the plain
+    ``encode(crop[None], fp32=True)`` decode.
     """
-    out: list = [None] * len(crops)
+    if method not in ("ctc", "decoder", "beam"):
+        raise ValueError(f"unknown decode method {method!r}")
     # method is part of the key: a memo dict populated under method='ctc'
     # must never serve greedy results to a method='beam' call (ADVICE r6)
     keys = [
@@ -1341,36 +1354,22 @@ def decode_crops_memo(
             return int(nz[-1]) + 1 if len(nz) else 0
 
         miss.sort(key=lambda i: _content_w(crops[i]))
-    if method == "ctc":
-        for j in range(0, len(miss), ENCODE_CHUNK):
-            idxs = miss[j : j + ENCODE_CHUNK]
-            chunk = np.stack([crops[i] for i in idxs]).astype(np.float32)
-            if len(memo) >= 65536:
-                memo.clear()
-            mem = model.encode(chunk, fp32=True)
-            for i, d in zip(idxs, model.ctc_greedy(mem)):
-                memo[keys[i]] = d
-    elif miss:
-        # W8/M4 accuracy mode: encode stays chunk-stacked, then ALL the
-        # batch's miss lines beam-decode in lockstep waves
-        # (beam_decode_batch) so per-step decoder GEMMs and CTC-fusion
-        # sweeps amortize across lines instead of running per line
-        mems = np.concatenate(
-            [
-                model.encode(
-                    np.stack(
-                        [crops[i] for i in miss[j : j + ENCODE_CHUNK]]
-                    ).astype(np.float32),
-                    fp32=True,
-                )
-                for j in range(0, len(miss), ENCODE_CHUNK)
-            ],
-            axis=0,
+    decoded: list = []
+    mems = []
+    for j in range(0, len(miss), ENCODE_CHUNK):
+        chunk = np.stack([crops[i] for i in miss[j : j + ENCODE_CHUNK]])
+        mem = model.encode(chunk.astype(np.float32), fp32=True)
+        if method == "ctc":
+            decoded.extend(model.ctc_greedy(mem))
+        else:
+            mems.append(mem)
+    if mems:
+        decoded = model.beam_decode_batch(
+            np.concatenate(mems, axis=0), beam=1 if method == "decoder" else None
         )
-        if len(memo) >= 65536:
-            memo.clear()
-        for i, d in zip(miss, model.beam_decode_batch(mems)):
-            memo[keys[i]] = d
-    for i, k in enumerate(keys):
-        out[i] = memo[k]
+    new = {keys[i]: d for i, d in zip(miss, decoded)}
+    out = [new[k] if k in new else memo[k] for k in keys]
+    if len(memo) + len(new) > 65536:
+        memo.clear()
+    memo.update(new)
     return out

@@ -1,35 +1,33 @@
-"""Sequence recognition: CTC decode + deterministic template recognizer.
+"""CTC primitives and the deterministic glyph-template line recognizer.
 
-The reference's recognizer is a CNN+transformer CTC model
-(/root/reference/kiri_ocr/model.py:211-686). Trained weights live on HF Hub
-(core.py:191-217) and the sandbox has no network, so — exactly like the
-reference's own benchmark, which renders text it knows and compares
-(/root/reference/benchmark/run_benchmark.py:93-124) — we recognize with a
-deterministic kernel over the same glyph set the fixtures render with:
-
-1. per detected line, recover the unit-scale bitmap and segment glyph cells
-   by blank-column projection;
-2. match each cell against the glyph templates (exact hash hit,
-   else nearest-by-Hamming with reduced confidence) to produce a per-frame
-   log-probability lattice (frames = glyph/gap slots, vocab = blank + space
-   + charset, blank id 0 per the reference's CTC convention
-   model.py:94-101);
-3. CTC greedy decode: argmax per frame, run-length collapse, drop blanks
-   (model.py:109-144, 672-686 semantics).
-
-The interface is pluggable: a trained model would replace step 2's lattice
-construction and reuse the same decode + assembly unchanged.
+- ``ctc_collapse``: run-length collapse then blank removal, the CTC
+  decode rule (reference model.py:109-144) that the neural recognizer's
+  tokenizer applies to its per-frame argmax (``NumpyKiriModel.ctc_greedy``
+  is the engine's one CTC greedy decode).
+- ``ctc_forward_score``, ``CtcPrefixScorer``, ``ctc_scores_batch_multi``:
+  the CTC alignment score of a label prefix (reference model.py:603-668),
+  full DP and incremental, which the beam search fuses into its scores.
+- ``recognize_line``: the no-weights recognizer. The reference's
+  recognizer is a CNN+transformer (reference kiri_ocr/model.py:211-686)
+  whose trained weights live on HF Hub; like the reference's own
+  benchmark, which renders text it knows and compares
+  (reference benchmark/run_benchmark.py:93-124), this kernel
+  recognizes the glyph set the fixtures render with. Per detected line it
+  recovers the unit-scale bitmap, splits glyph cells at blank columns and
+  matches each cell against the glyph templates (exact hash hit, else
+  nearest by Hamming with reduced confidence). It computes the result in
+  one fused pass: the text is what a CTC greedy decode of the one-hot
+  cell lattice would collapse to, and the confidence that decode's mean
+  per-frame max probability, with no lattice built.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from ..imaging.glyphs import CHARSET, GLYPH_H, GLYPH_W, template_index
+from ..imaging.glyphs import GLYPH_H, GLYPH_W, template_index
 
 BLANK_ID = 0
-SPACE_ID = 1
-VOCAB = ["<blank>", " "] + CHARSET  # id -> char
 
 
 def ctc_collapse(ids: np.ndarray, blank_id: int = BLANK_ID) -> np.ndarray:
@@ -42,16 +40,6 @@ def ctc_collapse(ids: np.ndarray, blank_id: int = BLANK_ID) -> np.ndarray:
     keep[1:] = ids[1:] != ids[:-1]
     deduped = ids[keep]
     return deduped[deduped != blank_id]
-
-
-def ctc_greedy_decode(log_probs: np.ndarray, blank_id: int = BLANK_ID) -> tuple[np.ndarray, float]:
-    """Greedy CTC: per-frame argmax -> collapse. Returns (ids, confidence)
-    where confidence = mean per-frame max prob (model.py:343-373 A9)."""
-    if log_probs.size == 0:
-        return np.zeros(0, dtype=np.int64), 0.0
-    ids = log_probs.argmax(axis=1)
-    conf = float(np.exp(log_probs.max(axis=1)).mean())
-    return ctc_collapse(ids, blank_id), conf
 
 
 def ctc_forward_score(log_probs: np.ndarray, target: np.ndarray,

@@ -31,6 +31,7 @@ import numpy as np
 from .model import (
     CFG,
     NumpyKiriModel,
+    decode_crops_memo,
     log_softmax,
     pos_enc_1d,
     softmax,
@@ -636,6 +637,11 @@ def apply_params(model: NumpyKiriModel, params: dict) -> None:
         for k in _DEC_KEYS:
             ly[k] = params[f"dec.layers.{i}.{k}"]
     model.lm_head = (params["lm_head.w"], params["lm_head.b"])
+    # Adam steps update these arrays in place, keeping their ids, so the
+    # inference caches derived from them (fp32 weight casts, the all-pad
+    # stem canvas) would serve the old weights: drop them
+    model._cast32 = {}
+    model._pad_stem_cache = {}
 
 
 class Adam:
@@ -797,9 +803,7 @@ def train(model: NumpyKiriModel, samples, *, epochs=8, batch_size=16,
         log(f"epoch {ep + 1}/{epochs}: {tag}={ctc_sum / nb:.4f} ce={ce_sum / nb:.4f}")
         if val_every and val_samples is not None and (ep + 1) % val_every == 0:
             apply_params(model, params)  # idempotent; params stay canonical
-            val = val_samples[:val_limit]
-            cer = evaluate_cer(model, val, method="ctc")
-            exact = exact_match_rate(model, val, method="ctc")
+            cer, exact = _cer_exact(model, val_samples[:val_limit], "ctc")
             if val_history is not None:
                 val_history.append((ep + 1, round(cer, 4), round(exact, 4)))
             log(f"  val@{ep + 1}: ctc_cer={cer:.4f} exact={exact:.3f}")
@@ -824,47 +828,23 @@ def edit_distance(a: str, b: str) -> int:
     return prev[-1]
 
 
-def exact_match_rate(model: NumpyKiriModel, samples,
-                     method: str = "ctc", limit: int | None = None) -> float:
-    """A13's exact-match counter: fraction of samples whose decode equals
-    the reference text exactly."""
-    if limit:
-        samples = samples[:limit]
-    hits = 0
-    for s in range(0, len(samples), 32):
-        chunk = samples[s : s + 32]
-        mem = model.encode(np.stack([c[1] for c in chunk]).astype(np.float32))
-        for (ref, *_), mrow in zip(chunk, mem):
-            if method == "ctc":
-                hyp = model.ctc_greedy(mrow[None])[0][0]
-            elif method == "beam":
-                hyp, _ = model.beam_decode(mrow)
-            else:
-                hyp, _ = model.greedy_decode(mrow)
-            hits += int(hyp == ref)
-    return hits / max(len(samples), 1)
+def _cer_exact(model: NumpyKiriModel, samples, method: str) -> tuple[float, float]:
+    """(corpus CER, exact-match rate) of one decode of (text,
+    preprocessed-crop) samples through the engine's line decoder
+    (model.decode_crops_memo: fp32, ``method`` "ctc", "decoder" or
+    "beam") — CER is measured in the dtype the engine deploys."""
+    decoded = decode_crops_memo(model, [s[1] for s in samples], {}, method)
+    refs = [s[0] for s in samples]
+    hyps = [text for text, _ in decoded]
+    cer = sum(map(edit_distance, refs, hyps)) / max(sum(map(len, refs)), 1)
+    return cer, sum(map(str.__eq__, refs, hyps)) / max(len(refs), 1)
 
 
 def evaluate_cer(model: NumpyKiriModel, samples, method: str = "decoder",
                  limit: int | None = None) -> float:
     """Corpus CER (sum edits / sum ref chars) of a decode path over
-    (text, preprocessed-crop) samples."""
-    if limit:
-        samples = samples[:limit]
-    edits = chars = 0
-    for s in range(0, len(samples), 32):
-        chunk = samples[s : s + 32]
-        mem = model.encode(np.stack([c[1] for c in chunk]).astype(np.float32))
-        for (ref, *_), mrow in zip(chunk, mem):
-            if method == "ctc":
-                hyp = model.ctc_greedy(mrow[None])[0][0]
-            elif method == "beam":
-                hyp, _ = model.beam_decode(mrow)
-            else:
-                hyp, _ = model.greedy_decode(mrow)
-            edits += edit_distance(ref, hyp)
-            chars += len(ref)
-    return edits / max(chars, 1)
+    (text, preprocessed-crop) samples (see _cer_exact)."""
+    return _cer_exact(model, samples[:limit] if limit else samples, method)[0]
 
 
 # --------------------------------------------------------------------------

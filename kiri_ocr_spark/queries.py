@@ -2687,15 +2687,6 @@ FROM m, unnest(CASE WHEN odd = 1 THEN [0, 1] ELSE [0] END) AS l(line_idx)
 
 
 # --------------------------------------------------------------------------
-# 23b. Model-path decode (M1-M4): the numpy CNN+transformer recognizer over
-#      a deterministic media subset. Weights are seeded-random (no trained
-#      weights ship in-sandbox, SURVEY §7.4), so text content is not
-#      meaningful — the query demonstrates the distributed inference path:
-#      executor-singleton model, Arrow-batched encode, CTC + beam decode.
-#      Genuinely non-SQL-expressible -> no oracle (rows-only check).
-# --------------------------------------------------------------------------
-
-# --------------------------------------------------------------------------
 # 23c. Multi-method candidate finders (U1/U2, F14/F15, P4/P5/P7/P8 + A4/U3):
 #      the legacy-detector parity path — CC ∪ MSER ∪ gradient candidates,
 #      NMS-deduped, reference size/aspect filters, adaptive line grouping,
@@ -2749,6 +2740,17 @@ FROM d, unnest(generate_series(0, n_media - 1)) AS g(m)
 WHERE n_media > 0
 """
 
+
+# --------------------------------------------------------------------------
+# 23b. Model-path decode law (M1-M4): the numpy CNN+transformer recognizer
+#      over a deterministic media subset with SEED weights, encoded in
+#      float64 (model.encode's default). Seed text content is not meaningful,
+#      so the query checks the decoder's structural laws per page (both
+#      confidences in [0, 1], the beam's CTC length cap, a non-empty CTC
+#      hypothesis); the media refs are construction-known, so
+#      _MODEL_DECODE_SQL is its oracle. The trained decodes are
+#      q_model_decode_trained / _charset / _beam below.
+# --------------------------------------------------------------------------
 
 _MODEL_DECODE_SCHEMA = (
     "media_ref string, conf_ok int, len_ok int, nonempty_ctc int"

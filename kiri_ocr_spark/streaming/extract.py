@@ -79,12 +79,12 @@ def _start_batch_sink(
     transform: Callable[[DataFrame], DataFrame] | None = None,
 ) -> StreamingQuery:
     """Start ``stream`` into the replay-idempotent ``foreachBatch`` sink:
-    every non-empty micro-batch, passed through ``transform`` if given,
-    lands in its own ``batch_id=N`` partition of ``out_dir``."""
+    every micro-batch, passed through ``transform`` if given, lands in its
+    own ``batch_id=N`` partition of ``out_dir`` (an empty one writes no
+    files). The write is the batch's only action, so upstream Python
+    stages (stateful folds, the OCR kernel) run once per row."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         if transform is not None:
             batch_df = transform(batch_df)
         _write_batch_idempotent(batch_df, batch_id, out_dir)
@@ -318,14 +318,13 @@ def decode_step_events(df: DataFrame, model_path: str | None = None) -> DataFram
     the real numpy beam search inside an Arrow-batched kernel with the
     executor-singleton model (M8).
 
-    ``model_path`` routes the stream through TRAINED weights (the same
-    artifact and fp32 inference dtype as every batch trained-decode
-    path), so streaming and batch decodes of one region agree whichever
-    weights are loaded — the reference streams whatever model core.py
-    loaded, never a separate one. Tier: text-exact, confidence within
-    1e-9 (tests/test_streaming.py::test_step_events_with_trained_weights_match_batch).
-    Default stays the seed build in float64, matching the batch
-    q_model_decode contract."""
+    ``model_path`` routes the stream through TRAINED weights, else the
+    seed build. Either way the encode runs in fp32, the dtype of every
+    batch line decode (model.decode_crops_memo), so streaming and batch
+    decodes of one region agree whichever weights are loaded — the
+    reference streams whatever model core.py loaded, never a separate
+    one. Tier: text-exact, confidence within 1e-9
+    (tests/test_streaming.py::test_step_events_with_trained_weights_match_batch)."""
     return df.mapInPandas(_step_event_batches(model_path), schema=STEP_EVENT_SCHEMA)
 
 
@@ -340,7 +339,6 @@ def _step_event_batches(model_path: str | None):
         from ..operators.page import map_pages
 
         model = get_model(path=model_path)
-        fp32 = model_path is not None
 
         def steps(gray, ink):
             # same P3 preprocessing as the batch decoder kernel
@@ -349,7 +347,7 @@ def _step_event_batches(model_path: str | None):
             img = resize_keep_ratio_pad(gray)[None].astype("float32")
             return [
                 (ev["step"], ev["text"], ev["confidence"], ev["finished"])
-                for ev in model.beam_decode_steps(model.encode(img, fp32=fp32)[0])
+                for ev in model.beam_decode_steps(model.encode(img, fp32=True)[0])
             ]
 
         for pdf in batches:

@@ -257,6 +257,38 @@ def test_ocr_trained_artifact_neural_ctc_exact():
         os.unlink(tmp)
 
 
+def test_ocr_trained_accurate_and_beam_equal_direct_decode(tmp_path):
+    """decode_method='accurate' and 'beam' with trained weights return,
+    bit for bit, greedy_decode / beam_decode of the region's fp32 encode:
+    the OCR class decodes one region per call through
+    model.decode_crops_memo, whose single-crop chunk is that encode."""
+    import os
+
+    import numpy as np
+
+    path = os.path.join(REPO, "models", "trained_small.npz")
+    if not os.path.exists(path):
+        pytest.skip("trained artifact not built (scripts/train_model.py)")
+    from kiri_ocr_spark.imaging.glyphs import SCALE
+    from kiri_ocr_spark.ocr import OCR
+    from kiri_ocr_spark.operators.page import line_crop, tight_box
+
+    png = tmp_path / "page.png"
+    png.write_bytes(
+        encode_gray(render_page(["hello spark world", "second line"], scale=SCALE))
+    )
+    for mode in ("accurate", "beam"):
+        ocr = OCR(model_path=path, decode_method=mode)
+        results = ocr.process_document(str(png))
+        gray, ink, boxes = ocr._regions(str(png), "lines")
+        assert len(results) == len(boxes) == 2
+        decode = ocr.model.greedy_decode if mode == "accurate" else ocr.model.beam_decode
+        for r, box in zip(results, boxes):
+            crop = line_crop(gray, tight_box(ink, box, ocr.padding))
+            mem = ocr.model.encode(crop[None].astype(np.float32), fp32=True)[0]
+            assert (r["text"], r["confidence"]) == decode(mem)
+
+
 def test_extract_with_trained_model_flag(page_png, tmp_path):
     """CLI --model routes recognition through the trained neural decode
     (exact on this page, including out-of-training-vocabulary words)."""

@@ -26,11 +26,7 @@ from kiri_ocr_spark.operators.detect import (
     otsu_threshold,
     reading_order,
 )
-from kiri_ocr_spark.operators.recognize import (
-    BLANK_ID,
-    ctc_collapse,
-    ctc_greedy_decode,
-)
+from kiri_ocr_spark.operators.recognize import BLANK_ID, ctc_collapse
 
 
 # --- connected components -------------------------------------------------
@@ -260,15 +256,6 @@ def test_ctc_roundtrip_property(seq):
         frames.extend([s, s, BLANK_ID])
     got = ctc_collapse(np.array(frames, dtype=np.int64)) if frames else np.array([])
     assert list(got) == seq
-
-
-def test_ctc_greedy_decode_confidence():
-    logp = np.full((4, 6), -20.0)
-    for t, lab in enumerate([2, 2, 0, 3]):
-        logp[t, lab] = 0.0
-    ids, conf = ctc_greedy_decode(logp)
-    assert ids.tolist() == [2, 3]
-    assert conf == 1.0
 
 
 # --- full kernel ----------------------------------------------------------

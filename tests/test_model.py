@@ -535,6 +535,35 @@ def test_decode_crops_memo_equals_plain_chunked_decode():
         assert abs(c1 - c2) < 1e-9
     assert len(memo) == len(set(lines))
     assert decode_crops_memo(model, crops, memo) == got  # pure replay
+    # method="decoder" (the reference's accurate mode) through the SAME
+    # memo: text-exact vs per-line greedy_decode, and kept apart from ctc
+    dec = decode_crops_memo(model, crops, memo, method="decoder")
+    for c, (text, conf) in zip(crops, dec):
+        mem = model.encode(c[None].astype(np.float32), fp32=True)[0]
+        t1, c1 = model.greedy_decode(mem)
+        assert text == t1
+        assert abs(conf - c1) < 1e-9
+    assert len(memo) == 2 * len(set(lines))
+    assert decode_crops_memo(model, crops, memo) == got
+    with pytest.raises(ValueError):
+        decode_crops_memo(model, crops, memo, method="greedy")
+
+
+def test_decode_crops_memo_bound_keeps_the_calls_hits(model):
+    """At its 65536-entry bound the memo is cleared, yet the call that
+    clears it still answers its hits (read before the clear) and leaves
+    only its own misses behind."""
+    from kiri_ocr_spark.operators.model import decode_crops_memo
+
+    rng = np.random.default_rng(3)
+    shape = (model.cfg.IMG_H, model.cfg.IMG_W)
+    a, b = ((rng.random(shape) * 255).astype(np.uint8) for _ in range(2))
+    want = decode_crops_memo(model, [a, b], {})
+    memo = {("ctc", i.to_bytes(16, "little")): ("", 0.0) for i in range(65535)}
+    assert decode_crops_memo(model, [a], memo) == want[:1]
+    assert len(memo) == 65536
+    assert decode_crops_memo(model, [a, b], memo) == want
+    assert list(memo.values()) == want[1:]
 
 
 def test_beam_decode_batch_matches_per_line():

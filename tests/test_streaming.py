@@ -135,6 +135,31 @@ def test_batch_replay_is_idempotent(spark, tmp_path):
     assert got.filter("batch_id = 0").count() == 10
 
 
+def test_batch_sink_runs_each_micro_batch_plan_once(spark, tmp_path):
+    """The foreachBatch sink executes each micro-batch's plan exactly
+    once: a Python stage upstream of the sink (stateful folds, the OCR
+    kernel) must see every input row once, not once per Spark action."""
+    from kiri_ocr_spark.streaming.extract import _file_stream, _start_batch_sink
+
+    src = str(tmp_path / "src")
+    spark.range(12).selectExpr("id AS doc_id").repartition(3).write.parquet(src)
+    seen = str(tmp_path / "seen.txt")
+
+    def tag(batches):
+        for pdf in batches:
+            with open(seen, "a") as f:
+                f.writelines(f"{d}\n" for d in pdf["doc_id"])
+            yield pdf
+
+    stream = _file_stream(spark, "doc_id long", src, 1).mapInPandas(tag, "doc_id long")
+    out = str(tmp_path / "out")
+    q = _start_batch_sink(stream, out, str(tmp_path / "ckpt"), True)
+    assert q.awaitTermination(TIMEOUT_S)
+    with open(seen) as f:
+        assert sorted(int(ln) for ln in f) == list(range(12))
+    assert spark.read.parquet(out).count() == 12
+
+
 def test_event_windows_match_batch(spark, sf_tiny, tmp_path):
     # the file stream source needs a directory, not a bare parquet file
     events_path = str(tmp_path / "events_dir")
@@ -330,7 +355,7 @@ def test_beam_retraction_changelog_end_to_end(spark, tmp_path):
         )
 
         pre = resize_keep_ratio_pad(invert_if_dark(img))  # the P3 contract
-        mem = model.encode(pre[None].astype(np.float32))[0]
+        mem = model.encode(pre[None].astype(np.float32), fp32=True)[0]
         expect, conf = model.beam_decode(mem)
         assert cur == expect
         assert abs(grp.iloc[-1]["confidence"] - conf) < 1e-9

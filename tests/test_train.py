@@ -171,6 +171,31 @@ def test_training_learns_and_improves_cer():
     assert np.isfinite(cer_dec)
 
 
+def test_fp32_decode_after_training_uses_the_trained_weights(tmp_path):
+    """Adam updates the weights in place, so train() must drop the fp32
+    weight casts and the all-pad stem canvas cached before it: after
+    training, the fp32 encode equals a freshly loaded copy's, bit for
+    bit."""
+    from kiri_ocr_spark.imaging.glyphs import SCALE, render_page
+    from kiri_ocr_spark.operators.detect import resize_keep_ratio_pad
+    from kiri_ocr_spark.operators.model import load_model, save_model
+
+    model = tiny_model()
+    samples = [
+        (w, resize_keep_ratio_pad(render_page([w], scale=SCALE), target_w=256))
+        for w in ["spark", "query", "join", "scan", "sort", "data", "row", "fast"]
+    ]
+    crops = np.stack([c for _, c in samples]).astype(np.float32)
+    model.encode(crops, fp32=True)  # fills the caches with seed weights
+    T.train(model, samples, epochs=2, batch_size=4, train_stem=True,
+            lr_decay_at=(), val_samples=samples, val_every=1,
+            log=lambda *_: None)
+    path = str(tmp_path / "m.npz")
+    save_model(model, path)
+    fresh = load_model(path)
+    assert (model.encode(crops, fp32=True) == fresh.encode(crops, fp32=True)).all()
+
+
 def test_frame_labels_collapse_to_text_and_mark_spaces():
     """Forced-alignment labels must CTC-collapse back to the text —
     including real spaces when the vocab carries ' ' (the space-augmented
