@@ -4,6 +4,8 @@
     python -m kiri_ocr_spark extract page.png [--out-dir D] [--json]
                                               [--overlay] [--html]
     python -m kiri_ocr_spark batch <png_dir> --out <parquet_dir>
+                                   [--recognizer trained|template]
+                                   [--detector legacy|db|craft]
 
 `extract` runs the detect+recognize kernels on one image driver-side (no
 Spark session — the reference's single-image path is single-machine too)
@@ -14,8 +16,8 @@ boxes overlay PNG (S9) and HTML report (S10) on request.
 `batch` is the distributed path the reference lacks: a
 `spark.read.format("binaryFile")` scan (SURVEY §2.1 S1 mapping) over a
 directory of PNGs -> the extraction default's Arrow-batched OCR kernel
-(trained recognizer, legacy line finder) -> parquet of
-(path, text, conf, n_lines).
+(trained recognizer and legacy line finder unless `--recognizer` /
+`--detector` pick another mode) -> parquet of (path, text, conf, n_lines).
 """
 
 from __future__ import annotations
@@ -117,10 +119,11 @@ def run_batch(args: argparse.Namespace) -> int:
             F.lit("media").alias("kind"),
         )
     )
-    # the extraction default's media kernel (extract_span_rows with
-    # recognizer="trained", detector="legacy")
+    # the media kernel of extract_span_rows(recognizer=, detector=);
+    # "template" decodes through the glyph templates, without weights
+    model_path = None if args.recognizer == "template" else trained_model_path()
     ocr = scan.mapInPandas(
-        _ocr_batches(trained_model_path()), schema=OCR_SCHEMA
+        _ocr_batches(model_path, args.detector), schema=OCR_SCHEMA
     ).select("media_ref", "text", "conf", "n_lines")
     ocr.write.mode("overwrite").parquet(args.out)
     n = spark.read.parquet(args.out).count()
@@ -162,6 +165,19 @@ def main(argv: list[str] | None = None) -> int:
     ba = sub.add_parser("batch", help="distributed OCR over a PNG directory")
     ba.add_argument("png_dir")
     ba.add_argument("--out", required=True)
+    ba.add_argument(
+        "--recognizer",
+        default="trained",
+        choices=["trained", "template"],
+        help="line recognizer: the trained CTC model (default) or the "
+        "glyph-template path",
+    )
+    ba.add_argument(
+        "--detector",
+        default="legacy",
+        choices=["legacy", "db", "craft"],
+        help="line finder of the page kernel (default legacy)",
+    )
     ba.set_defaults(fn=run_batch)
     args = ap.parse_args(argv)
     return args.fn(args)

@@ -30,9 +30,10 @@ from . import detect
 
 # the per-row quarantine policy of every page kernel — each failure mode
 # of a missing or corrupt-but-magic-valid payload: bad magic / missing
-# IHDR / oversize or empty IHDR / NULL payload (ValueError), truncated
-# chunk header (struct.error), corrupt/truncated IDAT (zlib.error),
-# malformed scanline geometry (IndexError/KeyError on reshape/filter type)
+# IHDR / oversize or empty IHDR / NULL payload / inflated size off the
+# IHDR geometry / row filter type outside 0..4 (ValueError), truncated
+# chunk header (struct.error), corrupt/truncated IDAT (zlib.error). No
+# decode step raises IndexError/KeyError; they guard the per-page fn
 _QUARANTINE = (ValueError, KeyError, IndexError, struct.error, zlib.error)
 
 

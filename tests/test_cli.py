@@ -120,6 +120,45 @@ def test_batch_binaryfile_scan_ocr(tmp_path):
     assert got == pages
 
 
+@pytest.mark.parametrize(
+    "flags, model, detector",
+    [
+        ([], "trained", "legacy"),
+        (["--recognizer", "template"], None, "legacy"),
+        (["--detector", "db"], "trained", "db"),
+        (["--recognizer", "template", "--detector", "craft"], None, "craft"),
+    ],
+)
+def test_batch_flags_reach_the_ocr_kernel(monkeypatch, capsys, flags, model, detector):
+    """`batch --recognizer/--detector` pick the page kernel's mode: the
+    parsed flags arrive as _ocr_batches(model_path, det_method), template
+    meaning no weights. The Spark session is a stand-in; no job runs."""
+    from unittest import mock
+
+    import pyspark.sql.functions as F
+
+    from kiri_ocr_spark import __main__ as cli
+    from kiri_ocr_spark import pipeline, queries, session
+
+    seen = []
+    fake = mock.MagicMock()
+    fake.read.parquet.return_value.count.return_value = 0
+    monkeypatch.setattr(session, "get_spark", lambda **kw: fake)
+    monkeypatch.setattr(F, "col", mock.MagicMock())
+    monkeypatch.setattr(F, "lit", mock.MagicMock())
+    monkeypatch.setattr(queries, "trained_model_path", lambda: "trained")
+    monkeypatch.setattr(pipeline, "_ocr_batches", lambda *a: seen.append(a))
+    assert cli.main(["batch", "pngs", "--out", "out", *flags]) == 0
+    assert seen == [(model, detector)]
+    assert json.loads(capsys.readouterr().out) == {"images": 0, "out": "out"}
+
+
+def test_batch_rejects_unknown_modes():
+    for flag in (["--recognizer", "beam"], ["--detector", "projection"]):
+        r = run_cli("batch", "pngs", "--out", "out", *flag)
+        assert r.returncode == 2 and "invalid choice" in r.stderr
+
+
 def test_ocr_class_reference_api_parity(tmp_path):
     """Drop-in OCR class (core.py:40-1160): extract_text reproduces the
     page text on the exactness path, process_document carries the
