@@ -102,7 +102,7 @@ def run_batch(args: argparse.Namespace) -> int:
     from pyspark.sql import functions as F
 
     from .pipeline import OCR_SCHEMA, _ocr_batches
-    from .queries import trained_model_path
+    from .operators.model import trained_model_path
     from .session import get_spark
 
     spark = get_spark(app_name="kiri-batch")

@@ -10,7 +10,8 @@ by actually rendering PNGs and running detection + recognition — the same
 construction-time-oracle pattern as the reference's benchmark
 (/root/reference/benchmark/generate_bench_data.py, run_benchmark.py:93-124).
 
-THE SPEC (shared by `build_fixture`, `expected_sql`, and bench):
+THE SPEC (shared by `build_fixture`, `expected_sql`, bench, and — in
+Python, for the training and artifact-gate decks — `media_pages`):
 
   norm    = whitespace-collapsed + trimmed text;  toks = split(norm, ' ')
   nt      = len(toks)
@@ -26,7 +27,8 @@ THE SPEC (shared by `build_fixture`, `expected_sql`, and bench):
       media_ref = 'img_<doc_id>_<m>'
       wi        = toks[(m*3+i) % nt]
       lines     = [w0+' '+w1, w2]  if m % 2 == 1 else  ['w0 w1 w2']
-      rendered dark-on-light at SCALE, inverted when m % 3 == 2
+      rendered dark-on-light at SCALE, inverted when m % 3 == 2,
+      shipped as tinted truecolor when m % 5 == 3
       expected text = '\n'.join(lines)
   storage order of the spans array is REVERSED relative to offset order, so
   correct output ordering must come from `offset`, never ingestion order.
@@ -42,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .imaging.glyphs import SCALE, render_page
-from .imaging.png import encode_gray
+from .imaging.png import encode_gray, encode_rgb
 
 MEDIA_SCHEMA = "media_ref string, png_bytes binary, width int, height int"
 SPANS_TYPE = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
@@ -118,19 +120,47 @@ def _tint_page(page):
     return rgb
 
 
-def _render_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from .imaging.png import encode_rgb
+def render_media(lines: list[str], invert: bool, tint: bool):
+    """(page, png_bytes) of one media span per the spec."""
+    page = render_page(lines, scale=SCALE, invert=invert)
+    if tint:
+        return page, encode_rgb(_tint_page(page))
+    return page, encode_gray(page)
 
+
+def fixture_docs(sf_dir: str, max_docs: int | None = None):
+    """[(doc_id, toks)] of a testdata documents parquet in doc_id order,
+    toks per the spec (whitespace-collapsed, split on ' ')."""
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
+    docs = sorted(zip(tbl["doc_id"].to_pylist(), tbl["text"].to_pylist()))
+    if max_docs:
+        docs = docs[:max_docs]
+    return [(doc_id, " ".join(text.split()).split(" ")) for doc_id, text in docs]
+
+
+def media_pages(sf_dir: str, max_docs: int | None = None) -> Iterator[tuple]:
+    """The spec's media spans in Python — what build_media's Spark
+    expression renders — as (doc_id, m, lines, invert, tint), in doc_id
+    then m order."""
+    for doc_id, toks in fixture_docs(sf_dir, max_docs):
+        nt = len(toks)
+        for m in range(doc_id % 3 + (16 if doc_id % 97 == 0 else 0)):
+            w = [toks[(m * 3 + i) % nt] for i in range(3)]
+            lines = [w[0] + " " + w[1], w[2]] if m % 2 == 1 else [" ".join(w)]
+            yield doc_id, m, lines, m % 3 == 2, m % 5 == 3
+
+
+def _render_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         refs, blobs, ws, hs = [], [], [], []
         for ref, rtext, inv, tint in zip(
             pdf["media_ref"], pdf["render_text"], pdf["invert"], pdf["tint"]
         ):
-            page = render_page(rtext.split("\n"), scale=SCALE, invert=bool(inv))
+            page, blob = render_media(rtext.split("\n"), bool(inv), bool(tint))
             refs.append(ref)
-            blobs.append(
-                encode_rgb(_tint_page(page)) if bool(tint) else encode_gray(page)
-            )
+            blobs.append(blob)
             hs.append(page.shape[0])
             ws.append(page.shape[1])
         yield pd.DataFrame(

@@ -126,7 +126,7 @@ def _run_pending(
     t0 = time.monotonic()
     rows = with_part_id(
         extract_span_rows(
-            todo.drop("part_id"), media, keep_kernel_us=True, **extract_kwargs
+            todo.drop("part_id"), media, **extract_kwargs
         ),
         n_parts,
     )
@@ -138,8 +138,14 @@ def _run_pending(
         assemble_documents(rows.drop("part_id", "conf", "n_lines", "kernel_us")),
         n_parts,
     )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    assembled.write.mode("overwrite").partitionBy("part_id").parquet(out_dir)
+    # per-write dynamic overwrite: replace only the parts this wave wrote,
+    # without changing the session's mode for every later write
+    (
+        assembled.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("part_id")
+        .parquet(out_dir)
+    )
 
     # lineage + metrics, one row per partition just committed
     metrics = (

@@ -18,8 +18,9 @@ import numpy as np
 
 from .craft_forward import _LINK_GAIN, _LINK_THRESH, _TEXT_GAIN, _TEXT_THRESH
 from .craft_forward import _weights as _hand_weights
-from .db_calibrate import _head_bwd, _upsample_bwd, _upsample_fwd
-from .train import Adam, _conv_bwd, _conv_fwd
+from .db_calibrate import _head_bwd, _upsample_bwd, _upsample_fwd, deck_lines
+from .db_forward import _conv2d
+from .train import _conv_bwd, _conv_fwd, fit
 
 
 def _flat(w4: np.ndarray) -> np.ndarray:
@@ -27,9 +28,7 @@ def _flat(w4: np.ndarray) -> np.ndarray:
 
 
 def forward_cached(params: dict, gray: np.ndarray):
-    """craft_forward.craft_maps' exact math with caches."""
-    from .craft_forward import _conv2d  # noqa: F401  (same impl as db's)
-
+    """craft_forward.craft_maps in float64 with caches."""
     h, w = gray.shape
     x = (gray.astype(np.float64) / 255.0)[:, :, None][None]
     e, c_e = _conv_fwd(x, _flat(params["w1"]), params["b1"], (2, 2))
@@ -37,10 +36,8 @@ def forward_cached(params: dict, gray: np.ndarray):
     l1, c_l1 = _conv_fwd(e, _flat(params["wl"]), params["bl"], (1, 1))
     l2, c_l2 = _conv_fwd(l1, _flat(params["wl"]), params["bl"], (1, 1))
     # shared ReLU-free head (craft_forward applies wh to both branches)
-    from .db_forward import _conv2d as conv_plain
-
-    t_out = conv_plain(t_feat[0], params["wh"], params["bh"], stride=1)[..., 0]
-    l_out = conv_plain(l2[0], params["wh"], params["bh"], stride=1)[..., 0]
+    t_out = _conv2d(t_feat[0], params["wh"], params["bh"], stride=1)[..., 0]
+    l_out = _conv2d(l2[0], params["wh"], params["bh"], stride=1)[..., 0]
     text = 1.0 / (1.0 + np.exp(-_TEXT_GAIN * (_upsample_fwd(t_out, h, w) - _TEXT_THRESH)))
     link = 1.0 / (1.0 + np.exp(-_LINK_GAIN * (_upsample_fwd(l_out, h, w) - _LINK_THRESH)))
     cache = (c_e, c_t, c_l1, c_l2, t_feat[0], l2[0], t_out.shape, l_out.shape)
@@ -128,20 +125,9 @@ def craft_targets(lines: list[str], scale: int):
 
 def calibration_pages(sf_dir: str = "/root/testdata/sf0.001",
                       n_docs: int = 20):
-    import pyarrow.parquet as pq
-
     from ..imaging.glyphs import SCALE
 
-    tbl = pq.read_table(f"{sf_dir}/documents.parquet",
-                        columns=["doc_id", "text"])
-    docs = sorted(zip(tbl["doc_id"].to_pylist(), tbl["text"].to_pylist()))
-    out = []
-    for doc_id, text in docs[:n_docs]:
-        toks = " ".join(text.split()).split(" ")
-        nt = len(toks)
-        w = [toks[i % nt] for i in range(3)]
-        lines = [" ".join(w)] if doc_id % 2 == 0 else [w[0] + " " + w[1], w[2]]
-        out.append(craft_targets(lines, SCALE))
+    out = [craft_targets(lines, SCALE) for lines in deck_lines(sf_dir, n_docs)]
     # contract anchors
     blank = np.full((64, 96), 255, dtype=np.uint8)
     dark = np.zeros((64, 96), dtype=np.uint8)
@@ -154,25 +140,5 @@ def calibrate(epochs: int = 40, lr: float = 2e-3, seed: int = 13,
               log=print) -> tuple[dict, list[float]]:
     """Fit from the hand init; gentle lr for the same base-rate-saddle
     reason as db_calibrate."""
-    params = {k: v.astype(np.float64).copy()
-              for k, v in _hand_weights().items()}
-    data = calibration_pages()
-    opt = Adam(params, lr=lr)
-    rng = np.random.default_rng(seed)
-    history = []
-    for ep in range(epochs):
-        order = rng.permutation(len(data))
-        tot = 0.0
-        for i in order:
-            g, tt, lt = data[i]
-            loss, grads = loss_and_grads(params, g, tt, lt)
-            opt.step(params, grads)
-            tot += loss
-        history.append(tot / len(data))
-        if ep % 10 == 0 or ep == epochs - 1:
-            log(f"craft-calibrate epoch {ep + 1}/{epochs}: bce={tot / len(data):.4f}")
-    return params, history
-
-
-def save_calibrated(params: dict, path: str) -> None:
-    np.savez(path, **params)
+    return fit(_hand_weights(), calibration_pages(), loss_and_grads, epochs,
+               lr, seed, log, "craft-calibrate")

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .db_forward import _conv2d, _upsample_bilinear
+from .db_forward import _conv2d, _upsample_bilinear, load_calibrated, weights_f32
 
 _TEXT_GAIN, _TEXT_THRESH = 14.0, 0.22
 _LINK_GAIN, _LINK_THRESH = 10.0, 0.16
@@ -50,54 +50,7 @@ def _weights() -> dict[str, np.ndarray]:
             "wh": wh, "bh": bh}
 
 
-def _load_calibrated() -> dict | None:
-    """models/craft_calibrated.npz — weights FITTED in-sandbox by
-    ``craft_calibrate.calibrate`` (pixel-BCE against the renderer's
-    character-region and inter-character-affinity masks) from the hand
-    construction below, which remains the no-artifact fallback.
-
-    Missing/unreadable artifacts warn and fall back (never break the
-    import): on a cluster the npz ships to executors via ``spark-submit
-    --files`` (scripts/submit.sh), and a silent fallback would have
-    driver and executors run different weights with no signal."""
-    import os
-    import warnings
-
-    p = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "models",
-        "craft_calibrated.npz",
-    )
-    try:
-        with np.load(p) as z:
-            return {k: z[k] for k in z.files}
-    except FileNotFoundError:
-        warnings.warn(
-            f"craft_calibrated.npz not found at {p}; CRAFT forward falls "
-            "back to hand-constructed weights (ship the artifact with "
-            "spark-submit --files, see scripts/submit.sh)",
-            stacklevel=2,
-        )
-    except Exception as e:  # corrupt npz must not break the legacy path
-        warnings.warn(
-            f"craft_calibrated.npz unreadable ({e!r}); CRAFT forward falls "
-            "back to hand-constructed weights",
-            stacklevel=2,
-        )
-    return None
-
-
-_W = _load_calibrated() or _weights()
-# float32 inference views — same rationale and live-_W contract as
-# db_forward._w32 (tests rebind _W through the parity seam)
-_W32_CACHE: tuple[dict, dict] | None = None
-
-
-def _w32() -> dict:
-    global _W32_CACHE
-    if _W32_CACHE is None or _W32_CACHE[0] is not _W:
-        _W32_CACHE = (_W, {k: v.astype(np.float32) for k, v in _W.items()})
-    return _W32_CACHE[1]
+_W = load_calibrated("craft_calibrated.npz") or _weights()
 
 
 def craft_maps(
@@ -113,7 +66,7 @@ def craft_maps(
 
     pin_blas_threads(1)  # 32 workers x 32 default BLAS threads thrashes
     h, w = gray.shape
-    W = _w32() if fp32 else _W
+    W = weights_f32(_W) if fp32 else _W
     dt = np.float32 if fp32 else np.float64
     x = (gray.astype(dt) / 255.0)[:, :, None]
     e = np.maximum(_conv2d(x, W["w1"], W["b1"], stride=2), 0.0)

@@ -19,8 +19,9 @@ from __future__ import annotations
 
 import numpy as np
 
-from .db_forward import _HEAD_GAIN, _HEAD_THRESH, _weights, preprocess
-from .train import Adam, _conv_bwd, _conv_fwd
+from .db_forward import _HEAD_GAIN, _HEAD_THRESH, _conv2d, _weights, preprocess
+from .model import im2col3x3
+from .train import _conv_bwd, _conv_fwd, fit
 
 _STRIDES = {"w1": 2, "w2": 2, "w3": 1, "wh": 1}
 
@@ -51,7 +52,7 @@ def _upsample_bwd(dy: np.ndarray, in_h: int, in_w: int) -> np.ndarray:
 
 
 def forward_cached(params: dict, x_hwc: np.ndarray):
-    """db_forward.forward's exact math with caches for backprop.
+    """db_forward.forward in float64 with caches for backprop.
     x_hwc: [H, W, 3] ImageNet-normalized; returns (prob_map, cache)."""
     h, w = x_hwc.shape[:2]
     x = x_hwc[None]
@@ -68,10 +69,8 @@ def forward_cached(params: dict, x_hwc: np.ndarray):
         w4 = params["w3"]
         x, c = _conv_fwd(x, w4.reshape(-1, w4.shape[-1]), params["b3"], (1, 1))
         caches.append(("w3", c))
-    # head: linear conv (no ReLU) — _conv_fwd applies ReLU, so run the
-    # head as im2col matmul directly via a ReLU-free variant
-    from .db_forward import _conv2d
-
+    # head: linear conv (no ReLU) — _conv_fwd applies ReLU, so the head
+    # runs through db_forward's ReLU-free conv
     head_in = x[0]
     head_out = _conv2d(head_in, params["wh"], params["bh"], stride=1)[..., 0]
     up = _upsample_fwd(head_out, h, w)
@@ -80,26 +79,12 @@ def forward_cached(params: dict, x_hwc: np.ndarray):
 
 
 def _head_bwd(dhead_out: np.ndarray, head_in: np.ndarray, wh: np.ndarray):
-    """Backward of the ReLU-free 3x3 head conv (stride 1, same-pad)."""
-    H, W, C = head_in.shape
-    xp = np.pad(head_in, ((1, 1), (1, 1), (0, 0)))
-    cols = np.empty((H, W, 9 * C))
-    for dy_ in range(3):
-        for dx_ in range(3):
-            cols[..., (dy_ * 3 + dx_) * C : (dy_ * 3 + dx_ + 1) * C] = (
-                xp[dy_ : dy_ + H, dx_ : dx_ + W]
-            )
-    d = dhead_out[..., None]  # [H, W, 1]
-    dwh = cols.reshape(-1, 9 * C).T @ d.reshape(-1, 1)
-    dbh = d.sum(axis=(0, 1))
-    dcols = d @ wh.reshape(9 * C, 1).T  # [H, W, 9C]
-    dxp = np.zeros((H + 2, W + 2, C))
-    for dy_ in range(3):
-        for dx_ in range(3):
-            dxp[dy_ : dy_ + H, dx_ : dx_ + W] += (
-                dcols[..., (dy_ * 3 + dx_) * C : (dy_ * 3 + dx_ + 1) * C]
-            )
-    return dxp[1 : H + 1, 1 : W + 1], dwh.reshape(3, 3, C, 1), dbh
+    """Backward of the ReLU-free 3x3 head conv (stride 1, same-pad):
+    _conv_bwd with every unit active."""
+    cache = (im2col3x3(head_in[None], (1, 1)), wh.reshape(-1, 1), True,
+             (1,) + head_in.shape, (1, 1))
+    dx, dwh, dbh = _conv_bwd(dhead_out[None, :, :, None], cache)
+    return dx[0], dwh.reshape(wh.shape), dbh
 
 
 def loss_and_grads(params: dict, x_hwc: np.ndarray, target: np.ndarray,
@@ -128,31 +113,31 @@ def loss_and_grads(params: dict, x_hwc: np.ndarray, target: np.ndarray,
     return loss, grads
 
 
+def deck_lines(sf_dir: str, n_docs: int) -> list[list[str]]:
+    """The calibration deck's page texts, shared by both detector
+    calibrators: the first ``n_docs`` documents by doc_id, each one page
+    of its first three tokens — one line on even doc_ids, two on odd."""
+    from ..fixtures import fixture_docs
+
+    out = []
+    for doc_id, toks in fixture_docs(sf_dir, n_docs):
+        w = [toks[i % len(toks)] for i in range(3)]
+        out.append([" ".join(w)] if doc_id % 2 == 0 else [w[0] + " " + w[1], w[2]])
+    return out
+
+
 def calibration_pages(sf_dir: str = "/root/testdata/sf0.001",
                       n_docs: int = 24):
     """(normalized input, ink-mask target) pairs: fixture-style line
     pages at the facade's /32 input geometry, plus the contract anchors
     (blank page -> all zeros, all-ink page -> all ones)."""
-    import pyarrow.parquet as pq
-
     from ..imaging.glyphs import SCALE, render_page
-    from .heatmap_post import resize_to_multiple_of_32
+    from .heatmap_post import _dilate_square, resize_to_multiple_of_32
 
-    tbl = pq.read_table(f"{sf_dir}/documents.parquet",
-                        columns=["doc_id", "text"])
-    docs = sorted(zip(tbl["doc_id"].to_pylist(), tbl["text"].to_pylist()))
-    pages = []
-    for doc_id, text in docs[:n_docs]:
-        toks = " ".join(text.split()).split(" ")
-        nt = len(toks)
-        w = [toks[i % nt] for i in range(3)]
-        lines = [" ".join(w)] if doc_id % 2 == 0 else [w[0] + " " + w[1], w[2]]
-        pages.append(render_page(lines, scale=SCALE))
+    pages = [render_page(lines, scale=SCALE) for lines in deck_lines(sf_dir, n_docs)]
     pages.append(np.full((64, 96), 255, dtype=np.uint8))  # blank anchor
     pages.append(np.zeros((64, 96), dtype=np.uint8))      # all-ink anchor
     out = []
-    from .heatmap_post import _dilate_square
-
     for page in pages:
         resized, _, _ = resize_to_multiple_of_32(page)
         x = preprocess(resized)[0].transpose(1, 2, 0).astype(np.float64)
@@ -173,24 +158,5 @@ def calibrate(epochs: int = 40, lr: float = 2e-3, seed: int = 11,
     and collapsed the map to the constant class prior — the same
     base-rate saddle the recognizer's CTC training hits from random
     init."""
-    params = {k: v.astype(np.float64).copy() for k, v in _weights().items()}
-    data = calibration_pages()
-    opt = Adam(params, lr=lr)
-    rng = np.random.default_rng(seed)
-    history = []
-    for ep in range(epochs):
-        order = rng.permutation(len(data))
-        tot = 0.0
-        for i in order:
-            x, t = data[i]
-            loss, grads = loss_and_grads(params, x, t)
-            opt.step(params, grads)
-            tot += loss
-        history.append(tot / len(data))
-        if ep % 10 == 0 or ep == epochs - 1:
-            log(f"db-calibrate epoch {ep + 1}/{epochs}: bce={tot / len(data):.4f}")
-    return params, history
-
-
-def save_calibrated(params: dict, path: str) -> None:
-    np.savez(path, **params)
+    return fit(_weights(), calibration_pages(), loss_and_grads, epochs, lr,
+               seed, log, "db-calibrate")

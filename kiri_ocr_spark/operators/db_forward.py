@@ -28,6 +28,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from .model import im2col3x3
+
 _IMAGENET_MEAN = np.array([0.485, 0.456, 0.406], dtype=np.float64)
 _IMAGENET_STD = np.array([0.229, 0.224, 0.225], dtype=np.float64)
 
@@ -37,26 +39,11 @@ _HEAD_THRESH = 0.18
 
 
 def _conv2d(x: np.ndarray, w: np.ndarray, b: np.ndarray, stride: int) -> np.ndarray:
-    """Same-pad 3x3 conv via im2col; x [H, W, Cin], w [3, 3, Cin, Cout]."""
-    H, W, C = x.shape
-    # zeros+assign == np.pad(constant 0), a plain copy (bitwise by
-    # construction); np.pad's python-side
-    # setup was ~90 us/call at this call rate
-    xp = np.zeros((H + 2, W + 2, C), dtype=x.dtype)
-    xp[1:-1, 1:-1] = x
-    oh, ow = (H + stride - 1) // stride, (W + stride - 1) // stride
-    cols = np.empty((oh, ow, 9 * C), dtype=x.dtype)  # dtype follows input
-    for dy in range(3):
-        ye = dy + (oh - 1) * stride + 1
-        for dx in range(3):
-            # strided basic slices are views (the former double
-            # fancy-index materialized two intermediates per tap)
-            xe = dx + (ow - 1) * stride + 1
-            cols[..., (dy * 3 + dx) * C : (dy * 3 + dx + 1) * C] = (
-                xp[dy:ye:stride, dx:xe:stride]
-            )
+    """Same-pad 3x3 conv; x [H, W, Cin], w [3, 3, Cin, Cout]."""
+    cols = im2col3x3(x[None], (stride, stride))[0]
+    oh, ow, k = cols.shape
     # one big GEMM beats numpy's per-row batching of (ow, 9C) tiles
-    out = cols.reshape(-1, 9 * C) @ w.reshape(9 * C, -1) + b
+    out = cols.reshape(-1, k) @ w.reshape(k, -1) + b
     return out.reshape(oh, ow, -1)
 
 
@@ -115,58 +102,60 @@ def _weights() -> dict[str, np.ndarray]:
     }
 
 
-def _load_calibrated() -> dict | None:
-    """models/db_calibrated.npz — weights FITTED in-sandbox by
-    ``db_calibrate.calibrate`` (BCE against the renderer's ink masks)
-    starting from the hand construction below. When the artifact exists
-    the forward runs on fitted weights; the hand construction is the
-    no-artifact fallback (and the calibration init).
+def load_calibrated(name: str) -> dict | None:
+    """``models/<name>`` — detector weights FITTED in-sandbox by
+    ``db_calibrate``/``craft_calibrate`` (pixel-BCE against the
+    renderer's masks) from the hand construction, which stays the
+    no-artifact fallback and the calibration init.
 
     Missing or unreadable artifacts warn and fall back rather than break
     the import: on a cluster the npz must be shipped to executors via
-    ``spark-submit --files models/db_calibrated.npz`` (scripts/submit.sh),
-    and a silent fallback would have driver and executors disagree on the
-    weights with no signal."""
+    ``spark-submit --files`` (scripts/submit.sh), and a silent fallback
+    would have driver and executors disagree on the weights with no
+    signal."""
     import os
     import warnings
 
     p = os.path.join(
         os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
         "models",
-        "db_calibrated.npz",
+        name,
     )
     try:
         with np.load(p) as z:
             return {k: z[k] for k in z.files}
     except FileNotFoundError:
         warnings.warn(
-            f"db_calibrated.npz not found at {p}; DB forward falls back to "
+            f"{name} not found at {p}; the forward falls back to "
             "hand-constructed weights (ship the artifact with "
             "spark-submit --files, see scripts/submit.sh)",
             stacklevel=2,
         )
     except Exception as e:  # corrupt npz must not break the legacy path
         warnings.warn(
-            f"db_calibrated.npz unreadable ({e!r}); DB forward falls back "
-            "to hand-constructed weights",
+            f"{name} unreadable ({e!r}); the forward falls back to "
+            "hand-constructed weights",
             stacklevel=2,
         )
     return None
 
 
-_W = _load_calibrated() or _weights()
 # float32 inference views (the ONNX runtime the reference deploys runs
-# float32); calibration keeps float64 via _weights()/its own arrays, so
-# numeric-gradient law checks are untouched. Derived lazily from the
-# LIVE _W so tests/tools that rebind _W (the parity seam) stay honored.
-_W32_CACHE: tuple[dict, dict] | None = None
+# float32), one per weight dict; calibration keeps float64
+_W32: dict[int, tuple[dict, dict]] = {}
 
 
-def _w32() -> dict:
-    global _W32_CACHE
-    if _W32_CACHE is None or _W32_CACHE[0] is not _W:
-        _W32_CACHE = (_W, {k: v.astype(np.float32) for k, v in _W.items()})
-    return _W32_CACHE[1]
+def weights_f32(W: dict) -> dict:
+    """float32 view of a forward's weight dict, cast once per dict
+    object. Callers pass their module's live ``_W``, so a rebound ``_W``
+    (the parity tests' seam) gets a fresh cast."""
+    hit = _W32.get(id(W))
+    if hit is None or hit[0] is not W:
+        hit = _W32[id(W)] = (W, {k: v.astype(np.float32) for k, v in W.items()})
+    return hit[1]
+
+
+_W = load_calibrated("db_calibrated.npz") or _weights()
 
 
 def preprocess(resized_gray: np.ndarray) -> np.ndarray:
@@ -188,7 +177,7 @@ def forward(input_tensor: np.ndarray, fp32: bool = True) -> np.ndarray:
 
     pin_blas_threads(1)  # same pin as db_prob_map: an unpinned direct
     # call must not produce different GEMM bits than the facade path
-    W = _w32() if fp32 else _W
+    W = weights_f32(_W) if fp32 else _W
     dt = np.float32 if fp32 else np.float64
     x = input_tensor[0].transpose(1, 2, 0).astype(dt)  # HWC
     h, w = x.shape[:2]

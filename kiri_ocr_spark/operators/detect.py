@@ -16,14 +16,17 @@ Semantics re-expressed from the reference's legacy detector
   (legacy:750-792)
 - ``reading_order``    W1: group by cy (running mean, 0.7*median_h), sort
   within line by center x (detector/__init__.py:245-291)
-- ``split_words``      the glyph-raster word rule: unit-scale blank-column
-  runs >= 3 (renderer SPACE_GAP contract); the reference's gap-statistics
-  word split (W5, legacy:848-904) is not implemented
+- ``split_words``      the glyph-raster word rule: ``unit_grid``
+  blank-column runs >= WORD_GAP_UNITS (renderer SPACE_GAP contract), the
+  rule ``recognize.recognize_line`` spaces words by; the reference's
+  gap-statistics word split (W5, legacy:848-904) is not implemented
 """
 
 from __future__ import annotations
 
 import numpy as np
+
+from ..imaging.glyphs import GLYPH_H
 
 
 def invert_if_dark(gray: np.ndarray) -> np.ndarray:
@@ -111,49 +114,50 @@ def orient_and_binarize(gray: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return gray, gray <= _otsu_from_hist(hist)
 
 
-def line_bands(ink: np.ndarray, min_gap: int = 1) -> list[tuple[int, int]]:
-    """Projection-profile line segmentation: contiguous bands of rows with
-    ink, separated by >= min_gap blank rows. Returns [(y0, y1_excl)]."""
-    proj = ink.any(axis=1).astype(np.int8)
-    padded = np.concatenate([[0], proj, [0]])
-    diff = np.diff(padded)
-    starts = np.flatnonzero(diff == 1)
-    ends = np.flatnonzero(diff == -1)
-    bands = []
-    for s, e in zip(starts, ends):
-        if bands and s - bands[-1][1] < min_gap:
-            bands[-1] = (bands[-1][0], int(e))
-        else:
-            bands.append((int(s), int(e)))
-    return bands
+# the renderer's space contract (CHAR_GAP=1, SPACE_GAP=4 unit columns):
+# a blank-column run this wide or wider at unit scale is a word gap
+WORD_GAP_UNITS = 3
+
+
+def _runs(mask: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(starts, ends_excl) of the True runs of a 1-D mask."""
+    d = np.diff(np.concatenate([[0], mask.astype(np.int8), [0]]))
+    return np.flatnonzero(d == 1), np.flatnonzero(d == -1)
+
+
+def unit_grid(ink: np.ndarray, box) -> tuple[np.ndarray, int]:
+    """(units, scale): a line box's ink subsampled to unit scale — one
+    pixel per glyph-grid cell, scale = box height // GLYPH_H."""
+    x, y, w, h = (int(v) for v in box[:4])
+    scale = max(1, h // GLYPH_H)
+    return ink[y : y + h, x : x + w][0::scale, 0::scale], scale
+
+
+def line_bands(ink: np.ndarray) -> list[tuple[int, int]]:
+    """Projection-profile line segmentation: maximal runs of rows with
+    ink. Returns [(y0, y1_excl)]."""
+    starts, ends = _runs(ink.any(axis=1))
+    return [(int(s), int(e)) for s, e in zip(starts, ends)]
 
 
 def detect_lines(gray: np.ndarray, ink: np.ndarray | None = None) -> np.ndarray:
     """Media-span line detector: invert-if-dark -> Otsu ->
     projection-profile bands -> per-band bbox, top-to-bottom order.
 
-    Returns (n_lines, 5): x, y, w, h, confidence. Confidence is 1.0 when
-    the band contains ink (always, by band construction) — the component
-    existence check this encodes needs no CC pass, because any ink pixel
-    is itself a component. Pass a precomputed ``ink`` mask to skip
-    re-binarization (hot-path callers share one Otsu pass).
+    Returns (n_lines, 5): x, y, w, h, confidence. Confidence is 1.0: a
+    band holds ink by construction, and any ink pixel is itself a
+    component, so the component existence check needs no CC pass. Pass
+    a precomputed ``ink`` mask to skip re-binarization (hot-path callers
+    share one Otsu pass).
     """
     if ink is None:
         gray = invert_if_dark(gray)
         ink = binarize(gray)
-    bands = line_bands(ink)
     out = []
-    for y0, y1 in bands:
-        strip = ink[y0:y1]
-        cols = np.flatnonzero(strip.any(axis=0))
-        if cols.size == 0:
-            continue
-        # components exist in a band iff the band has ink (any ink pixel
-        # is itself a component) — the per-band CC pass this used to run
-        # was 56% of the whole OCR kernel's profile for a constant answer
-        conf = 1.0 if cols.size > 0 else 0.0
+    for y0, y1 in line_bands(ink):
+        cols = np.flatnonzero(ink[y0:y1].any(axis=0))
         out.append(
-            (float(cols[0]), float(y0), float(cols[-1] - cols[0] + 1), float(y1 - y0), conf)
+            (float(cols[0]), float(y0), float(cols[-1] - cols[0] + 1), float(y1 - y0), 1.0)
         )
     if not out:
         return np.zeros((0, 5), dtype=np.float64)
@@ -379,22 +383,14 @@ def split_box_at_blank_rows(ink: np.ndarray, box) -> list[np.ndarray]:
     ink-tighten each band — the projection-profile band rule detect_lines
     already applies page-wide, scoped to one box. DB's unclipped regions
     on tight two-line pages can span both lines; recognition needs one
-    band per text line. Returns [x y w h] int arrays, top-down; empty
-    bands are dropped."""
+    band per text line. Returns [x y w h] int arrays, top-down; a box
+    without ink yields none."""
     x, y, w, h = (int(v) for v in box[:4])
     x0, y0 = max(x, 0), max(y, 0)
     sub = ink[y0 : y0 + h, x0 : x0 + w]
-    if sub.size == 0:
-        return []
-    rowink = sub.any(axis=1).astype(np.int8)
-    d = np.diff(np.concatenate([[0], rowink, [0]]))
-    starts, ends = np.flatnonzero(d == 1), np.flatnonzero(d == -1)
     out = []
-    for s, e in zip(starts, ends):
-        band = sub[s:e]
-        xs = np.flatnonzero(band.any(axis=0))
-        if len(xs) == 0:
-            continue
+    for s, e in zip(*_runs(sub.any(axis=1))):
+        xs = np.flatnonzero(sub[s:e].any(axis=0))
         out.append(
             np.array([x0 + xs[0], y0 + s, xs[-1] - xs[0] + 1, e - s], dtype=int)
         )
@@ -427,22 +423,16 @@ def pad_training_margins(region: np.ndarray) -> np.ndarray:
 
 
 def split_words(ink: np.ndarray, box) -> list[tuple[int, int, int, int]]:
-    """Word boxes ``(x, y, w, h)`` of one detected line: subsample the
-    line's ink to unit scale (one pixel per glyph-grid cell) and split at
-    blank-column runs >= 3 unit columns — the renderer's space contract
-    (CHAR_GAP=1, SPACE_GAP=4), the exact word rule for this engine's
-    glyph raster. Each word keeps the line's y and height."""
-    from ..imaging.glyphs import GLYPH_H
-
-    x, y, w, h = (int(v) for v in box[:4])
-    scale = max(1, h // GLYPH_H)
-    cols = ink[y : y + h, x : x + w][0::scale, 0::scale].any(axis=0)
-    d = np.diff(np.concatenate([[0], cols.astype(np.int8), [0]]))
+    """Word boxes ``(x, y, w, h)`` of one detected line: split the
+    line's unit grid at blank-column runs >= WORD_GAP_UNITS — the exact
+    word rule for this engine's glyph raster. Each word keeps the line's
+    y and height."""
+    x, y, _, h = (int(v) for v in box[:4])
+    units, scale = unit_grid(ink, box)
     spans: list[list[int]] = []
-    for s, e in zip(np.flatnonzero(d == 1), np.flatnonzero(d == -1)):
-        if spans and s - spans[-1][1] < 3:
+    for s, e in zip(*_runs(units.any(axis=0))):
+        if spans and s - spans[-1][1] < WORD_GAP_UNITS:
             spans[-1][1] = int(e)
         else:
             spans.append([int(s), int(e)])
     return [(x + s * scale, y, (e - s) * scale, h) for s, e in spans]
-

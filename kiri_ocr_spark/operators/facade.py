@@ -11,11 +11,13 @@ This engine mirrors that contract:
   ``operators/heatmap_post.py``. The neural forward pass is a pluggable
   ``heatmap_fn`` — on a cluster with onnxruntime/torch, pass a wrapper
   around the real model; in-sandbox, ``operators/db_forward.db_prob_map``
-  is a real numpy convnet forward honoring the ONNX I/O contract
-  (hand-constructed weights), the deterministic seams
-  (``fake_heatmaps`` / ``fake_prob_map``) remain for plumbing tests, or
-  pass None to get the reference's own missing-weights behavior: warn +
-  fall back to legacy (detector/__init__.py:115-151).
+  (and ``craft_forward.craft_maps``) are real numpy convnet forwards
+  honoring the ONNX I/O contract (calibrated weights, hand-constructed
+  fallback), and the deterministic seams (``fake_heatmaps`` /
+  ``fake_prob_map``) remain for plumbing tests. ``heatmap_fn=None``
+  resolves that in-repo forward; only when its import fails does the
+  detector take the reference's missing-weights path: warn + fall back
+  to legacy (detector/__init__.py:115-151).
 
 Per-image kernel, embarrassingly parallel at table scope (wrap in
 mapInPandas like every other kernel here).

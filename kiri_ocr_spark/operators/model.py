@@ -223,6 +223,34 @@ def _pos_enc_2d_cached(h: int, w: int, d: int, dt) -> np.ndarray:
 ENCODE_CHUNK = 4
 
 
+def im2col3x3(x: np.ndarray, stride: tuple[int, int]) -> np.ndarray:
+    """Patch matrix of a same-pad (zero) 3x3 conv: x [B, H, W, C] ->
+    cols [B, oh, ow, 9C] in x's dtype, tap-major ((dy, dx) then channel),
+    matching a [3, 3, C, Cout] kernel reshaped to [9C, Cout]. The one
+    im2col of every conv here: the recognizer stem, the DB/CRAFT
+    forwards and the training/calibration backprop (train._conv_fwd).
+    Each caller runs its own GEMM on it."""
+    sy, sx = stride
+    B, H, W, C = x.shape
+    # zeros+assign == np.pad(constant 0), without np.pad's python-side
+    # setup cost (~90 us/call at the detectors' call rate)
+    xp = np.zeros((B, H + 2, W + 2, C), dtype=x.dtype)
+    xp[:, 1:-1, 1:-1] = x
+    oh, ow = (H + sy - 1) // sy, (W + sx - 1) // sx
+    cols = np.empty((B, oh, ow, 9 * C), dtype=x.dtype)
+    for dy in range(3):
+        ye = dy + (oh - 1) * sy + 1
+        for dx in range(3):
+            # strided basic slices are VIEWS — the only copy is the
+            # assignment into cols (a double fancy-index materialized two
+            # intermediates per tap: 2.1x on the stem's middle layer)
+            xe = dx + (ow - 1) * sx + 1
+            cols[..., (dy * 3 + dx) * C : (dy * 3 + dx + 1) * C] = (
+                xp[:, dy:ye:sy, dx:xe:sx]
+            )
+    return cols
+
+
 def _softmax_inplace(x: np.ndarray) -> np.ndarray:
     """softmax() with identical bits (same op sequence: subtract rowmax,
     exp, divide by rowsum) but computed in place on a caller-owned
@@ -254,6 +282,18 @@ def _mha(q, k, v, n_heads, wq, wk, wv, wo, mask=None):
     out = _softmax_inplace(att) @ vh  # [B, H, Tq, dh]
     out = out.transpose(0, 2, 1, 3).reshape(B, Tq, D)
     return out @ wo
+
+
+def _ctc_target(seq: list[int]) -> tuple[int, ...]:
+    """CTC ids of a decoder sequence (BOS first): dec d >= 3 maps to raw
+    d - 3 maps to CTC d - 1; BOS/EOS/pad drop out."""
+    return tuple(d - 1 for d in seq[1:] if d >= 3)
+
+
+def _ctc_logp(scorer: CtcPrefixScorer, target: tuple) -> float:
+    """CTC prefix log-prob, floored at -1e4 for an unalignable prefix."""
+    s = scorer.score(target)
+    return s if np.isfinite(s) else -1e4
 
 
 class NumpyKiriModel:
@@ -339,34 +379,16 @@ class NumpyKiriModel:
         return hit[1]
 
     def _conv(self, x: np.ndarray, layer: dict) -> np.ndarray:
-        """3x3 same-pad strided conv via im2col; x: [B, H, W, Cin].
+        """3x3 same-pad strided conv + ReLU; x: [B, H, W, Cin].
         dtype-driven: float64 input (training, default inference) stays
         float64; float32 input stays float32."""
         dt = x.dtype.type
-        sy, sx = layer["stride"]
-        B, H, W, C = x.shape
-        # zeros+assign == np.pad(constant 0) (a plain copy: bitwise by
-        # construction), without np.pad's python-side setup cost
-        xp = np.zeros((B, H + 2, W + 2, C), dtype=x.dtype)
-        xp[:, 1:-1, 1:-1] = x
-        oh, ow = (H + sy - 1) // sy, (W + sx - 1) // sx
-        cols = np.empty((B, oh, ow, 3 * 3 * C), dtype=dt)
-        for dy in range(3):
-            ye = dy + (oh - 1) * sy + 1
-            for dx in range(3):
-                # strided basic slices are VIEWS — the only copy is the
-                # assignment into cols (the former double fancy-index
-                # materialized two intermediates per tap: 2.1x on the
-                # stem's middle layer)
-                xe = dx + (ow - 1) * sx + 1
-                cols[..., (dy * 3 + dx) * C : (dy * 3 + dx + 1) * C] = (
-                    xp[:, dy:ye:sy, dx:xe:sx]
-                )
+        cols = im2col3x3(x, layer["stride"])
         # one big GEMM beats numpy's leading-dim batching of (ow, K) tiles
-        out = cols.reshape(-1, 9 * C) @ self._w(layer["k"], dt) + self._w(
+        out = cols.reshape(-1, cols.shape[-1]) @ self._w(layer["k"], dt) + self._w(
             layer["b"], dt
         )
-        return np.maximum(out.reshape(B, oh, ow, -1), 0.0)  # ReLU
+        return np.maximum(out.reshape(cols.shape[:3] + (-1,)), 0.0)  # ReLU
 
     # first pure-pad output column of each stem layer for content width
     # wc under strides (2,2),(2,2),(2,1): a layer-L output column is
@@ -680,38 +702,24 @@ class NumpyKiriModel:
         self, tokens: list[int], mem: np.ndarray, scorer: "CtcPrefixScorer"
     ) -> tuple[float, float]:
         """(fused_score, decoder_only_logp) of a GIVEN decoder sequence
-        (dec ids, EOS included) under exactly the penalties and fusion
-        increments _beam_advance applies to live hypotheses — one
-        teacher-forced forward, then the same per-step bookkeeping, so
-        the result is apples-to-apples comparable with beam scores."""
+        (dec ids, EOS included) under the penalties (_penalize_rows) and
+        fusion increments (_ctc_logp) _beam_advance applies to live
+        hypotheses — one teacher-forced forward, then the same per-step
+        bookkeeping, so the result is comparable with beam scores."""
         cfg = self.cfg
         bos, eos = self.tok.DEC_BOS, self.tok.DEC_EOS
-        unk_dec = self.tok.unk_id + 3
         prefix = np.array([[bos] + tokens[:-1]], dtype=np.int64)
         rows = log_softmax(self._decode_step(prefix, mem)[0])
-
-        def ctc_score(seq: list[int]) -> float:
-            target = tuple(d - 1 for d in seq[1:] if d >= 3)
-            s = scorer.score(target)
-            return s if np.isfinite(s) else -1e4
-
         seq = [bos]
         score = dlp = 0.0
         for i, t in enumerate(tokens):
-            row = rows[i].copy()
-            row[unk_dec] += cfg.UNK_PENALTY
-            row[eos] += cfg.EOS_BIAS
-            if len(seq) >= 1:
-                row[seq[-1]] += cfg.REPEAT_PENALTY
-            if len(seq) >= 2:
-                for j in range(len(seq) - 1):
-                    if seq[j] == seq[-1]:
-                        row[seq[j + 1]] += cfg.REPEAT_PENALTY / 2.0
+            row = self._penalize_rows([(seq,)], rows[i : i + 1])[0]
             score += float(row[t])
             dlp += float(row[t])
             if scorer is not None and t != eos:
                 score += cfg.CTC_FUSION_ALPHA * (
-                    ctc_score(seq + [t]) - ctc_score(seq)
+                    _ctc_logp(scorer, _ctc_target(seq + [t]))
+                    - _ctc_logp(scorer, _ctc_target(seq))
                 )
             seq.append(t)
         return score, dlp
@@ -751,8 +759,7 @@ class NumpyKiriModel:
             return max(finalists, key=self._norm_score)
 
         def rescore(item: tuple[list[int], float, float, bool]) -> float:
-            cs = scorer.score(tuple(d - 1 for d in item[0][1:] if d >= 3))
-            cs = float(cs) if np.isfinite(cs) else -1e4
+            cs = _ctc_logp(scorer, _ctc_target(item[0]))
             return self._norm_score((item[0], item[2] + gamma * cs, 0.0, True))
 
         return max(finalists, key=rescore)
@@ -834,7 +841,7 @@ class NumpyKiriModel:
         pending: list[tuple[int, tuple, tuple]] = []  # (cand_idx, parent, new)
         for r, (seq, score, dlp, _) in enumerate(alive):
             row = penalized[r]
-            parent_target = tuple(d - 1 for d in seq[1:] if d >= 3)
+            parent_target = _ctc_target(seq)
             for t in tops[r]:
                 new_seq = seq + [int(t)]
                 new_score = score + float(row[t])
@@ -861,11 +868,8 @@ class NumpyKiriModel:
         (which runs the scorer sweep merged across lines first)."""
         cfg = self.cfg
         for idx, parent, new in pending:
-            ps = scorer.score(parent)
-            ns = scorer.score(new)
             inc = cfg.CTC_FUSION_ALPHA * (
-                (ns if np.isfinite(ns) else -1e4)
-                - (ps if np.isfinite(ps) else -1e4)
+                _ctc_logp(scorer, new) - _ctc_logp(scorer, parent)
             )
             seq, score, dlp, done = cand[idx]
             cand[idx] = (seq, score + inc, dlp, done)
@@ -1172,6 +1176,37 @@ def _infer_config_from_state_dict(sd: dict, cfg: CFG) -> None:
         cfg.D_MODEL = int(sd["dec_emb.weight"].shape[1])
     if "enc.layers.0.w1" in sd:
         cfg.FF_MULT = int(sd["enc.layers.0.w1"].shape[1]) // cfg.D_MODEL
+
+
+def trained_model_path() -> str:
+    """Committed in-sandbox-trained artifact; ships to executors via
+    ``spark-submit --files`` on a real cluster — in local mode the repo
+    path is visible to every worker directly. Prefers the FULL-CHARSET
+    artifact (models/trained_full.npz — scripts/train_model.py +
+    finetune_model.py + the two documented charset_finetune.py stages,
+    covering all 146 charset glyphs like the reference's production
+    Khmer+Latin recognizer) and falls back to the corpus-only
+    trained_small.npz when the full artifact isn't built."""
+    import os
+
+    env = os.environ.get("KIRI_MODEL_PATH")
+    if env:
+        return env
+    base = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+        "models",
+    )
+    for name in ("trained_full.npz", "trained_small.npz"):
+        p = os.path.join(base, name)
+        if os.path.isfile(p):
+            return p
+    # Running from a spark-submit --py-files zip: __file__ points inside
+    # the archive and models/ is not a real directory there. Return the
+    # bare artifact name — load_model resolves it through SparkFiles on
+    # whichever process loads it (scripts/submit.sh ships the npz +
+    # _meta.json + vocab.json via --files, which land flat in every
+    # executor's files dir).
+    return "trained_full.npz"
 
 
 def load_model(model_path: str) -> NumpyKiriModel:

@@ -26,6 +26,7 @@ from __future__ import annotations
 import numpy as np
 
 from ..imaging.glyphs import GLYPH_H, GLYPH_W, template_index
+from .detect import WORD_GAP_UNITS, _runs, unit_grid
 
 BLANK_ID = 0
 
@@ -274,12 +275,9 @@ def recognize_line(ink: np.ndarray, box: np.ndarray) -> tuple[str, float]:
     mean over 2 glyph frames/cell + the all-1.0 blank/space frames — so
     neither the lattice arrays nor the collapse nor the per-cell bool
     copies are built at all. Cells are the unit-scale blank-column runs;
-    a run gap >= 3 unit columns is a word boundary (renderer contract
-    CHAR_GAP=1, SPACE_GAP=4, the rule detect.split_words applies)."""
-    x, y, w, h = (int(box[0]), int(box[1]), int(box[2]), int(box[3]))
-    crop = ink[y : y + h, x : x + w]
-    scale = max(1, h // GLYPH_H)
-    units = crop[0::scale, 0::scale]
+    a run gap >= WORD_GAP_UNITS is a word boundary (the rule
+    detect.split_words applies)."""
+    units, _ = unit_grid(ink, box)
     # content-addressed per-worker memo (bounded): real corpora repeat
     # lines (headers, boilerplate — the same redundancy exact-dedup
     # exploits at doc level), and the kernel is deterministic in the
@@ -291,10 +289,7 @@ def recognize_line(ink: np.ndarray, box: np.ndarray) -> tuple[str, float]:
     hit = _LINE_MEMO.get(key)
     if hit is not None:
         return hit
-    cols = units.any(axis=0).astype(np.int8)
-    diff = np.diff(np.concatenate([[0], cols, [0]]))
-    starts = np.flatnonzero(diff == 1)
-    ends = np.flatnonzero(diff == -1)
+    starts, ends = _runs(units.any(axis=0))
     if len(starts) == 0:
         return "", 0.0
     index = template_index()
@@ -305,7 +300,7 @@ def recognize_line(ink: np.ndarray, box: np.ndarray) -> tuple[str, float]:
     for s, e in zip(starts, ends):
         if prev_end >= 0:
             extra += 1  # inter-cell blank frame
-            if s - prev_end >= 3:  # word gap: space + trailing blank
+            if s - prev_end >= WORD_GAP_UNITS:  # space + trailing blank
                 chars.append(" ")
                 extra += 2
         prev_end = e

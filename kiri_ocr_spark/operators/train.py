@@ -32,6 +32,7 @@ from .model import (
     CFG,
     NumpyKiriModel,
     decode_crops_memo,
+    im2col3x3,
     log_softmax,
     pos_enc_1d,
     softmax,
@@ -150,23 +151,11 @@ _STEM_STRIDES = ((2, 2), (2, 2), (2, 1))  # model.NumpyKiriModel's stem
 
 
 def _conv_fwd(x, k, b, stride):
-    """Same-pad 3x3 strided conv + ReLU via im2col, matching
-    model.NumpyKiriModel._conv exactly; x [B, H, W, Cin]."""
-    sy, sx = stride
-    B, H, W, C = x.shape
-    xp = np.pad(x, ((0, 0), (1, 1), (1, 1), (0, 0)))
-    oh, ow = (H + sy - 1) // sy, (W + sx - 1) // sx
-    ys = np.arange(oh) * sy
-    xs = np.arange(ow) * sx
-    cols = np.empty((B, oh, ow, 9 * C))
-    for dy in range(3):
-        for dx in range(3):
-            cols[..., (dy * 3 + dx) * C : (dy * 3 + dx + 1) * C] = (
-                xp[:, ys + dy][:, :, xs + dx]
-            )
+    """Same-pad 3x3 strided conv + ReLU; x [B, H, W, Cin], k [9*Cin, Cout]."""
+    cols = im2col3x3(x, stride)
     pre = cols @ k + b
     y = np.maximum(pre, 0.0)
-    return y, (cols, k, pre > 0, (B, H, W, C), stride)
+    return y, (cols, k, pre > 0, x.shape, stride)
 
 
 def _conv_bwd(dy, cache):
@@ -529,31 +518,20 @@ def fixture_line_crops(sf_dir: str, max_docs: int | None = None,
     forced-alignment frame labels from the renderer geometry. Returns
     (train, heldout) split by doc hash (doc_id % 7 == 0 -> heldout),
     deterministic."""
-    import pyarrow.parquet as pq
-
+    from ..fixtures import media_pages
     from .model import CFG
 
     if tok is None:
         tok = NumpyKiriModel(CFG()).tok
-    tbl = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
-    docs = sorted(zip(tbl["doc_id"].to_pylist(), tbl["text"].to_pylist()))
-    if max_docs:
-        docs = docs[:max_docs]
     train, heldout = [], []
-    for doc_id, text in docs:
-        toks = " ".join(text.split()).split(" ")
-        nt = len(toks)
-        n_media = doc_id % 3 + (16 if doc_id % 97 == 0 else 0)
-        for m in range(n_media):
-            w = [toks[(m * 3 + i) % nt] for i in range(3)]
-            lines = [w[0] + " " + w[1], w[2]] if m % 2 == 1 else [" ".join(w)]
-            for line in lines:
-                # m % 5 == 3 pages ship as tinted truecolor in the
-                # fixture; after decode_gray the luma distribution is
-                # 27/239, not 0/255 — train on exactly what the
-                # pipeline's decode path produces (real codec round trip)
-                sample = render_crop(line, tok, tinted=(m % 5 == 3))
-                (heldout if doc_id % 7 == 0 else train).append(sample)
+    for doc_id, _, lines, _, tint in media_pages(sf_dir, max_docs):
+        for line in lines:
+            # tinted pages ship as truecolor in the fixture; after
+            # decode_gray the luma distribution is 27/239, not 0/255 —
+            # train on exactly what the pipeline's decode path produces
+            # (real codec round trip)
+            sample = render_crop(line, tok, tinted=tint)
+            (heldout if doc_id % 7 == 0 else train).append(sample)
     return train, heldout
 
 
@@ -571,40 +549,20 @@ def pipeline_line_crops(sf_dir: str, max_docs: int | None = None):
     doc_id % 7 heldout split; train() ignores element [2] when
     align_epochs == 0); layout_misses records pages whose detected line
     count diverges from the spec (each is a gate failure too)."""
-    import pyarrow.parquet as pq
-
-    from ..imaging.glyphs import SCALE, render_page
-    from ..imaging.png import encode_gray, encode_rgb
+    from ..fixtures import media_pages, render_media
     from .detect import detect_lines
     from .page import line_crop, read_page, tight_box
 
-    tbl = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
-    docs = sorted(zip(tbl["doc_id"].to_pylist(), tbl["text"].to_pylist()))
-    if max_docs:
-        docs = docs[:max_docs]
     samples, layout_misses = [], []
-    for doc_id, text in docs:
-        toks = " ".join(text.split()).split(" ")
-        nt = len(toks)
-        n_media = doc_id % 3 + (16 if doc_id % 97 == 0 else 0)
-        for m in range(n_media):
-            w = [toks[(m * 3 + i) % nt] for i in range(3)]
-            lines = [w[0] + " " + w[1], w[2]] if m % 2 == 1 else [" ".join(w)]
-            page = render_page(lines, scale=SCALE, invert=(m % 3 == 2))
-            if m % 5 == 3:
-                from ..fixtures import _tint_page
-
-                blob = encode_rgb(_tint_page(page))
-            else:
-                blob = encode_gray(page)
-            gray, ink = read_page(blob)
-            boxes = detect_lines(gray, ink=ink)
-            if len(boxes) != len(lines):
-                layout_misses.append((doc_id, m, len(lines), len(boxes)))
-                continue
-            # detect_lines boxes always hold ink: tight_box is never None
-            for line, b in zip(lines, boxes):
-                samples.append((line, line_crop(gray, tight_box(ink, b)), doc_id))
+    for doc_id, m, lines, invert, tint in media_pages(sf_dir, max_docs):
+        gray, ink = read_page(render_media(lines, invert, tint)[1])
+        boxes = detect_lines(gray, ink=ink)
+        if len(boxes) != len(lines):
+            layout_misses.append((doc_id, m, len(lines), len(boxes)))
+            continue
+        # detect_lines boxes always hold ink: tight_box is never None
+        for line, b in zip(lines, boxes):
+            samples.append((line, line_crop(gray, tight_box(ink, b)), doc_id))
     return samples, layout_misses
 
 
@@ -660,6 +618,28 @@ class Adam:
             self.m[k] = self.b1 * self.m[k] + (1 - self.b1) * g
             self.v[k] = self.b2 * self.v[k] + (1 - self.b2) * g * g
             p -= self.lr * (self.m[k] / bc1) / (np.sqrt(self.v[k] / bc2) + self.eps)
+
+
+def fit(init: dict, data: list, loss_and_grads, epochs: int, lr: float,
+        seed: int, log, tag: str) -> tuple[dict, list[float]]:
+    """Seeded per-sample Adam epochs from a float64 copy of ``init``:
+    each epoch visits ``data`` (tuples of ``loss_and_grads`` arguments
+    after params) in a fresh permutation. Returns (params, per-epoch
+    mean loss) — the detector calibrators' fit loop."""
+    params = {k: v.astype(np.float64).copy() for k, v in init.items()}
+    opt = Adam(params, lr=lr)
+    rng = np.random.default_rng(seed)
+    history = []
+    for ep in range(epochs):
+        tot = 0.0
+        for i in rng.permutation(len(data)):
+            loss, grads = loss_and_grads(params, *data[i])
+            opt.step(params, grads)
+            tot += loss
+        history.append(tot / len(data))
+        if ep % 10 == 0 or ep == epochs - 1:
+            log(f"{tag} epoch {ep + 1}/{epochs}: bce={history[-1]:.4f}")
+    return params, history
 
 
 def _batch_loss_and_grads(model, params, mem0, texts, ctc_weight=1.0,

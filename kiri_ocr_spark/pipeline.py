@@ -111,7 +111,6 @@ def extract_span_rows(
     *,
     salt_buckets: int = 64,
     broadcast_media: bool = False,
-    keep_kernel_us: bool = False,
     recognizer: str = "trained",
     detector: str = "legacy",
 ) -> DataFrame:
@@ -204,7 +203,7 @@ def extract_span_rows(
     if recognizer == "template":
         model_path = None
     else:
-        from .queries import trained_model_path
+        from .operators.model import trained_model_path
 
         model_path = trained_model_path()
     kernel = _ocr_batches(
@@ -216,11 +215,7 @@ def extract_span_rows(
         decode_method="beam" if recognizer == "beam" else "ctc",
     )
     ocr = joined.mapInPandas(kernel, schema=OCR_SCHEMA)
-    if keep_kernel_us:
-        text_rows = text_rows.withColumn("kernel_us", F.lit(0).cast("long"))
-    else:
-        ocr = ocr.drop("kernel_us")
-
+    text_rows = text_rows.withColumn("kernel_us", F.lit(0).cast("long"))
     return text_rows.unionByName(ocr)
 
 

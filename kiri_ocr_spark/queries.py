@@ -25,6 +25,7 @@ from pyspark.sql.window import Window
 
 from .fixtures import _tok, build_fixture, expected_sql
 from .functions.text import cer, char_accuracy, normalize_text
+from .operators.model import trained_model_path  # noqa: F401  (bench, perfbench)
 from .pipeline import extract_flat
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -2830,36 +2831,6 @@ SELECT 'img_' || doc_id || '_' || m AS media_ref,
 FROM d, unnest(generate_series(0, n_media - 1)) AS g(m)
 WHERE n_media > 0
 """
-
-
-def trained_model_path() -> str:
-    """Committed in-sandbox-trained artifact; ships to executors via
-    ``spark-submit --files`` on a real cluster — in local mode the repo
-    path is visible to every worker directly. Prefers the FULL-CHARSET
-    artifact (models/trained_full.npz — scripts/train_model.py +
-    finetune_model.py + the two documented charset_finetune.py stages,
-    covering all 146 charset glyphs like the reference's production
-    Khmer+Latin recognizer) and falls back to the corpus-only
-    trained_small.npz when the full artifact isn't built."""
-    import os
-
-    env = os.environ.get("KIRI_MODEL_PATH")
-    if env:
-        return env
-    base = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "models"
-    )
-    for name in ("trained_full.npz", "trained_small.npz"):
-        p = os.path.join(base, name)
-        if os.path.isfile(p):
-            return p
-    # Running from a spark-submit --py-files zip: __file__ points inside
-    # the archive and models/ is not a real directory there. Return the
-    # bare artifact name — load_model resolves it through SparkFiles on
-    # whichever process loads it (scripts/submit.sh ships the npz +
-    # _meta.json + vocab.json via --files, which land flat in every
-    # executor's files dir).
-    return "trained_full.npz"
 
 
 def q_model_decode_trained(spark: SparkSession, sf_dir: str) -> DataFrame:

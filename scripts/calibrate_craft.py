@@ -12,6 +12,8 @@ from __future__ import annotations
 import os
 import sys
 
+import numpy as np
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
@@ -21,7 +23,7 @@ def main() -> int:
 
     params, hist = CC.calibrate()
     os.makedirs(os.path.dirname(out) or ".", exist_ok=True)
-    CC.save_calibrated(params, out)
+    np.savez(out, **params)
     print({"bce_first": round(hist[0], 4), "bce_last": round(hist[-1], 4),
            "out": out})
     return 0

@@ -174,3 +174,47 @@ def test_waves_commit_every_part_once(spark, fixture_tables, tmp_path):
     ckpt_rows = spark.read.parquet(ckpt_3).toPandas()
     assert sorted(ckpt_rows["part_id"].tolist()) == list(range(N_PARTS))
     assert _read_sorted(spark, out_3).equals(_read_sorted(spark, out_1))
+
+
+def test_run_extraction_leaves_session_overwrite_mode_alone(
+    spark, fixture_tables, tmp_path
+):
+    """run_extraction's dynamic partition overwrite is per write: the
+    session's partitionOverwriteMode is unchanged afterwards, so a later
+    plain overwrite of a partitioned dir still replaces its old
+    partitions, while a re-run of a run id still overwrites only the
+    parts it recomputes."""
+    docs, media = fixture_tables
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        docs = docs.filter(F.col("doc_id") % 4 == 0)
+        out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+        assert run_extraction(spark, docs, media, out, ckpt, "ow", n_parts=4) == 4
+        assert spark.conf.get(key) == "static"
+
+        # a static overwrite elsewhere replaces every old partition
+        plain = str(tmp_path / "plain")
+        spark.range(4).withColumn("p", F.col("id") % 2).write.mode(
+            "overwrite"
+        ).partitionBy("p").parquet(plain)
+        spark.range(2).withColumn("p", F.lit(1).cast("long")).write.mode(
+            "overwrite"
+        ).partitionBy("p").parquet(plain)
+        assert [p for p in os.listdir(plain) if p.startswith("p=")] == ["p=1"]
+
+        # re-run after losing one part's commit: that part is rewritten,
+        # the other parts' output survives the overwrite
+        ref = _read_sorted(spark, out)
+        kept = spark.read.parquet(ckpt).filter(F.col("part_id") != 0).toPandas()
+        shutil.rmtree(ckpt)
+        spark.createDataFrame(kept, CHECKPOINT_SCHEMA).write.parquet(ckpt)
+        assert run_extraction(spark, docs, media, out, ckpt, "ow", n_parts=4) == 1
+        assert sorted(p for p in os.listdir(out) if p.startswith("part_id=")) == [
+            f"part_id={i}" for i in range(4)
+        ]
+        assert _read_sorted(spark, out).equals(ref)
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, prior)

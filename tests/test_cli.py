@@ -138,7 +138,8 @@ def test_batch_flags_reach_the_ocr_kernel(monkeypatch, capsys, flags, model, det
     import pyspark.sql.functions as F
 
     from kiri_ocr_spark import __main__ as cli
-    from kiri_ocr_spark import pipeline, queries, session
+    from kiri_ocr_spark import pipeline, session
+    from kiri_ocr_spark.operators import model as model_module
 
     seen = []
     fake = mock.MagicMock()
@@ -146,7 +147,7 @@ def test_batch_flags_reach_the_ocr_kernel(monkeypatch, capsys, flags, model, det
     monkeypatch.setattr(session, "get_spark", lambda **kw: fake)
     monkeypatch.setattr(F, "col", mock.MagicMock())
     monkeypatch.setattr(F, "lit", mock.MagicMock())
-    monkeypatch.setattr(queries, "trained_model_path", lambda: "trained")
+    monkeypatch.setattr(model_module, "trained_model_path", lambda: "trained")
     monkeypatch.setattr(pipeline, "_ocr_batches", lambda *a: seen.append(a))
     assert cli.main(["batch", "pngs", "--out", "out", *flags]) == 0
     assert seen == [(model, detector)]

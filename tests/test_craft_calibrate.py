@@ -91,9 +91,10 @@ def test_calibrated_artifact_quality_and_pickup():
     silent, and the LINK head merges fragments at NATIVE render scale
     (the hand weights only demonstrated merging at glyph scale 4)."""
     from kiri_ocr_spark.imaging.glyphs import SCALE, render_page
+    from kiri_ocr_spark.operators.db_forward import load_calibrated
     from kiri_ocr_spark.operators.heatmap_post import craft_boxes
 
-    loaded = CF._load_calibrated()
+    loaded = load_calibrated("craft_calibrated.npz")
     assert loaded is not None
     assert all((CF._W[k] == loaded[k]).all() for k in loaded)
 

@@ -90,7 +90,7 @@ def test_calibrated_artifact_beats_hand_weights_on_region_fit():
         resize_to_multiple_of_32,
     )
 
-    loaded = D._load_calibrated()
+    loaded = D.load_calibrated("db_calibrated.npz")
     assert loaded is not None
     assert all((D._W[k] == loaded[k]).all() for k in loaded)
 

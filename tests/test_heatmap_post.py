@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 
 import numpy as np
+import pytest
 
 from kiri_ocr_spark.operators.components import connected_components
 from kiri_ocr_spark.operators.heatmap_post import (
@@ -485,32 +486,35 @@ def test_process_document_neural_methods_read_exact_lines():
             assert got == lines, (method, lines, got)
 
 
-def test_calibrated_weight_load_warns_and_falls_back_on_corrupt_npz(tmp_path, monkeypatch):
+@pytest.mark.parametrize("name", ["db_calibrated.npz", "craft_calibrated.npz"])
+def test_calibrated_weight_load_warns_and_falls_back_on_corrupt_npz(
+    tmp_path, monkeypatch, name
+):
     """Advisor r5: a corrupt/missing calibrated npz must warn and fall
     back to the hand construction, never break the import path."""
     import warnings
 
-    from kiri_ocr_spark.operators import db_forward
+    from kiri_ocr_spark.operators.db_forward import load_calibrated
 
     # corrupt artifact: patch the path resolution to a garbage file
-    bad = tmp_path / "models" / "db_calibrated.npz"
+    bad = tmp_path / "models" / name
     bad.parent.mkdir()
     bad.write_bytes(b"not an npz")
     real_join = os.path.join
 
     def fake_join(*parts):
-        if parts[-1] == "db_calibrated.npz":
+        if parts[-1] == name:
             return str(bad)
         return real_join(*parts)
 
     monkeypatch.setattr("os.path.join", fake_join)
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        assert db_forward._load_calibrated() is None
+        assert load_calibrated(name) is None
         assert any("unreadable" in str(x.message) for x in w)
     monkeypatch.undo()
     # and the real artifact still loads cleanly
-    loaded = db_forward._load_calibrated()
+    loaded = load_calibrated(name)
     assert loaded is not None and "w1" in loaded
 
 

@@ -13,6 +13,7 @@ from kiri_ocr_spark.operators.model import (
     CharTokenizer,
     NumpyKiriModel,
     get_model,
+    im2col3x3,
     log_softmax,
     pos_enc_1d,
     pos_enc_2d,
@@ -23,6 +24,39 @@ from kiri_ocr_spark.operators.model import (
 @pytest.fixture(scope="module")
 def model() -> NumpyKiriModel:
     return get_model(CFG())
+
+
+def _im2col_oracle(x: np.ndarray, stride: tuple[int, int]) -> np.ndarray:
+    """np.pad + fancy-index im2col: the training conv's former body."""
+    sy, sx = stride
+    B, H, W, C = x.shape
+    xp = np.pad(x, ((0, 0), (1, 1), (1, 1), (0, 0)))
+    oh, ow = (H + sy - 1) // sy, (W + sx - 1) // sx
+    ys = np.arange(oh) * sy
+    xs = np.arange(ow) * sx
+    cols = np.empty((B, oh, ow, 9 * C))
+    for dy in range(3):
+        for dx in range(3):
+            cols[..., (dy * 3 + dx) * C : (dy * 3 + dx + 1) * C] = (
+                xp[:, ys + dy][:, :, xs + dx]
+            )
+    return cols
+
+
+@pytest.mark.parametrize("dtype", [np.float32, np.float64])
+@pytest.mark.parametrize("stride", [(2, 2), (2, 1), (1, 1)])
+def test_im2col3x3_equals_pad_and_gather_oracle(dtype, stride):
+    """The one 3x3 im2col (stem, DB/CRAFT forwards, training backprop)
+    holds every value of the np.pad + fancy-index construction, in the
+    input's dtype, on random shapes including H = 1 and W = 1."""
+    rng = np.random.default_rng(sum(stride) + (dtype is np.float32))
+    shapes = [(1, 1, 1, 1), (2, 1, 7, 3), (1, 6, 1, 2), (3, 2, 2, 1)]
+    shapes += [tuple(int(v) for v in rng.integers(1, 12, size=4)) for _ in range(8)]
+    for shape in shapes:
+        x = rng.standard_normal(shape).astype(dtype)
+        got = im2col3x3(x, stride)
+        assert got.dtype == dtype
+        assert np.array_equal(got, _im2col_oracle(x, stride)), shape
 
 
 def beam_decode_full(model: NumpyKiriModel, mem_row: np.ndarray, steps: bool = False):
