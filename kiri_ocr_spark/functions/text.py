@@ -28,8 +28,10 @@ def nfc_udf(s: pd.Series) -> pd.Series:
 
 
 def collapse_whitespace(col: Column) -> Column:
-    """F2: trim + collapse runs of whitespace to single spaces — native."""
-    return F.regexp_replace(F.trim(col), r"\s+", " ")
+    """F2: collapse runs of whitespace to single spaces, then trim — native.
+    Collapse first: `trim` strips only ' ', so a tab, newline or CR at
+    either end must become a space before it."""
+    return F.trim(F.regexp_replace(col, r"\s+", " "))
 
 
 def normalize_text(col: Column) -> Column:

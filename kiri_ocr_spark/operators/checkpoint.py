@@ -9,13 +9,16 @@ Design (FIXTURES.md §5 schema):
 - the extraction output is written ``partitionBy(part_id)`` with dynamic
   partition-overwrite, so re-processing a partition is idempotent
   (overwrites exactly its own files, an Iceberg-snapshot-commit stand-in);
-- after the output for the pending partitions lands, one lineage+metrics
-  row per partition is appended to the checkpoint table
+- a wave commits in one write: one ``groupBy(doc_id)`` yields each
+  document's spans and lineage partials, and an ``Observation`` in the
+  write's result stage sums them per partition. Then one lineage+metrics
+  row per committed partition is appended to the checkpoint table
   (run_id, part_id, docs_done, spans_done, media_spans, mean_conf,
   kernel_ms, wave_wall_ms, committed_at) — kernel_ms is the TRUE
   per-partition OCR kernel time (sum of per-row batch-time shares the
   kernel stamps), wave_wall_ms the wave-level wall clock shared by every
-  row of the wave;
+  row of the wave; counts and kernel_ms are exact, mean_conf is exact up
+  to summation order;
 - resume = left_anti join of the input against committed part_ids (J7):
   finished partitions are never read past the scan filter, let alone
   recomputed. A crash between output-write and checkpoint-append only
@@ -30,11 +33,12 @@ from __future__ import annotations
 
 import os
 import time
+from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..pipeline import assemble_documents, extract_span_rows
+from ..pipeline import extract_span_rows, ordered_spans
 
 # v2: wall_ms split into kernel_ms (true per-partition kernel time) +
 # wave_wall_ms (per-wave constant). A checkpoint dir written by an older
@@ -99,96 +103,66 @@ def run_extraction(
     docs = with_part_id(docs, n_parts)
     total = 0
     for w in range(waves):
-        wave_docs = docs if waves == 1 else docs.filter(
-            F.col("part_id") % waves == w
-        )
-        total += _run_pending(
-            spark, wave_docs, media, out_dir, ckpt_dir, run_id, n_parts,
-            **extract_kwargs,
-        )
-    return total
+        wave = docs if waves == 1 else docs.filter(F.col("part_id") % waves == w)
+        done = committed_parts(spark, ckpt_dir, run_id)
+        todo = wave.join(F.broadcast(done), "part_id", "left_anti")
 
-
-def _run_pending(
-    spark: SparkSession,
-    docs: DataFrame,
-    media: DataFrame,
-    out_dir: str,
-    ckpt_dir: str,
-    run_id: str,
-    n_parts: int,
-    **extract_kwargs,
-) -> int:
-    """One committed sub-job over ``docs`` (already carrying part_id)."""
-    done = committed_parts(spark, ckpt_dir, run_id)
-    todo = docs.join(F.broadcast(done), "part_id", "left_anti")
-
-    t0 = time.monotonic()
-    rows = with_part_id(
-        extract_span_rows(
-            todo.drop("part_id"), media, **extract_kwargs
-        ),
-        n_parts,
-    )
-    # both the output write and the metrics agg consume `rows`: persist so
-    # the OCR kernel runs ONCE per wave, not twice (and the committed
-    # lineage metrics describe exactly the rows that were written)
-    rows = rows.persist()
-    assembled = with_part_id(
-        assemble_documents(rows.drop("part_id", "conf", "n_lines", "kernel_us")),
-        n_parts,
-    )
-    # per-write dynamic overwrite: replace only the parts this wave wrote,
-    # without changing the session's mode for every later write
-    (
-        assembled.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("part_id")
-        .parquet(out_dir)
-    )
-
-    # lineage + metrics, one row per partition just committed
-    metrics = (
-        rows.groupBy("part_id")
-        .agg(
-            F.countDistinct("doc_id").alias("docs_done"),
-            F.count("*").alias("spans_done"),
-            F.sum(F.when(F.col("kind") == "media", 1).otherwise(0)).alias(
-                "media_spans"
+        t0 = time.monotonic()
+        rows = extract_span_rows(todo.drop("part_id"), media, **extract_kwargs)
+        # one aggregation per document yields its spans and its lineage
+        # partials (A15: kernel_us sums the per-row timings the OCR kernel
+        # stamps, so skewed rows show up in their own partition)
+        assembled = with_part_id(
+            rows.groupBy("doc_id").agg(
+                ordered_spans(),
+                F.count("*").alias("n_spans"),
+                F.count(F.when(F.col("kind") == "media", 1)).alias("n_media"),
+                F.sum("conf").alias("conf_sum"),
+                F.sum("kernel_us").alias("kernel_us"),
             ),
-            F.avg("conf").alias("mean_conf"),
-            # A15: honest per-partition kernel time — the sum of the
-            # per-row timings the OCR kernel stamps inside its row loop
-            # (each row carries its own measured cost, so skewed rows
-            # show up in their partition, unlike a wave-level stamp)
-            (F.sum("kernel_us") / 1000).cast("long").alias("kernel_ms"),
+            n_parts,
         )
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn(
-            "wave_wall_ms",
-            F.lit(int((time.monotonic() - t0) * 1000)).cast("long"),
+        # the per-part sums ride on the output write, above the assembly
+        # exchange: Spark merges a result-stage task's update once, while
+        # a resubmitted map stage could count its rows twice
+        parts = range(w, n_parts, waves)
+        obs = Observation()
+        partials = ("n_spans", "n_media", "conf_sum", "kernel_us")
+        summed = {"docs": F.lit(1), **{c: F.col(c) for c in partials}}
+        observed = assembled.observe(
+            obs,
+            *(
+                F.sum(F.when(F.col("part_id") == p, v)).alias(f"{k}_{p}")
+                for p in parts
+                for k, v in summed.items()
+            ),
         )
-        .withColumn("committed_at", F.current_timestamp())
-        .withColumn(
-            "schema_version", F.lit(CHECKPOINT_SCHEMA_VERSION).cast("int")
+        # per-write dynamic overwrite: replace only the parts this wave
+        # wrote, without changing the session's mode for every later write
+        (
+            observed.drop(*partials)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("part_id")
+            .parquet(out_dir)
         )
-        .select(
-            "run_id",
-            "part_id",
-            "docs_done",
-            "spans_done",
-            "media_spans",
-            "mean_conf",
-            "kernel_ms",
-            "wave_wall_ms",
-            "committed_at",
-            "schema_version",
-        )
-    )
-    pdf = metrics.toPandas()  # small: one row per partition
-    rows.unpersist()
-    if len(pdf):
-        spark.createDataFrame(pdf, CHECKPOINT_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(ckpt_dir)
-    return len(pdf)
+
+        # lineage + metrics, one row per partition just committed (a part
+        # already committed or without documents sums to NULL docs)
+        sums = obs.get
+        wall_ms = int((time.monotonic() - t0) * 1000)
+        now = datetime.now(timezone.utc)
+        lineage = []
+        for p in parts:
+            n_docs, n_spans, n_media, conf, us = (sums[f"{k}_{p}"] for k in summed)
+            if n_docs is not None:
+                lineage.append((
+                    run_id, p, n_docs, n_spans, n_media, conf / n_spans,
+                    us // 1000, wall_ms, now, CHECKPOINT_SCHEMA_VERSION,
+                ))
+        if lineage:
+            spark.createDataFrame(lineage, CHECKPOINT_SCHEMA).coalesce(1).write.mode(
+                "append"
+            ).parquet(ckpt_dir)
+        total += len(lineage)
+    return total

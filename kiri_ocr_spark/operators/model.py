@@ -35,7 +35,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from .recognize import CtcPrefixScorer, ctc_collapse, ctc_forward_score
+from .recognize import CtcPrefixScorer, ctc_collapse
 
 
 @dataclass

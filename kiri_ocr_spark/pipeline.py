@@ -32,7 +32,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .functions.text import normalize_text
@@ -219,20 +219,24 @@ def extract_span_rows(
     return text_rows.unionByName(ocr)
 
 
+def ordered_spans() -> Column:
+    """A8/W9: one document's ordered span sequence, aggregated over its
+    span rows: `ord` = dense rank of offset (array_sort on the
+    offset-first struct, then index via transform)."""
+    return F.expr(
+        """
+        transform(
+          array_sort(collect_list(struct(offset, kind, text, media_ref))),
+          (s, i) -> struct(s.kind as kind, s.text as text,
+                           s.media_ref as media_ref, cast(i as int) as ord)
+        )
+        """
+    ).alias("spans")
+
+
 def assemble_documents(span_rows: DataFrame) -> DataFrame:
-    """A8/W9: per-doc ordered span sequence. `ord` = dense rank of offset
-    (array_sort on the offset-first struct, then index via transform)."""
-    return span_rows.groupBy("doc_id").agg(
-        F.expr(
-            """
-            transform(
-              array_sort(collect_list(struct(offset, kind, text, media_ref))),
-              (s, i) -> struct(s.kind as kind, s.text as text,
-                               s.media_ref as media_ref, cast(i as int) as ord)
-            )
-            """
-        ).alias("spans")
-    )
+    """Per-doc ordered span sequence (`ordered_spans`)."""
+    return span_rows.groupBy("doc_id").agg(ordered_spans())
 
 
 def extract_flat(

@@ -26,6 +26,11 @@ import os
 
 from pyspark.sql import SparkSession
 
+# image rows are fat; keep Arrow batches moderate so the OCR kernel gets
+# steady work without buffering huge byte columns (not a measured optimum;
+# every session builder reads this one value)
+ARROW_BATCH_ROWS = 256
+
 
 def get_spark(
     app_name: str = "kiri-ocr-spark",
@@ -49,9 +54,7 @@ def get_spark(
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # image rows are fat; keep Arrow batches moderate so the OCR kernel
-        # gets steady work without buffering huge byte columns
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         # scan-parallelism floor (guide §6): single-file parquet sources
         # otherwise scan as 1-2 tasks and starve CPU-heavy per-row work
         # (the ANN dot-product scans ran 2 tasks on 32 cores at the

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..functions.text import collapse_whitespace
 from ..pipeline import extract_flat
 
 DOCS_SCHEMA = (
@@ -484,10 +485,7 @@ def stream_dedup_docs(
     schema = "doc_id long, ts timestamp, text string"
     stream = (
         _file_stream(spark, schema, docs_path, max_files_per_trigger)
-        .withColumn(
-            "fingerprint",
-            F.xxhash64(F.expr("trim(regexp_replace(text, '\\\\s+', ' '))")),
-        )
+        .withColumn("fingerprint", F.xxhash64(collapse_whitespace(F.col("text"))))
         .withWatermark("ts", watermark_delay)
         .dropDuplicatesWithinWatermark(["fingerprint"])
     )

@@ -42,7 +42,7 @@ def main() -> int:
     from kiri_ocr_spark.queries import oracle_registry, query_registry
     from kiri_ocr_spark.session import get_spark
 
-    spark = get_spark(master="local[16]", shuffle_partitions=16)
+    spark = get_spark()  # local[SPARK_GRAFT_CPUS or the host's core count]
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:

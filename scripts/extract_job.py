@@ -47,14 +47,13 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from kiri_ocr_spark.operators.checkpoint import committed_parts, run_extraction
+    from kiri_ocr_spark.session import ARROW_BATCH_ROWS
 
     # master/deploy-mode come from spark-submit; only job-level conf here
     spark = (
         SparkSession.builder.appName(f"kiri-extract-{args.run_id}")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "128")
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")

@@ -3,19 +3,27 @@
 from __future__ import annotations
 
 import glob
+import json
+import math
 import shutil
 import os
+import re
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
 
+import kiri_ocr_spark
 from kiri_ocr_spark.fixtures import build_fixture
+from kiri_ocr_spark.operators import checkpoint
 from kiri_ocr_spark.operators.checkpoint import (
     CHECKPOINT_SCHEMA,
     committed_parts,
     run_extraction,
     with_part_id,
 )
+from kiri_ocr_spark.pipeline import extract_span_rows
 
 N_PARTS = 8
 
@@ -218,3 +226,181 @@ def test_run_extraction_leaves_session_overwrite_mode_alone(
         assert spark.conf.get(key) == "static"
     finally:
         spark.conf.set(key, prior)
+
+
+COUNTS = ["docs_done", "spans_done", "media_spans"]
+
+
+def _lineage(spark, ckpt):
+    return (
+        spark.read.parquet(ckpt)
+        .select("part_id", *COUNTS, "mean_conf", "kernel_ms")
+        .toPandas()
+        .sort_values("part_id")
+        .reset_index(drop=True)
+    )
+
+
+def _assert_same_lineage(got, ref, exact):
+    assert got["part_id"].tolist() == ref["part_id"].tolist()
+    assert got[exact].equals(ref[exact]), (got, ref)
+    for a, b in zip(got["mean_conf"], ref["mean_conf"]):
+        assert math.isclose(a, b, rel_tol=1e-12, abs_tol=0.0), (a, b)
+
+
+def test_lineage_equals_groupby_over_the_same_span_rows(
+    spark, fixture_tables, tmp_path, monkeypatch
+):
+    """The observed per-part sums equal the per-part groupBy of the span
+    rows the wave wrote: counts and kernel_ms exactly, mean_conf within
+    1e-12 relative (only the summation order differs)."""
+    docs, media = fixture_tables
+    rows = extract_span_rows(docs, media).cache()  # fixed kernel_us stamps
+    rows.count()
+    monkeypatch.setattr(checkpoint, "extract_span_rows", lambda *a, **k: rows)
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    n = run_extraction(spark, docs, media, out, ckpt, "eq", n_parts=N_PARTS)
+    assert n == N_PARTS
+    ref = (
+        with_part_id(rows, N_PARTS)
+        .groupBy("part_id")
+        .agg(
+            F.countDistinct("doc_id").alias("docs_done"),
+            F.count("*").alias("spans_done"),
+            F.sum(F.when(F.col("kind") == "media", 1).otherwise(0)).alias(
+                "media_spans"
+            ),
+            F.avg("conf").alias("mean_conf"),
+            (F.sum("kernel_us") / 1000).cast("long").alias("kernel_ms"),
+        )
+        .toPandas()
+        .sort_values("part_id")
+        .reset_index(drop=True)
+    )
+    rows.unpersist()
+    _assert_same_lineage(_lineage(spark, ckpt), ref, COUNTS + ["kernel_ms"])
+
+
+def _tree(plan: str) -> list[str]:
+    """The (final, under AQE) operator tree of a formatted physical plan."""
+    tree = plan.split("\n\n")[0]
+    if "== Final Plan ==" in tree:
+        tree = tree.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    return tree.splitlines()
+
+
+def _sql_executions(spark):
+    """The session's SQL status store: its newest executions, in id order."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return spark._jsparkSession.sharedState().statusStore().executionsList()
+
+
+def test_lineage_observed_in_the_write_result_stage(spark, fixture_tables, tmp_path):
+    """Plan law: the output write's CollectMetrics sits above the assembly
+    exchange (hashpartitioning on doc_id) with no exchange in between, so
+    the observation runs in the write's result stage, where Spark merges
+    each task's metrics once, not in a map stage that a resubmission can
+    re-run."""
+    docs, media = fixture_tables
+    docs = docs.filter(F.col("doc_id") % 4 == 0)
+    execs = _sql_executions(spark)
+    last_id = execs.apply(execs.size() - 1).executionId() if execs.size() else -1
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    run_extraction(spark, docs, media, out, ckpt, "plan", n_parts=4)
+    execs = _sql_executions(spark)
+    plans = []
+    for i in range(execs.size() - 1, -1, -1):
+        if execs.apply(i).executionId() <= last_id:
+            break
+        plans.append(execs.apply(i).physicalPlanDescription())
+    # the output write and the lineage append; nothing else executes
+    assert len(plans) == 2, plans
+    plan = next(p for p in plans if "CollectMetrics" in p)
+    exchange_args = re.findall(r"\((\d+)\) Exchange\nInput.*\nArguments: (.*)", plan)
+    doc_exchanges = {
+        f"Exchange ({i})"
+        for i, args in exchange_args
+        if args.startswith("hashpartitioning(doc_id")
+    }
+    assert doc_exchanges, plan
+    tree = [ln.strip(" +-:") for ln in _tree(plan)]
+    top = next(i for i, ln in enumerate(tree) if ln.startswith("CollectMetrics"))
+    below = next(ln for ln in tree[top + 1 :] if ln.startswith("Exchange ("))
+    assert below in doc_exchanges, plan
+    assert not doc_exchanges & set(tree[:top]), plan
+
+
+_RETRIED_RUN = r"""
+import json, os, sys
+
+from pyspark.sql import functions as F
+
+import kiri_ocr_spark.pipeline as pipeline
+from kiri_ocr_spark.fixtures import build_fixture
+from kiri_ocr_spark.operators.checkpoint import run_extraction
+from kiri_ocr_spark.session import get_spark
+
+sf_dir, work = sys.argv[1:]
+marker = os.path.join(work, "failed_once")
+page_kernel = pipeline.page_kernel
+
+
+def flaky_page_kernel(*args):
+    ocr = page_kernel(*args)
+
+    def run(pngs, memo):
+        # the first kernel call of the job fails; every later one runs
+        try:
+            os.close(os.open(marker, os.O_CREAT | os.O_EXCL))
+        except FileExistsError:
+            return ocr(pngs, memo)
+        raise RuntimeError("injected one-time OCR kernel failure")
+
+    return run
+
+
+spark = get_spark(app_name="retry", master="local[2,2]", shuffle_partitions=4)
+spark.sparkContext.setLogLevel("OFF")
+docs, media = build_fixture(spark, sf_dir)
+docs = docs.filter(F.col("doc_id") % 4 == 0).cache()
+lineage = {}
+for name in ("clean", "retried"):
+    if name == "retried":
+        pipeline.page_kernel = flaky_page_kernel
+    out, ckpt = (os.path.join(work, name, d) for d in ("out", "ckpt"))
+    run_extraction(spark, docs, media, out, ckpt, name, n_parts=4)
+    lineage[name] = (
+        spark.read.parquet(ckpt)
+        .select("part_id", "docs_done", "spans_done", "media_spans", "mean_conf")
+        .orderBy("part_id")
+        .toPandas()
+        .to_dict("list")
+    )
+spark.stop()
+print(json.dumps(lineage))
+"""
+
+
+def test_task_retry_leaves_lineage_counts_exact(sf_tiny, tmp_path):
+    """A session that retries tasks (local[2,2]) and an OCR kernel that
+    fails once: the retried task's work is counted once, so every
+    lineage count equals a clean run's. Own JVM: a SparkContext's retry
+    budget is fixed at start."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(kiri_ocr_spark.__file__)))
+    r = subprocess.run(
+        [sys.executable, "-c", _RETRIED_RUN, sf_tiny, str(tmp_path)],
+        capture_output=True,
+        text=True,
+        cwd=root,
+        env={**os.environ, "PYTHONPATH": root},
+        timeout=900,
+    )
+    assert r.returncode == 0, r.stderr[-4000:]
+    assert (tmp_path / "failed_once").exists()  # the failure did happen
+    got = json.loads(r.stdout.strip().splitlines()[-1])
+    clean, retried = got["clean"], got["retried"]
+    assert len(clean["part_id"]) == 4
+    for col in ["part_id"] + COUNTS:
+        assert retried[col] == clean[col], (col, got)
+    for a, b in zip(retried["mean_conf"], clean["mean_conf"]):
+        assert math.isclose(a, b, rel_tol=1e-12, abs_tol=0.0), (a, b)

@@ -111,10 +111,14 @@ def test_normalizer_matches_duckdb(spark, sf_tiny):
 
 def test_normalizer_idempotent_and_nfc(spark):
     df = spark.createDataFrame(
-        [("  a \t b\n\nc  ",), ("é",), ("ខា",)], "t string"
+        [("  a \t b\n\nc  ",), ("é",), ("ខា",), ("\tfoo  bar\n",), ("x\r\n",)],
+        "t string",
     )
     out = df.select(normalize_text(F.col("t")).alias("n")).collect()
     assert out[0]["n"] == "a b c"
+    # a tab, newline or CR at either end is trimmed like a space
+    assert out[3]["n"] == "foo bar"
+    assert out[4]["n"] == "x"
     assert out[1]["n"] == "é"  # NFC composes e + combining acute
     once = out[2]["n"]
     again = (
