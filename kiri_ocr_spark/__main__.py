@@ -3,15 +3,18 @@
 
     python -m kiri_ocr_spark extract page.png [--out-dir D] [--json]
                                               [--overlay] [--html]
+                                              [--method M] [--model W]
     python -m kiri_ocr_spark batch <png_dir> --out <parquet_dir>
                                    [--recognizer trained|template]
                                    [--detector legacy|db|craft]
 
-`extract` runs the detect+recognize kernels on one image driver-side (no
-Spark session — the reference's single-image path is single-machine too)
-and writes the reference's sink set: extracted_text.txt (S7),
-ocr_results.json (S8, indent=2 ensure_ascii=False like cli.py:120-124),
-boxes overlay PNG (S9) and HTML report (S10) on request.
+`extract` runs the OCR class (ocr.py) on one image driver-side (no
+Spark session — the reference's single-image path is single-machine too):
+`--method` picks the line finder and `--model` the recognizer, each
+independent of the other. It writes the reference's sink set:
+extracted_text.txt (S7), ocr_results.json (S8, indent=2
+ensure_ascii=False like cli.py:120-124), boxes overlay PNG (S9) and HTML
+report (S10) on request.
 
 `batch` is the distributed path the reference lacks: a
 `spark.read.format("binaryFile")` scan (SURVEY §2.1 S1 mapping) over a
@@ -29,41 +32,19 @@ import sys
 
 
 def run_extract(args: argparse.Namespace) -> int:
-    from .operators.detect import detect_lines
-    from .operators.page import read_page, tight_box
-    from .operators.recognize import recognize_line
+    from .ocr import OCR
+    from .operators.page import read_page
 
     with open(args.image, "rb") as f:
-        gray, ink = read_page(f.read())
-    if args.model or args.method != "projection":
-        # the OCR class: --model routes recognition through its neural
-        # decode paths (--decode picks the mode); --method picks the
-        # reference facade's detector (detector/__init__.py:34); craft/db
-        # run the in-repo numpy forwards, and their boxes become text rows
-        # through TextDetector.detect_line_boxes (merge + blank-row band
-        # split, db slow score)
-        from .ocr import OCR
-
-        ocr = OCR(
-            model_path=args.model,
-            det_method="legacy" if args.method == "projection" else args.method,
-            decode_method=args.decode if args.model else "fast",
-        )
-        return _write_extract_sinks(args, gray, ocr.process_document(gray))
-    results = []
-    for i, box in enumerate(detect_lines(gray, ink=ink), start=1):
-        tight = tight_box(ink, box)
-        text, conf = ("", 0.0) if tight is None else recognize_line(ink, tight)
-        results.append(
-            {
-                "box": [int(v) for v in box[:4]],
-                "text": text,
-                "confidence": round(float(conf), 4),
-                "det_confidence": round(float(box[4]), 4),
-                "line_number": i,
-            }
-        )
-    return _write_extract_sinks(args, gray, results)
+        gray, _ = read_page(f.read())
+    # --method picks the line finder, --model the recognizer (--decode its
+    # mode); without --model the glyph templates read the lines
+    ocr = OCR(
+        model_path=args.model,
+        det_method=args.method,
+        decode_method=args.decode if args.model else "fast",
+    )
+    return _write_extract_sinks(args, gray, ocr.process_document(gray))
 
 
 def _write_extract_sinks(args, gray, results) -> int:
@@ -74,6 +55,11 @@ def _write_extract_sinks(args, gray, results) -> int:
     from .imaging.overlay import draw_overlay, html_report
     from .imaging.png import encode_gray
 
+    results = [
+        {**r, "confidence": round(r["confidence"], 4),
+         "det_confidence": round(r["det_confidence"], 4)}
+        for r in results
+    ]
     full_text = "\n".join(r["text"] for r in results)
     out_dir = args.out_dir
     os.makedirs(out_dir, exist_ok=True)
@@ -142,9 +128,10 @@ def main(argv: list[str] | None = None) -> int:
         "--method",
         default="projection",
         choices=["projection", "craft", "db", "legacy"],
-        help="detector: 'projection' (CC+projection-profile exactness "
+        help="line finder: 'projection' (CC+projection-profile exactness "
         "path, default) or the reference facade methods craft/db/legacy "
-        "(craft/db run the in-repo numpy forwards by default)",
+        "(craft/db run the in-repo numpy forwards by default); it holds "
+        "with --model too",
     )
     ex.add_argument(
         "--model",

@@ -43,11 +43,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions.text import collapse_whitespace
 from .imaging.glyphs import SCALE, render_page
 from .imaging.png import encode_gray, encode_rgb
 
 MEDIA_SCHEMA = "media_ref string, png_bytes binary, width int, height int"
-SPANS_TYPE = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 
 
 def _tok(base: str, i: int, toks: str = "toks", nt: str = "nt") -> str:
@@ -63,7 +63,7 @@ def with_token_columns(df: DataFrame) -> DataFrame:
     """Attach toks/nt/n_text/n_media per the spec to a flat docs table."""
     return df.select(
         "doc_id",
-        F.expr("split(trim(regexp_replace(text, '\\\\s+', ' ')), ' ')").alias("toks"),
+        F.split(collapse_whitespace("text"), " ").alias("toks"),
     ).select(
         "doc_id",
         "toks",

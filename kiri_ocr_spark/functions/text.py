@@ -27,10 +27,11 @@ def nfc_udf(s: pd.Series) -> pd.Series:
     return s.map(lambda v: unicodedata.normalize("NFC", v) if v is not None else None)
 
 
-def collapse_whitespace(col: Column) -> Column:
-    """F2: collapse runs of whitespace to single spaces, then trim — native.
-    Collapse first: `trim` strips only ' ', so a tab, newline or CR at
-    either end must become a space before it."""
+def collapse_whitespace(col: Column | str) -> Column:
+    """F2: collapse runs of whitespace to single spaces, then trim — native;
+    the one Spark-side copy of the rule. Collapse first: `trim` strips
+    only ' ', so a tab, newline or CR at either end must become a space
+    before it."""
     return F.trim(F.regexp_replace(col, r"\s+", " "))
 
 

@@ -12,9 +12,10 @@ reference-parity convenience wrapper for one image at a time — exactly
 the role the reference's OCR class plays (its own batch story is a
 Python loop). Method/decode switches mirror the reference:
 
-- ``det_method``: 'legacy' | 'db' | 'craft' through the TextDetector
-  facade (db/craft resolve the in-repo numpy forwards by default;
-  legacy fallback with a warning only if resolution fails).
+- ``det_method``: 'projection' | 'legacy' | 'db' | 'craft', the
+  names of ``page.line_finder``: the projection line bands, or the
+  TextDetector facade (db/craft resolve the in-repo numpy forwards by
+  default; legacy fallback with a warning only if resolution fails).
 - ``decode_method`` (core.py:141-158 normalization, aliases included):
   'fast'/'ctc' -> the loaded model's CTC head when ``model_path`` is
   given (the reference's fast path; the in-sandbox-trained artifacts
@@ -44,11 +45,9 @@ from typing import Iterator, Union
 import numpy as np
 
 from .imaging.png import rgb_to_gray
-from .operators.detect import orient_and_binarize
-from .operators.facade import TextDetector
+from .operators.detect import detect_lines, orient_and_binarize, split_words
 from .operators.model import decode_crops_memo, get_model
-from .operators.page import line_crop, read_page, tight_box
-from .operators.recognize import recognize_line
+from .operators.page import line_finder, read_lines, read_page
 
 _DECODE_ALIASES = {
     "fast": "ctc",
@@ -76,22 +75,12 @@ class OCR:
         model_path: str | None = None,
         det_method: str = "legacy",
         decode_method: str = "fast",
-        heatmap_fn=None,
-        padding: int = 0,
     ):
         self.decode_method = _normalize_decode_method(decode_method)
-        # db runs component-pixel scoring (det_db_score_mode='slow',
-        # DBNet's box_score_slow / PaddleOCR's det_db_score_mode): the
-        # default fast quad-mean drops a fused two-stacked-lines
-        # component whose minAreaRect spans the inter-line gap; the slow
-        # score keeps it and detect_line_boxes' row-normalize step
-        # (merge + blank-row band split) separates the lines. The bare
-        # TextDetector facade keeps the reference's fast default.
-        det_kwargs = {"det_db_score_mode": "slow"} if det_method == "db" else {}
-        self.detector = TextDetector(
-            method=det_method, heatmap_fn=heatmap_fn, **det_kwargs
-        )
-        self.padding = padding
+        self._find_lines = line_finder(det_method)
+        # no weights shipped: the template path is this engine's CTC
+        # exactness construction
+        self._template = self.decode_method == "ctc" and model_path is None
         self._model = None
         self._model_path = model_path
 
@@ -119,35 +108,30 @@ class OCR:
     def _regions(self, image, mode: str):
         """(gray, ink, boxes) for ``mode`` 'lines' | 'words' — the one
         region selection process_document and the stream generator share,
-        so both see identical regions ('same text, token at a time')."""
+        so both see identical regions ('same text, token at a time').
+        Words are detect.split_words of the projection lines for every
+        det_method, like the reference facade, whose neural backends
+        detect lines only (detector/__init__.py:293-297)."""
         gray, ink = self._load_page(image)
         if mode == "lines":
-            boxes = self.detector.detect_line_boxes(gray, ink)
+            boxes = self._find_lines(gray, ink)
         elif mode == "words":
-            boxes = [(bx, by, bw, bh, 1.0) for bx, by, bw, bh in
-                     self.detector.detect_words(gray)]
+            boxes = [(*w, 1.0) for line in detect_lines(gray, ink=ink)
+                     for w in split_words(ink, line)]
         else:
             raise ValueError(f"unknown mode {mode!r}")
         return gray, ink, boxes
 
-    # -- recognition per region --------------------------------------------
-
-    def _recognize_region(self, gray: np.ndarray, ink: np.ndarray, box) -> tuple[str, float]:
-        box = tight_box(ink, box, self.padding)
-        if box is None:
-            return "", 0.0
-        if self.decode_method == "ctc" and self._model_path is None:
-            # no weights shipped: the template path is this engine's CTC
-            # exactness construction
-            return recognize_line(ink, box)
-        # neural paths: line_crop restores the training geometry (the
-        # renderer's background margins, padded with the crop's OWN
-        # background luma) before resize — the in-sandbox-trained
-        # artifact's preprocessing contract, the role the reference's
-        # normalize constants play for its weights.
-        return decode_crops_memo(
-            self.model, [line_crop(gray, box)], {}, method=self.decode_method
-        )[0]
+    def _read_regions(self, gray: np.ndarray, ink: np.ndarray, boxes) -> Iterator:
+        """(text, conf) per box, lazily: page.read_lines, the page
+        kernel's own line step; a neural crop decodes in its own
+        decode_crops_memo call (fp32, line_crop's training geometry)."""
+        for item in read_lines(gray, ink, boxes, self._template):
+            if isinstance(item, np.ndarray):
+                (item,) = decode_crops_memo(
+                    self.model, [item], {}, method=self.decode_method
+                )
+            yield item
 
     # -- reference public surface ------------------------------------------
 
@@ -157,8 +141,8 @@ class OCR:
         line_number."""
         gray, ink, boxes = self._regions(image, mode)
         results = []
-        for i, box in enumerate(boxes, start=1):
-            text, conf = self._recognize_region(gray, ink, box)
+        texts = self._read_regions(gray, ink, boxes)
+        for i, (box, (text, conf)) in enumerate(zip(boxes, texts), start=1):
             results.append(
                 {
                     "box": [int(v) for v in box[:4]],
@@ -201,6 +185,7 @@ class OCR:
         gray, ink, boxes = self._regions(image, mode)
         total = len(boxes)
         all_texts: list[str] = []
+        texts = self._read_regions(gray, ink, boxes)
         for region_num, box in enumerate(boxes, start=1):
             yield {
                 "token": "",
@@ -215,7 +200,7 @@ class OCR:
                 "box": [int(v) for v in box[:4]],
                 "det_confidence": float(box[4]) if len(box) > 4 else 1.0,
             }
-            text, conf = self._recognize_region(gray, ink, box)
+            text, conf = next(texts)
             so_far = ""
             for step, ch in enumerate(text, start=1):
                 so_far += ch

@@ -226,16 +226,15 @@ def line_boxes_from_groups(
     return merged[np.argsort(merged[:, 1], kind="stable")]
 
 
-def reading_order(boxes: np.ndarray, tol_frac: float = 0.7) -> np.ndarray:
-    """W1: facade reading-order sort — group boxes into visual lines while
-    |cy - running mean(line cy)| < tol_frac * median_h, sort each line by
-    center-x, flatten top-to-bottom (detector/__init__.py:245-291).
+def _row_major(boxes: np.ndarray, tol_frac: float, row_key: np.ndarray) -> np.ndarray:
+    """The running-mean row loop both reading orders share: group boxes
+    into visual lines while |cy - running mean(line cy)| < tol_frac *
+    median_h, sort each line by ``row_key``, flatten top-to-bottom.
     Returns row indices into ``boxes`` in reading order."""
     if len(boxes) == 0:
         return np.zeros(0, dtype=np.int64)
     med_h = float(np.median(boxes[:, 3]))
     cy = boxes[:, 1] + boxes[:, 3] / 2.0
-    cx = boxes[:, 0] + boxes[:, 2] / 2.0
     order = np.argsort(cy, kind="stable")
     lines: list[list[int]] = [[int(order[0])]]
     sums: list[float] = [float(cy[order[0]])]
@@ -251,36 +250,22 @@ def reading_order(boxes: np.ndarray, tol_frac: float = 0.7) -> np.ndarray:
     result: list[int] = []
     for line in lines:
         arr = np.array(line)
-        result.extend(arr[np.argsort(cx[arr], kind="stable")].tolist())
+        result.extend(arr[np.argsort(row_key[arr], kind="stable")].tolist())
     return np.array(result, dtype=np.int64)
+
+
+def reading_order(boxes: np.ndarray, tol_frac: float = 0.7) -> np.ndarray:
+    """W1: facade reading-order sort — rows at tol_frac * median_h, each
+    sorted by center-x (detector/__init__.py:245-291)."""
+    return _row_major(boxes, tol_frac, boxes[:, 0] + boxes[:, 2] / 2.0)
 
 
 def reading_order_db(boxes: np.ndarray, tol_frac: float = 0.8) -> np.ndarray:
     """W2: DB-detector reading-order variant (db/model.py:265-333) — same
-    running-mean line grouping as W1 but tolerance 0.8*median_h and
-    within-line sort by LEFT EDGE x, not center. The two variants disagree
-    on purpose (SURVEY §2.5); keep both."""
-    if len(boxes) == 0:
-        return np.zeros(0, dtype=np.int64)
-    med_h = float(np.median(boxes[:, 3]))
-    cy = boxes[:, 1] + boxes[:, 3] / 2.0
-    order = np.argsort(cy, kind="stable")
-    lines: list[list[int]] = [[int(order[0])]]
-    sums: list[float] = [float(cy[order[0]])]
-    for idx in order[1:]:
-        idx = int(idx)
-        mean_cy = sums[-1] / len(lines[-1])
-        if abs(cy[idx] - mean_cy) < tol_frac * med_h:
-            lines[-1].append(idx)
-            sums[-1] += float(cy[idx])
-        else:
-            lines.append([idx])
-            sums.append(float(cy[idx]))
-    result: list[int] = []
-    for line in lines:
-        arr = np.array(line)
-        result.extend(arr[np.argsort(boxes[arr, 0], kind="stable")].tolist())
-    return np.array(result, dtype=np.int64)
+    rows as W1 at tolerance 0.8*median_h, each sorted by LEFT EDGE x, not
+    center. The two variants disagree on purpose (SURVEY §2.5); keep
+    both."""
+    return _row_major(boxes, tol_frac, boxes[:, 0])
 
 
 def bbox_hull(boxes: np.ndarray) -> np.ndarray:

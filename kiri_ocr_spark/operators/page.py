@@ -10,6 +10,9 @@ one quarantine policy, and cut recognizer-ready line crops.
     tight_box   a detector box shrunk to the ink inside it
     line_crop   the trained recognizer's crop contract
                 (pad_training_margins + resize_keep_ratio_pad)
+    line_finder a detector name -> fn(gray, ink) -> (n, 5) line boxes
+    read_lines  the per-page line step: per box ("", 0.0), the template
+                recognizer's (text, conf), or a line_crop to decode
     page_kernel decode -> orient/binarize -> detect -> crop -> recognize,
                 the kernel of every line-recognizing query
 
@@ -27,6 +30,7 @@ import numpy as np
 
 from ..imaging.png import decode_gray
 from . import detect
+from .recognize import recognize_line
 
 # the per-row quarantine policy of every page kernel — each failure mode
 # of a missing or corrupt-but-magic-valid payload: bad magic / missing
@@ -65,15 +69,14 @@ def map_pages(blobs: Iterable, fn: Callable, oriented: bool = True) -> Iterator:
         yield out
 
 
-def tight_box(ink: np.ndarray, box, pad: int = 0) -> tuple[int, int, int, int] | None:
-    """``(x, y, w, h)`` of the ink inside ``box`` grown by ``pad`` pixels
-    (clipped to the page), or None when that region holds no ink (its
-    line reads as ``("", 0.0)``). Detector paddings vary by method; the
-    template recognizer's unit-scale subsampling needs the crop on the
-    glyph grid, and line_crop re-pads a tight crop."""
+def tight_box(ink: np.ndarray, box) -> tuple[int, int, int, int] | None:
+    """``(x, y, w, h)`` of the ink inside ``box``, or None when the box
+    holds no ink (its line reads as ``("", 0.0)``). Detector paddings vary
+    by method; the template recognizer's unit-scale subsampling needs the
+    crop on the glyph grid, and line_crop re-pads a tight crop."""
     x, y, w, h = (int(v) for v in box[:4])
-    x0, y0 = max(x - pad, 0), max(y - pad, 0)
-    sub = ink[y0 : y + h + pad, x0 : x + w + pad]
+    x0, y0 = max(x, 0), max(y, 0)
+    sub = ink[y0 : y + h, x0 : x + w]
     rows = np.flatnonzero(sub.any(axis=1))
     if rows.size == 0:
         return None
@@ -96,55 +99,72 @@ def line_crop(gray: np.ndarray, box) -> np.ndarray:
     )
 
 
+def line_finder(det_method: str) -> Callable:
+    """``find(gray, ink) -> (n, 5)`` x y w h conf line boxes in reading
+    order: 'projection' = detect.detect_lines (the CC + projection-profile
+    exactness path); 'legacy' | 'db' | 'craft' =
+    TextDetector(method).detect_line_boxes (the reference's
+    process_document(method=...), detector/__init__.py:161-192). db scores
+    boxes by component pixels (det_db_score_mode='slow', DBNet's
+    box_score_slow): the fast quad-mean drops a fused two-stacked-lines
+    component whose minAreaRect spans the inter-line gap, which
+    detect_line_boxes' band split would separate. The bare facade keeps
+    the reference's fast default."""
+    if det_method == "projection":
+        return lambda gray, ink: detect.detect_lines(gray, ink=ink)
+    from .facade import TextDetector
+
+    det_kwargs = {"det_db_score_mode": "slow"} if det_method == "db" else {}
+    return TextDetector(method=det_method, **det_kwargs).detect_line_boxes
+
+
+def read_lines(gray: np.ndarray, ink: np.ndarray, boxes, template: bool) -> Iterator:
+    """The per-page line step, one item per detector box in order:
+    ``("", 0.0)`` for a box without ink; else the glyph-template
+    recognizer's ``(text, conf)`` on the box's tight ink when
+    ``template``, or the tight box's line_crop (an ndarray) for the
+    caller's trained decode."""
+    for box in boxes:
+        tight = tight_box(ink, box)
+        if tight is None:
+            yield "", 0.0
+        elif template:
+            yield recognize_line(ink, tight)
+        else:
+            yield line_crop(gray, tight)
+
+
 def page_kernel(
     model_path: str | None, det_method: str = "legacy", decode_method: str = "ctc"
 ):
     """The one page kernel every line-recognizing query runs: read ->
-    detect lines -> tight boxes -> recognize each line.
+    line_finder -> read_lines -> decode the batch's crops.
 
     Returns ``ocr(blobs, memo) -> (lines, row_us)``: ``lines[i]`` is page
     i's ``[(text, conf), ...]`` in reading order, or None when the page is
     quarantined; ``row_us[i]`` is page i's own kernel time in µs. Build it
     executor-side (inside the mapInPandas function): it loads the model.
 
-    ``det_method``: 'legacy' = the CC line finder (detect_lines);
-    'db' | 'craft' = the calibrated conv-forward detectors through
-    TextDetector.detect_line_boxes (W3 row clustering + blank-row band
-    split, which leaves each box tight to its ink; db with the slow
-    component-pixel score) — the reference's
-    process_document(method='db'|'craft'), detector/__init__.py:161-192
-    -> core.py:770-792.
+    ``det_method``: 'legacy' (the projection finder) | 'db' | 'craft'.
 
-    ``model_path`` None: the glyph-template recognizer (recognize_line on
-    the ink mask; ``memo`` is unused, the template path memoizes per
-    worker). Otherwise the trained transformer (core.py:719-793 always
-    decodes through the model): line_crop crops are stacked ACROSS the
-    batch's pages into one decode_crops_memo call (``decode_method``
-    'ctc' or 'beam'); ``memo`` is its caller-owned, per-partition memo.
-    The model loads once per Python worker (M8 get_model cache)."""
-    model = detector = None
-    if model_path is None:
-        from .recognize import recognize_line
-    else:
+    ``model_path`` None: the glyph-template recognizer (``memo`` is
+    unused, the template path memoizes per worker). Otherwise the trained
+    transformer (core.py:719-793 always decodes through the model): the
+    line crops are stacked ACROSS the batch's pages into one
+    decode_crops_memo call (``decode_method`` 'ctc' or 'beam'); ``memo``
+    is its caller-owned, per-partition memo. The model loads once per
+    Python worker (M8 get_model cache)."""
+    model = None
+    if model_path is not None:
         from .model import decode_crops_memo, get_model
 
         model = get_model(path=model_path)
-    if det_method != "legacy":
-        from .facade import TextDetector
-
-        det_kwargs = {"det_db_score_mode": "slow"} if det_method == "db" else {}
-        detector = TextDetector(method=det_method, **det_kwargs)
+    # engine 'legacy' is the projection finder (span extraction, batch CLI)
+    find = line_finder("projection" if det_method == "legacy" else det_method)
 
     def page(gray: np.ndarray, ink: np.ndarray) -> list:
-        if detector is None:
-            boxes = detect.detect_lines(gray, ink=ink)
-        else:
-            boxes = detector.detect_line_boxes(gray, ink)
-        tight = [tight_box(ink, b) for b in boxes]
-        if model is None:
-            return [("", 0.0) if b is None else recognize_line(ink, b) for b in tight]
-        # a page's crops (None for an inkless box) wait for the batch decode
-        return [None if b is None else line_crop(gray, b) for b in tight]
+        # a page's crops wait for the batch decode
+        return list(read_lines(gray, ink, find(gray, ink), model is None))
 
     def ocr(blobs, memo: dict) -> tuple[list, list[int]]:
         pages: list = []
@@ -160,7 +180,7 @@ def page_kernel(
             t_prev = t_now
         if model is None:
             return pages, row_us
-        crops = [c for p in pages if p for c in p if c is not None]
+        crops = [c for p in pages if p for c in p if isinstance(c, np.ndarray)]
         # one stacked decode for the whole batch (ENCODE_CHUNK-sized fp32
         # encodes); its cost is spread over the owning rows
         decoded = iter(
@@ -170,8 +190,8 @@ def page_kernel(
         lines = []
         for i, p in enumerate(pages):
             if p is not None:
-                row_us[i] += per * sum(c is not None for c in p)
-                p = [("", 0.0) if c is None else next(decoded) for c in p]
+                row_us[i] += per * sum(isinstance(c, np.ndarray) for c in p)
+                p = [next(decoded) if isinstance(c, np.ndarray) else c for c in p]
             lines.append(p)
         return lines, row_us
 

@@ -24,14 +24,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .fixtures import _tok, build_fixture, expected_sql
-from .functions.text import cer, char_accuracy, normalize_text
+from .functions.text import cer, char_accuracy, collapse_whitespace, normalize_text
 from .operators.model import trained_model_path  # noqa: F401  (bench, perfbench)
 from .pipeline import extract_flat
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-# normalized text + token helpers shared by several queries (both dialects)
-_SPARK_NORM = "trim(regexp_replace(text, '\\\\s+', ' '))"
+# the oracles' whitespace normalizer (the Spark side is collapse_whitespace)
 _DUCK_NORM = "trim(regexp_replace(text, '\\s+', ' ', 'g'))"
 
 
@@ -386,7 +385,7 @@ FROM g
 
 def q_cer_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _spread(_t(spark, sf_dir, "documents").select("doc_id", "lang", "text"))
-    d = d.select("doc_id", "lang", F.expr(_SPARK_NORM).alias("gt"))
+    d = d.select("doc_id", "lang", collapse_whitespace("text").alias("gt"))
     d = d.withColumn(
         "pred",
         F.when(F.col("doc_id") % 3 == 0, F.regexp_replace("gt", "e", "")).otherwise(
@@ -563,7 +562,7 @@ SELECT l_orderkey, CAST(rk AS INT) AS rk, l_linenumber FROM (
 
 def _corpus_with_exact_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.expr(_SPARK_NORM).alias("norm")
+        "doc_id", collapse_whitespace("text").alias("norm")
     )
     dups = d.filter(F.col("doc_id") % 7 == 0).select(
         (F.col("doc_id") + 100000).alias("doc_id"), "norm"
@@ -610,7 +609,7 @@ _DUCK_SHINGLES3 = (
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         _t(spark, sf_dir, "documents")
-        .select("doc_id", F.expr(_SPARK_NORM).alias("norm"))
+        .select("doc_id", collapse_whitespace("text").alias("norm"))
         .select("doc_id", F.expr(_SPARK_SHINGLES3).alias("sh"))
     )
     a = d.alias("a")
@@ -693,7 +692,7 @@ def _near_dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     if key not in _NEAR_DUP_CORPUS_CACHE:
         d = _spread(
             _t(spark, sf_dir, "documents").select("doc_id", "text")
-        ).select("doc_id", F.expr(_SPARK_NORM).alias("norm"))
+        ).select("doc_id", collapse_whitespace("text").alias("norm"))
         near = d.filter(F.col("doc_id") % 5 == 0).select(
             (F.col("doc_id") + 100000).alias("doc_id"),
             F.expr("substring(norm, 11)").alias("norm"),
@@ -1287,7 +1286,7 @@ SELECT a, b, jac FROM scored WHERE jac >= {_JACCARD_THRESHOLD}
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text")).select(
-        "doc_id", F.expr(_SPARK_NORM).alias("norm")
+        "doc_id", collapse_whitespace("text").alias("norm")
     )
     sh = d.select(
         "doc_id", F.explode(F.expr(_SPARK_SHINGLES4)).alias("sh")
@@ -1342,11 +1341,13 @@ _BPE_RE = "[a-z]+|[0-9]|[^a-z0-9 ]"
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents").select(
         "lang",
-        F.expr(f"size(split({_SPARK_NORM}, ' '))").alias("n_tok"),
-        F.expr(
-            f"size(regexp_extract_all(lower({_SPARK_NORM}), '{_BPE_RE}', 0))"
+        F.size(F.split(collapse_whitespace("text"), " ")).alias("n_tok"),
+        F.size(
+            F.regexp_extract_all(
+                F.lower(collapse_whitespace("text")), F.lit(_BPE_RE), 0
+            )
         ).alias("n_bpe"),
-        F.expr(f"length({_SPARK_NORM})").alias("n_chars"),
+        F.length(collapse_whitespace("text")).alias("n_chars"),
     )
     return d.groupBy("lang").agg(
         F.count("*").alias("docs"),
@@ -1384,7 +1385,7 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     stop_pred = " or ".join(f"t = '{s}'" for s in _STOPWORDS)
     return _t(spark, sf_dir, "documents").select(
         "doc_id",
-        F.expr(f"split({_SPARK_NORM}, ' ')").alias("toks"),
+        F.split(collapse_whitespace("text"), " ").alias("toks"),
     ).select(
         "doc_id",
         F.expr("size(toks)").alias("n_tokens"),
@@ -1432,7 +1433,7 @@ _REP_DUP_THRESH = 0.50    # duplicate-bigram fraction above this -> spammy
 
 def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text")).select(
-        "doc_id", F.expr(f"split({_SPARK_NORM}, ' ')").alias("toks")
+        "doc_id", F.split(collapse_whitespace("text"), " ").alias("toks")
     )
     bigrams = d.select(
         "doc_id",
@@ -1500,7 +1501,7 @@ _PHRASE_MIN_DOCS = 20
 
 def q_common_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text")).select(
-        "doc_id", F.expr(f"split({_SPARK_NORM}, ' ')").alias("toks")
+        "doc_id", F.split(collapse_whitespace("text"), " ").alias("toks")
     )
     phrases = d.select(
         "doc_id",
@@ -1559,7 +1560,7 @@ _UNIGRAM_MIN_REL_FREQ = 0.005
 
 def q_unigram_logppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text")).select(
-        "doc_id", F.expr(f"split({_SPARK_NORM}, ' ')").alias("toks")
+        "doc_id", F.split(collapse_whitespace("text"), " ").alias("toks")
     )
     tokens = d.select("doc_id", F.explode("toks").alias("t"))
     tokens = tokens.localCheckpoint(eager=False)  # one pass feeds freq + score
@@ -1622,7 +1623,7 @@ def q_lang_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"size(regexp_extract_all(norm, '{b}', 0))" for b in _LANG_BIGRAMS
     )
     d = _t(spark, sf_dir, "documents").select(
-        "lang", F.expr(f"lower({_SPARK_NORM})").alias("norm")
+        "lang", F.lower(collapse_whitespace("text")).alias("norm")
     )
     scored = d.select(
         "lang",
@@ -1671,7 +1672,7 @@ _LANG_PRED_SQL = _lang_pred_sql()
 
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.expr(_SPARK_NORM).alias("norm")
+        "doc_id", collapse_whitespace("text").alias("norm")
     )
     return d.select(
         "doc_id",
@@ -3257,7 +3258,7 @@ def q_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents")
         .select(
             "doc_id",
-            F.expr(f"size(split({_SPARK_NORM}, ' '))").alias("n_tokens"),
+            F.size(F.split(collapse_whitespace("text"), " ")).alias("n_tokens"),
         )
         .repartitionByRange(nparts, "doc_id")
         .withColumn("pid", F.spark_partition_id())

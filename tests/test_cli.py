@@ -324,7 +324,7 @@ def test_ocr_trained_accurate_and_beam_equal_direct_decode(tmp_path):
         assert len(results) == len(boxes) == 2
         decode = ocr.model.greedy_decode if mode == "accurate" else ocr.model.beam_decode
         for r, box in zip(results, boxes):
-            crop = line_crop(gray, tight_box(ink, box, ocr.padding))
+            crop = line_crop(gray, tight_box(ink, box))
             mem = ocr.model.encode(crop[None].astype(np.float32), fp32=True)[0]
             assert (r["text"], r["confidence"]) == decode(mem)
 
@@ -347,3 +347,83 @@ def test_extract_with_trained_model_flag(page_png, tmp_path):
     assert r.stdout.strip().splitlines() == ["hello spark world", "second line"]
     results = json.loads((tmp_path / "tm" / "ocr_results.json").read_text())
     assert all(x["confidence"] > 0.9 for x in results)
+
+
+def test_extract_model_keeps_the_method_line_finder(tmp_path):
+    """--model picks the recognizer only: with the default --method
+    (projection) the trained decode reads the same projection boxes as
+    the template path, and --method legacy still selects the facade's
+    multi-method finder."""
+    import os
+
+    from kiri_ocr_spark.imaging.glyphs import SCALE
+    from kiri_ocr_spark.operators.model import trained_model_path
+
+    png = tmp_path / "page.png"
+    png.write_bytes(
+        encode_gray(render_page(["hello spark world", "second line"], scale=SCALE))
+    )
+
+    def extract(name, *flags):
+        r = run_cli("extract", str(png), "--out-dir", str(tmp_path / name),
+                    "--json", *flags)
+        assert r.returncode == 0, r.stderr[-500:]
+        return json.loads((tmp_path / name / "ocr_results.json").read_text())
+
+    model = trained_model_path()
+    assert os.path.exists(model)
+    plain = extract("plain")
+    trained = extract("trained", "--model", model)
+    assert [r["box"] for r in plain] == [[20, 10, 220, 20], [20, 38, 144, 20]]
+    assert [r["box"] for r in trained] == [r["box"] for r in plain]
+    assert [r["text"] for r in trained] == ["hello spark world", "second line"]
+    legacy = extract("legacy", "--model", model, "--method", "legacy")
+    assert [r["box"] for r in legacy] != [r["box"] for r in plain]
+    for r in plain + trained + legacy:
+        for key in ("confidence", "det_confidence"):
+            assert r[key] == round(r[key], 4)
+
+
+@pytest.mark.parametrize("recognizer", ["template", "trained"])
+@pytest.mark.parametrize("method", ["projection", "db", "craft"])
+def test_ocr_class_reads_pages_like_the_page_kernel(tmp_path, method, recognizer):
+    """The OCR class and the Spark page kernel run one line finder and
+    one line step: on plain, inverted and tinted fixture pages,
+    process_document's boxes are the finder's and its texts are the
+    kernel's (page_kernel names the projection finder 'legacy'). The
+    kernel decodes the batch's crops stacked, the class one crop per
+    call, so trained confidences agree to tolerance, template ones
+    exactly."""
+    from kiri_ocr_spark.fixtures import _tint_page
+    from kiri_ocr_spark.imaging.glyphs import SCALE
+    from kiri_ocr_spark.imaging.png import encode_rgb
+    from kiri_ocr_spark.ocr import OCR
+    from kiri_ocr_spark.operators.model import trained_model_path
+    from kiri_ocr_spark.operators.page import line_finder, page_kernel, read_page
+
+    texts = [["the fast key"], ["order sort", "table"], ["column row", "a"]]
+    blobs = [
+        encode_gray(render_page(texts[0], scale=SCALE)),
+        encode_gray(render_page(texts[1], scale=SCALE, invert=True)),
+        encode_rgb(_tint_page(render_page(texts[2], scale=SCALE))),
+    ]
+    model_path = None if recognizer == "template" else trained_model_path()
+    kernel = page_kernel(
+        model_path, "legacy" if method == "projection" else method, "ctc"
+    )
+    lines, _ = kernel(blobs, {})
+    ocr = OCR(model_path=model_path, det_method=method, decode_method="fast")
+    find = line_finder(method)
+    for i, (blob, want, got_lines) in enumerate(zip(blobs, texts, lines)):
+        png = tmp_path / f"p{i}.png"
+        png.write_bytes(blob)
+        results = ocr.process_document(str(png))
+        boxes = find(*read_page(blob))
+        assert [r["box"] for r in results] == [[int(v) for v in b[:4]] for b in boxes]
+        assert [r["text"] for r in results] == [t for t, _ in got_lines] == want
+        confs = [r["confidence"] for r in results]
+        want_confs = [c for _, c in got_lines]
+        if recognizer == "template":
+            assert confs == want_confs
+        else:
+            assert confs == pytest.approx(want_confs, rel=1e-5)
